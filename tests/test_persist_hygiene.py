@@ -1,9 +1,8 @@
 """Battery-end persist hygiene (VERDICT r3 task 6 / ADVICE r3).
 
-Every persisted relation in the package must be reachable by one of the
-two managed idioms — a ``SessionCache`` entry (whose VALUE carries every
-persist handle) or a ``bounded_persist`` slot (one generation per call
-site) — so that:
+Every persisted relation in the package must be reachable through the
+session memo (``session_cache.memo``: one generation per slot, whose
+VALUE carries every persist handle) — so that:
 
 1. re-running the same query does NOT accumulate cached relations
    (the battery/bench loop regime; unbounded growth caused the measured
@@ -16,7 +15,7 @@ site) — so that:
    generation per slot — not via the ==0 assertion.)
 
 The queries below are the sites ADVICE r3 flagged plus every other
-bounded_persist site: incremental dedup's band index, phrase retrieval's
+memoized persist site: incremental dedup's band index, phrase retrieval's
 positional filter, DSIR scoring, the leakage split's edge set,
 contrastive pairs, the Hilbert layout keying, MMR (which must unpersist
 its collected pool in-function), pagerank/triangles/components, k-means,

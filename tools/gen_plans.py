@@ -36,7 +36,7 @@ def build_doc(spark) -> str:
     # Exchange census shifts — the same query reported 6 shuffles cold and
     # 9 under a warm cache. Clearing the catalog cache pins the documented
     # plan to the reproducible cold shape regardless of suite ordering.
-    # The repo's SessionCaches must reset too: a cache HIT skips the
+    # The session memo must reset too: a memo HIT skips the
     # persist() a fresh build performs, and the persisted-vs-not subtree
     # plans differently (5 vs 4 unique shuffles on the prefix-filter join).
     from wd2sql_spark.session_cache import clear_all_session_caches

@@ -1,4 +1,4 @@
-"""Loading the driver's synthetic tables (TESTDATA.md) and registering views.
+"""Loading the driver's synthetic tables (TESTDATA.md).
 
 All reads go through ``spark.read.parquet`` so Catalyst gets predicate
 pushdown + column pruning into the scan for free. At 100 TB these would be
@@ -12,7 +12,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from wd2sql_spark.session_cache import SessionCache
+from wd2sql_spark.session_cache import memo
 
 TABLES = (
     "region",
@@ -30,20 +30,42 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# One scan DataFrame per (live session, sf_dir, table). The fixtures are
-# immutable, so the cached plan can never go stale under a live session;
-# what the cache buys is the per-call build cost — every ``table()`` miss
-# pays ~60-90 ms of py4j conf round-trips plus a parquet footer schema
-# read, and a 5-table query rebuilt per bench sample was paying ~0.4 s of
-# pure driver-side overhead before any execution. Queries that join a
-# table with ITSELF must rename one side's columns (they already do:
-# "Separate scans … to sidestep self-join column ambiguity" predates the
-# cache; Spark's DeduplicateRelations handles the shared-plan case).
-_TABLE_CACHE = SessionCache()
+def file_key(*paths: str) -> tuple:
+    """(path, mtime_ns, size) of each file: the memo key of a value read
+    from files, so rewriting a file invalidates every memo built from
+    it. A missing file (a directory holding only some of the tables)
+    keys as ``(path, None, None)``."""
+    out = []
+    for p in paths:
+        try:
+            st = os.stat(p)
+        except FileNotFoundError:
+            out.append((p, None, None))
+        else:
+            out.append((p, st.st_mtime_ns, st.st_size))
+    return tuple(out)
+
+
+def sf_key(sf_dir: str) -> tuple:
+    """Memo key of a value derived from the fixture tables in ``sf_dir``:
+    the :func:`file_key` of every table file."""
+    return file_key(*(_path(sf_dir, name) for name in TABLES))
+
+
+def _path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table (memoized per session — see ``_TABLE_CACHE``).
+    """Read one fixture table, memoized per (session, table) and keyed on
+    the file's (path, mtime_ns, size).
+
+    The memo buys the per-call build cost: every miss pays ~60-90 ms of
+    py4j conf round-trips plus a parquet footer schema read, and a
+    5-table query rebuilt per bench sample was paying ~0.4 s of pure
+    driver-side overhead before any execution. Queries that join a table
+    with ITSELF rename one side's columns (Spark's DeduplicateRelations
+    handles the shared-plan case).
 
     Some generations of ``events.parquet`` carry TIMESTAMP(NANOS), which
     Spark's parquet reader rejects by default; the legacy conf reads it as
@@ -52,12 +74,11 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     it is a no-op on µs-precision data. Use :func:`events` to get a proper
     timestamp column back either way.
     """
-    return _TABLE_CACHE.get_or_build(
-        spark, ("table", sf_dir, name), lambda: _read_table(spark, sf_dir, name)
-    )
+    path = _path(sf_dir, name)
+    return memo(spark, f"catalog.table.{name}", file_key(path), lambda: _read_table(spark, path))
 
 
-def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def _read_table(spark: SparkSession, path: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # µs-era fixtures are written with isAdjustedToUTC=false, which Spark
     # by default infers as TIMESTAMP_NTZ — a type several chronon
@@ -78,7 +99,7 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set(
             "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
         )
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return spark.read.parquet(path)
 
 
 def events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -97,13 +118,3 @@ def events(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exceeds double's 2^53 mantissa and lands ±1µs off.
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for ``spark.sql``."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

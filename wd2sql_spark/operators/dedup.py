@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from wd2sql_spark.session_cache import SessionCache, bounded_persist
+from wd2sql_spark.session_cache import memo
 
 HEX_DIGITS = "0123456789abcdef"
 
@@ -111,7 +111,7 @@ def jaccard_pairs(
     docs: DataFrame,
     n: int = 3,
     max_doc_freq: int | None = None,
-    cache_key: str | None = None,
+    cache_key: tuple | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard for every pair sharing ≥1 shingle.
 
@@ -146,12 +146,12 @@ def jaccard_pairs(
     if max_doc_freq is not None:
         freq = sh.groupBy("shingle").agg(F.count("*").alias("df")).filter(F.col("df") <= max_doc_freq)
         sh = sh.join(freq.select("shingle"), "shingle", "left_semi")
-    # cache_key (corpus identity, e.g. sf_dir) skips the per-call
-    # sameSemantics canonicalization of the shingle build tree
-    sh = bounded_persist(
-        sh,
+    # cache_key: the corpus identity (e.g. catalog.sf_key)
+    sh = memo(
+        docs.sparkSession,
         "dedup.jaccard_shingles",
-        key=(cache_key, n, max_doc_freq) if cache_key is not None else None,
+        (cache_key, n, max_doc_freq) if cache_key is not None else None,
+        sh.persist,
     )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh.alias("a")
@@ -177,16 +177,12 @@ def jaccard_pairs(
     )
 
 
-_PREFIX_PERSISTED: list[DataFrame] = []
-_PREFIX_CACHE = SessionCache()
-
-
 def jaccard_pairs_prefix_filter(
     docs: DataFrame,
     n: int = 3,
     t_num: int = 1,
     t_den: int = 2,
-    cache_key: str | None = None,
+    cache_key: tuple | None = None,
 ) -> DataFrame:
     """Exact thresholded Jaccard join via PREFIX FILTERING (the PPJoin
     family, Xiao et al., WWW 2008): every pair with
@@ -212,17 +208,19 @@ def jaccard_pairs_prefix_filter(
     limit).
 
     ``cache_key``: when given, the rarity-ordered per-doc array relation
-    is cached per (session, key) — the PQ/IVF cached-artifact pattern —
+    is memoized per (session, key) — the PQ/IVF cached-artifact pattern —
     so repeated battery/bench runs rebuild only the candidate join;
-    without it (ad-hoc inputs), the previous call's persists are dropped
-    first so storage stays bounded at one call's worth.
+    without it (ad-hoc inputs) every call rebuilds, and the previous
+    call's persists are released first so storage stays bounded at one
+    call's worth.
     """
 
-    def build(holder: list[DataFrame]) -> DataFrame:
+    def build() -> tuple[DataFrame, DataFrame]:
+        # the memo value carries every persisted intermediate (sh
+        # included), so its release unpersists them all
         sh = doc_shingles(docs, n).select(
             "doc_id", F.xxhash64("shingle").alias("shingle")
         ).persist()
-        holder.append(sh)
         freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
         # Per-doc shingle array in global rarity order. This ONE relation
         # serves prefix generation AND verification: the verify step
@@ -242,28 +240,14 @@ def jaccard_pairs_prefix_filter(
             )
             .persist()
         )
-        holder.append(pd_rel)
-        return pd_rel
+        return pd_rel, sh
 
-    if cache_key is not None:
-        # session-cache owns these persists; the ad-hoc holder below must
-        # never unpersist them. The cache VALUE carries every persisted
-        # intermediate (sh included), so clear_all_session_caches() can
-        # release them — an earlier version dropped the sh handle into a
-        # discarded list, leaving it unreachable by anything but
-        # spark.catalog.clearCache().
-        def build_cached() -> tuple[DataFrame, ...]:
-            holder: list[DataFrame] = []
-            rel = build(holder)
-            return (rel, *holder)
-
-        per_doc = _PREFIX_CACHE.get_or_build(
-            docs.sparkSession, ("prefix_arr", cache_key, n), build_cached
-        )[0]
-    else:
-        while _PREFIX_PERSISTED:
-            _PREFIX_PERSISTED.pop().unpersist()
-        per_doc = build(_PREFIX_PERSISTED)
+    per_doc = memo(
+        docs.sparkSession,
+        "dedup.prefix_arr",
+        (cache_key, n) if cache_key is not None else None,
+        build,
+    )[0]
     n_sh = F.size("arr")
     # p = n - ceil(t*n) + 1, with ceil done in integer arithmetic
     ceil_tn = F.floor((n_sh * F.lit(t_num) + F.lit(t_den - 1)) / F.lit(t_den))
@@ -334,20 +318,12 @@ def jaccard_pairs_prefix_filter(
     )
 
 
-def minhash_signatures(docs: DataFrame, k: int = 16, n: int = 3) -> DataFrame:
-    """(doc_id, seed, mh): per-seed min-hash over the doc's shingles —
-    the narrow (long) form, unpivoted from :func:`minhash_signatures_wide`."""
-    wide = minhash_signatures_wide(docs, k, n)
-    stack = ", ".join(f"{s}, mh{s}" for s in range(k))
-    return wide.selectExpr("doc_id", f"stack({k}, {stack}) AS (seed, mh)")
-
-
 def minhash_signatures_wide(docs: DataFrame, k: int = 16, n: int = 3) -> DataFrame:
     """(doc_id, mh0..mh{k-1}): all k min-hashes in ONE aggregation over the
     (doc, shingle) relation — k conditional MIN columns instead of a k×
     seed-explode, so the shuffle carries one row per doc (k·15 bytes) and
-    partial MIN collapses each map partition before it. Same md5-derived
-    values as the narrow form (seed ':' shingle), so oracles are unchanged."""
+    partial MIN collapses each map partition before it. Each value is the
+    min over shingles of md5(seed ':' shingle)'s 15-hex-digit prefix."""
     sh = doc_shingles(docs, n)
     aggs = [
         F.min(
@@ -359,7 +335,12 @@ def minhash_signatures_wide(docs: DataFrame, k: int = 16, n: int = 3) -> DataFra
 
 
 def minhash_lsh_pairs(
-    docs: DataFrame, k: int = 16, band_size: int = 4, n: int = 3, min_est_jaccard: float = 0.0
+    docs: DataFrame,
+    k: int = 16,
+    band_size: int = 4,
+    n: int = 3,
+    min_est_jaccard: float = 0.0,
+    cache_key: tuple | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-dup candidates with estimated Jaccard.
 
@@ -376,7 +357,13 @@ def minhash_lsh_pairs(
     # sig feeds the band-key build AND both sides of the estimate join;
     # persist avoids re-running the shingle+md5 pipeline three times. The
     # signature relation is one ~k·16 B row per doc — small at any SF.
-    sig = bounded_persist(minhash_signatures_wide(docs, k, n), "dedup.minhash_sig")
+    # cache_key: the corpus identity (e.g. catalog.sf_key).
+    sig = memo(
+        docs.sparkSession,
+        "dedup.minhash_sig",
+        (cache_key, k, n) if cache_key is not None else None,
+        minhash_signatures_wide(docs, k, n).persist,
+    )
     n_bands = k // band_size
     # mh columns are fixed-width hex, so plain concatenation is injective.
     band_structs = F.array(
@@ -577,12 +564,6 @@ def incremental_index_probe(
     )
 
 
-def hex_val(char_col: Column) -> Column:
-    """hex digit char → 0..15, engine-portably (no conv() in DuckDB;
-    instr/strpos exist everywhere)."""
-    return F.instr(F.lit(HEX_DIGITS), char_col) - 1
-
-
 SIMHASH_BITS = 56  # md5 supplies 128; 56 keeps the int64 headroom and
 #                    divides into 4 bands of 14 (bands > h ⇒ recall h ≤ 3)
 SIMHASH_BANDS = 4
@@ -676,7 +657,7 @@ def simhash_pairs(
     docs: DataFrame,
     max_hamming: int = 6,
     n: int = 3,
-    cache_key: str | None = None,
+    cache_key: tuple | None = None,
     band_bits: int | None = None,
     n_bands: int | None = None,
 ) -> DataFrame:
@@ -702,17 +683,13 @@ def simhash_pairs(
     The signature relation feeds BOTH sides of the band self-join and
     costs a shingle explode + a 56-sum aggregate to build; without a
     persist Spark executes that subtree twice (no cross-join-side CSE —
-    the cosine_near_dup_pairs lesson). One generation per site;
-    ``cache_key`` (corpus identity) skips per-call canonicalization."""
-    from wd2sql_spark.session_cache import bounded_persist, cached_count
-
+    the cosine_near_dup_pairs lesson). One generation per site, memoized
+    (with the knob count) under ``cache_key``, the corpus identity."""
+    spark = docs.sparkSession
     if band_bits is None and n_bands is None:
-        n_docs = (
-            cached_count(docs, (cache_key, "knob_count"))
-            if cache_key is not None
-            else docs.count()
+        band_bits, n_bands = simhash_banding(
+            memo(spark, "dedup.simhash_pairs.count", cache_key, docs.count)
         )
-        band_bits, n_bands = simhash_banding(n_docs)
     elif n_bands is None:
         # Derive bands from the EFFECTIVE width, never from an auto width
         # (ADVICE r6 #1: pairing a pinned band_bits with an auto n_bands
@@ -727,10 +704,11 @@ def simhash_pairs(
             "hash — bands past the top would read val=0 for every doc and "
             "collapse the corpus into one collision bucket"
         )
-    sig = bounded_persist(
-        simhash_sig(docs, n),
+    sig = memo(
+        spark,
         "dedup.simhash_pairs.sig",
-        key=(cache_key, n) if cache_key is not None else None,
+        (cache_key, n) if cache_key is not None else None,
+        simhash_sig(docs, n).persist,
     )
     mask = 2**band_bits - 1
     chunks = sig.select(

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wd2sql_spark.session_cache import bounded_checkpoint
+from wd2sql_spark.session_cache import checkpoint, memo
 
 
 def triangles(und: DataFrame) -> DataFrame:
@@ -77,10 +77,10 @@ def pagerank_ranks(
     one long per edge in exchange for iters fewer |V|-sized joins.
 
     The |E| relation is REPARTITIONED BY src, SORTED WITHIN PARTITIONS,
-    and CHECKPOINTED once (``bounded_checkpoint``): the checkpointed
-    LogicalRDD leaf preserves HashPartitioning(src) + per-partition
-    ordering, so the per-iteration join needs no edge-side exchange or
-    sort in ANY regime — when |V| is broadcast-sized the planner picks a
+    and CHECKPOINTED once (``session_cache.checkpoint``, memoized under
+    ``cache_key``): the checkpointed LogicalRDD leaf preserves
+    HashPartitioning(src) + per-partition ordering, so the per-iteration
+    join needs no edge-side exchange or sort in ANY regime — when |V| is broadcast-sized the planner picks a
     broadcast-hash join over the leaf; once |V| outgrows the driver it
     falls back to a sort-merge join that reuses the stored layout. The
     checkpoint (vs persist) also TRUNCATES LINEAGE: a persisted relation
@@ -98,20 +98,25 @@ def pagerank_ranks(
     # div(r, NULL) = NULL, and it never appears as src, so nothing sums a
     # NULL. An inner join here would silently drop every edge into a sink
     # (caught by the hypothesis recurrence twin on the single edge 0→1).
-    edges_d = bounded_checkpoint(
-        edges.join(deg.select(F.col("node").alias("dst"), F.col("d").alias("d_dst")), "dst", "left")
-        .select("src", "dst", "d_dst")
-        .repartition(n_part, "src")
-        .sortWithinPartitions("src"),
+    spark = edges.sparkSession
+    edges_d = memo(
+        spark,
         "graph_ops.pagerank_edges",
-        key=cache_key,
+        cache_key,
+        lambda: checkpoint(
+            edges.join(deg.select(F.col("node").alias("dst"), F.col("d").alias("d_dst")), "dst", "left")
+            .select("src", "dst", "d_dst")
+            .repartition(n_part, "src")
+            .sortWithinPartitions("src")
+        ),
     )
     # ranks carries each node's out-degree alongside its rank so the
     # contribution r div d is row-local every round.
-    ranks = bounded_checkpoint(
-        deg.select("node", "d", F.lit(r0).cast("long").alias("r")),
+    ranks = memo(
+        spark,
         "graph_ops.pagerank_ranks0",
-        key=cache_key,
+        cache_key,
+        lambda: checkpoint(deg.select("node", "d", F.lit(r0).cast("long").alias("r"))),
     )
     base = (damp_den - damp_num) * r0
     for _ in range(iters):

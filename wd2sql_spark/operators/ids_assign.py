@@ -28,18 +28,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from wd2sql_spark.session_cache import SessionCache
+from wd2sql_spark.session_cache import memo
 
-# One (checkpointed layout, offsets, total) per (session, cache_key): the
-# range sampler, the eager checkpoint, and the per-partition count are
-# three driver jobs that produce the SAME result on an immutable input —
-# per-call they were the whole warm cost of the global-rank family
-# (window_ntile_distribution: 1.54 s driver-warm r8, dominated by layout
-# rebuild, not the final pass). Callers own key completeness, the same
-# contract as session_cache.cached_count: the key must identify the
-# input relation AND the ordering (a collision would hand out ranks from
-# the wrong layout).
-_LAYOUT_CACHE = SessionCache()
+# One (checkpointed layout, offsets, total) memoized per (session,
+# ordering, cache_key): the range sampler, the eager checkpoint, and the
+# per-partition count are three driver jobs that produce the SAME result
+# on an unchanged input — per-call they were the whole warm cost of the
+# global-rank family (window_ntile_distribution: 1.54 s driver-warm r8,
+# dominated by layout rebuild, not the final pass). Callers own key
+# completeness: the key must identify the input relation (a collision
+# would hand out ranks from the wrong layout).
 
 
 def assign_contiguous_ids(
@@ -110,12 +108,12 @@ def global_order_rank(
             acc += counts[pid]
         return parts, offsets, acc
 
-    if cache_key is not None:
-        parts, offsets, acc = _LAYOUT_CACHE.get_or_build(
-            df.sparkSession, ("rank_layout", *cache_key), _build
-        )
-    else:
-        parts, offsets, acc = _build()
+    parts, offsets, acc = memo(
+        df.sparkSession,
+        f"ids_assign.rank_layout.{','.join(order_cols)}",
+        (cache_key, n_partitions) if cache_key is not None else None,
+        _build,
+    )
     offset_expr: Column = F.lit(0).cast("long")
     if offsets:
         pairs = [x for pid, off in offsets.items() for x in (F.lit(pid), F.lit(off))]

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from wd2sql_spark.operators.dedup import HEX_DIGITS
+from wd2sql_spark.session_cache import memo
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -300,26 +301,24 @@ def _scored_base(
     )
 
 
-# Per-session IVF index cache (see session_cache.SessionCache for the
-# weakref-keying rationale). The entry holds the codebook plus the
-# assigned+scored corpus as a localCheckpoint: the checkpoint truncates
-# the plan to a LogicalRDD, so later invocations skip re-analyzing the
-# ~n_centroids·dim inlined codebook literals (0.5-1 s of driver time per
-# plan) AND skip re-scoring the corpus. This is the moral of IVF — the
+# Per-session IVF index memo (session_cache.memo). The value holds the
+# codebook plus the assigned+scored corpus as a localCheckpoint: the
+# checkpoint truncates the plan to a LogicalRDD, so later invocations
+# skip re-analyzing the ~n_centroids·dim inlined codebook literals
+# (0.5-1 s of driver time per plan) AND skip re-scoring the corpus. This is the moral of IVF — the
 # index is built once, queries only probe — expressed at toy scale.
 # KNOWN LIMITS of the toy-scale expression: (a) localCheckpoint blocks
 # live in executor storage, so on a cluster that loses executors the
 # cached index dies with them (no lineage to recompute) — at 100 TB the
 # index is a TABLE written partitioned by cid, which has neither problem
-# (and would not carry the scores array per row); (b) the cache key is
-# the caller's string, so it assumes the underlying corpus at that key is
-# immutable for the session (true for the read-only fixtures).
-_IVF_INDEX_CACHE = None  # initialized lazily to avoid import cycles
+# (and would not carry the scores array per row); (b) the memo key is
+# the caller's, so it must identify the corpus (queries pass
+# catalog.sf_key, which changes when a fixture file is rewritten).
 
 
 def ivf_index(
     corpus: DataFrame,
-    cache_key: str,
+    cache_key: tuple,
     n_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -328,19 +327,17 @@ def ivf_index(
     predicate form, built once per (session, cache_key) and reused.
     Bit-identical to building it inline — the cache only changes WHEN the
     same deterministic plan runs."""
-    global _IVF_INDEX_CACHE
-    if _IVF_INDEX_CACHE is None:
-        from wd2sql_spark.session_cache import SessionCache
-
-        _IVF_INDEX_CACHE = SessionCache()
 
     def build() -> tuple[list[tuple[int, list[float]]], DataFrame]:
         centroids = collect_centroids(corpus, n_centroids, id_col, vec_col)
         base = _scored_base(corpus, centroids, id_col, vec_col).localCheckpoint(eager=True)
         return centroids, base
 
-    return _IVF_INDEX_CACHE.get_or_build(
-        corpus.sparkSession, (cache_key, n_centroids, id_col, vec_col), build
+    return memo(
+        corpus.sparkSession,
+        "similarity.ivf_index",
+        (cache_key, n_centroids, id_col, vec_col),
+        build,
     )
 
 
@@ -353,7 +350,7 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_pred: Column | None = None,
-    cache_key: str | None = None,
+    cache_key: tuple | None = None,
 ) -> DataFrame:
     """Approximate top-k via an inverted-file index (IVF): corpus vectors
     are binned by nearest codebook centroid (narrow map, zero shuffle);
@@ -505,7 +502,7 @@ def quantized_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache_key: str | None = None,
+    cache_key: tuple | None = None,
 ) -> DataFrame:
     """Brute-force top-k over int8-quantized vectors: same plan shape as
     :func:`brute_force_topk` (broadcast queries, one corpus scan, windowed
@@ -530,13 +527,12 @@ def quantized_topk(
             l2_norm(F.col(vec_col)).alias(nx),
         )
 
-    from wd2sql_spark.session_cache import bounded_persist
-
     q = side(queries, "query_id", "qv", "qq", "qqn", "qn")
-    c = bounded_persist(
-        side(corpus, "neighbor_id", "cv", "cq", "cqn", "cn"),
+    c = memo(
+        corpus.sparkSession,
         "similarity.quantized_topk.corpus",
-        key=(cache_key, id_col, vec_col) if cache_key is not None else None,
+        (cache_key, id_col, vec_col) if cache_key is not None else None,
+        side(corpus, "neighbor_id", "cv", "cq", "cqn", "cn").persist,
     )
     qdot = int8_dot(F.col("qq"), F.col("cq"))
     scored = (
@@ -698,12 +694,9 @@ def _pq_encoded(
     )
 
 
-_PQ_INDEX_CACHE = None  # lazy SessionCache (see _IVF_INDEX_CACHE)
-
-
 def pq_index(
     corpus: DataFrame,
-    cache_key: str,
+    cache_key: tuple,
     n_sub: int = 8,
     ks: int = 16,
     dim: int = 64,
@@ -720,19 +713,17 @@ def pq_index(
     query would also dominate wall time at toy scale. Bit-identical to
     building inline — the cache only changes WHEN the deterministic plan
     runs."""
-    global _PQ_INDEX_CACHE
-    if _PQ_INDEX_CACHE is None:
-        from wd2sql_spark.session_cache import SessionCache
-
-        _PQ_INDEX_CACHE = SessionCache()
 
     def build():
         codebook = pq_codebook(corpus, n_sub, ks, dim, id_col, vec_col)
         enc = _pq_encoded(corpus, codebook, dim, id_col, vec_col).localCheckpoint(eager=True)
         return codebook, enc
 
-    return _PQ_INDEX_CACHE.get_or_build(
-        corpus.sparkSession, (cache_key, n_sub, ks, dim, id_col, vec_col), build
+    return memo(
+        corpus.sparkSession,
+        "similarity.pq_index",
+        (cache_key, n_sub, ks, dim, id_col, vec_col),
+        build,
     )
 
 
@@ -794,7 +785,7 @@ def pq_topk(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache_key: str | None = None,
+    cache_key: tuple | None = None,
 ) -> DataFrame:
     """Approximate top-k by product quantization with asymmetric distance
     computation (ADC, Jégou et al., "Product Quantization for Nearest
@@ -851,7 +842,7 @@ def pq_topk(
 
 def pq_serving_index(
     corpus: DataFrame,
-    cache_key: str | None,
+    cache_key: tuple | None,
     n_sub: int = 8,
     ks: int = 16,
     dim: int = 64,
@@ -872,12 +863,10 @@ def pq_serving_index(
     tests/test_plan_audit.py::test_pq_serving_never_reads_corpus_vectors).
     Build scans the corpus once per (session, cache_key); at 100 TB this
     relation is the written parquet table queries scan instead of the
-    vectors (the ivf_store/postings_store convention)."""
-    global _PQ_INDEX_CACHE
-    if _PQ_INDEX_CACHE is None:
-        from wd2sql_spark.session_cache import SessionCache
-
-        _PQ_INDEX_CACHE = SessionCache()
+    vectors (the ivf_store/postings_store convention). Without a
+    ``cache_key`` (no identity for this corpus) every call builds fresh:
+    a shared sentinel key would hand a SECOND corpus in the same session
+    the FIRST corpus's index."""
 
     def build():
         codebook = pq_codebook(corpus, n_sub, ks, dim, id_col, vec_col)
@@ -888,14 +877,10 @@ def pq_serving_index(
         )
         return codebook, enc
 
-    if cache_key is None:
-        # no identity for this corpus → build fresh (the pq_topk
-        # convention). Caching under a shared sentinel key would hand a
-        # SECOND corpus in the same session the FIRST corpus's index.
-        return build()
-    return _PQ_INDEX_CACHE.get_or_build(
+    return memo(
         corpus.sparkSession,
-        ("serving", cache_key, n_sub, ks, dim, id_col, vec_col),
+        "similarity.pq_serving_index",
+        (cache_key, n_sub, ks, dim, id_col, vec_col) if cache_key is not None else None,
         build,
     )
 
@@ -909,7 +894,7 @@ def pq_serving_topk(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache_key: str | None = None,
+    cache_key: tuple | None = None,
 ) -> DataFrame:
     """:func:`pq_topk` in the serving regime: identical ADC arithmetic
     (same codebook, same fixed-order folds — the pq_cosine values are
@@ -938,12 +923,9 @@ def pq_serving_topk(
     return ranked_topk(scored, "pq_cosine", k, ["query_id", "neighbor_id", "pq_cosine", "rank"])
 
 
-_IVFPQ_INDEX_CACHE = None  # lazy SessionCache (see _IVF_INDEX_CACHE)
-
-
 def ivfpq_serving_index(
     corpus: DataFrame,
-    cache_key: str | None,
+    cache_key: tuple | None,
     n_centroids: int = 16,
     n_sub: int = 8,
     ks: int = 16,
@@ -957,12 +939,8 @@ def ivfpq_serving_index(
     prunes to nprobe lists at the scan and scores survivors by table
     lookup. No float vector in the stored rows; at 100 TB this is a
     parquet table partitioned by cid holding ~17 B/vector. Returns
-    (coarse_centroids, pq_codebook, store)."""
-    global _IVFPQ_INDEX_CACHE
-    if _IVFPQ_INDEX_CACHE is None:
-        from wd2sql_spark.session_cache import SessionCache
-
-        _IVFPQ_INDEX_CACHE = SessionCache()
+    (coarse_centroids, pq_codebook, store); built fresh without a
+    ``cache_key``."""
 
     def build():
         centroids = collect_centroids(corpus, n_centroids, id_col, vec_col)
@@ -979,11 +957,12 @@ def ivfpq_serving_index(
         )
         return centroids, codebook, enc
 
-    if cache_key is None:
-        return build()  # no corpus identity → never share a cache entry
-    return _IVFPQ_INDEX_CACHE.get_or_build(
+    return memo(
         corpus.sparkSession,
-        (cache_key, n_centroids, n_sub, ks, dim, id_col, vec_col),
+        "similarity.ivfpq_serving_index",
+        (cache_key, n_centroids, n_sub, ks, dim, id_col, vec_col)
+        if cache_key is not None
+        else None,
         build,
     )
 
@@ -999,7 +978,7 @@ def ivfpq_topk(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache_key: str | None = None,
+    cache_key: tuple | None = None,
 ) -> DataFrame:
     """IVF+PQ top-k (IVFADC): each query ranks the coarse centroids by
     cosine, probes its ``nprobe`` best lists, and ADC-scores ONLY the
@@ -1050,12 +1029,9 @@ def ivfpq_topk(
     return ranked_topk(scored, "pq_cosine", k, ["query_id", "neighbor_id", "pq_cosine", "rank"])
 
 
-_INT8_INDEX_CACHE = None  # lazy SessionCache (see _IVF_INDEX_CACHE)
-
-
 def int8_serving_index(
     corpus: DataFrame,
-    cache_key: str | None,
+    cache_key: tuple | None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -1063,12 +1039,7 @@ def int8_serving_index(
     4x-smaller resident corpus for :func:`int8_serving_topk`. Like
     :func:`pq_serving_index`, the materialized rows carry no float
     vector; the integer norm is precomputed so scoring is one integer
-    zip-fold + one divide per pair."""
-    global _INT8_INDEX_CACHE
-    if _INT8_INDEX_CACHE is None:
-        from wd2sql_spark.session_cache import SessionCache
-
-        _INT8_INDEX_CACHE = SessionCache()
+    zip-fold + one divide per pair. Built fresh without a ``cache_key``."""
 
     def build() -> DataFrame:
         q8 = quantize_int8(F.col(vec_col))
@@ -1078,10 +1049,11 @@ def int8_serving_index(
             int8_norm(q8).alias("cqn"),
         ).localCheckpoint(eager=True)
 
-    if cache_key is None:
-        return build()  # no corpus identity → never share a cache entry
-    return _INT8_INDEX_CACHE.get_or_build(
-        corpus.sparkSession, (cache_key, id_col, vec_col), build
+    return memo(
+        corpus.sparkSession,
+        "similarity.int8_serving_index",
+        (cache_key, id_col, vec_col) if cache_key is not None else None,
+        build,
     )
 
 
@@ -1091,7 +1063,7 @@ def int8_serving_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache_key: str | None = None,
+    cache_key: tuple | None = None,
 ) -> DataFrame:
     """:func:`quantized_topk` in the serving regime: the corpus side is
     the stored int8 index (no float vectors resident), the query side
@@ -1129,7 +1101,7 @@ def cosine_near_dup_pairs(
     block_col: str | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache_key: str | None = None,
+    cache_key: tuple | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs.
 
@@ -1148,18 +1120,14 @@ def cosine_near_dup_pairs(
     # twice (no common-subexpression elimination across join sides) —
     # measured 1.42 s → sub-second at sf0.1 with the 4×12-plane LSH form,
     # whose 48 projection folds dominate the build. One generation per
-    # site (bounded_persist); at 100 TB this relation is the materialized
-    # LSH index table (sinks/lsh_store.py's pattern). ``cache_key``
-    # (the corpus identity, e.g. sf_dir) skips the per-call
-    # sameSemantics canonicalization of the 48-fold plan — the same
-    # explicit-key discipline as the jaccard prefix relation; callers
-    # passing it own its completeness (session_cache guards schema).
-    from wd2sql_spark.session_cache import bounded_persist
-
-    base = bounded_persist(
-        emb.select(*cols),
+    # site, memoized under ``cache_key`` (the corpus identity, e.g.
+    # catalog.sf_key); at 100 TB this relation is the materialized LSH
+    # index table (sinks/lsh_store.py's pattern).
+    base = memo(
+        emb.sparkSession,
         "similarity.near_dup_pairs.base",
-        key=(cache_key, block_col, id_col, vec_col) if cache_key is not None else None,
+        (cache_key, block_col, id_col, vec_col) if cache_key is not None else None,
+        emb.select(*cols).persist,
     )
     a = base.alias("a")
     b = base.alias("b")

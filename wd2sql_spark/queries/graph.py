@@ -22,12 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wd2sql_spark.session_cache import bounded_persist
-
-from wd2sql_spark.catalog import table
+from wd2sql_spark.catalog import sf_key, table
 from wd2sql_spark.operators import dedup as D
 from wd2sql_spark.queries.llm_dedup import _CAPPED_SHINGLES_CTE, MAX_SHINGLE_DF
 from wd2sql_spark.queries.registry import query
+from wd2sql_spark.session_cache import memo
 
 JACCARD_EDGE_MIN = 0.5  # same-cluster threshold on exact 3-gram Jaccard
 
@@ -74,11 +73,11 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in a long-lived session repeated runs reuse the edge set — the
     # steady-state regime the bench's warm pass measures.
     edges = (
-        D.jaccard_pairs(docs, n=3, max_doc_freq=MAX_SHINGLE_DF, cache_key=sf_dir)
+        D.jaccard_pairs(docs, n=3, max_doc_freq=MAX_SHINGLE_DF, cache_key=sf_key(sf_dir))
         .filter(F.col("jaccard") >= JACCARD_EDGE_MIN)
         .select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
     )
-    edges = bounded_persist(edges, "graph.components_edges", key=(sf_dir,))
+    edges = memo(spark, "graph.components_edges", sf_key(sf_dir), edges.persist)
     comp = D.connected_components(edges)
     return (
         comp.groupBy("cluster_id")

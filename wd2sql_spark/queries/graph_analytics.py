@@ -43,11 +43,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from wd2sql_spark.session_cache import bounded_persist
-
-from wd2sql_spark.catalog import table
+from wd2sql_spark.catalog import sf_key, table
 from wd2sql_spark.operators.graph_ops import pagerank_ranks, triangles
 from wd2sql_spark.queries.registry import query
+from wd2sql_spark.session_cache import memo
 
 KNN = 3  # neighbors kept per node in the co-occurrence graph
 
@@ -110,7 +109,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Tiny relation (|V|·k edges max) consumed three times by the
     # triangle join — persist so the incidence self-join + window
     # pipeline runs once, not per join leg.
-    und = bounded_persist(und, "graph_analytics.triangle_und", key=(sf_dir,))
+    und = memo(spark, "graph_analytics.triangle_und", sf_key(sf_dir), und.persist)
     return (
         triangles(und)
         .select(F.explode(F.array("ta", "tb", "tc")).alias("node"))
@@ -200,12 +199,12 @@ def graph_pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Edges feed the degree aggregate plus one join per iteration; the
     # distinct-pairs expansion would otherwise recompute each time.
-    edges = bounded_persist(edges, "graph_analytics.pagerank_edges", key=(sf_dir,))
-    # explicit cache key: (sf_dir + the constants) — the checkpoint holder
-    # skips per-call sameSemantics canonicalization of the big pairs tree
+    edges = memo(spark, "graph_analytics.pagerank_edges", sf_key(sf_dir), edges.persist)
+    # memo key of the checkpointed relations: the fixture identity + the
+    # constants
     ranks = pagerank_ranks(
         edges, iters=ITERS, r0=R0, damp_num=DAMP_NUM, damp_den=DAMP_DEN,
-        cache_key=(sf_dir, ITERS, R0, DAMP_NUM, DAMP_DEN),
+        cache_key=(sf_key(sf_dir), ITERS, R0, DAMP_NUM, DAMP_DEN),
     )
     return ranks.select(
         F.col("node").cast("bigint"),

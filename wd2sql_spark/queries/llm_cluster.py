@@ -24,9 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wd2sql_spark.session_cache import bounded_persist
-
-from wd2sql_spark.catalog import table
+from wd2sql_spark.catalog import sf_key, table
 # The quantize/assign/update kernel is shared with ANN codebook training
 # (operators/similarity.collect_centroids / pq_codebook) — one
 # definition, one oracle grammar; see operators/kmeans.py for the
@@ -39,6 +37,7 @@ from wd2sql_spark.operators.kmeans import (
     update_int as _update,
 )
 from wd2sql_spark.queries.registry import query
+from wd2sql_spark.session_cache import memo
 
 K = 4  # clusters (seeded from the K lowest vec_ids)
 DIM = 64
@@ -226,13 +225,14 @@ def semdedup_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # near-dup defect class, r9 guide §5). One persisted generation per
     # session: (vec_id, iv, cid, n2) is the cluster-block artifact a
     # production SemDeDup pass would hold between clustering and pruning.
-    norms = bounded_persist(
+    norms = memo(
+        spark,
+        "llm_cluster.semdedup_norms",
+        sf_key(sf_dir),
         assigned.withColumn(
             "n2",
             F.aggregate(F.col("iv"), F.lit(0).cast("long"), lambda a, v: a + v * v),
-        ),
-        "llm_cluster.semdedup_norms",
-        key=(sf_dir,),
+        ).persist,
     )
     a, b = norms.alias("a"), norms.alias("b")
     dot = F.aggregate(
@@ -288,10 +288,11 @@ def cluster_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and re-quantizing the corpus — the standard Spark iterative-ML
     # pattern (the relation is (id, 64 longs): a fraction of the raw
     # corpus, MEMORY_AND_DISK spills if it ever outgrows memory).
-    vecs = bounded_persist(
-        emb.select("vec_id", _iv(F.col("embedding")).alias("iv")),
+    vecs = memo(
+        spark,
         "llm_cluster.kmeans_vecs",
-        key=(sf_dir,),
+        sf_key(sf_dir),
+        emb.select("vec_id", _iv(F.col("embedding")).alias("iv")).persist,
     )
     seeds = (
         vecs.orderBy("vec_id")

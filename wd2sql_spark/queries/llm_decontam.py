@@ -15,16 +15,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wd2sql_spark.catalog import table
+from wd2sql_spark.catalog import sf_key, table
 from wd2sql_spark.operators import dedup as D
 from wd2sql_spark.queries.registry import query
-from wd2sql_spark.session_cache import SessionCache
+from wd2sql_spark.session_cache import memo
 
 # Every doc_id ≡ 0 (mod EVAL_MOD) plays the held-out benchmark; the rest
 # are the training corpus. Deterministic, so both engines pick the same
 # split without any stored eval table.
 EVAL_MOD = 23
-_EVAL_SHINGLE_CACHE = SessionCache()
 DECONTAM_N = 5  # word n-gram width of the overlap check
 
 _NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
@@ -113,9 +112,7 @@ def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    ev = _EVAL_SHINGLE_CACHE.get_or_build(
-        spark, ("decontam_eval", sf_dir, DECONTAM_N), build_eval_digests
-    )
+    ev = memo(spark, "llm_decontam.eval_digests", (sf_key(sf_dir), DECONTAM_N), build_eval_digests)
     corpus_sh = D.doc_shingles(docs.filter(~is_eval), n=DECONTAM_N).select(
         "doc_id", F.xxhash64("shingle").alias("sh")
     )

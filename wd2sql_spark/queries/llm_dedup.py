@@ -14,10 +14,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wd2sql_spark.catalog import table
+from wd2sql_spark.catalog import sf_key, table
 from wd2sql_spark.operators import dedup as D
 from wd2sql_spark.queries.registry import query
-from wd2sql_spark.session_cache import bounded_persist
+from wd2sql_spark.session_cache import memo
 
 # Shared SQL fragments -------------------------------------------------------
 
@@ -103,7 +103,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scale (mirrored in the oracle)."""
     docs = table(spark, sf_dir, "documents")
     return (
-        D.jaccard_pairs(docs, n=3, max_doc_freq=MAX_SHINGLE_DF, cache_key=sf_dir)
+        D.jaccard_pairs(docs, n=3, max_doc_freq=MAX_SHINGLE_DF, cache_key=sf_key(sf_dir))
         .select(
             F.col("d1").cast("bigint"),
             F.col("d2").cast("bigint"),
@@ -144,7 +144,7 @@ def dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     high-df shingles sort last and never generate candidates."""
     docs = table(spark, sf_dir, "documents")
     return (
-        D.jaccard_pairs_prefix_filter(docs, n=3, t_num=1, t_den=2, cache_key=sf_dir)
+        D.jaccard_pairs_prefix_filter(docs, n=3, t_num=1, t_den=2, cache_key=sf_key(sf_dir))
         .select(
             F.col("d1").cast("bigint"),
             F.col("d2").cast("bigint"),
@@ -194,7 +194,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape; the md5-string min-hash makes it engine-reproducible."""
     docs = table(spark, sf_dir, "documents")
     return (
-        D.minhash_lsh_pairs(docs, k=16, band_size=4, n=3, min_est_jaccard=0.25)
+        D.minhash_lsh_pairs(
+            docs, k=16, band_size=4, n=3, min_est_jaccard=0.25, cache_key=sf_key(sf_dir)
+        )
         .select(
             F.col("d1").cast("bigint"),
             F.col("d2").cast("bigint"),
@@ -270,7 +272,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     same COUNT(*), so both engines band identically at any size."""
     docs = table(spark, sf_dir, "documents")
     return (
-        D.simhash_pairs(docs, max_hamming=8, n=3, cache_key=sf_dir)
+        D.simhash_pairs(docs, max_hamming=8, n=3, cache_key=sf_key(sf_dir))
         .select(F.col("d1").cast("bigint"), F.col("d2").cast("bigint"), "hamming")
         .orderBy("hamming", "d1", "d2")
         .limit(20)
@@ -390,10 +392,11 @@ def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wd2sql_spark.queries.llm_sampling import md5_bucket
 
     is_delta = md5_bucket(F.col("doc_id"), 100) < 10
-    idx = bounded_persist(
-        D.minhash_band_index(docs, k=16, band_size=4, n=3),
+    idx = memo(
+        spark,
         "llm_dedup.incremental_band_index",
-        key=(sf_dir,),
+        sf_key(sf_dir),
+        D.minhash_band_index(docs, k=16, band_size=4, n=3).persist,
     )
     return (
         D.incremental_index_probe(
@@ -497,7 +500,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     wins = d.select("doc_id", F.explode(win_structs).alias("w")).select(
         "doc_id", F.col("w.p").alias("p"), F.col("w.h").alias("h")
     )
-    wins = bounded_persist(wins, "llm_dedup.substring_wins", key=(sf_dir,))
+    wins = memo(spark, "llm_dedup.substring_wins", sf_key(sf_dir), wins.persist)
     freq = wins.groupBy("h").agg(F.count(F.lit(1)).alias("cnt")).filter(F.col("cnt") > 1)
     dup = wins.join(freq.select("h"), "h").select("doc_id", "p")
     from pyspark.sql import Window as W

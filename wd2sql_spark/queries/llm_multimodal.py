@@ -15,7 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wd2sql_spark.catalog import table
+from wd2sql_spark.catalog import sf_key, table
+from wd2sql_spark.session_cache import memo
 from wd2sql_spark.operators import dedup as D
 from wd2sql_spark.operators import multimodal as M
 from wd2sql_spark.queries.registry import query
@@ -249,25 +250,25 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_multimodal_codec.py additionally re-derives the hash from
     the raw payload bytes at the stored-block offsets.
 
-    The (doc_id, ahash) relation is bounded_persist-ed (r9, guide §2.4 /
+    The (doc_id, ahash) relation is persisted and memoized (r9, guide §2.4 /
     §5): both sides of the band self-join derive from it, and without a
     persist Spark executed the whole encode+decode+hash Python pipeline
     once PER SIDE — the persisted relation is two longs per image, so
     the codec runs once and the join probes cached rows (the same fix
     the simhash/minhash self-joins got in r5, missed here)."""
-    from wd2sql_spark.session_cache import bounded_persist, cached_count
 
     docs = table(spark, sf_dir, "documents")
-    bb = D.auto_band_bits(cached_count(docs, (sf_dir, "documents")))
+    bb = D.auto_band_bits(memo(spark, "count.documents", sf_key(sf_dir), docs.count))
     n_bands = max(2, M.PHASH_BITS // bb)
     mask = (1 << bb) - 1
-    blobs = bounded_persist(
+    blobs = memo(
+        spark,
+        "llm_multimodal.phash_ahash",
+        sf_key(sf_dir),
         # Fused single-stage synth+hash (r9) — see multimodal_decode_stats.
         M.fused_codec_pipeline(
             docs, M.png_builder(), M.phash_stage(), schema=M.PHASH_SCHEMA
-        ),
-        "llm_multimodal.phash_ahash",
-        key=(sf_dir,),
+        ).persist,
     )
     chunks = blobs.select(
         "doc_id",

@@ -25,10 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wd2sql_spark.catalog import table
+from wd2sql_spark.catalog import sf_key, table
 from wd2sql_spark.queries._determinism import _int_div
 from wd2sql_spark.queries.registry import query
-from wd2sql_spark.session_cache import SessionCache, bounded_persist
+from wd2sql_spark.session_cache import memo
 
 REPETITION_ORACLE = """
 WITH t AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
@@ -376,9 +376,7 @@ def quality_charlm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-read one small doc-level cache instead of re-fitting; cold cost
     is the bench's cold pass."""
     d = table(spark, sf_dir, "documents")
-    out = _CHARLM_CACHE.get_or_build(
-        spark, ("charlm", sf_dir), lambda: _charlm_scored(d)
-    )
+    out = memo(spark, "llm_quality.charlm_scored", sf_key(sf_dir), lambda: _charlm_scored(d))
     return out.orderBy("doc_id")
 
 
@@ -484,14 +482,10 @@ def _charlm_scored(d: DataFrame) -> DataFrame:
         # boundary-sampling job first, which would otherwise re-execute
         # the whole narrow scoring scan a second time (the result is one
         # small doc-level row per doc — cheap to cache, 2× to recompute);
-        # the SessionCache above bounds this to one relation per
-        # (session, corpus)
+        # the memo above bounds this to one relation per session
         .persist()
     )
     return out
-
-
-_CHARLM_CACHE = SessionCache()
 
 
 SEG_N = 10  # tokens per dedup segment (the "line" unit; fixtures have no \n)
@@ -569,10 +563,11 @@ def quality_segment_dedup_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame
     # persisted generation per session: quiet A/B min 0.72 → 0.57 s at
     # sf0.1, and at 100 TB the segmentation pass over the corpus text
     # runs once instead of twice.
-    segs = bounded_persist(
-        segs.withColumn("seg_hash", F.md5("seg")),
+    segs = memo(
+        spark,
         "llm_quality.segment_rebuild_segs",
-        key=(sf_dir,),
+        sf_key(sf_dir),
+        segs.withColumn("seg_hash", F.md5("seg")).persist,
     )
     freq = segs.groupBy("seg_hash").agg(F.count_distinct("doc_id").alias("df"))
     joined = segs.join(freq, "seg_hash")

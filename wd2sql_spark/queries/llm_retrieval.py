@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from wd2sql_spark.catalog import table
+from wd2sql_spark.catalog import sf_key, table
 from wd2sql_spark.operators import similarity as S
 from wd2sql_spark.queries.llm_similarity import _cos
 from wd2sql_spark.queries.llm_text import (
@@ -38,7 +38,7 @@ from wd2sql_spark.queries.llm_text import (
     BM25_TERMS,
 )
 from wd2sql_spark.queries.registry import query
-from wd2sql_spark.session_cache import SessionCache, bounded_persist
+from wd2sql_spark.session_cache import memo
 
 RRF_C = 60
 RUN_K = 20  # depth of each constituent run
@@ -260,23 +260,24 @@ def retrieval_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # attach); unpersisted, each consumer embedded its own corpus-wide
     # trigram aggregate — a third documents scan per run (r9
     # executed-plan probe).
-    top = bounded_persist(top, "llm_retrieval.phrase_top", key=(sf_dir,))
+    top = memo(spark, "llm_retrieval.phrase_top", sf_key(sf_dir), top.persist)
     # ONE corpus pass extracts the phrase-term positions (tiny: three
     # terms' worth of rows), PERSISTED so the three adjacency legs and
     # the final phrase attach read the cached KB-sized relation instead
     # of re-running posexplode over the corpus per leg (measured 5.2 s →
     # ~1.5 s at sf0.1-×1; the argmax pass above is the only other corpus
     # scan, so the whole query is two passes like the tf-idf family).
-    filt = bounded_persist(
+    filt = memo(
+        spark,
+        "llm_retrieval.phrase_filt",
+        sf_key(sf_dir),
         doc_positions(d)
         .crossJoin(F.broadcast(top))
         .filter(
             (F.col("term") == F.col("t0"))
             | (F.col("term") == F.col("t1"))
             | (F.col("term") == F.col("t2"))
-        ),
-        "llm_retrieval.phrase_filt",
-        key=(sf_dir,),
+        ).persist,
     )
     leg0 = filt.filter(F.col("term") == F.col("t0"))
     rest = filt.filter(
@@ -297,10 +298,6 @@ def retrieval_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 MMR_POOL_N = 30  # relevance candidate pool (top-N cosine)
 MMR_K = 10  # diversified results selected
 MMR_QUERY_ID = 0  # query embedding
-
-# collected pool artifact (rel/sim integer dicts), one per (session, sf_dir)
-_MMR_POOL_CACHE = SessionCache()
-
 
 def _mmr_oracle() -> str:
     """Unrolled greedy MMR in DuckDB SQL (the BPE unrolled-round oracle
@@ -435,8 +432,12 @@ def retrieval_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
         sims.unpersist()
         return rel, sim
 
-    rel, sim = _MMR_POOL_CACHE.get_or_build(
-        spark, ("mmr_pool", sf_dir, MMR_QUERY_ID, MMR_POOL_N), build_pool
+    # collected pool artifact (rel/sim integer dicts), memoized per session
+    rel, sim = memo(
+        spark,
+        "llm_retrieval.mmr_pool",
+        (sf_key(sf_dir), MMR_QUERY_ID, MMR_POOL_N),
+        build_pool,
     )
 
     selected: list[tuple] = []  # (vec_id, rel6, maxsim6, margin6, rank)

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from wd2sql_spark.catalog import table
+from wd2sql_spark.catalog import sf_key, table
 from wd2sql_spark.queries.registry import query
 
 
@@ -347,6 +347,6 @@ def ids_contiguous_global(spark: SparkSession, sf_dir: str) -> DataFrame:
         d,
         ["n_chars", "doc_id"],
         n_partitions=16,
-        cache_key=(sf_dir, "documents", "n_chars-doc_id", 16),
+        cache_key=(sf_key(sf_dir), "documents"),
     )
     return out.select("doc_id", "n_chars", "global_id").orderBy("global_id")

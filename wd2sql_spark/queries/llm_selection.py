@@ -38,10 +38,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from wd2sql_spark.catalog import table
+from wd2sql_spark.catalog import sf_key, table
 from wd2sql_spark.queries._determinism import _int_div
 from wd2sql_spark.queries.registry import query
-from wd2sql_spark.session_cache import SessionCache, bounded_persist, cached_count
+from wd2sql_spark.session_cache import memo
 
 # ---------------------------------------------------------------------------
 # DSIR importance resampling
@@ -122,13 +122,6 @@ ORDER BY t6 - r6 DESC, doc_id
 LIMIT {DSIR_K}
 """
 
-_DSIR_CACHE = SessionCache()
-
-# Converged near-dup component labels for the leakage-safe split — built
-# once per (session, sf_dir); see split_leakage_safe.
-_SPLIT_COMP_CACHE = SessionCache()
-
-
 @query("sample_dsir_importance", oracle=DSIR_ORACLE, category="llm_sampling")
 def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-style data selection (Xie et al. 2023): keep the top-k
@@ -158,8 +151,10 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial scans + one full scan, all embarrassingly parallel. The
     scored relation is session-cached like the charlm filter's."""
     d = table(spark, sf_dir, "documents")
-    scored = _DSIR_CACHE.get_or_build(
-        spark, ("dsir", sf_dir), lambda: _dsir_scored(d)
+    # persisted before the top-k: cheap doc-level rows; re-scoring the
+    # corpus on every battery/bench re-run is the expensive part.
+    scored = memo(
+        spark, "llm_selection.dsir_scores", sf_key(sf_dir), lambda: _dsir_scored(d).persist()
     )
     return scored.orderBy(F.col("importance_6").desc(), "doc_id").limit(DSIR_K).select(
         "doc_id",
@@ -226,7 +221,7 @@ def _dsir_scored(d: DataFrame) -> DataFrame:
     fold = lambda col: F.aggregate(col, F.lit(0).cast("long"), lambda acc, x: acc + x)  # noqa: E731
     n = F.size(F.col("pt6s")).cast("long")
     avg = lambda s: _int_div(F.lit(2) * s + F.col("n"), F.lit(2) * F.col("n"))  # noqa: E731
-    scored = (
+    return (
         d.filter(F.length("text") >= 2)
         .select("doc_id", "source", idxs.alias("idxs"))
         .select("doc_id", "source", looked(t_tab).alias("pt6s"), looked(r_tab).alias("pr6s"))
@@ -243,10 +238,6 @@ def _dsir_scored(d: DataFrame) -> DataFrame:
         )
         .withColumn("importance_6", F.col("t6") - F.col("r6"))
     )
-    # persist before the top-k: cheap doc-level rows; re-scoring the
-    # corpus on every battery/bench re-run is the expensive part.
-    # bounded_persist releases the previous call's copy first.
-    return bounded_persist(scored, "llm_selection.dsir_scores")
 
 
 # ---------------------------------------------------------------------------
@@ -529,22 +520,19 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents")
     edges = (
-        D.jaccard_pairs(docs, n=3, max_doc_freq=MAX_SHINGLE_DF, cache_key=sf_dir)
+        D.jaccard_pairs(docs, n=3, max_doc_freq=MAX_SHINGLE_DF, cache_key=sf_key(sf_dir))
         .filter(F.col("jaccard") >= JACCARD_EDGE_MIN)
         .select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
     )
-    # key=(sf_dir,) skips the per-call sameSemantics canonicalization of
-    # the corpus-sized edge build tree (~0.3-0.5 s, the session_cache
-    # docstring's own measurement). The CC labels are built ONCE per
-    # (session, sf_dir): connected_components runs its pointer-jumping
-    # rounds EAGERLY at construction (localCheckpoint per round), so a
-    # post-hoc persist can't dedupe them — the build-once SessionCache
-    # (the DSIR-scores idiom above) is the correct altitude. The labels
-    # are deterministic in the edge set, so warm calls start from the
-    # converged relation (1.50 → 1.27 s warm min-of-3 at sf0.1).
-    edges = bounded_persist(edges, "llm_selection.split_edges", key=(sf_dir,))
-    comp = _SPLIT_COMP_CACHE.get_or_build(
-        spark, (sf_dir,), lambda: D.connected_components(edges)
+    # The CC labels are memoized too: connected_components runs its
+    # pointer-jumping rounds EAGERLY at construction (localCheckpoint per
+    # round), so a post-hoc persist can't dedupe them — memoizing the
+    # built labels is the correct altitude. The labels are deterministic
+    # in the edge set, so warm calls start from the converged relation
+    # (1.50 → 1.27 s warm min-of-3 at sf0.1).
+    edges = memo(spark, "llm_selection.split_edges", sf_key(sf_dir), edges.persist)
+    comp = memo(
+        spark, "llm_selection.split_comp", sf_key(sf_dir), lambda: D.connected_components(edges)
     )
     grouped = docs.select("doc_id").join(
         F.broadcast(comp.withColumnRenamed("node", "doc_id")), "doc_id", "left"
@@ -696,7 +684,7 @@ def pairs_contrastive_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents")
     pairs = (
-        D.jaccard_pairs(docs, n=3, max_doc_freq=MAX_SHINGLE_DF, cache_key=sf_dir)
+        D.jaccard_pairs(docs, n=3, max_doc_freq=MAX_SHINGLE_DF, cache_key=sf_key(sf_dir))
         .filter(F.col("jaccard") >= PAIR_J_MIN)
         .select(
             F.col("d1").alias("anchor_id"),
@@ -704,7 +692,7 @@ def pairs_contrastive_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("jaccard", 6).alias("jaccard"),
         )
     )
-    pairs = bounded_persist(pairs, "llm_selection.contrastive_pairs", key=(sf_dir,))
+    pairs = memo(spark, "llm_selection.contrastive_pairs", sf_key(sf_dir), pairs.persist)
     sym = pairs.select(
         F.col("anchor_id").alias("a"), F.col("positive_id").alias("b")
     ).unionAll(
@@ -714,7 +702,7 @@ def pairs_contrastive_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id"),
         ["doc_id"],
         id_col="idx",
-        cache_key=(sf_dir, "documents", "doc_id", 32),
+        cache_key=(sf_key(sf_dir), "documents"),
     )
     n_docs = F.broadcast(dense.agg(F.count(F.lit(1)).alias("n")))
     h = F.conv(
@@ -763,11 +751,12 @@ def pairs_contrastive_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             # ≈ 160 MB framed, far under the 8 GB/512M-row broadcast cap
             # but already the sensible executor-memory ceiling) the hint
             # is withheld and the planner degrades gracefully to SMJ.
-            # The count is memoized per session (cached_count) and only
-            # materializes the persist the query pays anyway.
+            # The count is memoized per session and only materializes
+            # the persist the query pays anyway.
             _maybe_broadcast(
                 sym.withColumnRenamed("a", "anchor_id").withColumnRenamed("b", "negative_id"),
-                n_rows=2 * cached_count(pairs, (sf_dir, "contrastive_pairs")),
+                n_rows=2
+                * memo(spark, "llm_selection.contrastive_pairs.count", sf_key(sf_dir), pairs.count),
             ),
             ["anchor_id", "negative_id"],
             "left_anti",

@@ -13,7 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wd2sql_spark.catalog import table
+from wd2sql_spark.catalog import sf_key, table
+from wd2sql_spark.session_cache import memo
 from wd2sql_spark.operators import similarity as S
 from wd2sql_spark.queries.registry import query
 # The PQ/IVFPQ queries use plan_cached=True (registry.query): their
@@ -165,11 +166,10 @@ def sim_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexes the same md5-derived global plane sequence, so bucket ids
     match bit-for-bit at any size."""
     from wd2sql_spark.operators.dedup import auto_band_bits
-    from wd2sql_spark.session_cache import cached_count
 
     emb = table(spark, sf_dir, "embeddings")
     r = auto_band_bits(
-        cached_count(emb, (sf_dir, "embeddings")),
+        memo(spark, "count.embeddings", sf_key(sf_dir), emb.count),
         floor_bits=NEAR_DUP_R_FLOOR,
         cap_bits=NEAR_DUP_R_CAP,
     )
@@ -194,7 +194,7 @@ def sim_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         S.cosine_near_dup_pairs(
-            bucketed, threshold=-1.0, block_col="lsh_blk", cache_key=sf_dir
+            bucketed, threshold=-1.0, block_col="lsh_blk", cache_key=sf_key(sf_dir)
         )
         .select(F.col("d1").cast("bigint"), F.col("d2").cast("bigint"), "cosine")
         .distinct()
@@ -379,7 +379,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=5,
         n_centroids=16,
         nprobe=4,
-        cache_key=sf_dir,
+        cache_key=sf_key(sf_dir),
     ).orderBy("query_id", "rank")
 
 
@@ -458,7 +458,7 @@ def sim_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     are round/divide built-ins — bit-reproducible, hence a full oracle."""
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3)
-    return S.quantized_topk(emb, queries, k=5, cache_key=sf_dir).orderBy(
+    return S.quantized_topk(emb, queries, k=5, cache_key=sf_key(sf_dir)).orderBy(
         "query_id", "rank"
     )
 
@@ -540,7 +540,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3)
     return S.pq_topk(
-        emb, queries, k=5, n_sub=8, ks=16, dim=64, cache_key=sf_dir
+        emb, queries, k=5, n_sub=8, ks=16, dim=64, cache_key=sf_key(sf_dir)
     ).orderBy("query_id", "rank")
 
 
@@ -618,7 +618,7 @@ def sim_pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3)
     brute = S.brute_force_topk(emb, queries, k=5).select("query_id", "neighbor_id")
-    approx = S.pq_topk(emb, queries, k=5, cache_key=sf_dir).select(
+    approx = S.pq_topk(emb, queries, k=5, cache_key=sf_key(sf_dir)).select(
         F.col("query_id").alias("a_qid"), F.col("neighbor_id").alias("a_nid")
     )
     return (
@@ -701,7 +701,7 @@ def sim_pq_serving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3)
     return S.pq_serving_topk(
-        emb, queries, k=5, n_sub=8, ks=16, dim=64, cache_key=sf_dir
+        emb, queries, k=5, n_sub=8, ks=16, dim=64, cache_key=sf_key(sf_dir)
     ).orderBy("query_id", "rank")
 
 
@@ -785,7 +785,7 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 3)
     return S.ivfpq_topk(
         emb, queries, k=5, n_centroids=16, nprobe=4, n_sub=8, ks=16,
-        dim=64, cache_key=sf_dir,
+        dim=64, cache_key=sf_key(sf_dir),
     ).orderBy("query_id", "rank")
 
 
@@ -826,7 +826,7 @@ def sim_int8_serving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by tests/test_plan_audit.py alongside the PQ serving twin."""
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3)
-    return S.int8_serving_topk(emb, queries, k=5, cache_key=sf_dir).orderBy(
+    return S.int8_serving_topk(emb, queries, k=5, cache_key=sf_key(sf_dir)).orderBy(
         "query_id", "rank"
     )
 
@@ -1048,7 +1048,7 @@ def sim_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=5,
         n_centroids=16,
         nprobe=4,
-        cache_key=sf_dir,
+        cache_key=sf_key(sf_dir),
     ).select(F.col("query_id").alias("a_qid"), F.col("neighbor_id").alias("a_nid"))
     return (
         brute.join(

@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from wd2sql_spark.catalog import table
+from wd2sql_spark.catalog import sf_key, table
+from wd2sql_spark.session_cache import memo
 from wd2sql_spark.queries.registry import query
 
 # Tiny per-language stopword profiles for the heuristic classifier.
@@ -271,7 +272,6 @@ def text_keywords_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select(
         "doc_id", F.explode(F.split(F.lower(F.col("text")), " ")).alias("token")
     ).filter(F.length("token") >= 3)
-    from wd2sql_spark.session_cache import bounded_persist
 
     # tf feeds BOTH the df aggregate and the scored join; unpersisted,
     # the tokenize+tf subtree planned under each consumer — two
@@ -282,10 +282,11 @@ def text_keywords_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # REJECTED: it shuffles the full tf relation onto hot-token
     # partitions (guide §2.5 skew), measured slower than the map-side-
     # combined df aggregate + broadcast join, which is skew-immune.)
-    tf = bounded_persist(
-        tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf")),
+    tf = memo(
+        spark,
         "llm_text.tfidf_tf",
-        key=(sf_dir,),
+        sf_key(sf_dir),
+        tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf")).persist,
     )
     df = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     scored = tf.join(F.broadcast(df), "token").withColumn(

@@ -13,19 +13,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wd2sql_spark.catalog import table
+from wd2sql_spark.catalog import sf_key, table
 from wd2sql_spark.operators.bpe import bpe_merges, bpe_vocab_encoded
 from wd2sql_spark.queries.registry import query
-from wd2sql_spark.session_cache import SessionCache
+from wd2sql_spark.session_cache import memo
 
 BPE_ROUNDS = 4
 
 # The encoded vocabulary is a TOKENIZER — trained once, applied to every
-# later corpus batch. Build it once per (session, corpus, rounds) like
-# the IVF/PQ index caches; the training query (text_bpe_vocab_merges)
-# deliberately does NOT use this cache, because training is the thing it
-# measures.
-_BPE_VOCAB_CACHE = SessionCache()
+# later corpus batch. It is memoized per session like the IVF/PQ indexes;
+# the training query (text_bpe_vocab_merges) deliberately does NOT use
+# the memo, because training is the thing it measures.
 
 
 def _bpe_oracle(rounds: int) -> str:
@@ -186,9 +184,10 @@ def text_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local array lengths after that join, so the only corpus-sized
     shuffle is the final per-doc aggregate."""
     d = table(spark, sf_dir, "documents")
-    vocab = _BPE_VOCAB_CACHE.get_or_build(
+    vocab = memo(
         spark,
-        ("bpe_vocab", sf_dir, BPE_ROUNDS),
+        "llm_tokenize.bpe_vocab",
+        (sf_key(sf_dir), BPE_ROUNDS),
         lambda: bpe_vocab_encoded(d, text_col="text", rounds=BPE_ROUNDS),
     )
     return encode_stats(d, rounds=BPE_ROUNDS, vocab=vocab)

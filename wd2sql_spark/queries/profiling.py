@@ -19,10 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wd2sql_spark.catalog import table
+from wd2sql_spark.catalog import sf_key, table
 from wd2sql_spark.queries._determinism import exact_sum_at
 from wd2sql_spark.queries.registry import query
-from wd2sql_spark.session_cache import SessionCache
+from wd2sql_spark.session_cache import memo
 
 _PROFILE_COLS = ("doc_id", "lang", "n_chars", "source", "text")
 
@@ -120,10 +120,8 @@ def _one_shifted(pos):
     )
 
 
-_BLOOM_WORDS_CACHE = SessionCache()
-
 # The ONE definition of the dim-side selectivity knob — used by the Spark
-# filter, the oracle SQL, and the bloom-words cache key (ADVICE r4 #3: a
+# filter, the oracle SQL, and the bloom-words memo key (ADVICE r4 #3: a
 # duplicated literal in the cache key would let a threshold edit silently
 # reuse a bloom filter built for the old predicate).
 BLOOM_ACCTBAL_MIN = 7000.0
@@ -183,9 +181,7 @@ def join_bloom_prefilter_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # IVF codebook, so a warm run pays zero build jobs. On a cluster this
     # is the materialized runtime-filter reuse AQE does across stages of
     # one query, extended across queries of one session.
-    words = _BLOOM_WORDS_CACHE.get_or_build(
-        spark, ("bloom_words", sf_dir, BLOOM_ACCTBAL_MIN), build_words
-    )
+    words = memo(spark, "profiling.bloom_words", (sf_key(sf_dir), BLOOM_ACCTBAL_MIN), build_words)
     words_lit = F.array(*[F.lit(w).cast("long") for w in words])
 
     o = table(spark, sf_dir, "orders")

@@ -92,7 +92,8 @@ def query(
     plan_cached: bool = False,
 ) -> Callable[[QueryFn], QueryFn]:
     """Register a query. ``plan_cached=True`` memoizes the CONSTRUCTED
-    (still lazy) DataFrame per (session, sf_dir) — prepared-statement
+    (still lazy) DataFrame per session, keyed on ``catalog.sf_key(sf_dir)``
+    so a rewritten fixture file rebuilds it — prepared-statement
     semantics: every invocation still executes the full plan against the
     data, but the driver-side plan build (py4j Column construction +
     Catalyst analysis, measured at 0.5-1.2 s for literal-heavy or deeply
@@ -109,14 +110,11 @@ def query(
             raise ValueError(f"duplicate query name: {name}")
         use = fn
         if plan_cached:
-            from wd2sql_spark.session_cache import SessionCache
-
-            cache = SessionCache()
+            from wd2sql_spark.catalog import sf_key
+            from wd2sql_spark.session_cache import memo
 
             def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-                return cache.get_or_build(
-                    spark, ("plan", name, sf_dir), lambda: fn(spark, sf_dir)
-                )
+                return memo(spark, f"plan.{name}", sf_key(sf_dir), lambda: fn(spark, sf_dir))
 
             wrapped.__name__ = fn.__name__
             wrapped.__doc__ = fn.__doc__
@@ -135,83 +133,69 @@ def query(
 # + oracle + Python-eval-module ASTs) differs from the snapshot recorded
 # at its latest driver attestation (``tools/plan_fps.json``).
 # ``tests/test_priority.py`` fails if the flagged set isn't front-loaded
-# here. The r9 OPTIMIZATION rewrites (semdedup persist, Q21 codegen
-# aggregate, the multimodal sort removals, the HLL one-scan form) all
-# sit in the flagged front so the next driver run re-attests them
-# first. Round 9 layout: (a0) the new MJPEG-in-AVI demux query, then
-# (a) the r9 rewrites (subq_min_cost_supplier window-argmin + part
-# pushdown; join_multiway/setop_except), the 9 multimodal queries
-# flagged by the BitReader accumulator-trim fix (ADVICE r8 #2), and the
-# 10 plan-blind stream_* queries whose whole-closure AST hash moved
-# with the catalog.py table cache — coarse but correct: a plan-blind
-# fingerprint cannot localize the change, so the round that touches
-# catalog re-attests the streams; then (b) stalest-attested padding to
-# the ~50-slot cap. plan_fps.json covers the 188 pre-r9 queries; the
-# new demux query snapshots at its first attestation. See
-# tools/gen_priority.py --explain for the live flag set.
+# here.
+# Current layout: the flagged head is the r10-attested queries whose
+# defining module or import closure changed since (the session-memo
+# consolidation touched the query, operator and streaming modules that
+# memoize), flagged by the timestamp fallback because the r10
+# attestations have no fingerprint snapshot yet; then stalest-attested
+# padding to the ~50-slot cap. See tools/gen_priority.py --explain for
+# the live flag set.
 _PRIORITY = (
-    # flagged (tools/gen_priority.py order) — the r10 optimization
-    # rewrites: the Arrow repetition fold + the llm_quality/llm_selection
-    # module-AST movers, the spread_rows input repartition on the whole
-    # multimodal family, the guarded contrastive broadcast, and the
-    # streaming-side driver-cost amortizations (schema memo + cached
-    # static scans; stream fingerprints are plan-blind whole-closure AST
-    # hashes, so the module edit re-attests the family — coarse but
-    # correct, as in r9)
-    "quality_boilerplate_windows",  # plan fingerprint moved since r6 attestation
-    "quality_oov_vocab",  # plan fingerprint moved since r6 attestation
-    "quality_repetition_metrics",  # plan fingerprint moved since r6 attestation
-    "mix_token_budget_waterfill",  # plan fingerprint moved since r8 attestation
-    "quality_charlm_score",  # plan fingerprint moved since r8 attestation
-    "sample_dsir_importance",  # plan fingerprint moved since r8 attestation
-    "split_leakage_safe",  # plan fingerprint moved since r8 attestation
-    "multimodal_decode_stats",  # plan fingerprint moved since r9 attestation
-    "multimodal_frame_sample",  # plan fingerprint moved since r9 attestation
-    "multimodal_jpeg_codec_stats",  # plan fingerprint moved since r9 attestation
-    "multimodal_luma_phash",  # plan fingerprint moved since r9 attestation
-    "multimodal_mixed_codec_stats",  # plan fingerprint moved since r9 attestation
-    "multimodal_mixed_container_stats",  # plan fingerprint moved since r9 attestation
-    "multimodal_phash_near_dup",  # plan fingerprint moved since r9 attestation
-    "multimodal_resize_thumbs",  # plan fingerprint moved since r9 attestation
-    "multimodal_truecolor_codec_stats",  # plan fingerprint moved since r9 attestation
-    "multimodal_video_demux_stats",  # plan fingerprint moved since r9 attestation
-    "pairs_contrastive_build",  # plan fingerprint moved since r9 attestation
-    "quality_segment_dedup_rebuild",  # plan fingerprint moved since r9 attestation
-    "stream_dedup_within_watermark",  # plan fingerprint moved since r9 attestation
-    "stream_incremental_neardup",  # plan fingerprint moved since r9 attestation
-    "stream_interval_join",  # plan fingerprint moved since r9 attestation
-    "stream_quality_filter",  # plan fingerprint moved since r9 attestation
-    "stream_session_windows",  # plan fingerprint moved since r9 attestation
-    "stream_sliding_counts",  # plan fingerprint moved since r9 attestation
-    "stream_stateful_streaks",  # plan fingerprint moved since r9 attestation
-    "stream_static_enrich",  # plan fingerprint moved since r9 attestation
-    "stream_tumbling_counts",  # plan fingerprint moved since r9 attestation
-    "stream_wd_etl_meta",  # plan fingerprint moved since r9 attestation
-    # hand-pinned (VERDICT r9 task #4): the three driver-regression
-    # suspects must come back improved/flat with fresh rows this round
-    "dedup_minhash_lsh",
-    "sessionize_gap30m_skewsafe",
-    "curation_pipeline_decontam",
+    # flagged (tools/gen_priority.py order)
+    "cluster_kmeans_embeddings",  # wd2sql_spark.queries.llm_cluster changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "curation_pipeline_decontam",  # wd2sql_spark.queries.curation changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "dedup_jaccard_prefix_filter",  # wd2sql_spark.queries.llm_dedup changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "dedup_minhash_lsh",  # wd2sql_spark.queries.llm_dedup changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "join_bloom_prefilter_semi",  # wd2sql_spark.queries.profiling changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "mix_token_budget_waterfill",  # wd2sql_spark.queries.graph changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "multimodal_decode_stats",  # wd2sql_spark.queries.llm_multimodal changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "multimodal_frame_sample",  # wd2sql_spark.queries.llm_multimodal changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "multimodal_jpeg_codec_stats",  # wd2sql_spark.queries.llm_multimodal changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "multimodal_luma_phash",  # wd2sql_spark.queries.llm_multimodal changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "multimodal_mixed_codec_stats",  # wd2sql_spark.queries.llm_multimodal changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "multimodal_mixed_container_stats",  # wd2sql_spark.queries.llm_multimodal changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "multimodal_phash_near_dup",  # wd2sql_spark.queries.llm_multimodal changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "multimodal_resize_thumbs",  # wd2sql_spark.queries.llm_multimodal changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "multimodal_truecolor_codec_stats",  # wd2sql_spark.queries.llm_multimodal changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "multimodal_video_demux_stats",  # wd2sql_spark.queries.llm_multimodal changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "pairs_contrastive_build",  # wd2sql_spark.queries.graph changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "quality_boilerplate_windows",  # wd2sql_spark.queries.llm_quality changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "quality_charlm_score",  # wd2sql_spark.queries.llm_quality changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "quality_oov_vocab",  # wd2sql_spark.queries.llm_quality changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "quality_repetition_metrics",  # wd2sql_spark.queries.llm_quality changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "quality_segment_dedup_rebuild",  # wd2sql_spark.queries.llm_quality changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "sample_dsir_importance",  # wd2sql_spark.queries.graph changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "sessionize_gap30m_skewsafe",  # wd2sql_spark.queries.sessionization changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "split_leakage_safe",  # wd2sql_spark.queries.graph changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "stream_dedup_within_watermark",  # wd2sql_spark.queries.llm_dedup changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "stream_incremental_neardup",  # wd2sql_spark.queries.llm_dedup changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "stream_interval_join",  # wd2sql_spark.queries.llm_dedup changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "stream_quality_filter",  # wd2sql_spark.queries.llm_dedup changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "stream_session_windows",  # wd2sql_spark.queries.llm_dedup changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "stream_sliding_counts",  # wd2sql_spark.queries.llm_dedup changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "stream_stateful_streaks",  # wd2sql_spark.queries.llm_dedup changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "stream_static_enrich",  # wd2sql_spark.queries.llm_dedup changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "stream_tumbling_counts",  # wd2sql_spark.queries.llm_dedup changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "stream_wd_etl_meta",  # wd2sql_spark.queries.llm_dedup changed after r10 attestation (no fp snapshot — timestamp fallback)
+    "window_revenue_share",  # wd2sql_spark.operators.ids_assign changed after r10 attestation (no fp snapshot — timestamp fallback)
     # stalest-attested padding to the driver cap
-    "window_revenue_share",  # r4
-    "agg_count_distinct",  # r5
-    "agg_cube",  # r5
-    "agg_grouping_sets",  # r5
-    "agg_having",  # r5
-    "agg_histogram_totalprice",  # r5
-    "agg_min_max_by",  # r5
-    "agg_rollup",  # r5
-    "agg_stats_moments",  # r5
-    "cluster_kmeans_embeddings",  # r5
-    "dedup_jaccard_prefix_filter",  # r5
-    "filter_predicates",  # r5
-    "join_anti_customers_without_orders",  # r5
-    "join_bloom_prefilter_semi",  # r5
-    "join_cross_small",  # r5
-    "join_disjunctive_predicate",  # r5
-    "join_full_outer",  # r5
-    "join_inner_broadcast",  # r5
+    "join_left_outer",  # r5
+    "join_returned_item_ranking",  # r5
+    "join_semi_suppliers_with_bulk_lines",  # r5
+    "join_shipping_priority_topk",  # r5
+    "point_lookup_by_label",  # r5
+    "projection_compute",  # r5
+    "setop_distinct",  # r5
+    "setop_intersect",  # r5
+    "setop_union_all",  # r5
+    "setop_union_distinct",  # r5
+    "sim_ivf_topk",  # r5
+    "sim_ivfpq_topk",  # r5
+    "sim_pq_serving_topk",  # r5
+    "sim_pq_topk",  # r5
 )
+
 
 def load_all_modules() -> dict[str, Query]:
     for mod in _MODULES:

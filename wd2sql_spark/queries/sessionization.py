@@ -26,11 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from wd2sql_spark.session_cache import bounded_persist
-
-from wd2sql_spark.catalog import events
+from wd2sql_spark.catalog import events, sf_key
 from wd2sql_spark.queries._determinism import exact_sum_at
 from wd2sql_spark.queries.registry import query
+from wd2sql_spark.session_cache import memo
 
 GAP_MIN = 30  # session gap threshold, minutes
 
@@ -164,7 +163,7 @@ def sessionize_gap30m_skewsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist the physical plan recomputes the fact-sized scan→window→
     # partial pipeline once per consumer (measured 2x the whole operator's
     # cost). The cached relation is one small row per session-bucket.
-    part = bounded_persist(part, "sessionization.skewsafe_part", key=(sf_dir,))
+    part = memo(spark, "sessionization.skewsafe_part", sf_key(sf_dir), part.persist)
     wday = Window.partitionBy("user_id").orderBy("day")
     bucket = (
         part.groupBy("user_id", "day")
@@ -483,7 +482,6 @@ def gapfill_daily_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts; the only fact-sized work is the day-keyed partial+final
     count. Time-series charts and training-cadence dashboards need this
     shape because missing days must read as 0, not NULL/absent."""
-    from wd2sql_spark.session_cache import bounded_persist
 
     e = events(spark, sf_dir)
     # ONE events pass (r9): aggregate ALL events per day with a
@@ -492,12 +490,13 @@ def gapfill_daily_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to_date(min/max ts)), and purchase-free days that HAVE events
     # carry n=0 straight through the join. The old form scanned events
     # twice (bounds + purchase-filtered aggregate).
-    daily = bounded_persist(
+    daily = memo(
+        spark,
+        "sessionization.gapfill_daily",
+        sf_key(sf_dir),
         e.groupBy(F.to_date(F.col("ts")).alias("day")).agg(
             F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("n")
-        ),
-        "sessionization.gapfill_daily",
-        key=(sf_dir,),
+        ).persist,
     )
     bounds = daily.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
     spine = bounds.select(
@@ -580,7 +579,6 @@ def ts_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     sensor/series id — thousands of independent partitions)."""
     from wd2sql_spark.queries._determinism import _int_div
 
-    from wd2sql_spark.session_cache import bounded_persist
 
     e = events(spark, sf_dir)
     n = F.count(F.lit(1))
@@ -591,13 +589,14 @@ def ts_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bucket, so the distinct over the tiny aggregate equals the distinct
     # over the fact. The old form scanned events three times (bounds,
     # keys, aggregate — r9 executed-plan probe, no exchange reuse).
-    hourly = bounded_persist(
+    hourly = memo(
+        spark,
+        "sessionization.gapfill_hourly",
+        sf_key(sf_dir),
         e.groupBy("event_type", F.date_trunc("hour", F.col("ts")).alias("bucket")).agg(
             n.alias("n"),
             _int_div(F.lit(2) * s + F.lit(100) * n, F.lit(200) * n).alias("units"),
-        ),
-        "sessionization.gapfill_hourly",
-        key=(sf_dir,),
+        ).persist,
     )
     bounds = hourly.agg(F.min("bucket").alias("h0"), F.max("bucket").alias("h1"))
     spine = (

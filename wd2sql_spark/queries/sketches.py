@@ -24,7 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wd2sql_spark.catalog import table
+from wd2sql_spark.catalog import sf_key, table
+from wd2sql_spark.session_cache import memo
 from wd2sql_spark.queries.registry import query
 
 EARLY_END = "2024-01-03"
@@ -248,9 +249,8 @@ def sketch_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame
     # total-mass bound); unpersisted, each embedded its own copy of the
     # build subtree — a third events scan per run (r9 executed-plan
     # probe). d·w cells is a small constant, the canonical persist case.
-    from wd2sql_spark.session_cache import bounded_persist
 
-    cells = bounded_persist(cells, "sketches.cms_cells", key=(sf_dir,))
+    cells = memo(spark, "sketches.cms_cells", sf_key(sf_dir), cells.persist)
     top = (
         e.groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("c"))

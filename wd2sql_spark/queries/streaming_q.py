@@ -21,7 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wd2sql_spark.catalog import table
+from wd2sql_spark.catalog import sf_key, table
+from wd2sql_spark.session_cache import memo
 from wd2sql_spark.etl.pipeline import parse_entities
 from wd2sql_spark.queries.registry import query
 from wd2sql_spark.queries.wikidata import FIXTURE, META_GOLDEN
@@ -327,7 +328,7 @@ def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 split and the SAME full-hash oracle as the batch twin
     (dedup_incremental_delta).
 
-    The corpus index is bounded_persist-ed (r9, guide §5): the static
+    The corpus index is persisted and memoized (r9, guide §5): the static
     side of a stream-static join is re-executed EVERY micro-batch, so an
     unpersisted index re-ran the whole corpus tokenize→shingle→minhash
     pass (~1.4 s batch-measured at sf0.1) inside the stream — exactly
@@ -337,15 +338,15 @@ def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-of-4 same-host A/B)."""
     from wd2sql_spark.operators import dedup as D
     from wd2sql_spark.queries.llm_sampling import md5_bucket
-    from wd2sql_spark.session_cache import bounded_persist
 
     # session-cached scan (r10) — same footer-read amortization as above
     docs = table(spark, sf_dir, "documents")
     is_delta = md5_bucket(F.col("doc_id"), 100) < 10
-    corpus_idx = bounded_persist(
-        D.minhash_band_index(docs.filter(~is_delta), k=16, band_size=4, n=3),
+    corpus_idx = memo(
+        spark,
         "streaming_q.neardup_corpus_index",
-        key=(sf_dir,),
+        sf_key(sf_dir),
+        D.minhash_band_index(docs.filter(~is_delta), k=16, band_size=4, n=3).persist,
     )
 
     sdocs = spark.readStream.schema(_DOCS_SCHEMA).parquet(f"{sf_dir}/documents*.parquet")

@@ -20,10 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from wd2sql_spark.catalog import table
+from wd2sql_spark.catalog import sf_key, table
 from wd2sql_spark.queries._determinism import exact_sum_at
 from wd2sql_spark.queries.registry import query
-from wd2sql_spark.session_cache import bounded_persist
+from wd2sql_spark.session_cache import memo
 
 IN_AGG_ORACLE = """
 SELECT c.c_name, o.o_orderkey, round(o.o_totalprice, 2) AS totalprice, SUM(l.l_quantity) AS sum_qty
@@ -201,14 +201,15 @@ def subq_max_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
     s = table(spark, sf_dir, "supplier")
-    revenue = bounded_persist(
+    revenue = memo(
+        spark,
+        "subqueries.q15_revenue",
+        sf_key(sf_dir),
         l.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
             F.sum(
                 F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 1000000, 0).cast("long")
             ).alias("rev_units")
-        ),
-        "subqueries.q15_revenue",
-        key=(sf_dir,),
+        ).persist,
     )
     max_units = revenue.agg(F.max("rev_units").alias("max_units"))
     top = revenue.crossJoin(F.broadcast(max_units)).filter(

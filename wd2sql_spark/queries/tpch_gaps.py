@@ -28,10 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from wd2sql_spark.catalog import table
+from wd2sql_spark.catalog import sf_key, table
 from wd2sql_spark.queries._determinism import exact_sum_at
 from wd2sql_spark.queries.registry import query
-from wd2sql_spark.session_cache import bounded_persist
+from wd2sql_spark.session_cache import memo
 
 # ---------------------------------------------------------------------------
 # Q2 — minimum-cost supplier (correlated scalar MIN subquery)
@@ -361,15 +361,17 @@ def subq_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount")) * 10000, 0
         ).cast("long")
     )
-    revenue = bounded_persist(
+    revenue = memo(
+        spark,
+        "tpch_gaps.q15_revenue",
+        sf_key(sf_dir),
         l.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1996-07-01").cast("timestamp"))
         )
         .groupBy("l_suppkey")
-        .agg(units.alias("units")),
-        "tpch_gaps.q15_revenue",
-        key=(sf_dir,),
+        .agg(units.alias("units"))
+        .persist,
     )
     best = revenue.agg(F.max("units").alias("max_units"))
     return (

@@ -15,10 +15,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wd2sql_spark.catalog import file_key
 from wd2sql_spark.etl.pipeline import parse_entities, read_dump, transform
 from wd2sql_spark.functions.ids import ENCODE_WID_SQL_CASE, encode_wid
 from wd2sql_spark.queries.registry import query
-from wd2sql_spark.session_cache import SessionCache
+from wd2sql_spark.session_cache import memo
 
 FIXTURE = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "..", "..", "tests", "fixtures", "wd_dump.ndjson"
@@ -55,23 +56,19 @@ def wd_id_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select("id", encode_wid(F.col("id")).alias("encoded")).orderBy("id")
 
 
-# Per-session cache: the 7 wd_etl_* queries all project from the same
-# parsed-dump relation, so build (and persist) it once per SparkSession —
-# the dump is scanned + JSON-parsed a single time and every golden query
-# is a cheap cached-projection job. Session keying (weakref guard against
-# id() recycling, ADVICE r2) lives in session_cache.SessionCache.
-_ETL_CACHE = SessionCache()
-
-
 def _etl_tables(spark: SparkSession) -> dict[str, DataFrame]:
-    # The cache value is (tables, parsed): the persisted parsed relation
-    # rides along so clear_all_session_caches() can unpersist it — the
-    # tables dict alone doesn't reference the persist handle.
+    # The 7 wd_etl_* queries all project from the same parsed-dump
+    # relation, so it is built (and persisted) once per session, keyed on
+    # the fixture file — the dump is scanned + JSON-parsed a single time
+    # and every golden query is a cheap cached-projection job. The memo
+    # value is (tables, parsed): the persisted parsed relation rides
+    # along so releasing the value unpersists it — the tables dict alone
+    # doesn't reference the persist handle.
     def build() -> tuple[dict[str, DataFrame], DataFrame]:
         parsed = parse_entities(read_dump(spark, FIXTURE)).persist()
         return transform(parsed), parsed
 
-    return _ETL_CACHE.get_or_build(spark, ("wd_etl_tables",), build)[0]
+    return memo(spark, "wikidata.etl_tables", file_key(FIXTURE), build)[0]
 
 
 META_GOLDEN = """

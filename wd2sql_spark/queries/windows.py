@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from wd2sql_spark.catalog import table
+from wd2sql_spark.catalog import sf_key, table
 from wd2sql_spark.operators.ids_assign import global_order_rank
 from wd2sql_spark.queries.registry import query
 
@@ -174,9 +174,9 @@ def window_ntile_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         o,
         ["o_totalprice", "o_orderkey"],
         id_col="_rank",
-        # immutable fixture + fixed ordering ⇒ the layout/offsets are
-        # session-cacheable; the per-call cost drops to the final pass
-        cache_key=(sf_dir, "orders", "o_totalprice-o_orderkey", 32),
+        # same fixture + fixed ordering ⇒ the layout/offsets are
+        # memoizable; the per-call cost drops to the final pass
+        cache_key=(sf_key(sf_dir), "orders"),
     )
     b = 4
     q, rem = divmod(n, b)

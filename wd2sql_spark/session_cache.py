@@ -1,225 +1,94 @@
-"""Session-scoped build-once caches for derived relations.
+"""The one session-scoped memo for derived values.
 
-Several operators build a relation once per SparkSession and reuse it
-(the parsed wikidata dump, the IVF index). The subtle part — flagged in
-an earlier review — is the key: a plain ``id(spark)`` can be recycled by
-the allocator after a session is stopped and GC'd, handing a NEW session
-cached DataFrames bound to a dead SparkContext. This helper owns that
-logic in one place: entries hold a WEAK reference to the session, a hit
-requires the weakref to resolve to the very session asking, and dead
-entries are swept on access.
+``memo(spark, slot, key, build)`` holds ONE value per (live session,
+slot) under one rule: a call hits only when its ``key`` is ``==``-equal
+to the held key; any other key releases the held value — unpersisting
+every persisted DataFrame inside it — before ``build()`` runs. A
+``None`` key never hits: a caller that cannot name its input's identity
+(ad-hoc operator inputs, tests) builds fresh on every call, and each
+call still releases the previous generation, so executor storage stays
+bounded at one generation per slot however often a query re-runs.
+
+Keys name the data a value was derived from. Values read from fixture
+files key on the files' (path, mtime_ns, size) (``catalog.file_key`` and
+``catalog.sf_key``), so rewriting a file invalidates every memo built
+from it. ``build`` is where a site persists, counts or checkpoints.
+
+Sessions: an entry holds a WEAK reference to its session, and a hit
+requires it to resolve to the very session asking. A plain
+``id(spark)`` can be recycled after a session is stopped and collected,
+which would hand a NEW session DataFrames bound to a dead SparkContext;
+a ``spark.newSession()`` never sees another session's value.
+
+Not thread-safe by design: query construction is driver-single-threaded
+in this codebase (the concurrent ETL writes share no memo).
 """
 
 from __future__ import annotations
 
-import os
 import weakref
 from collections.abc import Callable
-from typing import Any
+from typing import Any, TypeVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
+T = TypeVar("T")
 
-def _explicit_key_hit(prev, held_key: tuple, df, key: tuple) -> bool:
-    """Whether an explicit-key slot hit may serve the held relation.
-
-    Explicit keys skip ``sameSemantics`` for speed, so they are trusted —
-    but not blindly (ADVICE r4 #2: slots are process-global strings, and
-    two call paths sharing slot+key with DIFFERENT upstream plans would
-    silently serve stale results). Two guards:
-
-    - always: the schemas must match — free (both plans are analyzed
-      anyway) and catches the coarse collision class (different column
-      sets under one key);
-    - ``WD2SQL_CACHE_DEBUG=1``: additionally run the full
-      ``sameSemantics`` check and RAISE if the explicit key claimed a hit
-      the plans disagree with — the mode to run the test battery in when
-      touching cache keys.
-    """
-    try:
-        same = (
-            held_key == key
-            and prev.sparkSession is df.sparkSession
-            and prev.schema == df.schema
-        )
-    except Exception:
-        return False
-    if same and os.environ.get("WD2SQL_CACHE_DEBUG") == "1":
-        if not prev.sameSemantics(df):
-            raise AssertionError(
-                f"session_cache: explicit key {key!r} hit a held relation whose "
-                "plan differs (sameSemantics=False) — the key does not capture "
-                "the data identity; include sf_dir/params or namespace the slot"
-            )
-    return same
+# (id(session), slot) -> (weakref to the session, key, value)
+_HELD: dict[tuple[int, str], tuple[weakref.ref, Any, Any]] = {}
 
 
-# Every live SessionCache instance, so plan documentation can reset them
-# all: a query whose cached relation is already built plans against an
-# unpersisted (or differently-persisted) subtree and its Exchange census
-# shifts with suite ordering (observed 18 fresh vs 13 after a cache hit on
-# the prefix-filter array relation). ``clear_all_session_caches()`` pins
-# plan generation to the reproducible fresh-build shape.
-_ALL_CACHES: "weakref.WeakSet[SessionCache]" = weakref.WeakSet()
+def memo(spark: SparkSession, slot: str, key: Any, build: Callable[[], T]) -> T:
+    """The value held for (``spark``, ``slot``) if its key ``== key``;
+    otherwise release the held value and hold ``build()`` under ``key``."""
+    full = (id(spark), slot)
+    held = _HELD.pop(full, None)
+    if held is not None:
+        ref, held_key, value = held
+        if key is not None and ref() is spark and held_key == key:
+            _HELD[full] = held
+            return value
+        _release(value)
+    for k in [k for k, (ref, _, _) in _HELD.items() if ref() is None]:
+        _release(_HELD.pop(k)[2])
+    value = build()
+    _HELD[full] = (weakref.ref(spark), key, value)
+    return value
 
-# Per-site single-generation persist holders (see ``bounded_persist``).
-_BOUNDED: dict[str, list] = {}
 
-
-def _unpersist_value(value: Any) -> None:
-    """Unpersist every DataFrame reachable in a cache value — values may be
-    a bare DataFrame or a tuple/list of relations (multi-relation builds
-    like the prefix-filter join keep intermediate persists alive via the
-    cache entry precisely so this sweep can release them)."""
+def _release(value: Any) -> None:
+    """Unpersist every persisted DataFrame reachable in a memo value —
+    values may be a bare DataFrame or a tuple/list/dict of relations
+    (multi-relation builds keep their intermediate persists in the value
+    precisely so this sweep can release them). Plans that were never
+    persisted are skipped: ``unpersist`` would canonicalize them against
+    every cached plan for nothing."""
     if isinstance(value, (tuple, list)):
         for v in value:
-            _unpersist_value(v)
-        return
-    if isinstance(value, dict):
+            _release(v)
+    elif isinstance(value, dict):
         for v in value.values():
-            _unpersist_value(v)
-        return
-    unpersist = getattr(value, "unpersist", None)
-    if callable(unpersist):
+            _release(v)
+    elif isinstance(value, DataFrame) and value.is_cached:
         try:
-            unpersist()
+            value.unpersist()
         except Exception:
             pass  # session already stopped; nothing to release
 
 
 def clear_all_session_caches() -> None:
-    """Reset every build-once cache and release what can be released.
+    """Drop every memoized value and release its persisted relations.
 
-    PERSISTED relations are unpersisted immediately (an earlier version
-    only dropped the dict entries, so a rebuild after clearing
-    double-persisted the same data — the old entry's persisted relation
-    stayed pinned in the block manager, unreachable by anything but
-    ``spark.catalog.clearCache()``). LOCALCHECKPOINT-backed values have
-    no synchronous release API: ``unpersist()`` on them is a no-op, so
-    dropping the reference here leaves their blocks to Spark's
-    ContextCleaner after GC — eventual, not immediate. Correspondingly,
-    ``cached_relation_count`` observes only CacheManager entries
-    (persisted relations), NOT checkpoint blocks; the battery-end
-    hygiene assertion proves no persisted relation leaks, while
-    checkpoint storage is bounded by the one-generation-per-slot
-    discipline rather than by that counter."""
-    for cache in list(_ALL_CACHES):
-        for _, value in cache._entries.values():
-            _unpersist_value(value)
-        cache._entries.clear()
-    for slot in list(_BOUNDED):
-        for df in _BOUNDED.pop(slot):
-            _unpersist_value(df)
-
-
-def bounded_persist(df, slot: str, key: tuple | None = None):
-    """Persist ``df``, first unpersisting whatever the previous call on
-    this ``slot`` persisted.
-
-    For query functions whose returned lazy plan references a persisted
-    intermediate (so the function itself can never unpersist it), this
-    bounds executor storage to ONE call's worth per site: a battery or
-    bench loop that invokes the same query repeatedly no longer
-    accumulates dead cached relations (the eviction/spill interference
-    tools/scale_experiment.py measured as a 5x slowdown on co-resident
-    queries). Same idiom as ``operators/dedup._PREFIX_PERSISTED``.
-
-    ``key``: optional explicit identity (e.g. ``(sf_dir,)``) — skips the
-    per-call ``sameSemantics`` canonicalization, which costs ~0.3-0.5 s
-    on corpus-sized build trees (measured on pagerank's cooccurrence
-    pairs plan). Callers passing ``key`` own its completeness: the key
-    must capture everything that changes the relation.
-    """
-    held = _BOUNDED.get(slot)
-    if held:
-        prev, held_key = held[0], (held[1] if len(held) > 1 else None)
-        if key is not None and held_key is not None:
-            same = _explicit_key_hit(prev, held_key, df, key)
-        else:
-            try:
-                same = prev.sparkSession is df.sparkSession and prev.sameSemantics(df)
-            except Exception:
-                same = False  # held relation's session is gone
-        if same:
-            # identical call on the same session: KEEP the built cache —
-            # this is the warm-pass regime the bench measures; dropping
-            # and re-persisting the same plan would force a rebuild per
-            # call and also defeat eager-materialization partitioning
-            # reuse (pagerank's edges relation)
-            return prev
-        for p in _BOUNDED.pop(slot):
-            _unpersist_value(p)
-    out = df.persist()
-    _BOUNDED[slot] = [out, key]
-    return out
-
-
-def bounded_checkpoint(df, slot: str, key: tuple | None = None):
-    """``bounded_persist``'s lineage-truncating sibling: materialize ``df``
-    with ``localCheckpoint(eager=True)`` and hold ONE generation per slot.
-
-    Use instead of persist when the relation feeds an UNROLLED iterative
-    plan (pagerank, k-means): a persisted relation keeps its whole build
-    subtree in the logical plan, so each unrolled round re-prints — and
-    AQE re-schedules — the build lineage (measured on pagerank at sf0.1:
-    14 jobs/run, 2.1 s warm; checkpointed: 8 exchanges in the plan text,
-    1.2 s warm). The checkpointed DataFrame's plan is a LogicalRDD leaf
-    that PRESERVES the pre-checkpoint partitioning and ordering, so a
-    repartition+sortWithinPartitions layout survives for join reuse.
-
-    The held generation is keyed by the PRE-checkpoint plan (``anchor``):
-    a semantically identical call returns the already-materialized
-    relation; a different plan on the same slot replaces it (the old
-    checkpoint's blocks are released by Spark's ContextCleaner once the
-    reference drops).
-    """
-    held = _BOUNDED.get(slot)
-    if held and len(held) == 3:
-        anchor, held_key, ckpt = held
-        if key is not None and held_key is not None:
-            # explicit keys skip sameSemantics: canonicalizing a large
-            # pre-checkpoint plan costs ~0.5 s per call on the pagerank
-            # build tree, which dwarfs the warm execution it guards
-            # (schema equality + optional debug sameSemantics audit in
-            # _explicit_key_hit guard the key-collision hazard)
-            same = _explicit_key_hit(anchor, held_key, df, key)
-        else:
-            try:
-                same = anchor.sparkSession is df.sparkSession and anchor.sameSemantics(df)
-            except Exception:
-                same = False
-        if same:
-            return ckpt
-        _BOUNDED.pop(slot, None)
-    # NOT REENTRANT / single-threaded-driver assumption (ADVICE r9 #3):
-    # the toggle below briefly mutates the session-global AQE conf, so a
-    # query planned CONCURRENTLY on another driver thread during this
-    # materialization would silently plan without AQE. Query construction
-    # in this codebase is driver-single-threaded by design (the
-    # SessionCache class docstring states the same contract; the
-    # concurrent ETL writes submit already-constructed plans and never
-    # construct queries while a checkpoint materializes), so no lock is
-    # taken — if that ever changes, scope this with a lock around
-    # conf-set + localCheckpoint + restore.
-    # Materialize with AQE OFF: a checkpoint created under AQE wraps an
-    # AdaptiveSparkPlan whose output partitioning is still unknown, so
-    # the LogicalRDD leaf reports UnknownPartitioning and every consumer
-    # join re-exchanges and re-sorts the relation — exactly the layout
-    # the repartition+sortWithinPartitions build paid to establish.
-    # Created non-adaptively, the leaf carries HashPartitioning + the
-    # per-partition ordering, and consumers (still planned WITH AQE)
-    # reuse it with no edge-side Exchange or Sort. Verified empirically
-    # on Spark 4.1: AQE-on ckpt → Exchange+Sort above Scan ExistingRDD;
-    # AQE-off ckpt → bare Scan ExistingRDD under the join.
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        ckpt = df.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-    _BOUNDED[slot] = [df, key, ckpt]
-    return ckpt
+    Plan documentation calls this so each query plans against the
+    reproducible fresh-build shape: a query whose memoized relation is
+    already built plans against a differently-persisted subtree, and its
+    Exchange census shifts with suite ordering. LOCALCHECKPOINT-backed
+    values have no synchronous release API; dropping the reference here
+    leaves their blocks to Spark's ContextCleaner after GC. Accordingly,
+    ``cached_relation_count`` observes only PERSISTED relations, and
+    checkpoint storage is bounded by the one-generation-per-slot rule."""
+    while _HELD:
+        _release(_HELD.popitem()[1][2])
 
 
 def cached_relation_count(spark: SparkSession) -> int:
@@ -231,44 +100,34 @@ def cached_relation_count(spark: SparkSession) -> int:
     return 0 if jcm.isEmpty() else int(jcm.numCachedEntries())
 
 
-class SessionCache:
-    """``get_or_build(spark, key, build)`` — one value per (live session,
-    key). Not thread-safe by design: Spark query construction is
-    driver-single-threaded in this codebase (the concurrent ETL writes
-    share no cache)."""
+def checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)`` with AQE off, so the LogicalRDD
+    leaf keeps ``df``'s partitioning and ordering.
 
-    def __init__(self) -> None:
-        self._entries: dict[tuple, tuple[weakref.ref, Any]] = {}
-        _ALL_CACHES.add(self)
+    Use instead of persist when the relation feeds an UNROLLED iterative
+    plan (pagerank): a persisted relation keeps its whole build subtree
+    in the logical plan, so each unrolled round re-prints — and AQE
+    re-schedules — the build lineage (measured on pagerank at sf0.1:
+    14 jobs/run, 2.1 s warm; checkpointed: 8 exchanges in the plan text,
+    1.2 s warm).
 
-    def get_or_build(self, spark: SparkSession, key: tuple, build: Callable[[], Any]) -> Any:
-        for k, (ref, _) in list(self._entries.items()):
-            if ref() is None:
-                del self._entries[k]
-        full_key = (id(spark), *key)
-        hit = self._entries.get(full_key)
-        if hit is not None and hit[0]() is spark:
-            return hit[1]
-        value = build()
-        self._entries[full_key] = (weakref.ref(spark), value)
-        return value
-
-
-# Knob-pricing counts (auto_band_bits and friends derive the band width
-# from COUNT(*) of an immutable parquet corpus). The count itself is a
-# parquet-metadata job — cheap but a *driver job per query call*, and the
-# r6 driver bench showed it as a per-call warm tax on every knob-touched
-# query (VERDICT r6 task #7 / ADVICE r6 #3). One count per (live session,
-# corpus key) is the honest amortization: the corpora are read-only test
-# fixtures, so the count can never change under a live session.
-_COUNT_CACHE = SessionCache()
-
-
-def cached_count(df, key: tuple) -> int:
-    """``df.count()`` memoized per (session, key). The caller owns key
-    completeness — it must identify the corpus (e.g. ``(sf_dir,
-    "documents")``); a key collision would price a knob off the wrong
-    corpus size and silently diverge from the oracle's COUNT(*)."""
-    return _COUNT_CACHE.get_or_build(
-        df.sparkSession, ("corpus_count", *key), lambda: df.count()
-    )
+    AQE is off for the materialization because a checkpoint created
+    under AQE wraps an AdaptiveSparkPlan whose output partitioning is
+    still unknown: the leaf reports UnknownPartitioning and every
+    consumer join re-exchanges and re-sorts the relation — exactly the
+    layout a repartition+sortWithinPartitions build paid to establish.
+    Created non-adaptively, the leaf carries HashPartitioning + the
+    per-partition ordering, and consumers (still planned WITH AQE) reuse
+    it with no Exchange or Sort (Spark 4.1: AQE-on ckpt → Exchange+Sort
+    above Scan ExistingRDD; AQE-off ckpt → bare Scan ExistingRDD under
+    the join). The toggle briefly mutates the session-global AQE conf,
+    so this relies on the driver-single-threaded contract above: a query
+    planned concurrently on another driver thread would plan without AQE.
+    """
+    spark = df.sparkSession
+    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        return df.localCheckpoint(eager=True)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)

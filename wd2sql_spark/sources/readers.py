@@ -2,10 +2,8 @@
 
 The reference reads exactly one source: a line-oriented JSON dump from a
 file or stdin (main.rs:122-137). Spark has no stdin source; the file/
-directory readers here cover the batch path, and each has a streaming twin
-(``readStream``) so the same declared schema serves incremental ingest —
-the dump-directory pattern replaces the reference's `bzcat | wd2sql -`
-pipe (README.md:59-61).
+directory readers here cover the batch path — the dump-directory pattern
+replaces the reference's `bzcat | wd2sql -` pipe (README.md:59-61).
 
 Rules applied to every reader:
 
@@ -63,22 +61,3 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Parquet carries its own schema; nothing to declare or infer."""
     return spark.read.parquet(path)
 
-
-def stream_text(spark: SparkSession, path: str) -> DataFrame:
-    """Streaming twin of ``read_text`` over a directory of dump files —
-    new files become micro-batches (the incremental-ingest analog of the
-    reference's stdin pipe)."""
-    return spark.readStream.text(path)
-
-
-def stream_jsonl(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
-    return (
-        spark.readStream.schema(_with_corrupt(schema))
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .json(path)
-    )
-
-
-def stream_parquet(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
-    return spark.readStream.schema(schema).parquet(path)

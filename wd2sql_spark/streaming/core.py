@@ -21,10 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from wd2sql_spark.session_cache import SessionCache
-
-# events fixture schema per (live session, sf_dir) — see events_stream.
-_SCHEMA_CACHE = SessionCache()
+from wd2sql_spark.catalog import file_key
+from wd2sql_spark.session_cache import memo
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events fixture as a file-source stream with a proper event-time
@@ -39,15 +37,13 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NTZ inference off ⇒ µs fixtures surface ts as plain TIMESTAMP at the
     # scan (see catalog.table); nanos-era fixtures still read as LONG.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    # Schema memoized per (session, sf_dir) — r10: the batch footer read
-    # costs ~0.13-0.15 s of driver time PER CALL (and the stream-stream
-    # join calls this twice per invocation); the fixture is immutable
-    # under a live session, so one read is the honest amortization (the
-    # same argument as catalog.table's scan cache).
-    batch_schema = _SCHEMA_CACHE.get_or_build(
-        spark,
-        ("events_schema", sf_dir),
-        lambda: spark.read.parquet(f"{sf_dir}/events.parquet").schema,
+    # Schema memoized per session, keyed on the file — r10: the batch
+    # footer read costs ~0.13-0.15 s of driver time PER CALL (and the
+    # stream-stream join calls this twice per invocation); the same
+    # argument as catalog.table's scan memo.
+    path = f"{sf_dir}/events.parquet"
+    batch_schema = memo(
+        spark, "streaming.events_schema", file_key(path), lambda: spark.read.parquet(path).schema
     )
     # glob, not the bare file path: the file-stream source requires a
     # directory or glob (it watches the parent for new files).
