@@ -4,10 +4,7 @@ is cross-checked against the plain (unbucketed) join."""
 
 from __future__ import annotations
 
-import sys
 import uuid
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

@@ -7,9 +7,6 @@ from __future__ import annotations
 
 import os
 import sqlite3
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from wd2sql_spark.__main__ import main
 

@@ -2,11 +2,17 @@
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
+import os
 
 import __spark_entry__ as entry_mod
+import wd2sql_spark
+
+
+def test_imports_this_checkout():
+    """A copy of the repo must test its own code, not another checkout's."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for mod in (wd2sql_spark, entry_mod):
+        assert os.path.abspath(mod.__file__).startswith(repo + os.sep), mod.__file__
 
 
 def test_queries_and_oracles_align():

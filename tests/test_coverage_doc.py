@@ -20,12 +20,10 @@ sys.path.insert(0, os.path.join(REPO, "tools"))
 
 def test_coverage_md_regenerates():
     import re
-    import sys as _sys
     import warnings
 
     import gen_coverage
 
-    _sys.path.insert(0, REPO)
     from wd2sql_spark.queries import load_all_modules
 
     expected = gen_coverage.generate()

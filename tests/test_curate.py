@@ -10,11 +10,8 @@ rows, and the existing-output guard refuses."""
 from __future__ import annotations
 
 import os
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

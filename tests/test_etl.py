@@ -5,16 +5,14 @@ codec function."""
 from __future__ import annotations
 
 import datetime as dt
-import sys
+import os
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from wd2sql_spark.etl.pipeline import parse_entities, read_dump, transform, wd2spark
 from wd2sql_spark.functions.ids import register_sql_function
 
-FIXTURE = "/root/repo/tests/fixtures/wd_dump.ndjson"
+FIXTURE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "wd_dump.ndjson")
 
 
 @pytest.fixture(scope="module")
@@ -107,7 +105,7 @@ def test_malformed_payloads_drop_claim_keep_entity(spark, tmp_path):
     entity's meta row and its VALID claims survive. (The reference skips
     the whole entity on a bad claim, value.rs value! -> main.rs:206-215;
     dropping only the bad claim is strictly more tolerant, documented in
-    _claim_value_cols.) The SQLite export of the result must succeed,
+    pipeline._route.) The SQLite export of the result must succeed,
     proving no constraint-violating row got through."""
     import json
 
@@ -179,6 +177,82 @@ def test_store_layout_matches_tables_layout(spark, tmp_path):
     # the store honors the refuse-existing-output guard too
     with pytest.raises(Exception, match="already exists|LOCATION_ALREADY_EXISTS"):
         wd2spark(spark, FIXTURE, s_out, layout="store")
+
+
+def test_staged_store_matches_unstaged_tables(spark, tmp_path):
+    """The staged store (claims routed inside the per-entity item array)
+    and the unstaged tables (``claims_flat``) call the one dispatch
+    definition from two places; they must not drift apart. Every table
+    read through ``read_table`` equals the ``staged=False`` table row for
+    row, on a dump with corrupt lines, undecodable entity and property
+    ids, payloads that fail validation and deprecated claims."""
+    import json
+
+    from wd2sql_spark.etl.pipeline import _FINAL_COLS, read_table
+
+    def claim(dv_type=None, value=None, snaktype="value", rank="normal"):
+        snak = {"snaktype": snaktype, "property": "P1", "datatype": "x"}
+        if dv_type is not None:
+            snak["datavalue"] = {"type": dv_type, "value": value}
+        return {"mainsnak": snak, "rank": rank}
+
+    coord = {"latitude": 1.5, "longitude": -2.0, "precision": 0.1, "globe": "http://www.wikidata.org/entity/Q2"}
+    qty = {"amount": "+42", "lowerBound": "+41", "upperBound": "x", "unit": "http://www.wikidata.org/entity/Q11573"}
+    claims = {
+        "P1": [
+            claim("string", "kept"),
+            claim("string", "dead", rank="deprecated"),
+            claim("string"),  # no value: skipped
+            claim(snaktype="novalue", rank="deprecated"),
+            claim(snaktype="novalue"),
+            claim(snaktype="somevalue", rank="preferred"),
+        ],
+        "P2": [
+            claim("monolingualtext", {"text": "hola", "language": "es"}),
+            claim("monolingualtext", {"language": "es"}),  # no text: skipped
+            claim("multilingualtext", {"texts": {"en": "hi", "de": "hallo"}}),
+            claim("multilingualtext", {"texts": {"de": "hallo"}}),  # → none
+        ],
+        "P3": [
+            claim("wikibase-entityid", {"entity-type": "form", "id": "L99-F2"}),
+            claim("wikibase-entityid", {"id": "Q42abc"}),  # skipped
+            claim("globecoordinate", coord),
+            claim("globecoordinate", {**coord, "globe": "garbage"}),  # skipped
+            claim("globecoordinate", "not json"),  # skipped
+        ],
+        "P4": [
+            claim("quantity", qty),
+            claim("quantity", {**qty, "amount": "abc"}),  # skipped
+            claim("time", {"time": "+2001-00-00T00:00:00Z", "precision": 9}),
+            claim("time", {"time": "-13798000000-00-00T00:00:00Z", "precision": 3}),
+            claim("time", {"time": "+2001-01-01T00:00:00Z"}),  # no precision: skipped
+            claim("mystery", {"x": 1}),  # unknown type: skipped
+        ],
+        "Q42abc": [claim("string", "bad property id")],
+        "X5": [claim(snaktype="novalue")],
+        "P5": None,
+    }
+    entities = [
+        {"id": "Q1", "labels": {"en": {"language": "en", "value": "one"}}, "claims": claims},
+        {"id": "L7-S1", "descriptions": {"en": {"language": "en", "value": "sense"}}, "claims": {"P1": claims["P1"]}},
+        {"id": "Q2"},
+        {"id": "Q42abc", "claims": claims},  # bad entity id: quarantined
+    ]
+    lines = ["[", *(json.dumps(e) + "," for e in entities), '{"id": "Q9", "labels":', "", "not json", "]"]
+    dump = tmp_path / "mixed.ndjson"
+    with open(FIXTURE) as f:
+        dump.write_text("\n".join(lines) + "\n" + f.read())
+
+    store = str(tmp_path / "store")
+    wd2spark(spark, str(dump), store, layout="store")
+    paths = wd2spark(spark, str(dump), str(tmp_path / "tables"), staged=False)
+    assert set(paths) == set(_FINAL_COLS)
+    for name, path in paths.items():
+        want = spark.read.parquet(path)
+        got = read_table(spark, store, name)
+        assert got.columns == want.columns, name
+        assert want.count() > 0, name
+        assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0, name
 
 
 def test_read_table_empty_partition(spark, tmp_path):

@@ -18,11 +18,8 @@ entry point ``python tests/oracle_check.py`` (see SWEEPS.json).
 from __future__ import annotations
 
 import os
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from tests.oracle_check import compare
 from wd2sql_spark.queries import load_all_modules

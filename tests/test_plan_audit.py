@@ -8,11 +8,7 @@ path. A change that keeps results correct but breaks the plan fails here.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from wd2sql_spark.plans.audit import plan_report
 from wd2sql_spark.queries import load_all_modules

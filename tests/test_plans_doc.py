@@ -4,9 +4,9 @@ tests/test_coverage_doc.py)."""
 
 from __future__ import annotations
 
-import sys
+import os
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_plans_md_is_fresh(spark):
@@ -14,7 +14,7 @@ def test_plans_md_is_fresh(spark):
 
     from tools.gen_plans import build_doc
 
-    with open("/root/repo/PLANS.md") as f:
+    with open(os.path.join(REPO, "PLANS.md")) as f:
         on_disk = f.read()
     built = build_doc(spark)
     if built != on_disk:

@@ -6,12 +6,8 @@ rebuild."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from wd2sql_spark.catalog import table
 from wd2sql_spark.operators.postings import (

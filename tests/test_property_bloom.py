@@ -22,12 +22,8 @@ broken filter only surfaces as missing rows):
 
 from __future__ import annotations
 
-import sys
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

@@ -16,15 +16,12 @@ cross-engine hazards live:
 
 from __future__ import annotations
 
-import sys
 from collections import Counter
 
 import duckdb
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from wd2sql_spark.operators.bpe import bpe_merges
 from wd2sql_spark.queries.llm_tokenize import _bpe_oracle

@@ -10,14 +10,10 @@ parse 'Q42abc' to 42 while SQL returned NULL)."""
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

@@ -28,12 +28,9 @@ from __future__ import annotations
 
 import json
 import re
-import sys
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from wd2sql_spark.etl.pipeline import parse_entities, unified_rows
 

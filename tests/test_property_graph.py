@@ -21,12 +21,9 @@ itself over arbitrary small graphs:
 from __future__ import annotations
 
 import itertools
-import sys
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from wd2sql_spark.operators.graph_ops import pagerank_ranks, triangles
 

@@ -16,14 +16,10 @@ engines on identical inputs and asserts exact equality.
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

@@ -7,15 +7,12 @@ bit-for-bit, and projecting a basis vector must read off a sign column.
 from __future__ import annotations
 
 import hashlib
-import sys
 
 import duckdb
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from wd2sql_spark.operators.similarity import jl_project, jl_signs
 

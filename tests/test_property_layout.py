@@ -6,15 +6,11 @@ stay inside [0, 2**bits).
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from wd2sql_spark.operators.layout import scale_to_bits, zorder_sql, zorder_value
 

@@ -17,12 +17,8 @@ are algebraic, not fixture-specific:
 
 from __future__ import annotations
 
-import sys
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from wd2sql_spark.operators import dedup as D
 

@@ -16,14 +16,11 @@ battery's oracles rest on:
 from __future__ import annotations
 
 import math
-import sys
 
 import duckdb
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

@@ -10,10 +10,6 @@ protect.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 import wd2sql_spark.operators.similarity as S

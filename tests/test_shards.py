@@ -4,10 +4,6 @@ each)."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from wd2sql_spark.catalog import table

@@ -2,16 +2,16 @@
 
 from __future__ import annotations
 
-import sys
+import os
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from wd2sql_spark.sources.readers import CORRUPT_COL, read_csv, read_jsonl, read_text
+
+FIXTURE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "wd_dump.ndjson")
 
 SCHEMA = StructType(
     [StructField("id", StringType()), StructField("type", StringType())]
@@ -19,7 +19,7 @@ SCHEMA = StructType(
 
 
 def test_read_text_line_per_row(spark):
-    df = read_text(spark, "/root/repo/tests/fixtures/wd_dump.ndjson")
+    df = read_text(spark, FIXTURE)
     assert df.columns == ["value"]
     assert df.count() == 15  # every line, framing included
 
@@ -27,7 +27,7 @@ def test_read_text_line_per_row(spark):
 def test_read_jsonl_quarantines_corrupt(spark):
     # Spark refuses queries that reference ONLY the corrupt column on an
     # uncached JSON/CSV relation; cache() is the documented workaround.
-    df = read_jsonl(spark, "/root/repo/tests/fixtures/wd_dump.ndjson", SCHEMA).cache()
+    df = read_jsonl(spark, FIXTURE, SCHEMA).cache()
     bad = df.filter(F.col(CORRUPT_COL).isNotNull()).count()
     good = df.filter(F.col(CORRUPT_COL).isNull() & F.col("id").isNotNull()).count()
     assert bad >= 1  # the malformed line + the [ ] framing rows, never fatal

@@ -6,18 +6,16 @@ sqlite3 directly."""
 
 from __future__ import annotations
 
+import os
 import sqlite3
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from wd2sql_spark.etl.metering import with_metering
 from wd2sql_spark.etl.pipeline import parse_entities, read_dump, transform
 from wd2sql_spark.sinks.sqlite import TABLE_DDL, export_sqlite, wd2sqlite
 
-FIXTURE = "/root/repo/tests/fixtures/wd_dump.ndjson"
+FIXTURE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "wd_dump.ndjson")
 
 
 @pytest.fixture(scope="module")

@@ -7,11 +7,8 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 import time
 import uuid
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType

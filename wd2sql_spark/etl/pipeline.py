@@ -7,12 +7,14 @@ per-record error tolerance. Single thread, constant memory.
 
 Here the same dataflow is a lazy DataFrame DAG: ``read.text`` →
 ``filter``/``regexp_replace`` → ``from_json`` (declared schema, PERMISSIVE,
-corrupt-record quarantine) → id-encode + meta projection + double-``explode``
-of claims → rank filter → 20→7 type dispatch — a pure narrow pipeline with
-ZERO shuffles, embarrassingly parallel over input splits. Where the
-reference saturates one core at bzip2 speed (README.md:13-19), this plan
-scales linearly with executors; whole-stage codegen fuses the chain exactly
-like the reference's hand-fused loop.
+corrupt-record quarantine) → id-encode + meta projection → per-entity
+claim routing (rank filter, one payload parse, 20→7 type dispatch) →
+``explode`` → payload projection — a pure narrow pipeline with ZERO
+shuffles, embarrassingly parallel over input splits. Where the reference
+saturates one core at bzip2 speed (README.md:13-19), this plan scales
+linearly with executors. The collection lambdas that build each entity's
+rows run interpreted; the projections on either side of them run under
+whole-stage codegen.
 
 Write strategies (``wd2spark``):
 
@@ -22,8 +24,8 @@ Write strategies (``wd2spark``):
   ONE write lands them partitioned by target ``table``. With
   ``layout="tables"`` the 9 final tables are then partition-pruned,
   column-pruned projections of that store — each rewrite reads only its
-  own partition's columns. JSON parse cost (the dominant cost at scale,
-  like the reference's simd_json) is paid exactly once, matching the
+  own partition's columns. JSON parse cost (the reference's simd_json)
+  is paid once per line and once per claim payload, matching the
   reference's single-pass loop.
 - ``staged=True, layout="store"``: the partitioned single write IS the
   output — every row hits storage exactly ONCE, which is the reference's
@@ -45,9 +47,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
 from wd2sql_spark.etl import schema as S
 from wd2sql_spark.functions.ids import encode_entity_url, encode_wid
@@ -127,52 +129,43 @@ def meta_table(entities: DataFrame) -> DataFrame:
     )
 
 
-def _claim_value_cols(c) -> dict:
-    """The 20→7 type dispatch (value.rs:201-261) as a dict of named column
-    expressions over one claim struct ``c`` (shape ``S.CLAIM``). Shared by
-    the per-claim path (``claims_flat``) and the single-pass unified path
-    (``unified_rows``). All expressions are Catalyst built-ins — a narrow,
-    codegen-fused map; repeated ``from_json`` subtrees are collapsed by
-    Catalyst's subexpression elimination."""
+def _parse_payload(c: Column) -> Column:
+    """ONE parse of a claim's ``datavalue.value`` with the union schema
+    (``S.MERGED_VALUE``); every per-type expression of the dispatch reads
+    its own fields and ignores the rest (null for other types). For
+    plain-string payloads ``from_json`` yields a null struct, which every
+    consumer guards with the datavalue type."""
+    return F.from_json(c.getField("mainsnak").getField("datavalue").getField("value"), S.MERGED_VALUE)
+
+
+def _route(c: Column, v: Column) -> Column:
+    """The 20→7 type dispatch (value.rs:201-261): the target table of one
+    claim struct ``c`` (shape ``S.CLAIM``) whose payload parsed to ``v``
+    (:func:`_parse_payload`), or NULL when the claim is skipped.
+
+    Per-type payload validity: the reference's value! field extraction
+    (value.rs:201-261) errors on a missing/undecodable required field and
+    the record is skipped (main.rs:206-215). Here an invalid payload
+    dispatches to NULL → the claim row is dropped before any table (a
+    NULL in a required column would otherwise violate the SQLite sink's
+    NOT NULL DDL). Divergence, documented: the reference skips the WHOLE
+    entity on a bad claim; we drop only the bad claim and keep the
+    entity's remaining data — strictly more tolerant, same guarantee
+    that no malformed value reaches an output table."""
     snaktype = c.getField("mainsnak").getField("snaktype")
     dv_type = c.getField("mainsnak").getField("datavalue").getField("type")
     dv_raw = c.getField("mainsnak").getField("datavalue").getField("value")
-
-    # ONE parse of the payload with the union schema (S.MERGED_VALUE);
-    # every per-type expression reads its own fields and ignores the rest
-    # (null for other types). For plain-string payloads from_json yields a
-    # null struct, which every consumer below already guards with dv_type.
-    v = F.from_json(dv_raw, S.MERGED_VALUE)
-    mono = v
-    multi = v
-    entity_v = v
-    coord = v
-    qty = v
-    time_v = v
-
-    multi_en = multi.getField("texts").getItem("en")
-
-    # Per-type payload validity: the reference's value! field extraction
-    # (value.rs:201-261) errors on a missing/undecodable required field and
-    # the record is skipped (main.rs:206-215). Here an invalid payload
-    # dispatches to NULL → the claim row is dropped before any table (a
-    # NULL in a required column would otherwise violate the SQLite sink's
-    # NOT NULL DDL). Divergence, documented: the reference skips the WHOLE
-    # entity on a bad claim; we drop only the bad claim and keep the
-    # entity's remaining data — strictly more tolerant, same guarantee
-    # that no malformed value reaches an output table.
     null_t = F.lit(None).cast("string")
     coord_ok = (
-        coord.getField("latitude").isNotNull()
-        & coord.getField("longitude").isNotNull()
-        & coord.getField("precision").isNotNull()
-        & encode_entity_url(coord.getField("globe")).isNotNull()
+        v.getField("latitude").isNotNull()
+        & v.getField("longitude").isNotNull()
+        & v.getField("precision").isNotNull()
+        & encode_entity_url(v.getField("globe")).isNotNull()
     )
-    entity_ok = encode_wid(entity_v.getField("id")).isNotNull()
-    qty_ok = qty.getField("amount").try_cast("double").isNotNull()
-    time_ok = time_v.getField("time").isNotNull() & time_v.getField("precision").isNotNull()
-
-    value_type = (
+    entity_ok = encode_wid(v.getField("id")).isNotNull()
+    qty_ok = v.getField("amount").try_cast("double").isNotNull()
+    time_ok = v.getField("time").isNotNull() & v.getField("precision").isNotNull()
+    return (
         F.when(snaktype == "novalue", "none")
         .when(snaktype == "somevalue", "unknown")
         # A string datavalue with NO value is a failed extraction → the
@@ -182,10 +175,10 @@ def _claim_value_cols(c) -> dict:
         # (tests/test_property_etl.py); the other arms were already
         # guarded by their *_ok predicates.
         .when((dv_type == "string") & dv_raw.isNotNull(), "string")
-        .when((dv_type == "monolingualtext") & mono.getField("text").isNotNull(), "string")
+        .when((dv_type == "monolingualtext") & v.getField("text").isNotNull(), "string")
         # MultilingualText: English → string, no English → none
         # (value.rs:222-229 — a presence row, NOT a null string)
-        .when((dv_type == "multilingualtext") & multi_en.isNotNull(), "string")
+        .when((dv_type == "multilingualtext") & v.getField("texts").getItem("en").isNotNull(), "string")
         .when(dv_type == "multilingualtext", "none")
         .when(dv_type == "wikibase-entityid", F.when(entity_ok, "entity").otherwise(null_t))
         .when(dv_type == "globecoordinate", F.when(coord_ok, "coordinates").otherwise(null_t))
@@ -195,16 +188,24 @@ def _claim_value_cols(c) -> dict:
         .otherwise(null_t)
     )
 
-    string_val = (
-        F.when(dv_type == "string", dv_raw)
-        .when(dv_type == "monolingualtext", mono.getField("text"))
-        .when(dv_type == "multilingualtext", multi_en)
-    )
+
+def _claim_value_cols(c: Column, v: Column) -> dict:
+    """The per-type payload columns of one claim struct ``c`` whose payload
+    parsed to ``v`` (:func:`_parse_payload`), as a dict of named column
+    expressions (unused ones NULL). With :func:`_route` this is the one
+    dispatch definition, shared by the per-claim path (``claims_flat``)
+    and the single-pass unified path (``unified_rows``). All expressions
+    are Catalyst built-ins; where ``v`` is a field of an already-parsed
+    struct (``unified_rows``), the projection that evaluates them runs
+    under whole-stage codegen."""
+    dv_type = c.getField("mainsnak").getField("datavalue").getField("type")
+    dv_raw = c.getField("mainsnak").getField("datavalue").getField("value")
+    multi_en = v.getField("texts").getItem("en")
 
     # time: normalize Wikidata's unknown month/day "00" to "01", drop the
     # leading '+', then try_to_timestamp — out-of-range historical years
     # yield NULL while time_raw preserves the value losslessly (SURVEY §7a).
-    t_raw = time_v.getField("time")
+    t_raw = v.getField("time")
     t_norm = F.regexp_replace(
         F.regexp_replace(t_raw, r"-00-", "-01-"),
         r"-00T",
@@ -214,25 +215,24 @@ def _claim_value_cols(c) -> dict:
     parsed_ts = F.try_to_timestamp(t_norm, F.lit("yyyy-MM-dd'T'HH:mm:ssX"))
 
     return {
-        "value_type": value_type,
-        "string": string_val,
-        "entity_id": F.when(dv_type == "wikibase-entityid", encode_wid(entity_v.getField("id"))),
-        "latitude": coord.getField("latitude"),
-        "longitude": coord.getField("longitude"),
-        "precision": coord.getField("precision"),
-        "globe_id": F.when(
-            dv_type == "globecoordinate", encode_entity_url(coord.getField("globe"))
-        ),
+        "string": F.when(dv_type == "string", dv_raw)
+        .when(dv_type == "monolingualtext", v.getField("text"))
+        .when(dv_type == "multilingualtext", multi_en),
+        "entity_id": F.when(dv_type == "wikibase-entityid", encode_wid(v.getField("id"))),
+        "latitude": v.getField("latitude"),
+        "longitude": v.getField("longitude"),
+        "precision": v.getField("precision"),
+        "globe_id": F.when(dv_type == "globecoordinate", encode_entity_url(v.getField("globe"))),
         # try_cast: malformed amounts must quarantine-to-NULL, not abort
         # (ANSI mode would throw on CAST) — per-record tolerance, 2-A#14.
-        "amount": qty.getField("amount").try_cast("double"),
-        "lower_bound": qty.getField("lowerBound").try_cast("double"),
-        "upper_bound": qty.getField("upperBound").try_cast("double"),
-        "unit_id": F.when(dv_type == "quantity", encode_entity_url(qty.getField("unit"))),
+        "amount": v.getField("amount").try_cast("double"),
+        "lower_bound": v.getField("lowerBound").try_cast("double"),
+        "upper_bound": v.getField("upperBound").try_cast("double"),
+        "unit_id": F.when(dv_type == "quantity", encode_entity_url(v.getField("unit"))),
         "time": F.when(dv_type == "time", parsed_ts),
         # precision parses as DOUBLE in the union schema (shared with
         # globecoordinate); time's integer precision round-trips exactly.
-        "time_precision": F.when(dv_type == "time", time_v.getField("precision").cast("int")),
+        "time_precision": F.when(dv_type == "time", v.getField("precision").cast("int")),
         "time_raw": F.when(dv_type == "time", t_raw),
     }
 
@@ -241,7 +241,9 @@ def claims_flat(entities: DataFrame) -> DataFrame:
     """Two-level explode of the claims map (2-A#9) + deprecated-rank drop
     (2-A#8, main.rs:87 — BEFORE dispatch, so deprecated novalue claims
     never reach the none table) + 20→7 type dispatch (value.rs:201-261) in
-    one wide projection.
+    one wide projection. That projection repeats the payload ``from_json``
+    subtree in many of its columns; Spark's subexpression elimination
+    evaluates the common subtree once per row.
 
     Output: one row per kept claim with ``value_type`` ∈ 7 tables plus the
     per-type payload columns (unused ones NULL)."""
@@ -254,8 +256,12 @@ def claims_flat(entities: DataFrame) -> DataFrame:
     kept = per_prop.filter(
         F.col("property_id").isNotNull() & (F.coalesce(F.col("c.rank"), F.lit("normal")) != DEPRECATED)
     )
-    cols = _claim_value_cols(F.col("c"))
-    return kept.select("id", "property_id", *[v.alias(k) for k, v in cols.items()])
+    c = F.col("c")
+    v = _parse_payload(c)
+    cols = _claim_value_cols(c, v)
+    return kept.select(
+        "id", "property_id", _route(c, v).alias("value_type"), *[col.alias(k) for k, col in cols.items()]
+    )
 
 
 # Per-table projections from the flat claims relation.
@@ -288,11 +294,14 @@ def transform(entities: DataFrame) -> dict[str, DataFrame]:
     return out
 
 
+# One output row before the explode: its target table, plus only the
+# fields that row kind needs (the rest NULL).
 _ITEM = StructType(
     [
-        StructField("kind", StringType()),
-        StructField("pid", StringType()),
+        StructField("table", StringType()),
+        StructField("property_id", LongType()),
         StructField("c", S.CLAIM),
+        StructField("v", S.MERGED_VALUE),
         StructField("label", StringType()),
         StructField("description", StringType()),
         StructField("line", StringType()),
@@ -308,6 +317,15 @@ _FINAL_COLS = {
 }
 
 
+def _item(table: Column, **fields: Column) -> Column:
+    """One ``_ITEM`` struct: ``table`` plus the given fields, every other
+    field NULL."""
+    return F.struct(
+        table.alias("table"),
+        *[fields.get(f.name, F.lit(None).cast(f.dataType)).alias(f.name) for f in _ITEM.fields[1:]],
+    )
+
+
 def unified_rows(entities: DataFrame) -> DataFrame:
     """Every output row of the whole ETL — meta rows, the 7 kinds of typed
     claim rows, and quarantine rows — from ONE pass over the parsed
@@ -317,13 +335,20 @@ def unified_rows(entities: DataFrame) -> DataFrame:
     (main.rs:69-93: one meta insert + one typed insert per kept claim,
     errors skipped): each entity expands, via a single ``explode`` over a
     per-entity item array built with native collection lambdas, into
-    exactly its output rows. One scan, one ``from_json``, zero shuffles.
-    The deprecated-rank drop happens inside the array ``filter`` — before
-    type dispatch, exactly like main.rs:87.
+    exactly its output rows. One scan, zero shuffles.
+
+    Every claim is routed INSIDE the item array, before the explode: the
+    property id is encoded once per property, and properties that don't
+    encode are dropped (matching ``claims_flat`` and the reference's
+    per-record tolerance); the deprecated-rank drop happens before type
+    dispatch, exactly like main.rs:87; each kept claim's payload is
+    parsed once into its item; a second ``transform`` computes the target
+    table from the parsed struct; and an array ``filter`` drops claims
+    whose payload failed validation. The projection after the explode
+    then only reads struct fields, so it carries no ``from_json`` and no
+    Filter sits above the Generate for Catalyst to copy the parse into.
     """
     bad = F.col(S.CORRUPT_COL).isNotNull() | F.col("id").isNull()
-    null_claim = F.lit(None).cast(S.CLAIM)
-    null_str = F.lit(None).cast("string")
 
     # Payload columns live INSIDE the item struct that needs them, built
     # once per entity BEFORE the explode: the meta item carries the
@@ -332,75 +357,59 @@ def unified_rows(entities: DataFrame) -> DataFrame:
     # exploded relation matters at scale — an entity with n claims would
     # otherwise replicate its full JSON line and label/description maps
     # across all n+1 output rows of the explode.
-    meta_item = F.struct(
-        F.lit("meta").alias("kind"),
-        null_str.alias("pid"),
-        null_claim.alias("c"),
-        F.element_at(F.col("labels"), "en").getField("value").alias("label"),
-        F.element_at(F.col("descriptions"), "en").getField("value").alias("description"),
-        null_str.alias("line"),
-        null_str.alias("reason"),
+    meta_item = _item(
+        F.lit("meta"),
+        label=F.element_at(F.col("labels"), "en").getField("value"),
+        description=F.element_at(F.col("descriptions"), "en").getField("value"),
     )
-    quar_item = F.struct(
-        F.lit("quarantine").alias("kind"),
-        null_str.alias("pid"),
-        null_claim.alias("c"),
-        null_str.alias("label"),
-        null_str.alias("description"),
-        F.col("line").alias("line"),
-        F.when(F.col(S.CORRUPT_COL).isNotNull(), "corrupt_json")
-        .otherwise("bad_id")
-        .alias("reason"),
+    quar_item = _item(
+        F.lit("quarantine"),
+        line=F.col("line"),
+        reason=F.when(F.col(S.CORRUPT_COL).isNotNull(), "corrupt_json").otherwise("bad_id"),
     )
-    empty_claims = F.array().cast(ArrayType(S.CLAIM))
-    claim_items = F.flatten(
+    props = F.filter(
         F.transform(
             F.map_entries(F.col("claims")),
-            lambda kv: F.transform(
+            lambda kv: F.struct(
+                encode_wid(kv.getField("key")).alias("pid"),
+                F.coalesce(kv.getField("value"), F.array().cast(ArrayType(S.CLAIM))).alias("cs"),
+            ),
+        ),
+        lambda p: p.getField("pid").isNotNull(),
+    )
+    parsed = F.flatten(
+        F.transform(
+            props,
+            lambda p: F.transform(
                 F.filter(
-                    F.coalesce(kv.getField("value"), empty_claims),
+                    p.getField("cs"),
                     lambda cl: F.coalesce(cl.getField("rank"), F.lit("normal")) != DEPRECATED,
                 ),
-                lambda cl: F.struct(
-                    F.lit("claim").alias("kind"),
-                    kv.getField("key").alias("pid"),
-                    cl.alias("c"),
-                    null_str.alias("label"),
-                    null_str.alias("description"),
-                    null_str.alias("line"),
-                    null_str.alias("reason"),
+                lambda cl: _item(
+                    F.lit(None).cast("string"), property_id=p.getField("pid"), c=cl, v=_parse_payload(cl)
                 ),
             ),
         )
     )
+    routed = F.filter(
+        F.transform(parsed, lambda it: it.withField("table", _route(it.getField("c"), it.getField("v")))),
+        lambda it: it.getField("table").isNotNull(),
+    )
     items = F.when(bad, F.array(quar_item)).otherwise(
-        F.concat(F.array(meta_item), F.coalesce(claim_items, F.array().cast(ArrayType(_ITEM))))
+        F.concat(F.array(meta_item), F.coalesce(routed, F.array().cast(ArrayType(_ITEM))))
     )
 
-    ex = entities.select("id", F.explode(items).alias("it"))
-    k = F.col("it.kind")
-    # Claims whose property id doesn't encode are skipped, matching
-    # claims_flat / the reference's per-record tolerance.
-    ex = ex.filter((k != "claim") | encode_wid(F.col("it.pid")).isNotNull())
-
-    d = _claim_value_cols(F.col("it.c"))
-    table = (
-        F.when(k == "meta", "meta")
-        .when(k == "quarantine", "quarantine")
-        .otherwise(d.pop("value_type"))
-    )
-    # Claims whose payload failed validation dispatch to a NULL table —
-    # drop them here so the staged store holds only routable rows.
-    ex = ex.filter(table.isNotNull())
-    return ex.select(
+    it = F.col("it")
+    d = _claim_value_cols(it.getField("c"), it.getField("v"))
+    return entities.select("id", F.explode(items).alias("it")).select(
         F.col("id"),
-        F.when(k == "claim", encode_wid(F.col("it.pid"))).alias("property_id"),
-        F.col("it.label").alias("label"),
-        F.col("it.description").alias("description"),
+        it.getField("property_id").alias("property_id"),
+        it.getField("label").alias("label"),
+        it.getField("description").alias("description"),
         *[v.alias(key) for key, v in d.items()],
-        F.col("it.line").alias("line"),
-        F.col("it.reason").alias("reason"),
-        table.alias("table"),
+        it.getField("line").alias("line"),
+        it.getField("reason").alias("reason"),
+        it.getField("table").alias("table"),
     )
 
 

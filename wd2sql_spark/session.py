@@ -5,6 +5,18 @@ also be correct on a 1000-executor cluster: AQE on (runtime join-strategy
 switch + skew-join splitting), explicit shuffle partitioning, Arrow enabled
 for the few Pandas-UDF operators, and timestamps pinned to UTC so results
 are stable across environments.
+
+PySpark's DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``)
+is off. With it on, every ``functions.*`` and ``Column`` call is wrapped to
+capture its Python call site: each call reads a conf over Py4J, sets and
+clears a JVM thread-local and walks the Python stack. Spark's own
+description of the conf warns of "a non-trivial performance overhead
+because of the stack trace collection". One build of the staged ETL plan
+(``etl.pipeline.unified_rows``) sends 6,499 Py4J commands with it on and
+1,489 with it off, and takes 0.18 s instead of 0.33 s on a 4-core host;
+every query build and streaming micro-batch pays the same per-call cost.
+The only loss is the Python ``file:line`` fragment in error messages;
+nothing in this package reads it.
 """
 
 from __future__ import annotations
@@ -46,5 +58,7 @@ def get_spark(app_name: str = "wd2sql_spark", *, shuffle_partitions: int | None 
         # into a merged stdout+stderr capture corrupted round 3's bench.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # Static conf: see the module docstring.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
