@@ -34,7 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # ANN, jaccard-graph clustering, the composed curation pass) so a perf
 # regression in the riskiest plans is visible round-over-round.
 #
-# ROTATED per round (VERDICT r4 task #5, like _PRIORITY): r5 swapped in
+# ROTATED per round (VERDICT r4 task #5): r5 swapped in
 # 24 heavies; r6 rests 28 members whose numbers are now recorded and
 # stable (sketches, recall audits, retrieval scoring, layout, profile,
 # kmeans/triangle — all r5-benched) and swaps in 35 queries that had

@@ -10,7 +10,7 @@ Statuses:
 - ``rows-only``  — driver ran the weaker no-oracle check and rows were sane
 - ``FAIL``       — mismatch or error in its most recent driver row
 - ``never``      — no driver row in any round yet (driver caps each run at
-  ~50 registry entries; see ``registry._PRIORITY`` for the rotation)
+  ~50 registry entries; the default pytest oracle-checks every query)
 
 Run directly (``python tools/gen_coverage.py``) to rewrite COVERAGE.md;
 ``tests/test_coverage_doc.py`` regenerates it in-memory and fails if the
@@ -99,8 +99,8 @@ def generate() -> str:
 
     lines += [
         "",
-        "Stale/FAIL/never entries belong at the front of",
-        "`wd2sql_spark/queries/registry.py::_PRIORITY` next round.",
+        "Every registered query with an oracle, whatever its row here, is",
+        "oracle-checked at sf0.001 by `python -m pytest tests/test_oracle_diff.py`.",
         "",
     ]
 

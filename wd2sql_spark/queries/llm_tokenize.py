@@ -107,13 +107,15 @@ def _bpe_encode_oracle(rounds: int) -> str:
     CTEs as :func:`_bpe_oracle`, but the merge is APPLIED in every round
     (w1..wN — learning skips the last rewrite) and w0 keeps the word
     string so the final vocab joins back onto the per-document word
-    relation."""
+    relation. Every CTE is ``MATERIALIZED``: DuckDB otherwise inlines each
+    chained CTE at every reference, and the round-over-round fan-out runs
+    it out of memory."""
     ctes = [
-        """docw AS (
+        """docw AS MATERIALIZED (
   SELECT doc_id, w
   FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
   WHERE w <> '')""",
-        """w0 AS (
+        """w0 AS MATERIALIZED (
   SELECT ROW_NUMBER() OVER (ORDER BY w) AS wid, w,
          CAST(cnt AS BIGINT) AS freq,
          regexp_extract_all(w, '.') AS syms
@@ -121,24 +123,24 @@ def _bpe_encode_oracle(rounds: int) -> str:
     ]
     for r in range(rounds):
         ctes.append(
-            f"""p{r} AS (
+            f"""p{r} AS MATERIALIZED (
   SELECT w.syms[t.i] AS l, w.syms[t.i + 1] AS r, SUM(w.freq) AS cnt
   FROM w{r} w, UNNEST(range(1, len(w.syms))) AS t(i)
   GROUP BY 1, 2),
-best{r} AS (
+best{r} AS MATERIALIZED (
   SELECT l, r, cnt FROM p{r} ORDER BY cnt DESC, l, r LIMIT 1),
-m{r} AS (
+m{r} AS MATERIALIZED (
   SELECT w.wid, w.freq, t.i, w.syms[t.i] AS s,
          CASE WHEN t.i < len(w.syms)
                    AND w.syms[t.i] = b.l AND w.syms[t.i + 1] = b.r
               THEN 1 ELSE 0 END AS hit
   FROM w{r} w CROSS JOIN best{r} b, UNNEST(range(1, len(w.syms) + 1)) AS t(i)),
-h{r} AS (
+h{r} AS MATERIALIZED (
   SELECT wid, i,
          ROW_NUMBER() OVER (PARTITION BY wid, grp ORDER BY i) % 2 = 1 AS taken
   FROM (SELECT wid, i, i - ROW_NUMBER() OVER (PARTITION BY wid ORDER BY i) AS grp
         FROM m{r} WHERE hit = 1) q),
-w{r + 1} AS (
+w{r + 1} AS MATERIALIZED (
   SELECT m.wid, any_value(m.freq) AS freq,
          list(CASE WHEN COALESCE(h.taken, FALSE) THEN b.l || b.r ELSE m.s END
               ORDER BY m.i) AS syms
