@@ -122,22 +122,3 @@ def test_not_avi_refused():
     with pytest.raises(ValueError):
         demux_avi(b"\x89PNG\r\n\x1a\n" + b"\x00" * 16)
 
-
-def test_fused_synth_demux_parity(spark):
-    """The fused single-stage operator (synthesize_and_demux_video) must
-    emit row-identical frames to the two-stage composition it replaced —
-    the optimization moved the payload out of the JVM boundary, not the
-    math."""
-    from wd2sql_spark.catalog import table
-    from wd2sql_spark.operators.multimodal import (
-        demux_video_frames,
-        synthesize_avi_blobs,
-        synthesize_and_demux_video,
-    )
-
-    docs = table(spark, "/root/testdata/sf0.001", "documents")
-    composed = demux_video_frames(synthesize_avi_blobs(docs))
-    fused = synthesize_and_demux_video(docs)
-    a = sorted(map(tuple, composed.collect()))
-    b = sorted(map(tuple, fused.collect()))
-    assert a == b and len(a) > 0

@@ -196,27 +196,25 @@ def test_dc_predictor_chain():
     assert sum(px) == sum(64 * _recon(v) for v in vals)
 
 
-def test_mixed_container_dispatch_drops_unknown(spark):
+def test_mixed_container_dispatch_drops_unknown():
     """The container dispatcher routes by magic bytes and silently drops
-    unknown signatures (per-record tolerance)."""
+    unknown signatures (per-record tolerance) — the stage body run on one
+    pandas batch, no Spark session."""
+    import pandas as pd
+
     from wd2sql_spark.operators.multimodal import (
         _make_png_codec,
-        decode_mixed_container_stats,
+        mixed_container_stats_stage,
     )
 
     encode_png, _, _, _ = _make_png_codec()
     png = encode_png(bytes(range(64)), 8, 8, b"s")
     jpg = encode_jpeg([7, 200], JPEG_BLOCKS_W, 1, b"s")
-    rows = [
-        (1, png, "image/png", None),
-        (2, jpg, "image/jpeg", None),
-        (3, b"GIF89a not supported", "image/gif", None),
-        (4, b"", "application/octet-stream", None),
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, content binary, media_type string, meta map<string,string>"
+    batch = pd.DataFrame(
+        {"doc_id": [1, 2, 3, 4], "content": [png, jpg, b"GIF89a not supported", b""]}
     )
-    got = {r["doc_id"]: r for r in decode_mixed_container_stats(df).collect()}
+    out = pd.concat(list(mixed_container_stats_stage()(iter([batch]))))
+    got = {r["doc_id"]: r for r in out.to_dict("records")}
     assert set(got) == {1, 2}
     assert (got[1]["format"], got[1]["width"], got[1]["height"]) == ("png", 8, 8)
     assert got[1]["sum_px"] == sum(range(64))

@@ -151,7 +151,9 @@ def test_multimodal_roundtrip(spark, docs):
     byte-exact through Arrow."""
     from wd2sql_spark.operators import multimodal as M
 
-    decoded = M.decode_images(M.synthesize_png_blobs(docs))
+    decoded = M.fused_codec_pipeline(
+        docs, M.png_builder(1), M.decode_images_stage(), schema=M.DECODED_SCHEMA
+    )
     n_docs = docs.filter(F.octet_length("text") > 0).count()
     rows = decoded.collect()
     assert len(rows) == n_docs

@@ -11,11 +11,12 @@ live in the file exactly where the format says.
 
 from __future__ import annotations
 
+import os
 import struct
 import zlib
 
+import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from wd2sql_spark.operators import multimodal as M
 
@@ -23,25 +24,38 @@ SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
-def docs(spark):
-    from wd2sql_spark.catalog import table
+def docs():
+    """The first 40 fixture documents as a pandas frame (no Spark)."""
+    path = os.path.join(SF, "documents.parquet")
+    return pd.read_parquet(path, columns=["doc_id", "text", "source"]).head(40)
 
-    return table(spark, SF, "documents").limit(40)
+
+def _build_all(build, docs) -> dict[int, bytes]:
+    """Run a row-level payload builder over every doc, as the synth step
+    of ``fused_codec_pipeline`` does."""
+    return {
+        int(d): build(int(d), t.encode("utf-8"), s)
+        for d, t, s in zip(docs["doc_id"], docs["text"], docs["source"])
+    }
+
+
+def _run_stage(stage, payloads: dict[int, bytes]) -> pd.DataFrame:
+    """Run a stage body over ONE pandas batch of (doc_id, content)."""
+    pdf = pd.DataFrame({"doc_id": list(payloads), "content": list(payloads.values())})
+    return pd.concat(list(stage(iter([pdf]))), ignore_index=True)
 
 
 @pytest.fixture(scope="module")
-def payloads(spark, docs):
-    rows = M.synthesize_png_blobs(docs).select("doc_id", "content").collect()
-    return {int(r["doc_id"]): bytes(r["content"]) for r in rows}
+def payloads(docs):
+    return _build_all(M.png_builder(1), docs)
 
 
-def test_payloads_are_real_pngs(spark, docs, payloads):
+def test_payloads_are_real_pngs(docs, payloads):
     """Magic bytes + independent decode + size arithmetic: total =
     84 + len(source) + 9·h with h = 8 + doc_id % 5."""
     _, decode_png, _, _ = M._make_png_codec()
     meta = {
-        int(r["doc_id"]): (r["text"], r["source"])
-        for r in docs.select("doc_id", "text", "source").collect()
+        int(d): (t, s) for d, t, s in zip(docs["doc_id"], docs["text"], docs["source"])
     }
     checked = 0
     for doc_id, payload in payloads.items():
@@ -59,10 +73,11 @@ def test_payloads_are_real_pngs(spark, docs, payloads):
     assert checked > 0
 
 
-def test_decoder_rejects_corruption(spark, payloads):
+def test_decoder_rejects_corruption(payloads):
     """A real codec path must FAIL on tampered bytes: flip a bit inside
     IHDR (CRC mismatch) and inside the zlib stream (inflate/adler error).
-    decode_images drops such rows instead of killing the job."""
+    The decode stages drop such rows instead of killing the job
+    (test_decode_stage_drops_bad_payloads)."""
     _, decode_png, _, _ = M._make_png_codec()
     payload = next(p for p in payloads.values() if p)
     # corrupt one IHDR data byte → chunk CRC check must fire
@@ -86,13 +101,63 @@ def test_decoder_rejects_corruption(spark, payloads):
     # truncated file
     with pytest.raises(Exception):
         decode_png(payload[: len(payload) // 2])
-    # the pipeline drops, not dies
-    df = spark.createDataFrame(
-        [(1, bytes(bad_crc)), (2, payload), (3, b"")],
-        "doc_id long, content binary",
-    )
-    got = M.decode_images(df).collect()
-    assert [r["doc_id"] for r in got] == [2]
+
+
+_TEXT = bytes(range(32, 127)) * 3
+
+
+def _bad_crc_png() -> bytes:
+    bad = bytearray(M.png_builder(1)(0, _TEXT, "s"))
+    bad[16] ^= 0xFF  # an IHDR data byte: the chunk CRC check fires
+    return bytes(bad)
+
+
+# stage body, a builder for its valid payload (doc_id → bytes), payloads
+# specific to the stage that must drop too
+_DECODE_STAGES = {
+    "decode_images_stage": (
+        M.decode_images_stage,
+        lambda d: M.png_builder(3)(d, _TEXT, "s"),
+        [_bad_crc_png(), M.jpeg_builder()(1, _TEXT, "s")],
+    ),
+    "phash_stage": (
+        M.phash_stage,
+        lambda d: M.png_builder(3)(d, _TEXT, "s"),
+        [_bad_crc_png(), M.jpeg_builder()(1, _TEXT, "s")],
+    ),
+    "jpeg_stats_stage": (
+        M.jpeg_stats_stage,
+        lambda d: M.jpeg_builder()(d, _TEXT, "s"),
+        [M.png_builder(1)(0, _TEXT, "s")],
+    ),
+    "mixed_container_stats_stage": (
+        M.mixed_container_stats_stage,
+        lambda d: M.mixed_container_builder()(d, _TEXT, "s"),
+        [_bad_crc_png()],
+    ),
+    "demux_stage": (
+        M.demux_stage,
+        lambda d: M.avi_builder()(d, _TEXT, "s"),
+        [M.jpeg_builder()(1, _TEXT, "s")],
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_DECODE_STAGES))
+@pytest.mark.parametrize("valid_id", [3, 4, 5])
+def test_decode_stage_drops_bad_payloads(name, valid_id):
+    """Per-record tolerance, the ETL's rule, in every decode stage body:
+    one pandas batch holding a valid payload among empty, truncated,
+    wrong-magic and stage-specific corrupt ones yields rows for the valid
+    payload only — nothing raises, no Spark session involved."""
+    stage, build, extra = _DECODE_STAGES[name]
+    valid = build(valid_id)
+    bad = [b"", valid[: len(valid) // 2], b"GIF89a not supported", *extra]
+    batch = {100 + i: p for i, p in enumerate(bad)}
+    batch[valid_id] = valid
+    out = _run_stage(stage(), batch)
+    assert len(out) > 0
+    assert set(out["doc_id"]) == {valid_id}
 
 
 def test_decoder_handles_compressed_and_filtered_pngs():
@@ -225,20 +290,19 @@ def test_png_codec_roundtrip_property():
     check()
 
 
-def test_phash_rederives_from_raw_payload_bytes(spark, docs, payloads):
+def _hashes(payloads: dict[int, bytes]) -> dict[int, int]:
+    out = _run_stage(M.phash_stage(), payloads)
+    return dict(zip(out["doc_id"].tolist(), out["ahash"].tolist()))
+
+
+def test_phash_rederives_from_raw_payload_bytes(docs, payloads):
     """The stored-block layout puts pixel i of an image with source
     length s at payload offset 65 + s + 9·(i//8) + (i%8); hashing those
-    raw bytes (no codec at all) must reproduce phash_images' output,
+    raw bytes (no codec at all) must reproduce phash_stage's output,
     proving the decoder's reconstruction equals the bytes in the file —
     the hex(payload) contract of the SQL twin, held structurally."""
-    hashes = {
-        int(r["doc_id"]): int(r["ahash"])
-        for r in M.phash_images(M.synthesize_png_blobs(docs)).collect()
-    }
-    src = {
-        int(r["doc_id"]): len(r["source"].encode("utf-8"))
-        for r in docs.select("doc_id", "source").collect()
-    }
+    hashes = _hashes(payloads)
+    src = {int(d): len(s.encode("utf-8")) for d, s in zip(docs["doc_id"], docs["source"])}
     assert hashes
     for doc_id, ahash in hashes.items():
         payload, s = payloads[doc_id], src[doc_id]
@@ -360,18 +424,12 @@ def test_palette_tamper_rejected():
         decode_png(no_plte)
 
 
-def test_mixed_codec_ahash_is_codec_agnostic(spark, docs):
+def test_mixed_codec_ahash_is_codec_agnostic(docs):
     """The aHash contract survives the container swap: hashing a mixed
     gray/palette corpus must produce EXACTLY the hashes of the all-gray
     corpus (the palette path reconstructs identical pixel bytes)."""
-    gray = {
-        int(r["doc_id"]): int(r["ahash"])
-        for r in M.phash_images(M.synthesize_png_blobs(docs)).collect()
-    }
-    mixed = {
-        int(r["doc_id"]): int(r["ahash"])
-        for r in M.phash_images(M.synthesize_mixed_png_blobs(docs)).collect()
-    }
+    gray = _hashes(_build_all(M.png_builder(1), docs))
+    mixed = _hashes(_build_all(M.png_builder(2), docs))
     assert mixed == gray
 
 
@@ -474,43 +532,40 @@ def test_rgb_tamper_rejected():
         decode_png(bytes(png))
 
 
-def test_gray_rgb_luma_ahash_equality(spark, docs):
+def test_gray_rgb_luma_ahash_equality(spark):
     """The luma contract: an RGB encode with r=g=b=v has luma
     (v + 2v + v) // 4 = v exactly, so its aHash equals the gray
     encode's — a re-encoded copy of an image hashes identically
     whatever color type it arrived in (the cross-container image-dedup
-    property). Checked THROUGH the real Arrow pipeline, not just the
-    local codec."""
+    property). Checked THROUGH the real Arrow pipeline
+    (``fused_codec_pipeline``), not just the local codec."""
+    from wd2sql_spark.catalog import table
+
     encode_png, _, _, encode_png_rgb = M._make_png_codec()
 
-    def blobs(rgb: bool):
-        def batches(it):
-            import pandas as pd
+    def builder(rgb: bool):
+        def build(doc_id: int, tb: bytes, source: str) -> bytes:
+            if not tb:
+                return b""
+            h = M.PNG_H_BASE + doc_id % M.PNG_H_MOD
+            npx = M.PNG_W * h
+            stride = max(len(tb) // npx, 1)
+            px = bytes(tb[(i * stride) % len(tb)] for i in range(npx))
+            if rgb:
+                return encode_png_rgb(
+                    bytes(v for p in px for v in (p, p, p)), M.PNG_W, h, b"s"
+                )
+            return encode_png(px, M.PNG_W, h, b"s")
 
-            for pdf in it:
-                out = {"doc_id": [], "content": []}
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                    tb = text.encode("utf-8")
-                    if not tb:
-                        continue
-                    h = M.PNG_H_BASE + int(doc_id) % M.PNG_H_MOD
-                    npx = M.PNG_W * h
-                    stride = max(len(tb) // npx, 1)
-                    px = bytes(tb[(i * stride) % len(tb)] for i in range(npx))
-                    if rgb:
-                        payload = encode_png_rgb(
-                            bytes(v for p in px for v in (p, p, p)), M.PNG_W, h, b"s"
-                        )
-                    else:
-                        payload = encode_png(px, M.PNG_W, h, b"s")
-                    out["doc_id"].append(int(doc_id))
-                    out["content"].append(payload)
-                yield pd.DataFrame(out)
+        return build
 
-        return docs.select("doc_id", "text").mapInPandas(
-            batches, schema="doc_id bigint, content binary"
+    docs = table(spark, SF, "documents").limit(40)
+
+    def hashes(rgb: bool) -> dict:
+        df = M.fused_codec_pipeline(
+            docs, builder(rgb), M.phash_stage(), schema=M.PHASH_SCHEMA
         )
+        return {r["doc_id"]: r["ahash"] for r in df.collect()}
 
-    gray = {r["doc_id"]: r["ahash"] for r in M.phash_images(blobs(False)).collect()}
-    rgb = {r["doc_id"]: r["ahash"] for r in M.phash_images(blobs(True)).collect()}
+    gray, rgb = hashes(False), hashes(True)
     assert gray and gray == rgb

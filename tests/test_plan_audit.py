@@ -496,6 +496,36 @@ def test_quality_family_plans(reports):
         assert r.shuffles <= budget, (n, r.shuffles)
 
 
+def test_spread_rows_projects_and_spreads_only_narrow_sources(spark):
+    """``spread_rows(src, *cols)`` yields exactly ``src.select(*cols)``.
+    Over a 1-partition source it adds ONE hash exchange on doc_id to the
+    session's default parallelism; over a source that already has that
+    many partitions it adds none."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from wd2sql_spark.operators.skew import spread_rows
+
+    target = spark.sparkContext.defaultParallelism
+
+    def src(parts: int):
+        return spark.range(0, 64, numPartitions=parts).select(
+            F.col("id").alias("doc_id"), F.lit("t").alias("text"), F.lit(0).alias("junk")
+        )
+
+    narrow = spread_rows(src(1), "doc_id", "text")
+    assert narrow.columns == ["doc_id", "text"]
+    r = plan_report(narrow)
+    assert r.shuffles == 1
+    assert re.findall(r"hashpartitioning\((\w+)#\d+L?, (\d+)\)", r.text) == [
+        ("doc_id", str(target))
+    ]
+    wide = spread_rows(src(target), "doc_id", "text")
+    assert wide.columns == ["doc_id", "text"]
+    assert plan_report(wide).shuffles == 0
+
+
 def test_decontam_broadcasts_eval_set(reports):
     """Decontamination: the eval shingle set ships broadcast (a benchmark
     suite is MBs — never shuffle the corpus for the membership probe);

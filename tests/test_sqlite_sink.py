@@ -11,8 +11,6 @@ import sqlite3
 
 import pytest
 
-from wd2sql_spark.etl.metering import with_metering
-from wd2sql_spark.etl.pipeline import parse_entities, read_dump, transform
 from wd2sql_spark.sinks.sqlite import TABLE_DDL, export_sqlite, wd2sqlite
 
 FIXTURE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "wd_dump.ndjson")
@@ -89,13 +87,3 @@ def test_guard_refuses_existing(db, spark, tmp_path):
     with pytest.raises(FileExistsError):
         export_sqlite({}, str(p))
 
-
-def test_metering_counts(spark):
-    entities = parse_entities(read_dump(spark, FIXTURE))
-    metered, obs = with_metering(entities)
-    tables = transform(metered)
-    tables["meta"].count()
-    got = obs.get
-    assert got["entities"] == 11
-    assert got["corrupt"] == 1  # the malformed JSON line
-    assert got["bytes"] > 0

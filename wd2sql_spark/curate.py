@@ -19,8 +19,8 @@ Two properties make this more than a script:
 - **One pass, counters ride the write.** Stage counts come from
   ``df.observe`` at three points of the same plan (post-quality,
   post-decontam, final), accumulating on executors during the single
-  write job — the progress-metering pattern of the wikidata ETL
-  (etl/metering.py), not extra count() passes. The only data-sized
+  write job — the reference's running entity counters done the
+  Spark-native way, not extra count() passes. The only data-sized
   exchanges are the content-digest dedup shuffle and the shard
   partition; the benchmark shingle set travels as one broadcast. At
   100 TB this is one corpus read, one digest shuffle, one shard

@@ -1,9 +1,9 @@
 """Live progress surfaces (SURVEY §2-A#16's missing half).
 
 The reference redraws a status line every 1000 entities while the ETL
-runs (main.rs:108-118, 223-237). The Observation counters
-(etl/metering.py) give the Spark-native AFTER-the-job numbers with zero
-extra passes, but a 1.5 TB dump runs for hours — the operator wants a
+runs (main.rs:108-118, 223-237). ``df.observe`` counters (as in
+curate.py) give the Spark-native AFTER-the-job numbers with zero extra
+passes, but a 1.5 TB dump runs for hours — the operator wants a
 line that moves DURING the job. Two surfaces, both optional and zero-cost
 when not attached:
 

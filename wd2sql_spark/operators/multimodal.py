@@ -7,17 +7,22 @@ no PIL needed) and the decode stages parse the chunk grammar, verify
 every CRC and the zlib/adler32 stream, and reconstruct scanlines through
 the full PNG filter set (types 0-4). The VIDEO path is real too (r9):
 MJPEG-in-AVI — a genuine RIFF container (chunk grammar, word alignment,
-idx1 index) demuxed by ``demux_video_frames`` with every frame decoded through
+idx1 index) demuxed by ``demux_stage`` with every frame decoded through
 the baseline JPEG path; only the per-frame codec would swap for ffmpeg in
 a production ingest (``frame_sample`` keeps the opaque-payload stub shape
 for the synthetic arm).
+
+One pipeline path: every payload is built by a row-level ``*_builder()``
+and consumed by ``*_stage()`` bodies, all composed by
+:func:`fused_codec_pipeline` inside one ``mapInPandas``.
 
 Scale notes: binary payloads ride the same columnar machinery as any other
 column (Parquet BYTE_ARRAY + Arrow LargeBinary); mapInPandas streams
 batches of ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows so
 executor memory is bounded by batch_size × max_blob, not partition size.
-Decode is CPU-heavy → repartition() to core count before the map stage if
-the source files are few.
+Decode is CPU-heavy, so :func:`fused_codec_pipeline` spreads a
+narrow-parallelism input across the session's cores first
+(``operators/skew.spread_rows``).
 """
 
 from __future__ import annotations
@@ -237,47 +242,51 @@ def _make_png_codec():
     return encode_png, decode_png, encode_png_palette, encode_png_rgb
 
 
-def _synth_batches(build):
-    """Shared Arrow-stage body for every payload synthesizer: map each
-    (doc_id, tb, source) row through the family's row-level ``build``
-    function. Factored out so the fused pipelines can run the SAME body
-    in-worker, composed with the consumer stage."""
+def _make_samplers():
+    """The two text-byte samplers every payload builder shares, returned
+    as (png_pixels, jpeg_blocks). Factory-local for the same reason as
+    :func:`_make_png_codec`: the builders' closures ship by value.
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    ``png_pixels(tb, doc_id, channels=1)`` → (pixel bytes, h): an
+    8×h image, h = 8 + doc_id % PNG_H_MOD, whose pixel i carries the
+    text bytes at (i·stride + j) % n for channel j < ``channels``,
+    stride = max(n // npx, 1). ``jpeg_blocks(tb, doc_id, frame=0)`` →
+    (block values, hb): hb = 1 + doc_id % JPEG_BH_MOD block rows of
+    JPEG_BLOCKS_W blocks, block k of frame f = text byte
+    (f + k·stride) % n, stride = max(n // n_blocks, 1)."""
 
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "content": [
-                        build(int(d), bytes(t), s)
-                        for d, t, s in zip(pdf["doc_id"], pdf["tb"], pdf["source"])
-                    ],
-                    "source": pdf["source"],
-                }
-            )
+    def png_pixels(tb: bytes, doc_id: int, channels: int = 1) -> tuple[bytes, int]:
+        n = len(tb)
+        h = PNG_H_BASE + doc_id % PNG_H_MOD
+        npx = PNG_W * h
+        stride = max(n // npx, 1)
+        return bytes(tb[(i * stride + j) % n] for i in range(npx) for j in range(channels)), h
 
-    return batches
+    def jpeg_blocks(tb: bytes, doc_id: int, frame: int = 0) -> tuple[list, int]:
+        n = len(tb)
+        hb = 1 + doc_id % JPEG_BH_MOD
+        nblk = JPEG_BLOCKS_W * hb
+        stride = max(n // nblk, 1)
+        return [tb[(frame + k * stride) % n] for k in range(nblk)], hb
+
+    return png_pixels, jpeg_blocks
 
 
-def fused_codec_pipeline(
-    docs: DataFrame, build, *stages, schema: str, text_col: str = "text"
-) -> DataFrame:
-    """Synth + consumer stage bodies composed inside ONE mapInPandas.
+def fused_codec_pipeline(docs: DataFrame, build, *stages, schema: str) -> DataFrame:
+    """Synth + consumer stage bodies composed inside ONE mapInPandas —
+    the only path by which a payload is built and consumed.
 
-    Every stage body here is ``Iterator[pd.DataFrame] →
+    ``build`` is a row-level payload builder (``*_builder()``) mapping
+    each (doc_id, utf-8 text bytes, source) row to its payload bytes
+    (b"" for empty text); the synth step yields (doc_id, content, source)
+    batches. Every stage body is ``Iterator[pd.DataFrame] →
     Iterator[pd.DataFrame]``, so chaining them in Python is function
     composition — the intermediate payload column never crosses the
-    JVM↔Python boundary at all, where the unfused plan paid a full
-    Arrow serialize + deserialize of every payload between ADJACENT
+    JVM↔Python boundary at all, where an unfused plan pays a full Arrow
+    serialize + deserialize of every payload between ADJACENT
     MapInPandas nodes (guide §4: you control how many columns cross).
-    ``build`` is a row-level payload builder (``*_builder()``); each of
-    ``stages`` is an already-parameterized stage body
-    (``decode_images_stage()``, ``resize_stage(128)``, …). Stage-by-
-    stage results are bit-identical to the standalone operator chain —
-    the same bodies run, in the same order, on the same batches —
-    pinned by tests/test_multimodal_fused.py.
+    Each of ``stages`` is an already-parameterized stage body
+    (``decode_images_stage()``, ``resize_stage(128)``, …).
 
     The input is spread across the session's cores first (r10, guide
     §2.5): the fixture scan is ONE task (single-file single-row-group
@@ -285,17 +294,30 @@ def fused_codec_pipeline(
     pipeline ran serially on one core; ``spread_rows`` is a no-op when
     the scan already provides parallelism (production scale)."""
     base = spread_rows(
-        docs.select(
-            "doc_id",
-            F.encode(F.col(text_col), "utf-8").alias("tb"),
-            F.col("source").alias("source"),
-        ),
-        probe=docs,
+        docs,
+        "doc_id",
+        F.encode(F.col("text"), "utf-8").alias("tb"),
+        "source",
     )
-    fns = [_synth_batches(build), *stages]
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for fn in fns:
+        import pandas as pd
+
+        def synth(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+            for pdf in it:
+                yield pd.DataFrame(
+                    {
+                        "doc_id": pdf["doc_id"].astype("int64"),
+                        "content": [
+                            build(int(d), bytes(t), s)
+                            for d, t, s in zip(pdf["doc_id"], pdf["tb"], pdf["source"])
+                        ],
+                        "source": pdf["source"],
+                    }
+                )
+
+        it = synth(it)
+        for fn in stages:
             it = fn(it)
         return it
 
@@ -306,8 +328,8 @@ def synthesize_blobs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Stand-in OPAQUE media (the video/audio shape): utf-8 bytes of the
     text as the BINARY payload plus typed metadata — the exact column
     layout a real ingest would produce (content BINARY, media_type
-    STRING, meta MAP). The image pipelines use
-    :func:`synthesize_png_blobs` instead, whose payloads are real PNGs."""
+    STRING, meta MAP). The image pipelines build real PNGs instead
+    (:func:`png_builder`)."""
     return docs.select(
         "doc_id",
         F.encode(F.col(text_col), "utf-8").alias("content"),
@@ -316,162 +338,65 @@ def synthesize_blobs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def png_builder():
-    """Row-level text→grayscale-PNG payload builder (the
-    :func:`synthesize_png_blobs` arithmetic), shared with the fused
-    pipelines."""
-    encode_png, _, _, _ = _make_png_codec()
+def png_builder(n_encoders: int):
+    """Row-level text→PNG payload builder: REAL image payloads. Each doc
+    becomes an 8×h image (h = 8 + doc_id % PNG_H_MOD) whose pixels are a
+    fixed-stride byte sample of the utf-8 text — pixel i =
+    text_byte[(i·max(n//npx,1)) % n] — plus a tEXt chunk carrying the
+    doc's source (so payload SIZE varies with real metadata, not just
+    geometry). Deterministic end-to-end, so the DuckDB oracles re-derive
+    byte counts and pixel values from the documents table while Spark
+    runs the actual encoder and decoder. Empty-text docs get an empty
+    payload (nothing to encode); the decode stages drop them — the same
+    per-record tolerance rule as the ETL.
 
-    def build(doc_id: int, tb: bytes, source: str) -> bytes:
-        n = len(tb)
-        if n == 0:
-            return b""
-        h = PNG_H_BASE + doc_id % PNG_H_MOD
-        npx = PNG_W * h
-        stride = max(n // npx, 1)
-        pixels = bytes(tb[(i * stride) % n] for i in range(npx))
-        return encode_png(pixels, PNG_W, h, source.encode("utf-8"))
+    ``doc_id % n_encoders`` picks the encoder: 0 grayscale-8, 1 palette-8,
+    2 truecolor RGB-8. ``n_encoders=1`` is the all-gray corpus.
 
-    return build
+    ``n_encoders=2`` (VERDICT r5 task #7) puts a SECOND encoder in the
+    mix: odd doc_ids encode as palette-8 (color type 3, PLTE of the
+    image's distinct values). The PIXELS are identical either way — only
+    the container differs — so a mixed corpus exercises the decoder's
+    format dispatch while every downstream stage (stats, aHash) must
+    produce byte-identical results per doc; the deterministic split keeps
+    the DuckDB twin exact (n_bytes grows by 12 + 3·n_colors on the
+    palette rows).
 
-
-def synthesize_png_blobs(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """REAL image payloads: each doc becomes an 8×h grayscale PNG
-    (h = 8 + doc_id % PNG_H_MOD) whose pixels are a fixed-stride byte
-    sample of the utf-8 text — pixel i = text_byte[(i·max(n//npx,1)) % n]
-    — plus a tEXt chunk carrying the doc's source (so payload SIZE varies
-    with real metadata, not just geometry). Deterministic end-to-end, so
-    the DuckDB oracles re-derive byte counts and pixel values from the
-    documents table while Spark runs the actual encoder and decoder.
-    Empty-text docs get an empty payload (nothing to encode); the decode
-    stages drop them — the same per-record tolerance rule as the ETL.
-    """
-    enc = F.encode(F.col(text_col), "utf-8")
-    base = spread_rows(
-        docs.select("doc_id", enc.alias("tb"), F.col("source").alias("source")),
-        probe=docs,
-    )
-    return base.mapInPandas(
-        _synth_batches(png_builder()), schema="doc_id bigint, content binary, source string"
-    ).select(
-        "doc_id",
-        "content",
-        F.lit("image/png").alias("media_type"),
-        F.create_map(F.lit("source"), F.col("source")).alias("meta"),
-    )
-
-
-def mixed_png_builder():
-    """Row-level builder for the gray/palette two-encoder PNG mix (the
-    :func:`synthesize_mixed_png_blobs` arithmetic)."""
-    encode_png, _, encode_png_palette, _ = _make_png_codec()
-
-    def build(doc_id: int, tb: bytes, source: str) -> bytes:
-        n = len(tb)
-        if n == 0:
-            return b""
-        h = PNG_H_BASE + doc_id % PNG_H_MOD
-        npx = PNG_W * h
-        stride = max(n // npx, 1)
-        pixels = bytes(tb[(i * stride) % n] for i in range(npx))
-        enc_fn = encode_png if doc_id % 2 == 0 else encode_png_palette
-        return enc_fn(pixels, PNG_W, h, source.encode("utf-8"))
-
-    return build
-
-
-def synthesize_mixed_png_blobs(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """:func:`synthesize_png_blobs` with a SECOND encoder in the mix
-    (VERDICT r5 task #7): even doc_ids encode as grayscale-8, odd ones as
-    palette-8 (color type 3, PLTE of the image's distinct values). The
-    PIXELS are identical either way — only the container differs — so a
-    mixed corpus exercises the decoder's format dispatch while every
-    downstream stage (stats, aHash) must produce byte-identical results
-    per doc; the deterministic split keeps the DuckDB twin exact
-    (n_bytes grows by 12 + 3·n_colors on the palette rows)."""
-    enc = F.encode(F.col(text_col), "utf-8")
-    base = spread_rows(
-        docs.select("doc_id", enc.alias("tb"), F.col("source").alias("source")),
-        probe=docs,
-    )
-    return base.mapInPandas(
-        _synth_batches(mixed_png_builder()),
-        schema="doc_id bigint, content binary, source string",
-    ).select(
-        "doc_id",
-        "content",
-        F.lit("image/png").alias("media_type"),
-        F.create_map(F.lit("source"), F.col("source")).alias("meta"),
-    )
-
-
-def tri_codec_png_builder():
-    """Row-level builder for the gray/palette/truecolor three-encoder
-    PNG mix (the :func:`synthesize_tri_codec_png_blobs` arithmetic)."""
+    ``n_encoders=3`` (VERDICT r6 task #8) adds the THIRD encoder. The
+    truecolor pixels carry genuinely DISTINCT channels — pixel i's
+    (r, g, b) are the text bytes at strided offsets (i·stride,
+    i·stride+1, i·stride+2) mod n — so the bpp=3 filter reconstruction
+    and the downstream luma plane are exercised on real 3-channel data,
+    not a gray image wearing an RGB container. The DuckDB twin
+    re-derives payload sizes (an RGB scanline is 3·w+1 bytes vs the gray
+    w+1) and the sampled channel bytes from the documents table."""
     encode_png, _, encode_png_palette, encode_png_rgb = _make_png_codec()
+    png_pixels, _ = _make_samplers()
 
     def build(doc_id: int, tb: bytes, source: str) -> bytes:
-        n = len(tb)
-        if n == 0:
+        if not tb:
             return b""
-        h = PNG_H_BASE + doc_id % PNG_H_MOD
-        npx = PNG_W * h
-        stride = max(n // npx, 1)
-        arm = doc_id % 3
+        arm = doc_id % n_encoders
         if arm == 2:
-            rgb = bytes(
-                tb[(i * stride + j) % n] for i in range(npx) for j in range(3)
-            )
+            rgb, h = png_pixels(tb, doc_id, channels=3)
             return encode_png_rgb(rgb, PNG_W, h, source.encode("utf-8"))
-        pixels = bytes(tb[(i * stride) % n] for i in range(npx))
+        pixels, h = png_pixels(tb, doc_id)
         enc_fn = encode_png if arm == 0 else encode_png_palette
         return enc_fn(pixels, PNG_W, h, source.encode("utf-8"))
 
     return build
 
 
-def synthesize_tri_codec_png_blobs(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """:func:`synthesize_mixed_png_blobs` with the THIRD encoder in the
-    mix (VERDICT r6 task #8): doc_id % 3 picks grayscale-8 / palette-8 /
-    truecolor RGB-8. The truecolor pixels carry genuinely DISTINCT
-    channels — pixel i's (r, g, b) are the text bytes at strided offsets
-    (i·stride, i·stride+1, i·stride+2) mod n — so the bpp=3 filter
-    reconstruction and the downstream luma plane are exercised on real
-    3-channel data, not a gray image wearing an RGB container. Fully
-    deterministic, so the DuckDB twin re-derives payload sizes (an RGB
-    scanline is 3·w+1 bytes vs the gray w+1) and the sampled channel
-    bytes from the documents table."""
-    enc = F.encode(F.col(text_col), "utf-8")
-    base = spread_rows(
-        docs.select("doc_id", enc.alias("tb"), F.col("source").alias("source")),
-        probe=docs,
-    )
-    return base.mapInPandas(
-        _synth_batches(tri_codec_png_builder()),
-        schema="doc_id bigint, content binary, source string",
-    ).select(
-        "doc_id",
-        "content",
-        F.lit("image/png").alias("media_type"),
-        F.create_map(F.lit("source"), F.col("source")).alias("meta"),
-    )
-
-
-def decode_images(blobs: DataFrame) -> DataFrame:
-    """Arrow-batched REAL decode: BINARY column → typed metadata rows via
-    the stdlib PNG codec (chunk grammar + CRC verification + inflate +
-    filter reconstruction — see :func:`_make_png_codec`).
+def decode_images_stage():
+    """Arrow-batched REAL decode stage body: BINARY column → typed
+    metadata rows (DECODED_SCHEMA) via the stdlib PNG codec (chunk
+    grammar + CRC verification + inflate + filter reconstruction — see
+    :func:`_make_png_codec`).
 
     mapInPandas (not a scalar UDF) because decode is 1→1 but wants batch
     amortization and the freedom to drop undecodable rows (a scalar UDF
     must return exactly one value per row) — empty or corrupt payloads
     drop, per-record tolerance."""
-    return blobs.mapInPandas(decode_images_stage(), schema=DECODED_SCHEMA)
-
-
-def decode_images_stage():
-    """The :func:`decode_images` stage body, reusable in fused
-    pipelines."""
     _, decode_png, _, _ = _make_png_codec()
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -509,16 +434,11 @@ def decode_images_stage():
     return batches
 
 
-def resize_thumbnails(decoded: DataFrame, max_side: int = 128) -> DataFrame:
-    """STUB resize stage: computes target geometry (the real pixel work
-    would live in the same mapInPandas body). Kept as a separate Arrow
-    stage to mirror a real decode→transform pipeline."""
-    return decoded.mapInPandas(resize_stage(max_side), schema=THUMB_SCHEMA)
-
-
 def resize_stage(max_side: int = 128):
-    """The :func:`resize_thumbnails` stage body, reusable in fused
-    pipelines."""
+    """STUB resize stage body over decoded rows (THUMB_SCHEMA): computes
+    target geometry (the real pixel work would live in the same body).
+    Kept as a separate stage body to mirror a real decode→transform
+    pipeline."""
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
@@ -564,24 +484,20 @@ PHASH_PIXELS = 64  # sampled "pixels" per payload (the 8x8 aHash grid)
 PHASH_BITS = 56  # hash bits kept (bits 0..55 -> 7 bands of 8; int64-safe)
 
 
-def phash_images(blobs: DataFrame) -> DataFrame:
-    """Arrow-batched perceptual hash (average-hash / aHash) over REAL
-    image payloads: run the actual PNG decoder (CRC + inflate + filter
-    reconstruction), sample PHASH_PIXELS pixels at a fixed stride from
-    the reconstructed pixel buffer (the small-image stand-in for the 8×8
-    downscale a PIL impl would do), take the integer mean, and set bit k
-    when pixel k exceeds it. The hash arithmetic is exact integers over
-    deterministically-encoded pixels, so the SQL twin re-derives the same
-    bits from the documents table the encoder sampled. Undecodable or
-    empty payloads drop (per-record tolerance); the oracle filters
-    empty-text docs the same way. Like decode_images, the codec functions
-    are factory-local so cloudpickle ships them by value."""
-    return blobs.mapInPandas(phash_stage(), schema=PHASH_SCHEMA)
-
-
 def phash_stage():
-    """The :func:`phash_images` stage body, reusable in fused
-    pipelines."""
+    """Arrow-batched perceptual hash (average-hash / aHash) stage body
+    over REAL image payloads (PHASH_SCHEMA): run the actual PNG decoder
+    (CRC + inflate + filter reconstruction), sample PHASH_PIXELS pixels
+    at a fixed stride from the reconstructed pixel buffer (the
+    small-image stand-in for the 8×8 downscale a PIL impl would do),
+    take the integer mean, and set bit k when pixel k exceeds it.
+    3-channel decodes hash their integer LUMA plane (r + 2g + b) // 4.
+    The hash arithmetic is exact integers over deterministically-encoded
+    pixels, so the SQL twin re-derives the same bits from the documents
+    table the encoder sampled. Undecodable or empty payloads drop
+    (per-record tolerance); the oracle filters empty-text docs the same
+    way. Like :func:`decode_images_stage`, the codec functions are
+    factory-local so cloudpickle ships them by value."""
     _, decode_png, _, _ = _make_png_codec()
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -1029,63 +945,37 @@ def _make_jpeg_codec():
 
 
 def jpeg_builder():
-    """Row-level text→baseline-JPEG payload builder (the
-    :func:`synthesize_jpeg_blobs` arithmetic)."""
+    """Row-level text→baseline-JPEG payload builder: REAL JPEG payloads.
+    Each doc becomes a 16×(8·(1 + doc_id % 3)) grayscale baseline JPEG
+    whose per-BLOCK values are a fixed-stride byte sample of the utf-8
+    text — block k = text_byte[(k·stride) % n], stride =
+    max(n // n_blocks, 1) — plus a COM segment carrying the doc's source.
+    Deterministic end-to-end, and the DC-only encoding makes the decode
+    arithmetic closed-form (see _make_jpeg_codec), so the DuckDB twin
+    re-derives geometry and reconstructed pixel sums from the documents
+    table while Spark round-trips the actual codec. Empty-text docs get
+    an empty payload."""
     encode_jpeg, _ = _make_jpeg_codec()
+    _, jpeg_blocks = _make_samplers()
 
     def build(doc_id: int, tb: bytes, source: str) -> bytes:
-        n = len(tb)
-        if n == 0:
+        if not tb:
             return b""
-        hb = 1 + doc_id % JPEG_BH_MOD
-        nblk = JPEG_BLOCKS_W * hb
-        stride = max(n // nblk, 1)
-        vals = [tb[(k * stride) % n] for k in range(nblk)]
+        vals, hb = jpeg_blocks(tb, doc_id)
         return encode_jpeg(vals, JPEG_BLOCKS_W, hb, source.encode("utf-8"))
 
     return build
 
 
-def synthesize_jpeg_blobs(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """REAL JPEG payloads: each doc becomes a 16×(8·(1 + doc_id % 3))
-    grayscale baseline JPEG whose per-BLOCK values are a fixed-stride
-    byte sample of the utf-8 text — block k = text_byte[(k·stride) % n],
-    stride = max(n // n_blocks, 1) — plus a COM segment carrying the
-    doc's source. Deterministic end-to-end, and the DC-only encoding
-    makes the decode arithmetic closed-form (see _make_jpeg_codec), so
-    the DuckDB twin re-derives geometry and reconstructed pixel sums
-    from the documents table while Spark round-trips the actual codec."""
-    enc = F.encode(F.col(text_col), "utf-8")
-    base = spread_rows(
-        docs.select("doc_id", enc.alias("tb"), F.col("source").alias("source")),
-        probe=docs,
-    )
-    return base.mapInPandas(
-        _synth_batches(jpeg_builder()),
-        schema="doc_id bigint, content binary, source string",
-    ).select(
-        "doc_id",
-        "content",
-        F.lit("image/jpeg").alias("media_type"),
-        F.create_map(F.lit("source"), F.col("source")).alias("meta"),
-    )
-
-
-def decode_jpeg_stats(blobs: DataFrame) -> DataFrame:
-    """Arrow-batched REAL JPEG decode → typed metadata + the exact
-    integer SUM of every reconstructed pixel. The sum is the honest
-    decode proof: it is a function of the Huffman stream, the
-    dequantization, and the IDCT together, and the oracle recomputes it
-    per block from the documents table via the closed-form
+def jpeg_stats_stage():
+    """Arrow-batched REAL JPEG decode stage body → typed metadata + the
+    exact integer SUM of every reconstructed pixel (JPEG_STATS_SCHEMA).
+    The sum is the honest decode proof: it is a function of the Huffman
+    stream, the dequantization, and the IDCT together, and the oracle
+    recomputes it per block from the documents table via the closed-form
     clamp(2·Fq + 128) — a match means the whole entropy→pixels path is
     bit-exact. Undecodable or empty payloads drop (per-record
     tolerance)."""
-    return blobs.mapInPandas(jpeg_stats_stage(), schema=JPEG_STATS_SCHEMA)
-
-
-def jpeg_stats_stage():
-    """The :func:`decode_jpeg_stats` stage body, reusable in fused
-    pipelines."""
     _, decode_jpeg = _make_jpeg_codec()
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -1118,73 +1008,40 @@ MIXED_CONTAINER_SCHEMA = (
 
 
 def mixed_container_builder():
-    """Row-level builder for the PNG/JPEG two-FORMAT mix (the
-    :func:`synthesize_mixed_container_blobs` arithmetic)."""
+    """Row-level builder for TWO container FORMATS in one corpus (not
+    just two PNG color types): even doc_ids encode as grayscale PNG, odd
+    ones as baseline JPEG — the shape of a real crawl, where the ingest
+    pipeline cannot choose what containers arrive. Geometry and pixel
+    sampling follow each format's own convention (PNG: 8×(8+doc_id%5)
+    pixels sampled per pixel; JPEG: 16×(8·(1+doc_id%3)) with one value
+    per 8×8 block), so the DuckDB twin re-derives both arms from the
+    documents table."""
     encode_png, _, _, _ = _make_png_codec()
     encode_jpeg, _ = _make_jpeg_codec()
+    png_pixels, jpeg_blocks = _make_samplers()
 
     def build(doc_id: int, tb: bytes, source: str) -> bytes:
-        n = len(tb)
-        if n == 0:
+        if not tb:
             return b""
         if doc_id % 2 == 0:
-            h = PNG_H_BASE + doc_id % PNG_H_MOD
-            npx = PNG_W * h
-            stride = max(n // npx, 1)
-            pixels = bytes(tb[(i * stride) % n] for i in range(npx))
+            pixels, h = png_pixels(tb, doc_id)
             return encode_png(pixels, PNG_W, h, source.encode("utf-8"))
-        hb = 1 + doc_id % JPEG_BH_MOD
-        nblk = JPEG_BLOCKS_W * hb
-        stride = max(n // nblk, 1)
-        vals = [tb[(k * stride) % n] for k in range(nblk)]
+        vals, hb = jpeg_blocks(tb, doc_id)
         return encode_jpeg(vals, JPEG_BLOCKS_W, hb, source.encode("utf-8"))
 
     return build
 
 
-def synthesize_mixed_container_blobs(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """TWO container FORMATS in one corpus (not just two PNG color
-    types): even doc_ids encode as grayscale PNG, odd ones as baseline
-    JPEG — the shape of a real crawl, where the ingest pipeline cannot
-    choose what containers arrive. Geometry and pixel sampling follow
-    each format's own convention (PNG: 8×(8+doc_id%5) pixels sampled per
-    pixel; JPEG: 16×(8·(1+doc_id%3)) with one value per 8×8 block), so
-    the DuckDB twin re-derives both arms from the documents table."""
-    enc = F.encode(F.col(text_col), "utf-8")
-    base = spread_rows(
-        docs.select("doc_id", enc.alias("tb"), F.col("source").alias("source")),
-        probe=docs,
-    )
-    return base.mapInPandas(
-        _synth_batches(mixed_container_builder()),
-        schema="doc_id bigint, content binary, source string",
-    ).select(
-        "doc_id",
-        "content",
-        F.when(F.col("doc_id") % 2 == 0, "image/png")
-        .otherwise("image/jpeg")
-        .alias("media_type"),
-        F.create_map(F.lit("source"), F.col("source")).alias("meta"),
-    )
-
-
-def decode_mixed_container_stats(blobs: DataFrame) -> DataFrame:
-    """Container-agnostic decode DISPATCH: route each payload by its
-    magic bytes (PNG signature vs JPEG SOI) through the matching REAL
-    decoder and emit one normalized stats row — geometry plus the exact
-    integer sum of every reconstructed pixel. This is the ingest-side
-    contract that matters at 100 TB: downstream operators (quality,
-    near-dup, thumbnails) never see the container, only decoded pixels.
-    Unknown signatures and undecodable payloads drop (per-record
-    tolerance, same rule as the ETL)."""
-    return blobs.mapInPandas(
-        mixed_container_stats_stage(), schema=MIXED_CONTAINER_SCHEMA
-    )
-
-
 def mixed_container_stats_stage():
-    """The :func:`decode_mixed_container_stats` stage body, reusable in
-    fused pipelines."""
+    """Container-agnostic decode DISPATCH stage body: route each payload
+    by its magic bytes (PNG signature vs JPEG SOI) through the matching
+    REAL decoder and emit one normalized stats row
+    (MIXED_CONTAINER_SCHEMA) — geometry plus the exact integer sum of
+    every reconstructed pixel. This is the ingest-side contract that
+    matters at 100 TB: downstream operators (quality, near-dup,
+    thumbnails) never see the container, only decoded pixels. Unknown
+    signatures and undecodable payloads drop (per-record tolerance, same
+    rule as the ETL)."""
     _, decode_png, _, _ = _make_png_codec()
     _, decode_jpeg = _make_jpeg_codec()
 
@@ -1387,163 +1244,72 @@ def _make_avi_container():
     return encode_avi, demux_avi
 
 
-def _make_avi_builder():
-    """Row-level text→MJPEG-AVI builder shared by the standalone synth
-    operator and the fused synth+demux path: build(doc_id, tb, source) →
-    container bytes (b"" for empty text)."""
+def avi_builder():
+    """Row-level text→MJPEG-AVI payload builder: REAL video payloads.
+    Each doc becomes an MJPEG AVI of 1 + doc_id % AVI_FRAMES_MOD frames;
+    every frame is a genuine baseline JPEG (the encoder above) at the
+    doc's fixed geometry 16×(8·(1 + doc_id % JPEG_BH_MOD)), with frame
+    f's block k sampling the text byte at (f + k·stride) % n —
+    consecutive frames are near-identical shifted samples, the
+    temporal-redundancy shape real video has. Deterministic end-to-end,
+    so the DuckDB twin re-derives per-frame pixel sums from the
+    documents table while Spark runs the actual muxer and demuxer.
+    Empty-text docs get an empty payload."""
     encode_jpeg, _ = _make_jpeg_codec()
     encode_avi, _ = _make_avi_container()
+    _, jpeg_blocks = _make_samplers()
 
     def build(doc_id: int, tb: bytes, source: str) -> bytes:
-        n = len(tb)
-        if n == 0:
+        if not tb:
             return b""
-        hb = 1 + doc_id % JPEG_BH_MOD
-        nblk = JPEG_BLOCKS_W * hb
-        stride = max(n // nblk, 1)
-        n_frames = 1 + doc_id % AVI_FRAMES_MOD
-        frames = [
-            encode_jpeg(
-                [tb[(f + k * stride) % n] for k in range(nblk)],
-                JPEG_BLOCKS_W,
-                hb,
-                source.encode("utf-8"),
-            )
-            for f in range(n_frames)
-        ]
+        src = source.encode("utf-8")
+        samples = [jpeg_blocks(tb, doc_id, frame=f) for f in range(1 + doc_id % AVI_FRAMES_MOD)]
+        hb = samples[0][1]
+        frames = [encode_jpeg(vals, JPEG_BLOCKS_W, hb, src) for vals, _ in samples]
         return encode_avi(frames, 8 * JPEG_BLOCKS_W, 8 * hb)
 
     return build
 
 
-def synthesize_avi_blobs(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """REAL video payloads: each doc becomes an MJPEG AVI of
-    1 + doc_id % AVI_FRAMES_MOD frames; every frame is a genuine
-    baseline JPEG (the encoder above) at the doc's fixed geometry
-    16×(8·(1 + doc_id % JPEG_BH_MOD)), with frame f's block k sampling
-    the text byte at (f + k·stride) % n — consecutive frames are
-    near-identical shifted samples, the temporal-redundancy shape real
-    video has. Deterministic end-to-end, so the DuckDB twin re-derives
-    per-frame pixel sums from the documents table while Spark runs the
-    actual muxer and demuxer. Empty-text docs get an empty payload."""
-    enc = F.encode(F.col(text_col), "utf-8")
-    base = spread_rows(
-        docs.select("doc_id", enc.alias("tb"), F.col("source").alias("source")),
-        probe=docs,
-    )
-    build = _make_avi_builder()
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "content": [
-                        build(int(d), bytes(t), s)
-                        for d, t, s in zip(pdf["doc_id"], pdf["tb"], pdf["source"])
-                    ],
-                    "source": pdf["source"],
-                }
-            )
-
-    return base.mapInPandas(
-        batches, schema="doc_id bigint, content binary, source string"
-    ).select(
-        "doc_id",
-        "content",
-        F.lit("video/x-msvideo").alias("media_type"),
-        F.create_map(F.lit("source"), F.col("source")).alias("meta"),
-    )
-
-
-def demux_video_frames(blobs: DataFrame) -> DataFrame:
-    """Arrow-batched REAL demux + per-frame decode: walk each payload's
-    RIFF grammar, extract the 00dc frames, decode each through the
-    baseline JPEG path, and emit ONE ROW PER FRAME (the 1→N shape that
-    makes mapInPandas mandatory) with geometry and the exact integer
-    pixel sum. Undecodable/empty payloads and frames drop (per-record
-    tolerance, same rule as the ETL). Frame decode happens INSIDE the
-    demux stage so raw frame bytes never cross a shuffle — at 100 TB
-    the downstream aggregate sees only the typed stats columns."""
-    extract = _make_frame_extractor()
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in _FRAME_COLS}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["content"]):
-                extract(rows, int(doc_id), bytes(payload))
-            yield pd.DataFrame({k: pd.Series(rows[k], dtype="int64") for k in _FRAME_COLS})
-
-    return blobs.mapInPandas(batches, schema=VIDEO_FRAME_SCHEMA)
-
-
-_FRAME_COLS = (
-    "doc_id", "frame_no", "frame_offset", "frame_bytes",
-    "width", "height", "sum_px",
-)
-
-
-def _make_frame_extractor():
-    """Per-payload demux+decode shared by the standalone demux operator
-    and the fused synth+demux path: extract(rows, doc_id, payload)
-    appends one entry per decodable frame to the ``_FRAME_COLS`` lists
-    (undecodable payloads/frames drop — the ETL's per-record rule)."""
+def demux_stage():
+    """Arrow-batched REAL demux + per-frame decode stage body: walk each
+    payload's RIFF grammar, extract the 00dc frames, decode each through
+    the baseline JPEG path, and emit ONE ROW PER FRAME
+    (VIDEO_FRAME_SCHEMA — the 1→N shape that makes mapInPandas
+    mandatory) with geometry and the exact integer pixel sum.
+    Undecodable/empty payloads and frames drop (per-record tolerance,
+    same rule as the ETL). Frame decode happens INSIDE the demux stage
+    so raw frame bytes never cross a shuffle — at 100 TB the downstream
+    aggregate sees only the typed stats columns."""
     _, demux_avi = _make_avi_container()
     _, decode_jpeg = _make_jpeg_codec()
 
-    def extract(rows: dict, doc_id: int, payload: bytes) -> None:
-        try:
-            frames = demux_avi(payload)
-        except Exception:
-            return
-        for frame_no, offset, fr in frames:
-            try:
-                w, h, px = decode_jpeg(fr)
-            except Exception:
-                continue
-            rows["doc_id"].append(doc_id)
-            rows["frame_no"].append(frame_no)
-            rows["frame_offset"].append(offset)
-            rows["frame_bytes"].append(len(fr))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["sum_px"].append(sum(px))
-
-    return extract
-
-
-def synthesize_and_demux_video(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Fused synth→demux→decode in ONE Arrow stage: the container bytes
-    are built and consumed inside the same Python worker, so the payload
-    column never crosses the JVM boundary at all (guide §4: two adjacent
-    mapInPandas stages each pay a full Arrow serialize/deserialize of
-    every column — for a payload-producing stage feeding a
-    payload-consuming one, fusing removes the whole round trip). Same
-    muxer, per-frame codec, and per-record tolerance as the standalone
-    operators (shared row-level helpers), so the frame rows are
-    bit-identical to ``demux_video_frames(synthesize_avi_blobs(docs))``.
-    Input spread across cores first (r10, guide §2.5 — the single-file
-    fixture scan is one task; see ``fused_codec_pipeline``)."""
-    enc = F.encode(F.col(text_col), "utf-8")
-    base = spread_rows(
-        docs.select("doc_id", enc.alias("tb"), F.col("source").alias("source")),
-        probe=docs,
-    )
-    build = _make_avi_builder()
-    extract = _make_frame_extractor()
-
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
+        cols = (
+            "doc_id", "frame_no", "frame_offset", "frame_bytes",
+            "width", "height", "sum_px",
+        )
         for pdf in it:
-            rows: dict[str, list] = {k: [] for k in _FRAME_COLS}
-            for d, t, s in zip(pdf["doc_id"], pdf["tb"], pdf["source"]):
-                doc_id = int(d)
-                extract(rows, doc_id, build(doc_id, bytes(t), s))
-            yield pd.DataFrame({k: pd.Series(rows[k], dtype="int64") for k in _FRAME_COLS})
+            rows: dict[str, list] = {k: [] for k in cols}
+            for doc_id, payload in zip(pdf["doc_id"], pdf["content"]):
+                try:
+                    frames = demux_avi(bytes(payload))
+                except Exception:
+                    continue
+                for frame_no, offset, fr in frames:
+                    try:
+                        w, h, px = decode_jpeg(fr)
+                    except Exception:
+                        continue
+                    rows["doc_id"].append(int(doc_id))
+                    rows["frame_no"].append(frame_no)
+                    rows["frame_offset"].append(offset)
+                    rows["frame_bytes"].append(len(fr))
+                    rows["width"].append(w)
+                    rows["height"].append(h)
+                    rows["sum_px"].append(sum(px))
+            yield pd.DataFrame({k: pd.Series(rows[k], dtype="int64") for k in cols})
 
-    return base.mapInPandas(batches, schema=VIDEO_FRAME_SCHEMA)
+    return batches

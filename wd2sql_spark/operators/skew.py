@@ -60,37 +60,36 @@ def salted_join(
     return joined.drop(SALT)
 
 
-def spread_rows(df: DataFrame, key: str = "doc_id", probe: DataFrame | None = None) -> DataFrame:
-    """Distribute a narrow-parallelism input across the session's cores
-    before a CPU-heavy stage (guide §2.5 "input skew": one unsplittable
-    input file leaves the whole map stage on one task — repartition
-    immediately after the read).
+def spread_rows(src: DataFrame, *cols) -> DataFrame:
+    """Project ``src.select(*cols)`` and distribute it across the
+    session's cores before a CPU-heavy stage (guide §2.5 "input skew":
+    one unsplittable input file leaves the whole map stage on one task —
+    repartition immediately after the read).
 
     The fixture tables are single-file single-row-group parquet, so EVERY
     scan is exactly one task regardless of split configuration; a fused
     Python codec pipeline placed directly over such a scan runs serially
-    on one core of local[32]. This helper hash-repartitions on ``key``
-    (deterministic placement — no round-robin, per SPARK-38388's retry
-    hazard and its sort-before-repartition cost) to the session's default
-    parallelism, moving the rows once so the expensive per-row work runs
-    wide.
+    on one core of local[32]. This helper hash-repartitions the
+    projection on ``doc_id`` (deterministic placement — no round-robin,
+    per SPARK-38388's retry hazard and its sort-before-repartition cost)
+    to the session's default parallelism, moving the rows once so the
+    expensive per-row work runs wide.
 
-    SCALE-ADAPTIVE, not a local-only constant: when the input already
+    SCALE-ADAPTIVE, not a local-only constant: when ``src`` already
     carries at least that many partitions — the normal case at production
     scale, where the scan itself provides parallelism — it is a NO-OP and
     no exchange is added.
 
-    ``probe``: the DataFrame whose partition count stands for ``df``'s.
-    The probe is driver-side plan analysis only (no job) but costs
-    ~0.2 s of py4j/conversion the FIRST time on a given DataFrame object
-    (cached on the object afterwards) — so callers that rebuild ``df``
-    per invocation should pass their long-lived source relation (e.g.
-    the session-cached ``catalog.table()`` object) as ``probe``; a
-    narrow projection preserves the source's partitioning, so the counts
-    are identical.
+    The partition count is probed on ``src``, not on the projection: a
+    projection keeps its source's partitioning, so the counts are equal
+    by construction. The probe is driver-side plan analysis only (no
+    job) but costs ~0.2 s of py4j/conversion the FIRST time on a given
+    DataFrame object (cached on the object afterwards), so ``src``
+    should be a long-lived relation such as the session-cached
+    ``catalog.table()`` object.
     """
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if (probe if probe is not None else df).rdd.getNumPartitions() >= target:
+    df = src.select(*cols)
+    target = src.sparkSession.sparkContext.defaultParallelism
+    if src.rdd.getNumPartitions() >= target:
         return df
-    return df.repartition(target, key)
+    return df.repartition(target, "doc_id")

@@ -58,10 +58,9 @@ def multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured 0.68 s without the sort vs 1.17 s with it at sf0.1."""
     docs = table(spark, sf_dir, "documents")
     # Fused single-stage pipeline (r9): the PNG payload never crosses
-    # the JVM boundary — same stage bodies as the standalone chain,
-    # pinned by tests/test_multimodal_fused.py.
+    # the JVM boundary — synth and decode bodies run in ONE mapInPandas.
     return M.fused_codec_pipeline(
-        docs, M.png_builder(), M.decode_images_stage(), schema=M.DECODED_SCHEMA
+        docs, M.png_builder(1), M.decode_images_stage(), schema=M.DECODED_SCHEMA
     )
 
 
@@ -93,7 +92,7 @@ def multimodal_resize_thumbs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # composed in ONE mapInPandas (was THREE adjacent Python stages).
     return M.fused_codec_pipeline(
         docs,
-        M.png_builder(),
+        M.png_builder(1),
         M.decode_images_stage(),
         M.resize_stage(128),
         schema=M.THUMB_SCHEMA,
@@ -165,7 +164,7 @@ def multimodal_mixed_codec_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     # Fused single-stage pipeline (r9) — see multimodal_decode_stats.
     return M.fused_codec_pipeline(
-        docs, M.mixed_png_builder(), M.decode_images_stage(), schema=M.DECODED_SCHEMA
+        docs, M.png_builder(2), M.decode_images_stage(), schema=M.DECODED_SCHEMA
     )
 
 
@@ -228,7 +227,7 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-duplicate detection by perceptual hash over REAL PNG
     payloads (r5): an Arrow-batched aHash that runs the actual decoder
     (CRC + inflate + filter reconstruction) and samples the RECONSTRUCTED
-    pixel buffer (operators/multimodal.py::phash_images), then hamming
+    pixel buffer (operators/multimodal.py::phash_stage), then hamming
     banding on the hash itself: candidates must share one of 4 14-bit
     bands (bands > h pigeonhole ⇒ guaranteed recall for hamming ≤ 3),
     verified via bit_count(xor). The multimodal twin of dedup_simhash —
@@ -267,7 +266,7 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_key(sf_dir),
         # Fused single-stage synth+hash (r9) — see multimodal_decode_stats.
         M.fused_codec_pipeline(
-            docs, M.png_builder(), M.phash_stage(), schema=M.PHASH_SCHEMA
+            docs, M.png_builder(1), M.phash_stage(), schema=M.PHASH_SCHEMA
         ).persist,
     )
     chunks = blobs.select(
@@ -359,10 +358,7 @@ def multimodal_truecolor_codec_stats(spark: SparkSession, sf_dir: str) -> DataFr
     docs = table(spark, sf_dir, "documents")
     # Fused single-stage pipeline (r9) — see multimodal_decode_stats.
     return M.fused_codec_pipeline(
-        docs,
-        M.tri_codec_png_builder(),
-        M.decode_images_stage(),
-        schema=M.DECODED_SCHEMA,
+        docs, M.png_builder(3), M.decode_images_stage(), schema=M.DECODED_SCHEMA
     )
 
 
@@ -371,7 +367,7 @@ def _tri_byte(expr: str) -> str:
     return f"CAST(('0x' || substring(hx, 2 * ({expr}) + 1, 2)) AS BIGINT)"
 
 
-# The LUMA-plane aHash contract (operators/multimodal.phash_images): for
+# The LUMA-plane aHash contract (operators/multimodal.phash_stage): for
 # 3-channel decodes the hash runs over (r + 2g + b) // 4 — exact integer
 # arithmetic, so the oracle computes the identical plane from the three
 # strided channel bytes; 1-channel arms hash the gray byte directly.
@@ -421,7 +417,7 @@ def multimodal_luma_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     # Fused single-stage pipeline (r9) — see multimodal_decode_stats.
     return M.fused_codec_pipeline(
-        docs, M.tri_codec_png_builder(), M.phash_stage(), schema=M.PHASH_SCHEMA
+        docs, M.png_builder(3), M.phash_stage(), schema=M.PHASH_SCHEMA
     )
 
 
@@ -635,10 +631,10 @@ def multimodal_video_demux_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     container-of-containers."""
     docs = table(spark, sf_dir, "documents")
     # Fused synth+demux (one Arrow stage): the container bytes never
-    # cross the JVM boundary; bit-identical rows to the standalone
-    # demux_video_frames(synthesize_avi_blobs(docs)) composition, which
-    # tests/test_video_demux.py pins.
-    frames = M.synthesize_and_demux_video(docs)
+    # cross the JVM boundary.
+    frames = M.fused_codec_pipeline(
+        docs, M.avi_builder(), M.demux_stage(), schema=M.VIDEO_FRAME_SCHEMA
+    )
     return (
         frames.groupBy("doc_id")
         .agg(

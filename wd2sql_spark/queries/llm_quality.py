@@ -103,7 +103,7 @@ def quality_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wd2sql_spark.operators.skew import spread_rows
 
     d = table(spark, sf_dir, "documents")
-    base = spread_rows(d.select("doc_id", "text"), probe=d)
+    base = spread_rows(d, "doc_id", "text")
 
     def fold(it):
         from collections import Counter
