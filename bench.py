@@ -17,6 +17,9 @@ reference's sub-second query numbers describe (README.md:129-143 —
 measured after index build, on a warm database). Per-plan compile cost is
 a constant that amortizes to zero on a long-lived cluster, but it is
 still visible in ``cold_queries`` so regressions in either regime show.
+``classes_compiled`` in ``BENCH_LOCAL.json`` records how many generated
+classes each timed section compiled, so a warm number that still pays
+codegen shows as a non-zero count.
 """
 
 from __future__ import annotations
@@ -128,6 +131,16 @@ HEADLINE = (
     # planning, sink commit), which is startup cost, not per-row cost.
 )
 
+
+def codegen_compiles(spark) -> int:
+    """How many generated classes Spark has compiled in this JVM so far
+    (the sample count of ``CodegenMetrics``' compilation-time histogram).
+    A difference across a section is the classes that section compiled;
+    reading it runs no job."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 # The 22 classic TPC-H query shapes, one registered query per number —
 # reported as a single power-run wall time (``tpch22_wall_time``) so the
 # classic suite has its own recognizable line beside the LLM battery.
@@ -197,6 +210,8 @@ def main() -> None:
 
     # Cold pass: first execution of each plan (analysis + codegen +
     # broadcast build) on warm caches. Timed and reported separately.
+    compiled: dict[str, int] = {}
+    c0 = codegen_compiles(spark)
     cold: dict[str, float] = {}
     for name in HEADLINE:
         q = registry.get(name)
@@ -205,6 +220,7 @@ def main() -> None:
         t0 = time.perf_counter()
         force(q.fn(spark, sf_dir))
         cold[name] = round(time.perf_counter() - t0, 4)
+    compiled["headline_cold"] = codegen_compiles(spark) - c0
 
     # Warm pass: steady-state latency — the headline number. Best of
     # FIVE executions per query (r7; was three): this host carries
@@ -238,6 +254,7 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     warm_samples: dict[str, list] = {}
+    c0 = codegen_compiles(spark)
     for _pass in range(5):
         for name in HEADLINE:
             q = registry.get(name)
@@ -279,6 +296,7 @@ def main() -> None:
                 timings[name] = dt
             if la <= 3.0:
                 break
+    compiled["headline_warm"] = codegen_compiles(spark) - c0
     timings = {k: round(v, 4) for k, v in timings.items()}
 
     # TPC-H power run: the 22 classic shapes back-to-back, warm = min of
@@ -292,6 +310,7 @@ def main() -> None:
         if q is not None:
             force(q.fn(spark, sf_dir))
     tpch_samples: dict[str, list] = {}
+    c0 = codegen_compiles(spark)
     for _pass in range(3):  # interleaved, like the headline warm pass
         for name in TPCH22:
             q = registry.get(name)
@@ -303,6 +322,7 @@ def main() -> None:
             tpch_samples.setdefault(name, []).append([round(dt, 4), loadavg1()])
             if dt < tpch.get(name, float("inf")):
                 tpch[name] = dt
+    compiled["tpch22_timed"] = codegen_compiles(spark) - c0
     tpch = {k: round(v, 4) for k, v in tpch.items()}
 
     # Streaming suite: every registered stream_* query run to completion
@@ -350,6 +370,9 @@ def main() -> None:
                 # data — min-of-N picks the sample, these show the field
                 "warm_samples": warm_samples,
                 "tpch22_samples": tpch_samples,
+                # generated classes compiled during each timed section,
+                # read from CodegenMetrics before and after it
+                "classes_compiled": compiled,
                 "etl_wall_time": etl["etl_wall_time"],
                 "etl": etl,
                 "streaming": streaming,

@@ -569,3 +569,17 @@ def test_gray_rgb_luma_ahash_equality(spark):
 
     gray, rgb = hashes(False), hashes(True)
     assert gray and gray == rgb
+
+
+def test_null_text_is_dropped_per_record(spark):
+    """A document whose ``text`` is NULL gets an empty payload, which the
+    decode stage drops per record (the ETL's tolerance rule): the job
+    returns the valid row only instead of failing on the NULL."""
+    docs = spark.createDataFrame(
+        [(1, "a valid document body", "web"), (2, None, "web")],
+        "doc_id bigint, text string, source string",
+    )
+    out = M.fused_codec_pipeline(
+        docs, M.png_builder(1), M.decode_images_stage(), schema=M.DECODED_SCHEMA
+    ).collect()
+    assert [r["doc_id"] for r in out] == [1]

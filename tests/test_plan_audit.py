@@ -526,6 +526,38 @@ def test_spread_rows_projects_and_spreads_only_narrow_sources(spark):
     assert plan_report(wide).shuffles == 0
 
 
+def test_warm_battery_pass_compiles_no_classes(spark, sf_dir):
+    """Spark's generated-code cache holds the query battery's working set
+    and keys it on sources that do not change from run to run
+    (``spark.sql.codegen.cache.maxEntries`` and ``useIdInClassName`` in
+    ``session.get_spark``): after one pass over the nine ``perfbench``
+    battery queries, one more interleaved pass compiles no class. At
+    Spark's default of 100 entries the nine queries' ~195 classes evict
+    each other and every warm pass recompiles most of them; with stage ids
+    in class names, AQE's stage numbering made some warm runs of
+    ``semdedup_cluster_prune`` compile 2-4 classes again."""
+    from bench import TPCH22, codegen_compiles
+
+    battery = [TPCH22[n - 1] for n in (1, 3, 13, 21)] + [
+        "flagship_semi_join_enrich",
+        "sessionize_gap30m_skewsafe",
+        "semdedup_cluster_prune",
+        "join_basket_cooccurrence",
+        "quality_repetition_metrics",
+    ]
+
+    def one_pass() -> dict[str, int]:
+        compiled = {}
+        for name in battery:
+            before = codegen_compiles(spark)
+            REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            compiled[name] = codegen_compiles(spark) - before
+        return {name: n for name, n in compiled.items() if n}
+
+    one_pass()
+    assert one_pass() == {}
+
+
 def test_decontam_broadcasts_eval_set(reports):
     """Decontamination: the eval shingle set ships broadcast (a benchmark
     suite is MBs — never shuffle the corpus for the membership probe);

@@ -10,6 +10,13 @@ bench.py publishes, so numbers here are comparable to the bench without
 paying for the whole battery. ``--explain OUT`` additionally writes
 ``df.explain("formatted")`` to ``OUT/<name>.txt`` (the plans/r09 evidence
 files).
+
+The samples of one query run back to back, so they never evict each
+other's generated classes. bench.py interleaves its passes over many
+queries; while the session kept Spark's default 100-entry codegen cache,
+those passes recompiled most classes on every warm run, so numbers from
+this tool were not comparable with the bench's. With the cache sized in
+``session.get_spark`` neither pays recompiles.
 """
 
 from __future__ import annotations

@@ -278,7 +278,9 @@ def fused_codec_pipeline(docs: DataFrame, build, *stages, schema: str) -> DataFr
 
     ``build`` is a row-level payload builder (``*_builder()``) mapping
     each (doc_id, utf-8 text bytes, source) row to its payload bytes
-    (b"" for empty text); the synth step yields (doc_id, content, source)
+    (b"" for empty text; a NULL text is passed as empty text, so its
+    payload is dropped per record by the decode stages instead of
+    aborting the job); the synth step yields (doc_id, content, source)
     batches. Every stage body is ``Iterator[pd.DataFrame] →
     Iterator[pd.DataFrame]``, so chaining them in Python is function
     composition — the intermediate payload column never crosses the
@@ -309,7 +311,7 @@ def fused_codec_pipeline(docs: DataFrame, build, *stages, schema: str) -> DataFr
                     {
                         "doc_id": pdf["doc_id"].astype("int64"),
                         "content": [
-                            build(int(d), bytes(t), s)
+                            build(int(d), b"" if t is None else bytes(t), s)
                             for d, t, s in zip(pdf["doc_id"], pdf["tb"], pdf["source"])
                         ],
                         "source": pdf["source"],

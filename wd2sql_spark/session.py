@@ -17,6 +17,31 @@ because of the stack trace collection". One build of the staged ETL plan
 every query build and streaming micro-batch pays the same per-call cost.
 The only loss is the Python ``file:line`` fragment in error messages;
 nothing in this package reads it.
+
+Spark's generated-code class cache (``spark.sql.codegen.cache.maxEntries``,
+also static) holds 4096 classes instead of the default 100. The working set
+is far larger than 100: a first pass over the nine ``perfbench``
+query-battery queries compiles about 195 classes and one over the whole
+registry about 2,280 at sf0.001 (counted with Spark's ``CodegenMetrics``),
+so 4096 leaves about 1.8x headroom. At 100, every pass that interleaves
+queries (the bench's warm and TPC-H passes, the oracle sweeps) evicted
+almost every class and paid Janino compilation plus a fresh
+interpret-then-JIT of the new classes on each warm run. At 4096 a second
+pass over the registry compiles a few dozen classes instead of about
+2,700, and Metaspace holds about 17 MB more.
+
+Whole-stage-codegen classes are also named without their stage id
+(``spark.sql.codegen.useIdInClassName=false``). The cache is keyed on the
+generated source, and the id in the class name was the only part of it
+that changed from run to run: AQE numbers a query's stages in the order
+they are planned, which depends on which stage finishes first, so a warm
+run could get the same pipelines under new ids and compile them again
+(``semdedup_cluster_prune`` did, 2-4 classes on some warm passes). Without
+the id, identical pipelines share one class within and across queries: a
+first pass over the registry compiles about 2,000 classes instead of
+2,280, and later passes compile a handful at most. The only loss is the
+stage id in the class name that profilers and stack traces show. Plans
+and results do not change.
 """
 
 from __future__ import annotations
@@ -58,7 +83,9 @@ def get_spark(app_name: str = "wd2sql_spark", *, shuffle_partitions: int | None 
         # into a merged stdout+stderr capture corrupted round 3's bench.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # Static conf: see the module docstring.
+        # See the module docstring.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     return builder.getOrCreate()
