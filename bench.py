@@ -444,7 +444,11 @@ def main() -> None:
                         "scale); etl_cold_wall_time = first run including the "
                         "ramp. Catalog cache cleared first - the ETL is a "
                         "standalone job in the reference (one process per "
-                        "dump), not a tenant of a warm query session"
+                        "dump), not a tenant of a warm query session. "
+                        "etl_build_s = median of 5 warm builds of the staged "
+                        "plan (Python + parse + analysis, no job); "
+                        "etl_build_py4j_commands = Py4J commands of one build, "
+                        "memory releases excluded"
                     ),
                     "etl_layouts": (
                         "etl_wall_time times layout='store' (single write "
@@ -747,6 +751,42 @@ def _bench_streaming(spark, sf_dir: str) -> dict:
     return out
 
 
+def _etl_build_cost(spark, dump: str) -> tuple[float, int]:
+    """The staged ETL plan's build, a fixed cost of every pass: the median
+    seconds of 5 warm builds, and the Py4J commands one build sends
+    (memory releases, ``m``, left out: Python's garbage collector decides
+    when those go)."""
+    import statistics
+
+    from py4j.clientserver import ClientServerConnection
+
+    from wd2sql_spark.etl.pipeline import parse_entities, read_dump, unified_rows
+
+    def build():
+        return unified_rows(parse_entities(read_dump(spark, dump)))
+
+    build()
+    secs = []
+    for _ in range(5):
+        t0 = time.perf_counter()
+        build()
+        secs.append(time.perf_counter() - t0)
+    sent = 0
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        nonlocal sent
+        sent += not command.startswith("m\n")
+        return send(self, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        build()
+    finally:
+        ClientServerConnection.send_command = send
+    return statistics.median(secs), sent
+
+
 def _bench_etl(spark) -> dict:
     """End-to-end wd2spark on a generated 60k-entity dump (the reference's
     actual job, main.rs:95-255): full dump → 9 parquet tables via the
@@ -792,6 +832,7 @@ def _bench_etl(spark) -> dict:
         wdump = os.path.join(root, "warm-dump")
         _write_dump(wdump, n=N // 4, shards=8)
         wd2spark(spark, wdump, os.path.join(root, "warm-out"), staged=True)
+        build_s, build_py4j = _etl_build_cost(spark, dump)
 
         # Headline: layout="store" — every output row hits storage exactly
         # once, which is the reference's own write semantics (each row
@@ -857,6 +898,8 @@ def _bench_etl(spark) -> dict:
             "etl_tables_wall_time": round(elapsed_tables, 4),
             "etl_tables_mb_per_s": round(mb / elapsed_tables, 2),
             "etl_staged_plan_shuffles": rep.shuffles,
+            "etl_build_s": round(build_s, 4),
+            "etl_build_py4j_commands": build_py4j,
             "etl_1g_input_mb": round(mb_1g, 1),
             "etl_1g_wall_time": round(elapsed_1g, 4),
             "etl_1g_mb_per_s": round(mb_1g / elapsed_1g, 2),

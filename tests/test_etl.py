@@ -70,9 +70,46 @@ def test_presence_tables_and_deprecated_novalue(tables):
     assert rows(tables["unknown"]) == {(10, 1000000040)}
 
 
-def test_quarantine_never_aborts(tables):
+def test_quarantine_never_aborts(spark, tables):
     q = list(rows(tables["quarantine"]))
     assert len(q) == 1 and q[0][1] == "corrupt_json"
+
+    # Framing edge cases. A line is parsed as read, trailing comma and all;
+    # a quarantined line is reported with that comma stripped, and a line
+    # that is blank once stripped holds no entity, so it is a bad id.
+    from wd2sql_spark.etl.pipeline import meta_table, quarantine, unified_rows
+
+    lines = [
+        '{"id": "Q1"},',
+        '{"id": "Q2"} ,  ',
+        '{"id": "Q3"}, x',
+        ",",
+        " , ",
+        "\t,",
+        "\x0c,",
+        ",,",
+        "[,",
+        "not json,",
+        '{"id": "Q9", "labels":,',
+        '{"id": "X5"},',
+        "{}",
+    ]
+    want = {
+        ("", "bad_id"),
+        (" ", "bad_id"),
+        ("\t", "bad_id"),
+        ("\x0c", "corrupt_json"),
+        (",", "corrupt_json"),
+        ("[", "corrupt_json"),
+        ("not json", "corrupt_json"),
+        ('{"id": "Q9", "labels":', "corrupt_json"),
+        ('{"id": "X5"}', "bad_id"),
+        ("{}", "bad_id"),
+    }
+    ents = parse_entities(spark.createDataFrame([(line,) for line in lines], "value string"))
+    assert rows(quarantine(ents)) == want
+    assert rows(unified_rows(ents).filter("`table` = 'quarantine'").select("line", "reason")) == want
+    assert rows(meta_table(ents)) == {(1, None, None), (2, None, None), (3, None, None)}
 
 
 def test_wd2spark_end_to_end_and_guard(spark, tmp_path):

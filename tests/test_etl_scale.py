@@ -102,14 +102,17 @@ def test_etl_staged_plan_parses_each_payload_once(spark):
 
 # Py4J commands one build of the staged plan sends: 5,960 with PySpark's
 # per-call call-site capture on and claims routed after the explode, 1,489
-# with capture off and claims routed inside the explode.
-STAGED_BUILD_PY4J_BUDGET = 1_489
+# with capture off and claims routed inside the explode, 59 with the plan
+# built from SQL text (one call per projection, not per expression node).
+STAGED_BUILD_PY4J_BUDGET = 59
 
 
 def test_etl_staged_plan_build_py4j_budget(spark, monkeypatch):
     """Building the staged plan is a fixed cost of every ETL pass, paid in
     Py4J round trips. Memory-release commands (``m``) are left out: when
-    they are sent depends on Python's garbage collector."""
+    they are sent depends on Python's garbage collector. The build is
+    lazy: it launches no Spark job (the dump's schema is declared, never
+    inferred)."""
     from py4j.clientserver import ClientServerConnection
 
     from wd2sql_spark.etl.pipeline import parse_entities, read_dump, unified_rows
@@ -125,11 +128,18 @@ def test_etl_staged_plan_build_py4j_budget(spark, monkeypatch):
         sent[command[:2]] += 1
         return send(self, command)
 
-    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
-    build()
-    monkeypatch.undo()
+    sc = spark.sparkContext
+    group = "etl-staged-plan-build"
+    sc.setJobGroup(group, "building the staged ETL plan")
+    try:
+        monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+        build()
+        monkeypatch.undo()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     n = sum(k for cmd, k in sent.items() if cmd != "m\n")
     assert n <= STAGED_BUILD_PY4J_BUDGET, dict(sent)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_etl_claims_heavy_fanout(spark, tmp_path):

@@ -1,7 +1,9 @@
 """Property-based cross-engine check of the ID codec: arbitrary id-like
 strings must encode IDENTICALLY through the Spark column expression
-(functions/ids.encode_wid) and the SQL CASE twin (ENCODE_WID_SQL_CASE,
-which is both the DuckDB oracle and the registered Spark SQL function).
+(functions/ids.encode_wid) and the SQL CASE twin (``encode_wid_sql``, the
+template rendered as the DuckDB oracle ``ENCODE_WID_SQL_CASE``, the
+registered Spark SQL function and the ETL's SQL plan), evaluated in both
+DuckDB and Spark.
 The reference parses the digit run with a full-string integer parse
 (id.rs:6-24), so trailing garbage, suffixes on non-lexeme kinds, and
 overflow must all yield NULL in BOTH engines — the class of disagreement
@@ -17,7 +19,7 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
-from wd2sql_spark.functions.ids import ENCODE_WID_SQL_CASE, encode_wid
+from wd2sql_spark.functions.ids import ENCODE_WID_SQL_CASE, encode_wid, encode_wid_sql
 
 # Mix of well-formed ids, near-misses (trailing garbage, wrong-kind
 # suffixes, doubled suffixes), and adversarial soup over the id alphabet.
@@ -40,6 +42,10 @@ def test_codec_matches_sql_twin(spark, ids):
         (r["id"], r["encoded"])
         for r in sdf.select("id", encode_wid(F.col("id")).alias("encoded")).collect()
     ]
+    # The template over an input expression, as the ETL renders it over
+    # struct fields and lambda variables.
+    encoded = encode_wid_sql("named_struct('v', id).v")
+    spark_sql_out = [(r["id"], r["encoded"]) for r in sdf.selectExpr("id", f"{encoded} AS encoded").collect()]
 
     con = duckdb.connect()
     con.register("t", pd.DataFrame({"id": ids}))
@@ -49,4 +55,4 @@ def test_codec_matches_sql_twin(spark, ids):
     ]
     con.close()
 
-    assert sorted(spark_out, key=str) == sorted(duck_out, key=str)
+    assert sorted(spark_out, key=str) == sorted(duck_out, key=str) == sorted(spark_sql_out, key=str)

@@ -5,16 +5,25 @@ Reference pipeline (/root/reference/src/main.rs:174-238): stream dump lines
 ``Entity`` → meta row + per-claim type dispatch into 7 typed tables, with
 per-record error tolerance. Single thread, constant memory.
 
-Here the same dataflow is a lazy DataFrame DAG: ``read.text`` →
-``filter``/``regexp_replace`` → ``from_json`` (declared schema, PERMISSIVE,
-corrupt-record quarantine) → id-encode + meta projection → per-entity
-claim routing (rank filter, one payload parse, 20→7 type dispatch) →
+Here the same dataflow is a lazy DataFrame DAG: ``read.text`` → framing
+``filter`` → ``from_json`` of the raw line (declared schema, PERMISSIVE,
+corrupt-record quarantine; the trailing comma is stripped only from
+quarantined lines) → id-encode + meta projection → per-entity claim
+routing (rank filter, one payload parse, 20→7 type dispatch) →
 ``explode`` → payload projection — a pure narrow pipeline with ZERO
 shuffles, embarrassingly parallel over input splits. Where the reference
 saturates one core at bzip2 speed (README.md:13-19), this plan scales
 linearly with executors. The collection lambdas that build each entity's
 rows run interpreted; the projections on either side of them run under
 whole-stage codegen.
+
+Every expression is SQL text composed in Python (the builders below
+return strings; the id codec is rendered from its SQL twin,
+``functions.ids.encode_wid_sql``) and handed to Spark in a few
+``selectExpr``/``filter`` calls. Spark's parser then builds each
+projection's Catalyst tree in one Py4J call; ``Column`` objects would
+cost one call per expression node. A build of the staged plan sends 59
+Py4J commands.
 
 Write strategies (``wd2spark``):
 
@@ -47,15 +56,26 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, LongType, MapType, StringType, StructField, StructType
 
 from wd2sql_spark.etl import schema as S
-from wd2sql_spark.functions.ids import encode_entity_url, encode_wid
+from wd2sql_spark.functions.ids import encode_entity_url_sql, encode_wid_sql
 
 DEPRECATED = "deprecated"
 VALUE_TABLES = ("string", "entity", "coordinates", "quantity", "time", "none", "unknown")
+
+
+def _ddl(t: DataType) -> str:
+    """Spark SQL type text of ``t``, field names back-quoted (the payload
+    schema has names like ``entity-type``)."""
+    if isinstance(t, StructType):
+        return "struct<" + ",".join(f"`{f.name}`:{_ddl(f.dataType)}" for f in t.fields) + ">"
+    if isinstance(t, ArrayType):
+        return f"array<{_ddl(t.elementType)}>"
+    if isinstance(t, MapType):
+        return f"map<{_ddl(t.keyType)},{_ddl(t.valueType)}>"
+    return t.simpleString()
 
 
 def read_dump(spark: SparkSession, dump_path: str) -> DataFrame:
@@ -75,73 +95,72 @@ def read_dump(spark: SparkSession, dump_path: str) -> DataFrame:
 
 
 def parse_entities(lines: DataFrame) -> DataFrame:
-    """Framing filters + trailing-comma strip + declared-schema JSON parse
-    (2-A#2,3,4,5,14). Malformed lines survive as rows with only
-    ``_corrupt_record`` set — the job never aborts on bad input, matching
-    main.rs:177-204."""
-    v = F.col("value")
-    framed = lines.filter(
-        (F.trim(v) != "") & (F.trim(v) != "[") & (F.trim(v) != "]")
-    ).select(F.regexp_replace(v, r",\s*$", "").alias("line"))
-    parsed = framed.select(
-        F.col("line"),
-        F.from_json(
-            "line",
-            S.ENTITY_SCHEMA,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": S.CORRUPT_COL},
-        ).alias("e"),
-    )
-    return parsed.select(
+    """Framing filters + declared-schema JSON parse (2-A#2,3,4,5,14) of
+    the raw ``line``. The trailing comma needs no strip: ``from_json``
+    stops after the first JSON value, so ``{...},`` parses like
+    ``{...}``. Malformed lines survive as rows with ``_corrupt_record``
+    set — the job never aborts on bad input, matching main.rs:177-204."""
+    return lines.filter("trim(value) NOT IN ('', '[', ']')").selectExpr(
+        "value AS line",
+        f"from_json(value, '{_ddl(S.ENTITY_SCHEMA)}', "
+        f"map('mode', 'PERMISSIVE', 'columnNameOfCorruptRecord', '{S.CORRUPT_COL}')) AS e",
+    ).selectExpr(
         "line",
-        F.col("e.id").alias("raw_id"),
-        encode_wid(F.col("e.id")).alias("id"),
-        F.col("e.labels").alias("labels"),
-        F.col("e.descriptions").alias("descriptions"),
-        F.col("e.claims").alias("claims"),
-        F.col(f"e.{S.CORRUPT_COL}").alias(S.CORRUPT_COL),
+        f"{encode_wid_sql('e.id')} AS id",
+        "e.labels AS labels",
+        "e.descriptions AS descriptions",
+        "e.claims AS claims",
+        f"e.{S.CORRUPT_COL} AS {S.CORRUPT_COL}",
     )
+
+
+_BAD = f"{S.CORRUPT_COL} IS NOT NULL OR id IS NULL"
+# A quarantined line as the reference prints it: its framing comma
+# stripped. Only quarantine rows evaluate these.
+_QUARANTINE_LINE = r"regexp_replace(line, ',\\s*$', '')"
+# A line that is only blanks and a comma parses as corrupt, but it is
+# blank once stripped, which ``from_json`` reads as a NULL entity: no
+# corrupt record, no id, so ``bad_id``.
+_QUARANTINE_REASON = (
+    f"CASE WHEN {S.CORRUPT_COL} IS NULL OR {_QUARANTINE_LINE} RLIKE '^[ \\t]*$' "
+    "THEN 'bad_id' ELSE 'corrupt_json' END"
+)
 
 
 def quarantine(entities: DataFrame) -> DataFrame:
     """Rows the reference would print to stderr and skip (main.rs:177-219):
     JSON-corrupt lines and entities whose id doesn't encode."""
-    return entities.filter(
-        F.col(S.CORRUPT_COL).isNotNull() | F.col("id").isNull()
-    ).select(
-        F.col("line"),
-        F.when(F.col(S.CORRUPT_COL).isNotNull(), "corrupt_json")
-        .otherwise("bad_id")
-        .alias("reason"),
-    )
+    return entities.filter(_BAD).selectExpr(f"{_QUARANTINE_LINE} AS line", f"{_QUARANTINE_REASON} AS reason")
 
 
 def good_entities(entities: DataFrame) -> DataFrame:
-    return entities.filter(F.col(S.CORRUPT_COL).isNull() & F.col("id").isNotNull())
+    return entities.filter(f"NOT ({_BAD})")
+
+
+_LABEL = "element_at(labels, 'en').value"
+_DESCRIPTION = "element_at(descriptions, 'en').value"
 
 
 def meta_table(entities: DataFrame) -> DataFrame:
     """meta(id, label, description): English-only projection with NULL on
     miss (main.rs:82-83; element_at on MapType is null-safe)."""
-    return good_entities(entities).select(
-        F.col("id"),
-        F.element_at(F.col("labels"), "en").getField("value").alias("label"),
-        F.element_at(F.col("descriptions"), "en").getField("value").alias("description"),
-    )
+    return good_entities(entities).selectExpr("id", f"{_LABEL} AS label", f"{_DESCRIPTION} AS description")
 
 
-def _parse_payload(c: Column) -> Column:
-    """ONE parse of a claim's ``datavalue.value`` with the union schema
-    (``S.MERGED_VALUE``); every per-type expression of the dispatch reads
-    its own fields and ignores the rest (null for other types). For
-    plain-string payloads ``from_json`` yields a null struct, which every
-    consumer guards with the datavalue type."""
-    return F.from_json(c.getField("mainsnak").getField("datavalue").getField("value"), S.MERGED_VALUE)
+def _parse_payload(c: str) -> str:
+    """ONE parse of the ``datavalue.value`` of claim ``c`` with the union
+    schema (``S.MERGED_VALUE``); every per-type expression of the
+    dispatch reads its own fields and ignores the rest (null for other
+    types). For plain-string payloads ``from_json`` yields a null struct,
+    which every consumer guards with the datavalue type."""
+    return f"from_json({c}.mainsnak.datavalue.value, '{_ddl(S.MERGED_VALUE)}')"
 
 
-def _route(c: Column, v: Column) -> Column:
+def _route(c: str, v: str) -> str:
     """The 20→7 type dispatch (value.rs:201-261): the target table of one
     claim struct ``c`` (shape ``S.CLAIM``) whose payload parsed to ``v``
-    (:func:`_parse_payload`), or NULL when the claim is skipped.
+    (:func:`_parse_payload`), or NULL when the claim is skipped. ``c``
+    and ``v`` are SQL expressions; so is the result.
 
     Per-type payload validity: the reference's value! field extraction
     (value.rs:201-261) errors on a missing/undecodable required field and
@@ -151,116 +170,86 @@ def _route(c: Column, v: Column) -> Column:
     NOT NULL DDL). Divergence, documented: the reference skips the WHOLE
     entity on a bad claim; we drop only the bad claim and keep the
     entity's remaining data — strictly more tolerant, same guarantee
-    that no malformed value reaches an output table."""
-    snaktype = c.getField("mainsnak").getField("snaktype")
-    dv_type = c.getField("mainsnak").getField("datavalue").getField("type")
-    dv_raw = c.getField("mainsnak").getField("datavalue").getField("value")
-    null_t = F.lit(None).cast("string")
-    coord_ok = (
-        v.getField("latitude").isNotNull()
-        & v.getField("longitude").isNotNull()
-        & v.getField("precision").isNotNull()
-        & encode_entity_url(v.getField("globe")).isNotNull()
-    )
-    entity_ok = encode_wid(v.getField("id")).isNotNull()
-    qty_ok = v.getField("amount").try_cast("double").isNotNull()
-    time_ok = v.getField("time").isNotNull() & v.getField("precision").isNotNull()
-    return (
-        F.when(snaktype == "novalue", "none")
-        .when(snaktype == "somevalue", "unknown")
-        # A string datavalue with NO value is a failed extraction → the
-        # claim is skipped (value.rs's value! arm), NOT a NULL string row
-        # (which would violate the string table's NOT NULL DDL in the
-        # SQLite sink). Found by the differential fuzz
-        # (tests/test_property_etl.py); the other arms were already
-        # guarded by their *_ok predicates.
-        .when((dv_type == "string") & dv_raw.isNotNull(), "string")
-        .when((dv_type == "monolingualtext") & v.getField("text").isNotNull(), "string")
-        # MultilingualText: English → string, no English → none
-        # (value.rs:222-229 — a presence row, NOT a null string)
-        .when((dv_type == "multilingualtext") & v.getField("texts").getItem("en").isNotNull(), "string")
-        .when(dv_type == "multilingualtext", "none")
-        .when(dv_type == "wikibase-entityid", F.when(entity_ok, "entity").otherwise(null_t))
-        .when(dv_type == "globecoordinate", F.when(coord_ok, "coordinates").otherwise(null_t))
-        .when(dv_type == "quantity", F.when(qty_ok, "quantity").otherwise(null_t))
-        .when(dv_type == "time", F.when(time_ok, "time").otherwise(null_t))
-        # Unrecognized datavalue types error-skip in the reference too.
-        .otherwise(null_t)
-    )
+    that no malformed value reaches an output table.
+
+    A string datavalue with NO value is a failed extraction → the claim
+    is skipped (value.rs's value! arm), NOT a NULL string row (which
+    would violate the string table's NOT NULL DDL in the SQLite sink);
+    found by the differential fuzz (tests/test_property_etl.py). A
+    multilingualtext without English is a presence row in ``none``
+    (value.rs:222-229), NOT a null string. Unrecognized datavalue types
+    error-skip in the reference too."""
+    t = f"{c}.mainsnak.datavalue.type"
+    return f"""CASE
+  WHEN {c}.mainsnak.snaktype = 'novalue' THEN 'none'
+  WHEN {c}.mainsnak.snaktype = 'somevalue' THEN 'unknown'
+  WHEN {t} = 'string' AND {c}.mainsnak.datavalue.value IS NOT NULL THEN 'string'
+  WHEN {t} = 'monolingualtext' AND {v}.text IS NOT NULL THEN 'string'
+  WHEN {t} = 'multilingualtext' AND {v}.texts['en'] IS NOT NULL THEN 'string'
+  WHEN {t} = 'multilingualtext' THEN 'none'
+  WHEN {t} = 'wikibase-entityid' AND {encode_wid_sql(f'{v}.id')} IS NOT NULL THEN 'entity'
+  WHEN {t} = 'globecoordinate' AND {v}.latitude IS NOT NULL AND {v}.longitude IS NOT NULL
+       AND {v}.precision IS NOT NULL AND {encode_entity_url_sql(f'{v}.globe')} IS NOT NULL THEN 'coordinates'
+  WHEN {t} = 'quantity' AND try_cast({v}.amount AS DOUBLE) IS NOT NULL THEN 'quantity'
+  WHEN {t} = 'time' AND {v}.time IS NOT NULL AND {v}.precision IS NOT NULL THEN 'time'
+END"""
 
 
-def _claim_value_cols(c: Column, v: Column) -> dict:
+def _claim_value_cols(c: str, v: str) -> dict[str, str]:
     """The per-type payload columns of one claim struct ``c`` whose payload
-    parsed to ``v`` (:func:`_parse_payload`), as a dict of named column
+    parsed to ``v`` (:func:`_parse_payload`), as a dict of named SQL
     expressions (unused ones NULL). With :func:`_route` this is the one
     dispatch definition, shared by the per-claim path (``claims_flat``)
     and the single-pass unified path (``unified_rows``). All expressions
     are Catalyst built-ins; where ``v`` is a field of an already-parsed
     struct (``unified_rows``), the projection that evaluates them runs
     under whole-stage codegen."""
-    dv_type = c.getField("mainsnak").getField("datavalue").getField("type")
-    dv_raw = c.getField("mainsnak").getField("datavalue").getField("value")
-    multi_en = v.getField("texts").getItem("en")
-
+    t = f"{c}.mainsnak.datavalue.type"
     # time: normalize Wikidata's unknown month/day "00" to "01", drop the
     # leading '+', then try_to_timestamp — out-of-range historical years
     # yield NULL while time_raw preserves the value losslessly (SURVEY §7a).
-    t_raw = v.getField("time")
-    t_norm = F.regexp_replace(
-        F.regexp_replace(t_raw, r"-00-", "-01-"),
-        r"-00T",
-        "-01T",
-    )
-    t_norm = F.regexp_replace(t_norm, r"^\+", "")
-    parsed_ts = F.try_to_timestamp(t_norm, F.lit("yyyy-MM-dd'T'HH:mm:ssX"))
-
+    t_norm = f"regexp_replace(regexp_replace(regexp_replace({v}.time, '-00-', '-01-'), '-00T', '-01T'), '^[+]', '')"
     return {
-        "string": F.when(dv_type == "string", dv_raw)
-        .when(dv_type == "monolingualtext", v.getField("text"))
-        .when(dv_type == "multilingualtext", multi_en),
-        "entity_id": F.when(dv_type == "wikibase-entityid", encode_wid(v.getField("id"))),
-        "latitude": v.getField("latitude"),
-        "longitude": v.getField("longitude"),
-        "precision": v.getField("precision"),
-        "globe_id": F.when(dv_type == "globecoordinate", encode_entity_url(v.getField("globe"))),
+        "string": f"CASE {t} WHEN 'string' THEN {c}.mainsnak.datavalue.value "
+        f"WHEN 'monolingualtext' THEN {v}.text WHEN 'multilingualtext' THEN {v}.texts['en'] END",
+        "entity_id": f"CASE WHEN {t} = 'wikibase-entityid' THEN {encode_wid_sql(f'{v}.id')} END",
+        "latitude": f"{v}.latitude",
+        "longitude": f"{v}.longitude",
+        "precision": f"{v}.precision",
+        "globe_id": f"CASE WHEN {t} = 'globecoordinate' THEN {encode_entity_url_sql(f'{v}.globe')} END",
         # try_cast: malformed amounts must quarantine-to-NULL, not abort
         # (ANSI mode would throw on CAST) — per-record tolerance, 2-A#14.
-        "amount": v.getField("amount").try_cast("double"),
-        "lower_bound": v.getField("lowerBound").try_cast("double"),
-        "upper_bound": v.getField("upperBound").try_cast("double"),
-        "unit_id": F.when(dv_type == "quantity", encode_entity_url(v.getField("unit"))),
-        "time": F.when(dv_type == "time", parsed_ts),
+        "amount": f"try_cast({v}.amount AS DOUBLE)",
+        "lower_bound": f"try_cast({v}.lowerBound AS DOUBLE)",
+        "upper_bound": f"try_cast({v}.upperBound AS DOUBLE)",
+        "unit_id": f"CASE WHEN {t} = 'quantity' THEN {encode_entity_url_sql(f'{v}.unit')} END",
+        "time": f"CASE WHEN {t} = 'time' THEN try_to_timestamp({t_norm}, 'yyyy-MM-dd\\'T\\'HH:mm:ssX') END",
         # precision parses as DOUBLE in the union schema (shared with
         # globecoordinate); time's integer precision round-trips exactly.
-        "time_precision": F.when(dv_type == "time", v.getField("precision").cast("int")),
-        "time_raw": F.when(dv_type == "time", t_raw),
+        "time_precision": f"CASE WHEN {t} = 'time' THEN CAST({v}.precision AS INT) END",
+        "time_raw": f"CASE WHEN {t} = 'time' THEN {v}.time END",
     }
+
+
+def _value_exprs(c: str, v: str) -> list[str]:
+    return [f"{e} AS `{k}`" for k, e in _claim_value_cols(c, v).items()]
 
 
 def claims_flat(entities: DataFrame) -> DataFrame:
     """Two-level explode of the claims map (2-A#9) + deprecated-rank drop
     (2-A#8, main.rs:87 — BEFORE dispatch, so deprecated novalue claims
-    never reach the none table) + 20→7 type dispatch (value.rs:201-261) in
-    one wide projection. That projection repeats the payload ``from_json``
-    subtree in many of its columns; Spark's subexpression elimination
-    evaluates the common subtree once per row.
+    never reach the none table) + one payload parse + 20→7 type dispatch
+    (value.rs:201-261) in one wide projection.
 
     Output: one row per kept claim with ``value_type`` ∈ 7 tables plus the
     per-type payload columns (unused ones NULL)."""
-    e = good_entities(entities)
-    per_prop = e.select(
-        "id", F.explode("claims").alias("pid_str", "statements")
-    ).select(
-        "id", encode_wid(F.col("pid_str")).alias("property_id"), F.explode("statements").alias("c")
-    )
-    kept = per_prop.filter(
-        F.col("property_id").isNotNull() & (F.coalesce(F.col("c.rank"), F.lit("normal")) != DEPRECATED)
-    )
-    c = F.col("c")
-    v = _parse_payload(c)
-    cols = _claim_value_cols(c, v)
-    return kept.select(
-        "id", "property_id", _route(c, v).alias("value_type"), *[col.alias(k) for k, col in cols.items()]
+    return (
+        good_entities(entities)
+        .selectExpr("id", "explode(claims) AS (pid_str, statements)")
+        .selectExpr("id", f"{encode_wid_sql('pid_str')} AS property_id", "explode(statements) AS c")
+        .filter(f"property_id IS NOT NULL AND coalesce(c.rank, 'normal') != '{DEPRECATED}'")
+        .selectExpr("id", "property_id", "c", f"{_parse_payload('c')} AS v")
+        .selectExpr("id", "property_id", f"{_route('c', 'v')} AS value_type", *_value_exprs("c", "v"))
     )
 
 
@@ -278,7 +267,7 @@ _TABLE_COLS = {
 
 def value_table(claims: DataFrame, name: str) -> DataFrame:
     cols = _TABLE_COLS[name]
-    df = claims.filter(F.col("value_type") == name).select(*cols)
+    df = claims.filter(f"value_type = '{name}'").select(*cols)
     if name == "time":
         df = df.withColumnRenamed("time_precision", "precision")
     return df
@@ -317,13 +306,12 @@ _FINAL_COLS = {
 }
 
 
-def _item(table: Column, **fields: Column) -> Column:
-    """One ``_ITEM`` struct: ``table`` plus the given fields, every other
-    field NULL."""
-    return F.struct(
-        table.alias("table"),
-        *[fields.get(f.name, F.lit(None).cast(f.dataType)).alias(f.name) for f in _ITEM.fields[1:]],
-    )
+def _item(**fields: str) -> str:
+    """SQL text of one ``_ITEM`` struct: the given fields, every other
+    field a typed NULL."""
+    return "named_struct(" + ", ".join(
+        f"'{f.name}', {fields.get(f.name, f'CAST(NULL AS {_ddl(f.dataType)})')}" for f in _ITEM.fields
+    ) + ")"
 
 
 def unified_rows(entities: DataFrame) -> DataFrame:
@@ -342,74 +330,51 @@ def unified_rows(entities: DataFrame) -> DataFrame:
     encode are dropped (matching ``claims_flat`` and the reference's
     per-record tolerance); the deprecated-rank drop happens before type
     dispatch, exactly like main.rs:87; each kept claim's payload is
-    parsed once into its item; a second ``transform`` computes the target
-    table from the parsed struct; and an array ``filter`` drops claims
-    whose payload failed validation. The projection after the explode
-    then only reads struct fields, so it carries no ``from_json`` and no
-    Filter sits above the Generate for Catalyst to copy the parse into.
-    """
-    bad = F.col(S.CORRUPT_COL).isNotNull() | F.col("id").isNull()
+    parsed once; a second ``transform`` builds each claim's item with its
+    target table routed from the parsed struct; and an array ``filter``
+    drops claims whose payload failed validation. The projection after
+    the explode then only reads struct fields, so it carries no
+    ``from_json`` and no Filter sits above the Generate for Catalyst to
+    copy the parse into.
 
+    The plan is built from SQL text: the whole item array is one
+    expression of one ``selectExpr``, and the projection after the
+    explode is a second, so Spark's parser builds the Catalyst tree in
+    one Py4J call per projection instead of one per expression node.
+    """
     # Payload columns live INSIDE the item struct that needs them, built
     # once per entity BEFORE the explode: the meta item carries the
-    # English label/description, the quarantine item carries the raw line
-    # and reason, and claim items carry neither. Hoisting them out of the
-    # exploded relation matters at scale — an entity with n claims would
-    # otherwise replicate its full JSON line and label/description maps
-    # across all n+1 output rows of the explode.
-    meta_item = _item(
-        F.lit("meta"),
-        label=F.element_at(F.col("labels"), "en").getField("value"),
-        description=F.element_at(F.col("descriptions"), "en").getField("value"),
+    # English label/description, the quarantine item carries the
+    # stripped line and reason, and claim items carry neither. Hoisting
+    # them out of the exploded relation matters at scale — an entity with
+    # n claims would otherwise replicate its full JSON line and
+    # label/description maps across all n+1 output rows of the explode.
+    meta_item = _item(table="'meta'", label=_LABEL, description=_DESCRIPTION)
+    quar_item = _item(table="'quarantine'", line=_QUARANTINE_LINE, reason=_QUARANTINE_REASON)
+    claim_item = _item(table=_route("x.c", "x.v"), property_id="x.pid", c="x.c", v="x.v")
+    props = (
+        f"filter(transform(map_entries(claims), kv -> named_struct('pid', {encode_wid_sql('kv.key')}, "
+        "'cs', coalesce(kv.value, array()))), p -> p.pid IS NOT NULL)"
     )
-    quar_item = _item(
-        F.lit("quarantine"),
-        line=F.col("line"),
-        reason=F.when(F.col(S.CORRUPT_COL).isNotNull(), "corrupt_json").otherwise("bad_id"),
+    parsed = (
+        f"flatten(transform({props}, p -> transform("
+        f"filter(p.cs, cl -> coalesce(cl.rank, 'normal') != '{DEPRECATED}'), "
+        f"cl -> named_struct('pid', p.pid, 'c', cl, 'v', {_parse_payload('cl')}))))"
     )
-    props = F.filter(
-        F.transform(
-            F.map_entries(F.col("claims")),
-            lambda kv: F.struct(
-                encode_wid(kv.getField("key")).alias("pid"),
-                F.coalesce(kv.getField("value"), F.array().cast(ArrayType(S.CLAIM))).alias("cs"),
-            ),
-        ),
-        lambda p: p.getField("pid").isNotNull(),
+    routed = f"filter(transform({parsed}, x -> {claim_item}), it -> it.`table` IS NOT NULL)"
+    items = (
+        f"CASE WHEN {_BAD} THEN array({quar_item}) "
+        f"ELSE concat(array({meta_item}), coalesce({routed}, array())) END"
     )
-    parsed = F.flatten(
-        F.transform(
-            props,
-            lambda p: F.transform(
-                F.filter(
-                    p.getField("cs"),
-                    lambda cl: F.coalesce(cl.getField("rank"), F.lit("normal")) != DEPRECATED,
-                ),
-                lambda cl: _item(
-                    F.lit(None).cast("string"), property_id=p.getField("pid"), c=cl, v=_parse_payload(cl)
-                ),
-            ),
-        )
-    )
-    routed = F.filter(
-        F.transform(parsed, lambda it: it.withField("table", _route(it.getField("c"), it.getField("v")))),
-        lambda it: it.getField("table").isNotNull(),
-    )
-    items = F.when(bad, F.array(quar_item)).otherwise(
-        F.concat(F.array(meta_item), F.coalesce(routed, F.array().cast(ArrayType(_ITEM))))
-    )
-
-    it = F.col("it")
-    d = _claim_value_cols(it.getField("c"), it.getField("v"))
-    return entities.select("id", F.explode(items).alias("it")).select(
-        F.col("id"),
-        it.getField("property_id").alias("property_id"),
-        it.getField("label").alias("label"),
-        it.getField("description").alias("description"),
-        *[v.alias(key) for key, v in d.items()],
-        it.getField("line").alias("line"),
-        it.getField("reason").alias("reason"),
-        it.getField("table").alias("table"),
+    return entities.selectExpr("id", f"explode({items}) AS it").selectExpr(
+        "id",
+        "it.property_id AS property_id",
+        "it.label AS label",
+        "it.description AS description",
+        *_value_exprs("it.c", "it.v"),
+        "it.line AS line",
+        "it.reason AS reason",
+        "it.`table` AS `table`",
     )
 
 
@@ -489,7 +454,7 @@ def wd2spark(
         def _rewrite(item: tuple[str, tuple[str, ...]]) -> tuple[str, str]:
             name, cols = item
             p = os.path.join(out_path, name)
-            df = store.filter(F.col("table") == name).select(*cols)
+            df = store.filter(f"`table` = '{name}'").select(*cols)
             if name == "time":
                 df = df.withColumnRenamed("time_precision", "precision")
             df.write.mode(mode).parquet(p)

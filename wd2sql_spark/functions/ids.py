@@ -1,9 +1,10 @@
 """Wikidata ID codec: typed ID strings → one signed-64 key space.
 
 Re-expresses the reference's encoding (/root/reference/src/id.rs:6-24,
-documented README.md:68-86) as pure Catalyst column expressions — no UDF,
-so encoding stays inside whole-stage codegen and is usable in join keys
-without breaking pushdown:
+documented README.md:68-86) as pure Catalyst expressions, built from
+``Column`` objects (:func:`encode_wid`) or from SQL text
+(:func:`encode_wid_sql`) — no UDF, so encoding stays inside whole-stage
+codegen and is usable in join keys without breaking pushdown:
 
     Q<n>       → n
     P<n>       → n + 1_000_000_000
@@ -68,36 +69,43 @@ def encode_wid(id_col: Column | str) -> Column:
     )
 
 
-def encode_entity_url(url_col: Column | str) -> Column:
-    """Encode an entity URL (e.g. globe/unit fields:
-    ``http://www.wikidata.org/entity/Q2``) to its key; the literal ``"1"``
-    (Wikidata's "no unit") and empty values yield NULL, matching the
-    reference's nullable unit_id (value.rs:231-241)."""
-    c = F.col(url_col) if isinstance(url_col, str) else url_col
-    tail = F.regexp_extract(c, r"([QPL]\d+(-[FS]\d+)?)$", 1)
-    return F.when((c.isNull()) | (c == "1") | (tail == ""), F.lit(None).cast("long")).otherwise(
-        encode_wid(tail)
-    )
-
-
-# SQL text of the same codec — usable both to register a Spark SQL function
-# and as the DuckDB oracle twin. [0-9] instead of \d because Spark SQL
-# string literals treat backslash as an escape. Digit-count bounds match
+# SQL text of the same codec, as a template over its input expression: the
+# DuckDB oracle twin, the registered Spark SQL function and the ETL's SQL
+# plan all render it. [0-9] instead of \d because Spark SQL string
+# literals treat backslash as an escape. Digit-count bounds match
 # encode_wid (12/7): they keep the arithmetic inside int64 — an unbounded
 # parse would make the engine THROW on overflow for adversarial ids
 # instead of yielding NULL.
-ENCODE_WID_SQL_CASE = """
+_ENCODE_WID_SQL = """
 CASE
-  WHEN id LIKE 'Q%' THEN TRY_CAST(regexp_extract(id, '^Q([0-9]{1,12})$', 1) AS BIGINT)
-  WHEN id LIKE 'P%' THEN TRY_CAST(regexp_extract(id, '^P([0-9]{1,12})$', 1) AS BIGINT) + 1000000000
-  WHEN id LIKE 'L%-F%' THEN TRY_CAST(regexp_extract(id, '^L([0-9]{1,12})-F[0-9]{1,7}$', 1) AS BIGINT) + 2000000000
-       + TRY_CAST(regexp_extract(id, '^L[0-9]{1,12}-F([0-9]{1,7})$', 1) AS BIGINT) * 100000000000
-  WHEN id LIKE 'L%-S%' THEN TRY_CAST(regexp_extract(id, '^L([0-9]{1,12})-S[0-9]{1,7}$', 1) AS BIGINT) + 2000000000
-       + TRY_CAST(regexp_extract(id, '^L[0-9]{1,12}-S([0-9]{1,7})$', 1) AS BIGINT) * 100000000000 + 10000000000
-  WHEN id LIKE 'L%' THEN TRY_CAST(regexp_extract(id, '^L([0-9]{1,12})$', 1) AS BIGINT) + 2000000000
+  WHEN {id} LIKE 'Q%' THEN TRY_CAST(regexp_extract({id}, '^Q([0-9]{1,12})$', 1) AS BIGINT)
+  WHEN {id} LIKE 'P%' THEN TRY_CAST(regexp_extract({id}, '^P([0-9]{1,12})$', 1) AS BIGINT) + 1000000000
+  WHEN {id} LIKE 'L%-F%' THEN TRY_CAST(regexp_extract({id}, '^L([0-9]{1,12})-F[0-9]{1,7}$', 1) AS BIGINT) + 2000000000
+       + TRY_CAST(regexp_extract({id}, '^L[0-9]{1,12}-F([0-9]{1,7})$', 1) AS BIGINT) * 100000000000
+  WHEN {id} LIKE 'L%-S%' THEN TRY_CAST(regexp_extract({id}, '^L([0-9]{1,12})-S[0-9]{1,7}$', 1) AS BIGINT) + 2000000000
+       + TRY_CAST(regexp_extract({id}, '^L[0-9]{1,12}-S([0-9]{1,7})$', 1) AS BIGINT) * 100000000000 + 10000000000
+  WHEN {id} LIKE 'L%' THEN TRY_CAST(regexp_extract({id}, '^L([0-9]{1,12})$', 1) AS BIGINT) + 2000000000
   ELSE NULL
 END
 """
+
+
+def encode_wid_sql(id_sql: str) -> str:
+    """SQL text encoding the string expression ``id_sql`` (a column name or
+    function call; it is pasted unparenthesized) like :func:`encode_wid`."""
+    return _ENCODE_WID_SQL.replace("{id}", id_sql)
+
+
+def encode_entity_url_sql(url_sql: str) -> str:
+    """SQL text encoding an entity URL (e.g. globe/unit fields:
+    ``http://www.wikidata.org/entity/Q2``) to its key by the id at its
+    end. The literal ``"1"`` (Wikidata's "no unit"), empty values and
+    NULL have no such id and yield NULL, matching the reference's
+    nullable unit_id (value.rs:231-241)."""
+    return encode_wid_sql(f"regexp_extract({url_sql}, '([QPL][0-9]+(-[FS][0-9]+)?)$', 1)")
+
+
+ENCODE_WID_SQL_CASE = encode_wid_sql("id")
 
 
 def register_sql_function(spark: SparkSession) -> None:

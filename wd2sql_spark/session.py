@@ -11,10 +11,12 @@ is off. With it on, every ``functions.*`` and ``Column`` call is wrapped to
 capture its Python call site: each call reads a conf over Py4J, sets and
 clears a JVM thread-local and walks the Python stack. Spark's own
 description of the conf warns of "a non-trivial performance overhead
-because of the stack trace collection". One build of the staged ETL plan
-(``etl.pipeline.unified_rows``) sends 6,499 Py4J commands with it on and
-1,489 with it off, and takes 0.18 s instead of 0.33 s on a 4-core host;
-every query build and streaming micro-batch pays the same per-call cost.
+because of the stack trace collection". Building the nine ``perfbench``
+query-battery queries at sf0.001 sends 3,332 Py4J commands with it on and
+1,362 with it off, and takes 1.16 s instead of 1.83 s on a 4-core host
+(median of 5 warm builds); every streaming micro-batch pays the same
+per-call cost. The staged ETL plan is built from SQL text
+(``etl.pipeline``), so its 59 commands per build are the same either way.
 The only loss is the Python ``file:line`` fragment in error messages;
 nothing in this package reads it.
 
