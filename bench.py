@@ -831,7 +831,7 @@ def _bench_etl(spark) -> dict:
         # is cached by plan shape, so the big run reuses it).
         wdump = os.path.join(root, "warm-dump")
         _write_dump(wdump, n=N // 4, shards=8)
-        wd2spark(spark, wdump, os.path.join(root, "warm-out"), staged=True)
+        wd2spark(spark, wdump, os.path.join(root, "warm-out"))
         build_s, build_py4j = _etl_build_cost(spark, dump)
 
         # Headline: layout="store" — every output row hits storage exactly
@@ -847,7 +847,7 @@ def _bench_etl(spark) -> dict:
         # anchor that ramp is 0.03% of the job, so the WARM rate is the
         # number comparable to the reference's steady-state ~35 MB/s.
         t0 = time.perf_counter()
-        wd2spark(spark, dump, out, staged=True, layout="store")
+        wd2spark(spark, dump, out, layout="store")
         elapsed_cold = time.perf_counter() - t0
 
         # Warm = MIN OF TWO full runs (r7): a single warm sample ranged
@@ -857,7 +857,7 @@ def _bench_etl(spark) -> dict:
         elapsed = float("inf")
         for i in range(2):
             t0 = time.perf_counter()
-            wd2spark(spark, dump, f"{out}-warm{i}", staged=True, layout="store")
+            wd2spark(spark, dump, f"{out}-warm{i}", layout="store")
             elapsed = min(elapsed, time.perf_counter() - t0)
             shutil.rmtree(f"{out}-warm{i}", ignore_errors=True)
 
@@ -865,7 +865,7 @@ def _bench_etl(spark) -> dict:
         # per-table parquet datasets (a second write generation the
         # reference has no analog of).
         t0 = time.perf_counter()
-        wd2spark(spark, dump, os.path.join(root, "out-tables"), staged=True)
+        wd2spark(spark, dump, os.path.join(root, "out-tables"))
         elapsed_tables = time.perf_counter() - t0
 
         # LARGE rung (r10, VERDICT r9 task #6): the 293 MB rung has a
@@ -878,12 +878,12 @@ def _bench_etl(spark) -> dict:
         dump_1g = os.path.join(root, "dump-1g")
         nbytes_1g = _write_dump(dump_1g, n=56 * N, shards=64)
         t0 = time.perf_counter()
-        wd2spark(spark, dump_1g, os.path.join(root, "out-1g"), staged=True, layout="store")
+        wd2spark(spark, dump_1g, os.path.join(root, "out-1g"), layout="store")
         elapsed_1g_cold = time.perf_counter() - t0
         elapsed_1g = float("inf")
         for i in range(2):
             t0 = time.perf_counter()
-            wd2spark(spark, dump_1g, f"{out}-1g-warm{i}", staged=True, layout="store")
+            wd2spark(spark, dump_1g, f"{out}-1g-warm{i}", layout="store")
             elapsed_1g = min(elapsed_1g, time.perf_counter() - t0)
             shutil.rmtree(f"{out}-1g-warm{i}", ignore_errors=True)
 

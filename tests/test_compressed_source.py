@@ -48,8 +48,8 @@ def test_compressed_dump_matches_uncompressed(spark, tmp_path, codec):
     comp = str(tmp_path / "dump-comp")
     _compress_dump(plain, comp, codec)
 
-    paths_plain = wd2spark(spark, plain, str(tmp_path / "out-plain"), staged=True)
-    paths_comp = wd2spark(spark, comp, str(tmp_path / "out-comp"), staged=True)
+    paths_plain = wd2spark(spark, plain, str(tmp_path / "out-plain"))
+    paths_comp = wd2spark(spark, comp, str(tmp_path / "out-comp"))
 
     rows_plain = _table_rows(spark, paths_plain)
     rows_comp = _table_rows(spark, paths_comp)

@@ -77,7 +77,7 @@ def test_quarantine_never_aborts(spark, tables):
     # Framing edge cases. A line is parsed as read, trailing comma and all;
     # a quarantined line is reported with that comma stripped, and a line
     # that is blank once stripped holds no entity, so it is a bad id.
-    from wd2sql_spark.etl.pipeline import meta_table, quarantine, unified_rows
+    from wd2sql_spark.etl.pipeline import unified_rows
 
     lines = [
         '{"id": "Q1"},',
@@ -107,9 +107,10 @@ def test_quarantine_never_aborts(spark, tables):
         ("{}", "bad_id"),
     }
     ents = parse_entities(spark.createDataFrame([(line,) for line in lines], "value string"))
-    assert rows(quarantine(ents)) == want
+    got = transform(ents)
+    assert rows(got["quarantine"]) == want
     assert rows(unified_rows(ents).filter("`table` = 'quarantine'").select("line", "reason")) == want
-    assert rows(meta_table(ents)) == {(1, None, None), (2, None, None), (3, None, None)}
+    assert rows(got["meta"]) == {(1, None, None), (2, None, None), (3, None, None)}
 
 
 def test_wd2spark_end_to_end_and_guard(spark, tmp_path):
@@ -123,6 +124,10 @@ def test_wd2spark_end_to_end_and_guard(spark, tmp_path):
     # errorifexists guard (main.rs:98-104)
     with pytest.raises(Exception, match="already exists|LOCATION_ALREADY_EXISTS"):
         wd2spark(spark, FIXTURE, out)
+    # The per-claim plan is gone; asking for it fails before any work.
+    with pytest.raises(ValueError, match="staged=False"):
+        wd2spark(spark, FIXTURE, str(tmp_path / "unstaged"), staged=False)
+    assert not os.path.exists(tmp_path / "unstaged")
 
 
 def test_sql_codec_function(spark):
@@ -216,82 +221,6 @@ def test_store_layout_matches_tables_layout(spark, tmp_path):
         wd2spark(spark, FIXTURE, s_out, layout="store")
 
 
-def test_staged_store_matches_unstaged_tables(spark, tmp_path):
-    """The staged store (claims routed inside the per-entity item array)
-    and the unstaged tables (``claims_flat``) call the one dispatch
-    definition from two places; they must not drift apart. Every table
-    read through ``read_table`` equals the ``staged=False`` table row for
-    row, on a dump with corrupt lines, undecodable entity and property
-    ids, payloads that fail validation and deprecated claims."""
-    import json
-
-    from wd2sql_spark.etl.pipeline import _FINAL_COLS, read_table
-
-    def claim(dv_type=None, value=None, snaktype="value", rank="normal"):
-        snak = {"snaktype": snaktype, "property": "P1", "datatype": "x"}
-        if dv_type is not None:
-            snak["datavalue"] = {"type": dv_type, "value": value}
-        return {"mainsnak": snak, "rank": rank}
-
-    coord = {"latitude": 1.5, "longitude": -2.0, "precision": 0.1, "globe": "http://www.wikidata.org/entity/Q2"}
-    qty = {"amount": "+42", "lowerBound": "+41", "upperBound": "x", "unit": "http://www.wikidata.org/entity/Q11573"}
-    claims = {
-        "P1": [
-            claim("string", "kept"),
-            claim("string", "dead", rank="deprecated"),
-            claim("string"),  # no value: skipped
-            claim(snaktype="novalue", rank="deprecated"),
-            claim(snaktype="novalue"),
-            claim(snaktype="somevalue", rank="preferred"),
-        ],
-        "P2": [
-            claim("monolingualtext", {"text": "hola", "language": "es"}),
-            claim("monolingualtext", {"language": "es"}),  # no text: skipped
-            claim("multilingualtext", {"texts": {"en": "hi", "de": "hallo"}}),
-            claim("multilingualtext", {"texts": {"de": "hallo"}}),  # → none
-        ],
-        "P3": [
-            claim("wikibase-entityid", {"entity-type": "form", "id": "L99-F2"}),
-            claim("wikibase-entityid", {"id": "Q42abc"}),  # skipped
-            claim("globecoordinate", coord),
-            claim("globecoordinate", {**coord, "globe": "garbage"}),  # skipped
-            claim("globecoordinate", "not json"),  # skipped
-        ],
-        "P4": [
-            claim("quantity", qty),
-            claim("quantity", {**qty, "amount": "abc"}),  # skipped
-            claim("time", {"time": "+2001-00-00T00:00:00Z", "precision": 9}),
-            claim("time", {"time": "-13798000000-00-00T00:00:00Z", "precision": 3}),
-            claim("time", {"time": "+2001-01-01T00:00:00Z"}),  # no precision: skipped
-            claim("mystery", {"x": 1}),  # unknown type: skipped
-        ],
-        "Q42abc": [claim("string", "bad property id")],
-        "X5": [claim(snaktype="novalue")],
-        "P5": None,
-    }
-    entities = [
-        {"id": "Q1", "labels": {"en": {"language": "en", "value": "one"}}, "claims": claims},
-        {"id": "L7-S1", "descriptions": {"en": {"language": "en", "value": "sense"}}, "claims": {"P1": claims["P1"]}},
-        {"id": "Q2"},
-        {"id": "Q42abc", "claims": claims},  # bad entity id: quarantined
-    ]
-    lines = ["[", *(json.dumps(e) + "," for e in entities), '{"id": "Q9", "labels":', "", "not json", "]"]
-    dump = tmp_path / "mixed.ndjson"
-    with open(FIXTURE) as f:
-        dump.write_text("\n".join(lines) + "\n" + f.read())
-
-    store = str(tmp_path / "store")
-    wd2spark(spark, str(dump), store, layout="store")
-    paths = wd2spark(spark, str(dump), str(tmp_path / "tables"), staged=False)
-    assert set(paths) == set(_FINAL_COLS)
-    for name, path in paths.items():
-        want = spark.read.parquet(path)
-        got = read_table(spark, store, name)
-        assert got.columns == want.columns, name
-        assert want.count() > 0, name
-        assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0, name
-
-
 def test_read_table_empty_partition(spark, tmp_path):
     """A table with zero rows has no partition dir in a store-layout
     output; read_table must yield an empty relation with the final
@@ -305,4 +234,7 @@ def test_read_table_empty_partition(spark, tmp_path):
     shutil.rmtree(out + "/table=unknown", ignore_errors=True)
     df = read_table(spark, out, "unknown")
     assert df.count() == 0
-    assert df.columns == ["id", "property_id", "entity_id"] or len(df.columns) > 0
+    assert df.columns == ["id", "property_id"]
+    # the empty relation carries the time table's rename too
+    shutil.rmtree(out + "/table=time", ignore_errors=True)
+    assert read_table(spark, out, "time").columns == ["id", "property_id", "time", "precision", "time_raw"]

@@ -38,7 +38,7 @@ def test_etl_at_volume(spark, tmp_path):
     nbytes = _write_dump(dump)
 
     t0 = time.perf_counter()
-    paths = wd2spark(spark, dump, out, staged=True)
+    paths = wd2spark(spark, dump, out)
     elapsed = time.perf_counter() - t0
 
     good = [i for i in range(N) if i % CORRUPT_EVERY != 0]
@@ -171,7 +171,7 @@ def test_etl_claims_heavy_fanout(spark, tmp_path):
 
     out = str(tmp_path / "out")
     t0 = time.perf_counter()
-    paths = wd2spark(spark, str(dump), out, staged=True)
+    paths = wd2spark(spark, str(dump), out)
     elapsed = time.perf_counter() - t0
 
     # Per entity: 60 claims cycle templates 0..9 six times → 6 of each arm.

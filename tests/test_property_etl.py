@@ -27,6 +27,7 @@ model would have to re-implement try_to_timestamp); ``time_raw`` and
 from __future__ import annotations
 
 import json
+import os
 import re
 
 from hypothesis import given, settings
@@ -148,6 +149,10 @@ def _expected(lines):
         if raw.strip() in ("", "[", "]"):
             continue
         line = re.sub(r",\s*$", "", raw)
+        if re.fullmatch(r"[ \t]*", line):
+            # blank once its framing comma is stripped: no entity, no id
+            rows.append(("quarantine", None, None, (line, "bad_id")))
+            continue
         try:
             ent = json.loads(line)
             if not isinstance(ent, dict):
@@ -303,7 +308,7 @@ _LINE = st.one_of(
     _ENTITY.map(json.dumps),
     _ENTITY.map(lambda e: json.dumps(e) + ","),  # dump-style trailing comma
     _GARBAGE,
-    st.sampled_from(["[", "]", "", "   "]),
+    st.sampled_from(["[", "]", "", "   ", ",", " , ", "\t,"]),
 )
 
 
@@ -311,3 +316,81 @@ _LINE = st.one_of(
 @given(st.lists(_LINE, min_size=1, max_size=12))
 def test_etl_matches_reference_model(spark, lines):
     assert _actual(spark, lines) == _expected(lines)
+
+
+# --------------------------------------------------------------------------
+# Fixed input: one dump holding every hard case at once
+# --------------------------------------------------------------------------
+
+FIXTURE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "wd_dump.ndjson")
+
+
+def _claim(dv_type=None, value=None, snaktype="value", rank="normal"):
+    snak = {"snaktype": snaktype, "property": "P1", "datatype": "x"}
+    if dv_type is not None:
+        snak["datavalue"] = {"type": dv_type, "value": value}
+    return {"mainsnak": snak, "rank": rank}
+
+
+def _mixed_lines():
+    """Framing and corrupt lines, undecodable entity and property ids,
+    payloads that fail validation, deprecated claims (a deprecated
+    novalue among them), a ``null`` statement list, then the golden
+    fixture dump."""
+    coord = {"latitude": 1.5, "longitude": -2.0, "precision": 0.1, "globe": "http://www.wikidata.org/entity/Q2"}
+    qty = {"amount": "+42", "lowerBound": "+41", "upperBound": "x", "unit": "http://www.wikidata.org/entity/Q11573"}
+    claims = {
+        "P1": [
+            _claim("string", "kept"),
+            _claim("string", "dead", rank="deprecated"),
+            _claim("string"),  # no value: skipped
+            _claim(snaktype="novalue", rank="deprecated"),
+            _claim(snaktype="novalue"),
+            _claim(snaktype="somevalue", rank="preferred"),
+        ],
+        "P2": [
+            _claim("monolingualtext", {"text": "hola", "language": "es"}),
+            _claim("monolingualtext", {"language": "es"}),  # no text: skipped
+            _claim("multilingualtext", {"texts": {"en": "hi", "de": "hallo"}}),
+            _claim("multilingualtext", {"texts": {"de": "hallo"}}),  # → none
+        ],
+        "P3": [
+            _claim("wikibase-entityid", {"entity-type": "form", "id": "L99-F2"}),
+            _claim("wikibase-entityid", {"id": "Q42abc"}),  # skipped
+            _claim("globecoordinate", coord),
+            _claim("globecoordinate", {**coord, "globe": "garbage"}),  # skipped
+            _claim("globecoordinate", "not json"),  # skipped
+        ],
+        "P4": [
+            _claim("quantity", qty),
+            _claim("quantity", {**qty, "amount": "abc"}),  # skipped
+            _claim("time", {"time": "+2001-00-00T00:00:00Z", "precision": 9}),
+            _claim("time", {"time": "-13798000000-00-00T00:00:00Z", "precision": 3}),
+            _claim("time", {"time": "+2001-01-01T00:00:00Z"}),  # no precision: skipped
+            _claim("mystery", {"x": 1}),  # unknown type: skipped
+        ],
+        "Q42abc": [_claim("string", "bad property id")],
+        "X5": [_claim(snaktype="novalue")],
+        "P5": None,
+    }
+    entities = [
+        {"id": "Q1", "labels": {"en": {"language": "en", "value": "one"}}, "claims": claims},
+        {"id": "L7-S1", "descriptions": {"en": {"language": "en", "value": "sense"}}, "claims": {"P1": claims["P1"]}},
+        {"id": "Q2"},
+        {"id": "Q42abc", "claims": claims},  # bad entity id: quarantined
+    ]
+    framing = ["", ",", " , ", "\t,", "not json", '{"id": "Q9", "labels":']
+    with open(FIXTURE) as f:
+        fixture = f.read().splitlines()
+    return ["[", *(json.dumps(e) + "," for e in entities), *framing, "]", *fixture]
+
+
+def test_mixed_dump_matches_reference_model(spark):
+    lines = _mixed_lines()
+    want = _expected(lines)
+    assert _actual(spark, lines) == want
+    # the dump reaches every table and both quarantine reasons
+    assert {r[0] for r in want} == {
+        "meta", "string", "entity", "coordinates", "quantity", "time", "none", "unknown", "quarantine",
+    }
+    assert {r[3][1] for r in want if r[0] == "quarantine"} == {"bad_id", "corrupt_json"}

@@ -235,13 +235,13 @@ def bench_etl_scaling(spark: SparkSession, mults: tuple[int, ...] = (16, 64)) ->
         # one small untimed run compiles the plan's codegen
         wdump = os.path.join(root, "warm-dump")
         write_dump(wdump, n=N // 4, shards=8)
-        wd2spark(spark, wdump, os.path.join(root, "warm-out"), staged=True, layout="store")
+        wd2spark(spark, wdump, os.path.join(root, "warm-out"), layout="store")
         for m in mults:
             dump = os.path.join(root, f"dump-x{m}")
             nbytes = write_dump(dump, n=m * N, shards=64)
             spark.catalog.clearCache()
             t0 = time.perf_counter()
-            wd2spark(spark, dump, os.path.join(root, f"out-x{m}"), staged=True, layout="store")
+            wd2spark(spark, dump, os.path.join(root, f"out-x{m}"), layout="store")
             cold = time.perf_counter() - t0
             # min-of-3: this host's co-tenant load inflates single samples
             # up to 3x (see bench.py methodology); noise only adds time
@@ -249,7 +249,7 @@ def bench_etl_scaling(spark: SparkSession, mults: tuple[int, ...] = (16, 64)) ->
             for i in range(3):
                 t0 = time.perf_counter()
                 wd2spark(
-                    spark, dump, os.path.join(root, f"out{i + 2}-x{m}"), staged=True, layout="store"
+                    spark, dump, os.path.join(root, f"out{i + 2}-x{m}"), layout="store"
                 )
                 warm = min(warm, time.perf_counter() - t0)
                 shutil.rmtree(os.path.join(root, f"out{i + 2}-x{m}"), ignore_errors=True)
@@ -283,12 +283,12 @@ else:
     nbytes = write_dump(dump, n=m * N, shards=64)
     open(meta, "w").write(str(nbytes))
 tag = os.environ["SPARK_GRAFT_CPUS"]
-wd2spark(spark, dump, os.path.join(root, f"warm-{tag}"), staged=True, layout="store")
+wd2spark(spark, dump, os.path.join(root, f"warm-{tag}"), layout="store")
 best = float("inf")
 for i in range(3):
     out = os.path.join(root, f"out-{tag}-{i}")
     t0 = time.perf_counter()
-    wd2spark(spark, dump, out, staged=True, layout="store")
+    wd2spark(spark, dump, out, layout="store")
     best = min(best, time.perf_counter() - t0)
     shutil.rmtree(out, ignore_errors=True)
 shutil.rmtree(os.path.join(root, f"warm-{tag}"), ignore_errors=True)

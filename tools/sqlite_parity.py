@@ -65,7 +65,7 @@ def main() -> None:
         report["dump_mb"] = round(nbytes / 1e6, 1)
 
         store = os.path.join(root, "store")
-        wd2spark(spark, dump, store, staged=True, layout="store")
+        wd2spark(spark, dump, store, layout="store")
 
         db = os.path.join(root, "out.db")
         t0 = time.perf_counter()

@@ -4,7 +4,7 @@ The reference's entire user-facing API is one invocation
 (``wd2sql <JSON_FILE> <SQLITE_FILE>``, main.rs:35-40, README.md:49-61 in
 /root/reference). The Spark-native equivalent::
 
-    python -m wd2sql_spark DUMP OUT_DIR [--sqlite DB] [--no-staged]
+    python -m wd2sql_spark DUMP OUT_DIR [--sqlite DB] [--layout tables|store]
 
 - ``DUMP``: a Wikidata-style entity dump — one JSON entity per line, ``[``/
   ``]`` framing and trailing commas tolerated. A file OR a directory of
@@ -17,9 +17,6 @@ The reference's entire user-facing API is one invocation
   fully-indexed SQLite database with the reference's exact DDL, pragmas,
   and batched-transaction cadence (sinks/sqlite.py). The parquet store is
   written first and the export reads it back, so the dump is parsed once.
-- ``--no-staged``: derive each table directly from the dump (8 narrow
-  scans) instead of the single-pass staged store — useful when the dump is
-  small and intermediate storage is not wanted.
 
 stdin (the reference's ``bzcat … | wd2sql -`` mode, main.rs:122-135) is
 not supported: a Spark job's input must be re-readable by executors; the
@@ -42,11 +39,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("dump", help="entity dump file or directory of shards")
     p.add_argument("out_dir", help="output directory for the parquet tables")
     p.add_argument("--sqlite", metavar="DB", help="also export an indexed SQLite database")
-    p.add_argument(
-        "--no-staged",
-        action="store_true",
-        help="re-derive each table from the dump instead of the single-pass staged store",
-    )
     p.add_argument(
         "--layout",
         choices=("tables", "store"),
@@ -84,9 +76,7 @@ def main(argv: list[str] | None = None) -> int:
         progress_cm = contextlib.nullcontext()
 
     with progress_cm:
-        paths = wd2spark(
-            spark, args.dump, args.out_dir, staged=not args.no_staged, layout=args.layout
-        )
+        paths = wd2spark(spark, args.dump, args.out_dir, layout=args.layout)
         for name in sorted(paths):
             print(f"wrote {name} -> {paths[name]}")
 

@@ -25,31 +25,31 @@ projection's Catalyst tree in one Py4J call; ``Column`` objects would
 cost one call per expression node. A build of the staged plan sends 59
 Py4J commands.
 
-Write strategies (``wd2spark``):
+One dataflow (:func:`unified_rows`) emits every output row, tagged with
+its target ``table``; each output table is that relation filtered to its
+tag and projected to its columns (``_FINAL_COLS``, the one table→columns
+definition). ``transform`` returns those projections lazily, and
+``wd2spark`` writes the dataflow in one of two layouts:
 
-- ``staged=True`` (default, the 100-TB path): a TRUE single pass. One scan
-  + one ``from_json`` parse of the dump emits every output row (meta rows,
+- ``layout="tables"`` (default): a TRUE single pass. One scan + one
+  ``from_json`` parse of the dump emits every output row (meta rows,
   typed claim rows, quarantine rows) through one per-entity explode, and
-  ONE write lands them partitioned by target ``table``. With
-  ``layout="tables"`` the 9 final tables are then partition-pruned,
-  column-pruned projections of that store — each rewrite reads only its
-  own partition's columns. JSON parse cost (the reference's simd_json)
-  is paid once per line and once per claim payload, matching the
-  reference's single-pass loop.
-- ``staged=True, layout="store"``: the partitioned single write IS the
-  output — every row hits storage exactly ONCE, which is the reference's
-  own write semantics (each row lands once in its SQLite B-tree,
-  main.rs:223-237; there is no second per-table materialization pass).
-  Tables are read through :func:`read_table`, a partition-pruned +
-  column-pruned projection — the catalog-over-store shape every Hive/
-  Iceberg-style Spark deployment uses. Off-table columns inside a
-  partition are all-NULL and cost only RLE'd definition levels in
-  parquet, so storage matches the per-table layout. Halves the ETL's
-  write volume (and at 100 TB, saves re-reading the corpus to re-encode
-  it); bench reports this layout as the reference-comparable number.
-- ``staged=False``: each table's write re-derives from the dump (8 narrow
-  scans, no intermediate storage — fine when the dump is small or already
-  in RAM/page cache).
+  ONE write lands them partitioned by target ``table``. The 9 final
+  tables are then partition-pruned, column-pruned projections of that
+  store — each rewrite reads only its own partition's columns. JSON
+  parse cost (the reference's simd_json) is paid once per line and once
+  per claim payload, matching the reference's single-pass loop.
+- ``layout="store"``: the partitioned single write IS the output — every
+  row hits storage exactly ONCE, which is the reference's own write
+  semantics (each row lands once in its SQLite B-tree, main.rs:223-237;
+  there is no second per-table materialization pass). Tables are read
+  through :func:`read_table`, a partition-pruned + column-pruned
+  projection — the catalog-over-store shape every Hive/Iceberg-style
+  Spark deployment uses. Off-table columns inside a partition are
+  all-NULL and cost only RLE'd definition levels in parquet, so storage
+  matches the per-table layout. Halves the ETL's write volume (and at
+  100 TB, saves re-reading the corpus to re-encode it); bench reports
+  this layout as the reference-comparable number.
 """
 
 from __future__ import annotations
@@ -63,7 +63,6 @@ from wd2sql_spark.etl import schema as S
 from wd2sql_spark.functions.ids import encode_entity_url_sql, encode_wid_sql
 
 DEPRECATED = "deprecated"
-VALUE_TABLES = ("string", "entity", "coordinates", "quantity", "time", "none", "unknown")
 
 
 def _ddl(t: DataType) -> str:
@@ -114,6 +113,8 @@ def parse_entities(lines: DataFrame) -> DataFrame:
     )
 
 
+# Rows the reference would print to stderr and skip (main.rs:177-219):
+# JSON-corrupt lines and entities whose id doesn't encode.
 _BAD = f"{S.CORRUPT_COL} IS NOT NULL OR id IS NULL"
 # A quarantined line as the reference prints it: its framing comma
 # stripped. Only quarantine rows evaluate these.
@@ -126,25 +127,10 @@ _QUARANTINE_REASON = (
     "THEN 'bad_id' ELSE 'corrupt_json' END"
 )
 
-
-def quarantine(entities: DataFrame) -> DataFrame:
-    """Rows the reference would print to stderr and skip (main.rs:177-219):
-    JSON-corrupt lines and entities whose id doesn't encode."""
-    return entities.filter(_BAD).selectExpr(f"{_QUARANTINE_LINE} AS line", f"{_QUARANTINE_REASON} AS reason")
-
-
-def good_entities(entities: DataFrame) -> DataFrame:
-    return entities.filter(f"NOT ({_BAD})")
-
-
+# meta(id, label, description): English-only, NULL on miss (main.rs:82-83;
+# element_at on MapType is null-safe).
 _LABEL = "element_at(labels, 'en').value"
 _DESCRIPTION = "element_at(descriptions, 'en').value"
-
-
-def meta_table(entities: DataFrame) -> DataFrame:
-    """meta(id, label, description): English-only projection with NULL on
-    miss (main.rs:82-83; element_at on MapType is null-safe)."""
-    return good_entities(entities).selectExpr("id", f"{_LABEL} AS label", f"{_DESCRIPTION} AS description")
 
 
 def _parse_payload(c: str) -> str:
@@ -198,12 +184,11 @@ END"""
 def _claim_value_cols(c: str, v: str) -> dict[str, str]:
     """The per-type payload columns of one claim struct ``c`` whose payload
     parsed to ``v`` (:func:`_parse_payload`), as a dict of named SQL
-    expressions (unused ones NULL). With :func:`_route` this is the one
-    dispatch definition, shared by the per-claim path (``claims_flat``)
-    and the single-pass unified path (``unified_rows``). All expressions
-    are Catalyst built-ins; where ``v`` is a field of an already-parsed
-    struct (``unified_rows``), the projection that evaluates them runs
-    under whole-stage codegen."""
+    expressions (unused ones NULL). With :func:`_route` this is the
+    dispatch definition of :func:`unified_rows`. All expressions are
+    Catalyst built-ins and ``v`` is a field of an already-parsed struct,
+    so the projection that evaluates them runs under whole-stage
+    codegen."""
     t = f"{c}.mainsnak.datavalue.type"
     # time: normalize Wikidata's unknown month/day "00" to "01", drop the
     # leading '+', then try_to_timestamp — out-of-range historical years
@@ -231,58 +216,6 @@ def _claim_value_cols(c: str, v: str) -> dict[str, str]:
     }
 
 
-def _value_exprs(c: str, v: str) -> list[str]:
-    return [f"{e} AS `{k}`" for k, e in _claim_value_cols(c, v).items()]
-
-
-def claims_flat(entities: DataFrame) -> DataFrame:
-    """Two-level explode of the claims map (2-A#9) + deprecated-rank drop
-    (2-A#8, main.rs:87 — BEFORE dispatch, so deprecated novalue claims
-    never reach the none table) + one payload parse + 20→7 type dispatch
-    (value.rs:201-261) in one wide projection.
-
-    Output: one row per kept claim with ``value_type`` ∈ 7 tables plus the
-    per-type payload columns (unused ones NULL)."""
-    return (
-        good_entities(entities)
-        .selectExpr("id", "explode(claims) AS (pid_str, statements)")
-        .selectExpr("id", f"{encode_wid_sql('pid_str')} AS property_id", "explode(statements) AS c")
-        .filter(f"property_id IS NOT NULL AND coalesce(c.rank, 'normal') != '{DEPRECATED}'")
-        .selectExpr("id", "property_id", "c", f"{_parse_payload('c')} AS v")
-        .selectExpr("id", "property_id", f"{_route('c', 'v')} AS value_type", *_value_exprs("c", "v"))
-    )
-
-
-# Per-table projections from the flat claims relation.
-_TABLE_COLS = {
-    "string": ["id", "property_id", "string"],
-    "entity": ["id", "property_id", "entity_id"],
-    "coordinates": ["id", "property_id", "latitude", "longitude", "precision", "globe_id"],
-    "quantity": ["id", "property_id", "amount", "lower_bound", "upper_bound", "unit_id"],
-    "time": ["id", "property_id", "time", "time_precision", "time_raw"],
-    "none": ["id", "property_id"],
-    "unknown": ["id", "property_id"],
-}
-
-
-def value_table(claims: DataFrame, name: str) -> DataFrame:
-    cols = _TABLE_COLS[name]
-    df = claims.filter(f"value_type = '{name}'").select(*cols)
-    if name == "time":
-        df = df.withColumnRenamed("time_precision", "precision")
-    return df
-
-
-def transform(entities: DataFrame) -> dict[str, DataFrame]:
-    """All 8 output tables (+ quarantine) as lazy DataFrames."""
-    claims = claims_flat(entities)
-    out: dict[str, DataFrame] = {"meta": meta_table(entities)}
-    for name in VALUE_TABLES:
-        out[name] = value_table(claims, name)
-    out["quarantine"] = quarantine(entities)
-    return out
-
-
 # One output row before the explode: its target table, plus only the
 # fields that row kind needs (the rest NULL).
 _ITEM = StructType(
@@ -298,11 +231,19 @@ _ITEM = StructType(
     ]
 )
 
-# Final per-table projections out of the unified staged store.
+# The one table → columns definition: each output table is the rows of
+# :func:`unified_rows` tagged with its name, projected to these columns
+# (``time`` renames the claim column ``time_precision``).
 _FINAL_COLS = {
     "meta": ["id", "label", "description"],
+    "string": ["id", "property_id", "string"],
+    "entity": ["id", "property_id", "entity_id"],
+    "coordinates": ["id", "property_id", "latitude", "longitude", "precision", "globe_id"],
+    "quantity": ["id", "property_id", "amount", "lower_bound", "upper_bound", "unit_id"],
+    "time": ["id", "property_id", "time", "time_precision AS precision", "time_raw"],
+    "none": ["id", "property_id"],
+    "unknown": ["id", "property_id"],
     "quarantine": ["line", "reason"],
-    **_TABLE_COLS,
 }
 
 
@@ -327,8 +268,7 @@ def unified_rows(entities: DataFrame) -> DataFrame:
 
     Every claim is routed INSIDE the item array, before the explode: the
     property id is encoded once per property, and properties that don't
-    encode are dropped (matching ``claims_flat`` and the reference's
-    per-record tolerance); the deprecated-rank drop happens before type
+    encode are dropped (the reference's per-record tolerance); the deprecated-rank drop happens before type
     dispatch, exactly like main.rs:87; each kept claim's payload is
     parsed once; a second ``transform`` builds each claim's item with its
     target table routed from the parsed struct; and an array ``filter``
@@ -371,11 +311,24 @@ def unified_rows(entities: DataFrame) -> DataFrame:
         "it.property_id AS property_id",
         "it.label AS label",
         "it.description AS description",
-        *_value_exprs("it.c", "it.v"),
+        *(f"{e} AS `{k}`" for k, e in _claim_value_cols("it.c", "it.v").items()),
         "it.line AS line",
         "it.reason AS reason",
         "it.`table` AS `table`",
     )
+
+
+def _project(rows: DataFrame, name: str) -> DataFrame:
+    """Output table ``name`` of the tagged rows ``rows`` (the
+    :func:`unified_rows` relation, or the store it was written to)."""
+    return rows.filter(f"`table` = '{name}'").selectExpr(*_FINAL_COLS[name])
+
+
+def transform(entities: DataFrame) -> dict[str, DataFrame]:
+    """All 8 output tables (+ quarantine) as lazy DataFrames, each a
+    projection of one :func:`unified_rows` relation."""
+    rows = unified_rows(entities)
+    return {name: _project(rows, name) for name in _FINAL_COLS}
 
 
 def read_table(spark: SparkSession, out_path: str, name: str) -> DataFrame:
@@ -390,13 +343,10 @@ def read_table(spark: SparkSession, out_path: str, name: str) -> DataFrame:
     cols = _FINAL_COLS[name]
     part = os.path.join(out_path, f"table={name}")
     if not os.path.isdir(part):
-        return spark.createDataFrame(
-            [], StructType([StructField(c, StringType()) for c in cols])
-        ).toDF(*(["precision" if c == "time_precision" else c for c in cols]))
-    df = spark.read.parquet(part).select(*cols)
-    if name == "time":
-        df = df.withColumnRenamed("time_precision", "precision")
-    return df
+        stored = [c.split(" AS ")[0] for c in cols]
+        empty = spark.createDataFrame([], StructType([StructField(c, StringType()) for c in stored]))
+        return empty.selectExpr(*cols)
+    return spark.read.parquet(part).selectExpr(*cols)
 
 
 def wd2spark(
@@ -414,68 +364,45 @@ def wd2spark(
     reference's own write-once semantics; see module docstring).
 
     ``mode="errorifexists"`` mirrors the reference's refuse-existing-output
-    guard (main.rs:98-104). Returns table→path.
+    guard (main.rs:98-104). Returns table→path. ``staged`` is kept for
+    callers that pass ``staged=True``; any other value raises
+    ``ValueError``.
 
-    The staged plan pays the JSON parse exactly once: one scan of the dump
-    emits ALL output rows (``unified_rows``) into one parquet store
-    partitioned by target ``table`` (the Spark analog of the reference's
-    per-table prepared statements — and of index-after-load: data lands
-    clustered by its access path). Under ``layout="tables"`` the 9 final
-    tables are then partition-pruned + column-pruned projections of that
-    store; parquet being columnar, each rewrite reads only its own
-    partition's live columns, never the superset.
+    The plan pays the JSON parse exactly once: one scan of the dump emits
+    ALL output rows (``unified_rows``) into one parquet store partitioned
+    by target ``table`` (the Spark analog of the reference's per-table
+    prepared statements — and of index-after-load: data lands clustered
+    by its access path). Under ``layout="tables"`` the 9 final tables are
+    then partition-pruned + column-pruned projections of that store;
+    parquet being columnar, each rewrite reads only its own partition's
+    live columns, never the superset.
     """
+    if not staged:
+        raise ValueError("staged=False was removed: every table is a projection of the one unified_rows pass")
     if layout not in ("tables", "store"):
         raise ValueError(f"layout must be 'tables' or 'store', got {layout!r}")
-    if layout == "store" and not staged:
-        raise ValueError("layout='store' requires staged=True (it IS the staged write)")
-    entities = parse_entities(read_dump(spark, dump_path))
-    paths: dict[str, str] = {}
-
-    if staged and layout == "store":
-        uf = unified_rows(entities)
-        uf.write.mode(mode).partitionBy("table").parquet(out_path)
+    rows = unified_rows(parse_entities(read_dump(spark, dump_path)))
+    store_p = out_path if layout == "store" else os.path.join(out_path, "_staged")
+    rows.write.mode(mode).partitionBy("table").parquet(store_p)
+    if layout == "store":
         return {n: os.path.join(out_path, f"table={n}") for n in _FINAL_COLS}
 
-    if staged:
-        stage_p = os.path.join(out_path, "_staged")
-        uf = unified_rows(entities)
-        uf.write.mode(mode).partitionBy("table").parquet(stage_p)
-        # Explicit schema: robust to an all-empty store and skips footer
-        # inference; `table` resolves as the partition column.
-        store = spark.read.schema(uf.schema).parquet(stage_p)
+    # Explicit schema: robust to an all-empty store and skips footer
+    # inference; `table` resolves as the partition column.
+    store = spark.read.schema(rows.schema).parquet(store_p)
 
-        # The 9 rewrites are independent partition-pruned projections —
-        # submit them CONCURRENTLY (Spark's scheduler accepts jobs from
-        # multiple threads) so their fixed per-job latency overlaps
-        # instead of summing. Each job is small; on a cluster the
-        # scheduler interleaves their tasks across executors exactly like
-        # one bigger job.
-        def _rewrite(item: tuple[str, tuple[str, ...]]) -> tuple[str, str]:
-            name, cols = item
-            p = os.path.join(out_path, name)
-            df = store.filter(f"`table` = '{name}'").select(*cols)
-            if name == "time":
-                df = df.withColumnRenamed("time_precision", "precision")
-            df.write.mode(mode).parquet(p)
-            return name, p
+    # The 9 rewrites are independent partition-pruned projections —
+    # submit them CONCURRENTLY (Spark's scheduler accepts jobs from
+    # multiple threads) so their fixed per-job latency overlaps instead
+    # of summing. Each job is small; on a cluster the scheduler
+    # interleaves their tasks across executors exactly like one bigger
+    # job.
+    def _rewrite(name: str) -> tuple[str, str]:
+        p = os.path.join(out_path, name)
+        _project(store, name).write.mode(mode).parquet(p)
+        return name, p
 
-        from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=len(_FINAL_COLS)) as pool:
-            paths.update(pool.map(_rewrite, _FINAL_COLS.items()))
-    else:
-        meta_p = os.path.join(out_path, "meta")
-        meta_table(entities).write.mode(mode).parquet(meta_p)
-        paths["meta"] = meta_p
-
-        quar_p = os.path.join(out_path, "quarantine")
-        quarantine(entities).write.mode(mode).parquet(quar_p)
-        paths["quarantine"] = quar_p
-
-        claims = claims_flat(entities)
-        for name in VALUE_TABLES:
-            p = os.path.join(out_path, name)
-            value_table(claims, name).write.mode(mode).parquet(p)
-            paths[name] = p
-    return paths
+    with ThreadPoolExecutor(max_workers=len(_FINAL_COLS)) as pool:
+        return dict(pool.map(_rewrite, _FINAL_COLS))

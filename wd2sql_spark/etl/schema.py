@@ -1,4 +1,4 @@
-"""Declared schemas for the Wikidata entity dump and the 8 output tables.
+"""Declared schemas for the Wikidata entity dump and its claim payloads.
 
 The input schema is DECLARED, never inferred (at 100 TB a schema-inference
 pass would read the whole dump twice; and inference can't express "keep
@@ -6,7 +6,7 @@ datavalue.value as raw JSON"). ``datavalue.value`` is polymorphic in the
 dump (plain string for string datatypes, object for quantity/time/
 coordinate/entity), so it is declared ``StringType`` — Spark's Jackson
 parser captures objects as their raw JSON text, which the type-dispatch
-step re-parses with the per-type schemas below. This two-phase parse is
+step re-parses with the union payload schema below. This two-phase parse is
 the Spark-native restatement of the reference's ``simd_json`` parse +
 ``ClaimValueData`` decode (main.rs:198-215, value.rs:201-261).
 """
@@ -16,13 +16,11 @@ from __future__ import annotations
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
-    IntegerType,
     LongType,
     MapType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 # ---------------------------------------------------------------------------
@@ -68,60 +66,16 @@ ENTITY_SCHEMA = StructType(
 )
 
 # ---------------------------------------------------------------------------
-# Per-type datavalue payload schemas (for the second-phase from_json)
+# Datavalue payload schema (for the second-phase from_json)
 # ---------------------------------------------------------------------------
 
-ENTITYID_VALUE = StructType(
-    [
-        StructField("entity-type", StringType()),
-        StructField("numeric-id", LongType()),
-        StructField("id", StringType()),
-    ]
-)
-
-COORD_VALUE = StructType(
-    [
-        StructField("latitude", DoubleType()),
-        StructField("longitude", DoubleType()),
-        StructField("precision", DoubleType()),
-        StructField("globe", StringType()),
-    ]
-)
-
-QUANTITY_VALUE = StructType(
-    [
-        # amounts arrive as signed decimal strings ("+42", "-1.5")
-        StructField("amount", StringType()),
-        StructField("lowerBound", StringType()),
-        StructField("upperBound", StringType()),
-        StructField("unit", StringType()),
-    ]
-)
-
-TIME_VALUE = StructType(
-    [
-        # e.g. "+2001-12-31T00:00:00Z", "-13798000000-00-00T00:00:00Z"
-        StructField("time", StringType()),
-        StructField("precision", IntegerType()),
-        StructField("calendarmodel", StringType()),
-    ]
-)
-
-MONOTEXT_VALUE = StructType(
-    [StructField("text", StringType()), StructField("language", StringType())]
-)
-
-# Synthetic multilingual shape (the reference's MultilingualText arm,
-# value.rs:222-229: keep the English text if present, else emit a
-# none-table row — NOT a null string row).
-MULTITEXT_VALUE = StructType(
-    [StructField("texts", MapType(StringType(), StringType()))]
-)
-
-# Union of every per-type payload schema, so the dispatch step parses
-# ``datavalue.value`` exactly ONCE (six separate from_json calls on the
-# same raw text were the dominant dispatch cost — Jackson re-tokenized
-# each claim payload up to six times). Field names are disjoint across
+# Union of every datavalue type's payload fields, so the dispatch step
+# parses ``datavalue.value`` exactly ONCE (six separate from_json calls
+# on the same raw text, one per type, were the dominant dispatch cost —
+# Jackson re-tokenized each claim payload up to six times). The
+# multilingualtext shape is synthetic (the reference's MultilingualText
+# arm, value.rs:222-229: keep the English text if present, else emit a
+# none-table row — NOT a null string row). Field names are disjoint across
 # types except ``precision``, shared by globecoordinate (double) and time
 # (integer): declared DOUBLE here, cast back to int on the time path —
 # integer JSON literals parse to exact doubles. Fields absent from a
@@ -153,82 +107,3 @@ MERGED_VALUE = StructType(
         StructField("calendarmodel", StringType()),
     ]
 )
-
-# ---------------------------------------------------------------------------
-# Output: the 8 tables (SURVEY §1.3 → Spark types §1.5)
-# ---------------------------------------------------------------------------
-
-META = StructType(
-    [
-        StructField("id", LongType(), False),
-        StructField("label", StringType()),
-        StructField("description", StringType()),
-    ]
-)
-
-STRING_T = StructType(
-    [
-        StructField("id", LongType(), False),
-        StructField("property_id", LongType(), False),
-        StructField("string", StringType(), False),
-    ]
-)
-
-ENTITY_T = StructType(
-    [
-        StructField("id", LongType(), False),
-        StructField("property_id", LongType(), False),
-        StructField("entity_id", LongType(), False),
-    ]
-)
-
-COORDINATES_T = StructType(
-    [
-        StructField("id", LongType(), False),
-        StructField("property_id", LongType(), False),
-        StructField("latitude", DoubleType(), False),
-        StructField("longitude", DoubleType(), False),
-        StructField("precision", DoubleType(), False),
-        StructField("globe_id", LongType(), False),
-    ]
-)
-
-QUANTITY_T = StructType(
-    [
-        StructField("id", LongType(), False),
-        StructField("property_id", LongType(), False),
-        StructField("amount", DoubleType(), False),
-        StructField("lower_bound", DoubleType()),
-        StructField("upper_bound", DoubleType()),
-        StructField("unit_id", LongType()),
-    ]
-)
-
-# `time` keeps a raw-string fallback beside the TimestampType column:
-# Wikidata carries Myr-scale historical dates that overflow timestamps
-# (SURVEY §7a) — the reference's chrono DateTime covers ±262k years
-# (value.rs:54-57); we preserve the full value losslessly in `time_raw`.
-TIME_T = StructType(
-    [
-        StructField("id", LongType(), False),
-        StructField("property_id", LongType(), False),
-        StructField("time", TimestampType()),
-        StructField("precision", IntegerType(), False),
-        StructField("time_raw", StringType(), False),
-    ]
-)
-
-PRESENCE_T = StructType(
-    [StructField("id", LongType(), False), StructField("property_id", LongType(), False)]
-)
-
-OUTPUT_TABLES = {
-    "meta": META,
-    "string": STRING_T,
-    "entity": ENTITY_T,
-    "coordinates": COORDINATES_T,
-    "quantity": QUANTITY_T,
-    "time": TIME_T,
-    "none": PRESENCE_T,
-    "unknown": PRESENCE_T,
-}

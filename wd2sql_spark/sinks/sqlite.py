@@ -136,10 +136,11 @@ def export_sqlite(
     on_progress: Callable[[str, int], None] | None = None,
 ) -> dict[str, int]:
     """Write the ETL output tables to a fully-indexed SQLite DB; returns
-    table → row count. ``tables`` is ``etl.pipeline.transform(...)`` output
-    (the ``quarantine`` entry, absent from the reference schema, is
-    ignored). ``on_progress(table, rows_so_far)`` fires once per commit —
-    the batch analog of the reference's 1000-entity progress redraw
+    table → row count. ``tables`` is ``etl.pipeline.transform(...)`` output,
+    the per-table projections of the unified rows (the ``quarantine``
+    entry, absent from the reference schema, is ignored).
+    ``on_progress(table, rows_so_far)`` fires once per commit — the batch
+    analog of the reference's 1000-entity progress redraw
     (main.rs:223-237).
     """
     if os.path.exists(db_path):
