@@ -60,14 +60,10 @@ def test_compact_noop_layout_is_content_identical(spark, store):
 
 
 def test_store_readers_heal_interrupted_swap_on_open(spark, tmp_path):
-    """ADVICE r4 #4: the store READ paths invoke recover_dataset, so a
-    crash between compaction's two renames is healed on the first read —
-    not only by the next compaction run."""
+    """ADVICE r4 #4: the LSH store's read path invokes recover_dataset,
+    so a crash between compaction's two renames is healed on the first
+    read — not only by the next compaction run."""
     from wd2sql_spark.sinks.lsh_store import read_lsh_store, write_lsh_store
-    from wd2sql_spark.sinks.postings_store import (
-        read_postings_store,
-        write_postings_store,
-    )
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta"), (2, "beta gamma delta epsilon")],
@@ -78,15 +74,6 @@ def test_store_readers_heal_interrupted_swap_on_open(spark, tmp_path):
     before = sorted(tuple(r) for r in read_lsh_store(spark, lsh_path).collect())
     os.rename(f"{lsh_path}/bands", f"{lsh_path}/bands.old")  # crash window
     healed = sorted(tuple(r) for r in read_lsh_store(spark, lsh_path).collect())
-    assert healed == before
-
-    post_path = str(tmp_path / "postings")
-    write_postings_store(docs, post_path)
-    before = sorted(tuple(r) for r in read_postings_store(spark, post_path).collect())
-    os.rename(f"{post_path}/postings", f"{post_path}/postings.old")
-    healed = sorted(
-        tuple(r) for r in read_postings_store(spark, post_path).collect()
-    )
     assert healed == before
 
 

@@ -15,7 +15,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from wd2sql_spark.curate import curate, read_split
+from wd2sql_spark.curate import curate
 from wd2sql_spark.queries import load_all_modules
 
 IN = "/root/testdata/sf0.001/documents.parquet"
@@ -81,7 +81,9 @@ def test_deterministic_across_runs(spark, run, tmp_path):
 
 def test_split_read_back_is_pruned_and_consistent(spark, run):
     out, manifest = run
-    ev = read_split(spark, out, "eval")
+    ev = spark.read.parquet(os.path.join(out, "corpus")).filter(
+        F.col("split") == "eval"
+    )
     assert ev.count() == manifest["stages"]["final"]["n_eval"]
     # Hash-shard membership is a pure function of doc_id — re-derivable
     # from the data alone (the reproducible-ablation contract).

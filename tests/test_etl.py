@@ -121,6 +121,8 @@ def test_wd2spark_end_to_end_and_guard(spark, tmp_path):
     }
     meta = spark.read.parquet(paths["meta"])
     assert meta.count() == 11
+    # The intermediate store is gone: out holds exactly the 9 tables.
+    assert sorted(os.listdir(out)) == sorted(paths)
     # errorifexists guard (main.rs:98-104)
     with pytest.raises(Exception, match="already exists|LOCATION_ALREADY_EXISTS"):
         wd2spark(spark, FIXTURE, out)

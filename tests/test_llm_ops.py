@@ -133,7 +133,7 @@ def test_simhash_close_for_near_dups(spark, docs):
     )
     if top.jaccard < 0.8:
         pytest.skip("fixture has no strong near-dup at this SF")
-    sim = {r.doc_id: r.simhash for r in D.simhash32(docs, n=3).collect()}
+    sim = {r.doc_id: r.simhash for r in D.simhash_sig(docs, 3, 32).collect()}
     ham = bin(sim[top.d1] ^ sim[top.d2]).count("1")
     assert ham <= 8, f"simhash hamming {ham} for jaccard {top.jaccard}"
 

@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 from wd2sql_spark.catalog import table
 from wd2sql_spark.operators import dedup as D
 from wd2sql_spark.sinks.lsh_store import (
-    append_to_lsh_store,
-    probe_lsh_store,
+    append_band_index,
+    compact_admission_store,
     read_lsh_store,
     write_lsh_store,
 )
@@ -39,8 +39,10 @@ def test_probe_matches_in_memory_incremental(spark, split, store):
     _, corpus, delta = split
     got = sorted(
         (r.delta_id, r.corpus_id, r.est_jaccard)
-        for r in probe_lsh_store(
-            spark, store, delta, min_est_jaccard=0.25
+        for r in D.incremental_index_probe(
+            read_lsh_store(spark, store),
+            D.minhash_band_index(delta),
+            min_est_jaccard=0.25,
         ).collect()
     )
     want = sorted(
@@ -54,7 +56,7 @@ def test_probe_matches_in_memory_incremental(spark, split, store):
 
 def test_append_equals_full_rebuild(spark, split, store, tmp_path_factory):
     docs, _, delta = split
-    append_to_lsh_store(delta, store)
+    append_band_index(D.minhash_band_index(delta), store)
     appended = sorted(map(tuple, read_lsh_store(spark, store).collect()))
     rebuilt_path = str(tmp_path_factory.mktemp("lsh") / "rebuild")
     write_lsh_store(docs, rebuilt_path)
@@ -69,20 +71,19 @@ def test_store_layout_partitions_by_band(spark, store):
 
 
 def test_compaction_preserves_content_and_shrinks_files(spark, split, tmp_path_factory):
-    """After admission appends, compaction must leave the band index
-    bit-identical while collapsing the per-append file accumulation."""
-    from wd2sql_spark.sinks.lsh_store import compact_lsh_store
-
+    """After admission appends without replays, compaction must leave the
+    band index bit-identical while collapsing the per-append file
+    accumulation."""
     docs, corpus, delta = split
     path = str(tmp_path_factory.mktemp("lsh-cpt") / "store")
     write_lsh_store(corpus, path)
-    append_to_lsh_store(delta, path)
+    append_band_index(D.minhash_band_index(delta), path)
 
     def snap():
         return sorted(map(tuple, read_lsh_store(spark, path).collect()))
 
     before = snap()
     n_before = len(read_lsh_store(spark, path).inputFiles())
-    compact_lsh_store(spark, path)
+    compact_admission_store(spark, path)
     assert snap() == before
     assert len(read_lsh_store(spark, path).inputFiles()) < n_before

@@ -1,0 +1,94 @@
+"""Every ``wd2sql_spark`` module has a production importer.
+
+A module that only tests or tools import is production code that only
+tests call; this AST scan fails on it. The production roots are the
+package itself, ``bench.py``, ``__spark_entry__.py`` and ``perfbench/``;
+``tests/`` and ``tools/`` do not count, and a module importing itself
+does not either. Counted as used without an importer: the registry's
+``_MODULES`` (imported by name), ``__main__`` and ``curate`` (run with
+``python -m``), and the parent package of every used module.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "wd2sql_spark"
+
+
+def _py_files(rel_dir: str) -> list[str]:
+    return [
+        os.path.join(d, f)
+        for d, _, files in os.walk(os.path.join(ROOT, rel_dir))
+        for f in files
+        if f.endswith(".py")
+    ]
+
+
+def _module_name(path: str) -> str:
+    name = os.path.relpath(path, ROOT)[: -len(".py")].replace(os.sep, ".")
+    return name.removesuffix(".__init__")
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path) as f:
+        return ast.parse(f.read(), path)
+
+
+def _imported(path: str) -> set[str]:
+    """Dotted names the file imports: ``import X``, ``from X import Y``
+    (both ``X`` and ``X.Y``, since ``Y`` may be a submodule), relative
+    imports resolved, and ``importlib.import_module("X")`` literals."""
+    me = _module_name(path).split(".")
+    if not path.endswith("__init__.py"):
+        me = me[:-1]
+    names: set[str] = set()
+    for node in ast.walk(_parse(path)):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parent = me[: len(me) - node.level + 1]
+                base = ".".join([*parent, base] if base else parent)
+            names.add(base)
+            names.update(f"{base}.{a.name}" for a in node.names)
+        elif (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "attr", None) == "import_module"
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+        ):
+            names.add(node.args[0].value)
+    return names
+
+
+def _registry_modules() -> set[str]:
+    tree = _parse(os.path.join(ROOT, PKG, "queries", "registry.py"))
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and any(
+            getattr(t, "id", None) == "_MODULES" for t in node.targets
+        ):
+            return set(ast.literal_eval(node.value))
+    raise AssertionError("registry._MODULES not found")
+
+
+def test_every_package_module_has_a_production_importer():
+    modules = {_module_name(p) for p in _py_files(PKG)}
+    roots = [
+        *_py_files(PKG),
+        *_py_files("perfbench"),
+        os.path.join(ROOT, "bench.py"),
+        os.path.join(ROOT, "__spark_entry__.py"),
+    ]
+    used = {f"{PKG}.__main__", f"{PKG}.curate", *_registry_modules()}
+    for path in roots:
+        used |= _imported(path) - {_module_name(path)}
+    for name in list(used):
+        while "." in name:
+            name = name.rsplit(".", 1)[0]
+            used.add(name)
+    orphans = sorted(modules - used)
+    assert not orphans, f"modules with no production importer: {orphans}"

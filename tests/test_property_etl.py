@@ -146,7 +146,7 @@ def _dispatch(claim):
 def _expected(lines):
     rows = []
     for raw in lines:
-        if raw.strip() in ("", "[", "]"):
+        if raw.strip(" \t\r\n") in ("", "[", "]"):
             continue
         line = re.sub(r",\s*$", "", raw)
         if re.fullmatch(r"[ \t]*", line):
@@ -308,7 +308,7 @@ _LINE = st.one_of(
     _ENTITY.map(json.dumps),
     _ENTITY.map(lambda e: json.dumps(e) + ","),  # dump-style trailing comma
     _GARBAGE,
-    st.sampled_from(["[", "]", "", "   ", ",", " , ", "\t,"]),
+    st.sampled_from(["[", "]", "", "   ", ",", " , ", "\t,", "\t", " \t ", "\t[\t"]),
 )
 
 
@@ -379,7 +379,7 @@ def _mixed_lines():
         {"id": "Q2"},
         {"id": "Q42abc", "claims": claims},  # bad entity id: quarantined
     ]
-    framing = ["", ",", " , ", "\t,", "not json", '{"id": "Q9", "labels":']
+    framing = ["", ",", " , ", "\t,", "\t", " \t ", "\t[\t", "not json", '{"id": "Q9", "labels":']
     with open(FIXTURE) as f:
         fixture = f.read().splitlines()
     return ["[", *(json.dumps(e) + "," for e in entities), *framing, "]", *fixture]

@@ -142,8 +142,9 @@ def test_compaction_crash_between_drops_still_dedupes(spark, tmp_path):
 def test_crash_replay_duplicates_compact_to_rebuild_baseline(spark, tmp_path):
     """The at-least-once window can append the same doc's band rows twice
     (bit-identical); compact_admission_store restores store ≡ rebuild."""
+    from wd2sql_spark.operators.dedup import minhash_band_index
     from wd2sql_spark.sinks.lsh_store import (
-        append_to_lsh_store,
+        append_band_index,
         compact_admission_store,
     )
 
@@ -158,7 +159,7 @@ def test_crash_replay_duplicates_compact_to_rebuild_baseline(spark, tmp_path):
     dup = spark.createDataFrame(
         [d for d in DROPS[1] if d[0] == 5], "doc_id long, text string"
     )
-    append_to_lsh_store(dup, store)
+    append_band_index(minhash_band_index(dup), store)
 
     admitted = [(d, t) for drop in DROPS for d, t in drop if d in {1, 3, 5}]
     baseline_path = str(tmp_path / "rebuilt")

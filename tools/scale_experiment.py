@@ -568,7 +568,7 @@ def bench_admission(
 
     from wd2sql_spark.catalog import table
     from wd2sql_spark.operators.dedup import minhash_band_index
-    from wd2sql_spark.sinks.lsh_store import _layout, read_lsh_store
+    from wd2sql_spark.sinks.lsh_store import read_lsh_store
     from wd2sql_spark.streaming.admission import admission_sink
 
     d = os.path.join(OUT_ROOT, f"x{scale}docs")
@@ -613,9 +613,7 @@ def bench_admission(
         # store ≡ rebuild over the admitted set, at full size
         all_admitted = sorted(i for ids in admitted_log for i in ids)
         adm_df = spark.createDataFrame([(i,) for i in all_admitted], ["doc_id"])
-        rebuild = _layout(
-            minhash_band_index(docs.join(adm_df, "doc_id"))
-        )
+        rebuild = minhash_band_index(docs.join(adm_df, "doc_id"))
         stored = read_lsh_store(spark, store)
         t0 = time.perf_counter()
         extra = stored.exceptAll(rebuild.select(*stored.columns)).count()
@@ -664,7 +662,7 @@ def bench_probe_latency(
         incremental_index_probe,
         minhash_band_index,
     )
-    from wd2sql_spark.sinks.lsh_store import _layout, read_lsh_store
+    from wd2sql_spark.sinks.lsh_store import append_band_index, read_lsh_store
 
     # fixed delta from the BASE fixture (store-scale-independent)
     base_docs = table(spark, BASE, "documents").select("doc_id", "text")
@@ -691,9 +689,7 @@ def bench_probe_latency(
         if not os.path.exists(built):
             shutil.rmtree(store, ignore_errors=True)
             t0 = time.perf_counter()
-            _layout(minhash_band_index(docs)).write.mode("overwrite").partitionBy(
-                "band"
-            ).parquet(f"{store}/bands")
+            append_band_index(minhash_band_index(docs), store)
             build_s = time.perf_counter() - t0
             with open(built, "w") as fh:
                 fh.write("ok\n")

@@ -27,8 +27,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def file_key(*paths: str) -> tuple:
     """(path, mtime_ns, size) of each file: the memo key of a value read

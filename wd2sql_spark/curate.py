@@ -38,7 +38,7 @@ import json
 import os
 import sys
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -133,8 +133,8 @@ def curate(
     )
 
     # ONE write: hash-shard layout under split=/shard= directories
-    # (pure-function membership — the reproducible-ablation contract of
-    # sinks/shards.write_hash_shards), deterministic within-file order.
+    # (shard membership is a pure function of doc_id — the
+    # reproducible-ablation contract), deterministic within-file order.
     corpus_path = os.path.join(out_dir, "corpus")
     (
         final.repartition(n_shards, "split", "shard")
@@ -171,14 +171,6 @@ def curate(
     with open(os.path.join(out_dir, "manifest.json"), "w") as f:
         json.dump(manifest, f, indent=2)
     return manifest
-
-
-def read_split(spark: SparkSession, out_dir: str, split: str) -> DataFrame:
-    """Read one split back, partition-pruned to its directories."""
-    return (
-        spark.read.parquet(os.path.join(out_dir, "corpus"))
-        .filter(F.col("split") == split)
-    )
 
 
 def main(argv: list[str] | None = None) -> int:

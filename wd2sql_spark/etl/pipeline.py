@@ -36,7 +36,8 @@ definition). ``transform`` returns those projections lazily, and
   typed claim rows, quarantine rows) through one per-entity explode, and
   ONE write lands them partitioned by target ``table``. The 9 final
   tables are then partition-pruned, column-pruned projections of that
-  store — each rewrite reads only its own partition's columns. JSON
+  store — each rewrite reads only its own partition's columns — and the
+  store is deleted once they are written. JSON
   parse cost (the reference's simd_json) is paid once per line and once
   per claim payload, matching the reference's single-pass loop.
 - ``layout="store"``: the partitioned single write IS the output — every
@@ -98,8 +99,14 @@ def parse_entities(lines: DataFrame) -> DataFrame:
     the raw ``line``. The trailing comma needs no strip: ``from_json``
     stops after the first JSON value, so ``{...},`` parses like
     ``{...}``. Malformed lines survive as rows with ``_corrupt_record``
-    set — the job never aborts on bad input, matching main.rs:177-204."""
-    return lines.filter("trim(value) NOT IN ('', '[', ']')").selectExpr(
+    set — the job never aborts on bad input, matching main.rs:177-204.
+    Framing lines are recognised after trimming JSON's insignificant
+    whitespace (space, tab, CR; RFC 8259 §2), not only spaces. Spark's
+    trim with a character list walks the whole line to trim its right
+    end, so a line that opens an object — every entity line — skips it."""
+    return lines.filter(
+        "startswith(value, '{') OR trim(BOTH ' \\t\\r' FROM value) NOT IN ('', '[', ']')"
+    ).selectExpr(
         "value AS line",
         f"from_json(value, '{_ddl(S.ENTITY_SCHEMA)}', "
         f"map('mode', 'PERMISSIVE', 'columnNameOfCorruptRecord', '{S.CORRUPT_COL}')) AS e",
@@ -375,17 +382,29 @@ def wd2spark(
     by its access path). Under ``layout="tables"`` the 9 final tables are
     then partition-pruned + column-pruned projections of that store;
     parquet being columnar, each rewrite reads only its own partition's
-    live columns, never the superset.
+    live columns, never the superset. Once all 9 are written the store
+    (``out_path/_staged``) is deleted, so ``out_path`` holds exactly the
+    9 table directories.
     """
     if not staged:
         raise ValueError("staged=False was removed: every table is a projection of the one unified_rows pass")
     if layout not in ("tables", "store"):
         raise ValueError(f"layout must be 'tables' or 'store', got {layout!r}")
     rows = unified_rows(parse_entities(read_dump(spark, dump_path)))
-    store_p = out_path if layout == "store" else os.path.join(out_path, "_staged")
-    rows.write.mode(mode).partitionBy("table").parquet(store_p)
     if layout == "store":
+        rows.write.mode(mode).partitionBy("table").parquet(out_path)
         return {n: os.path.join(out_path, f"table={n}") for n in _FINAL_COLS}
+
+    # The intermediate store is deleted once the tables are written, so
+    # the refuse-existing-output guard checks out_path itself. Both go
+    # through the Hadoop FileSystem that writes them, so a non-local
+    # out_path works too.
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs = hpath(out_path).getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if mode in ("error", "errorifexists", "default") and fs.exists(hpath(out_path)):
+        raise FileExistsError(f"path {out_path} already exists")
+    store_p = os.path.join(out_path, "_staged")
+    rows.write.mode(mode).partitionBy("table").parquet(store_p)
 
     # Explicit schema: robust to an all-empty store and skips footer
     # inference; `table` resolves as the partition column.
@@ -405,4 +424,6 @@ def wd2spark(
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=len(_FINAL_COLS)) as pool:
-        return dict(pool.map(_rewrite, _FINAL_COLS))
+        paths = dict(pool.map(_rewrite, _FINAL_COLS))
+    fs.delete(hpath(store_p), True)
+    return paths

@@ -648,11 +648,6 @@ def simhash_sig(
     return simhash_from_shingles(doc_shingles(docs, n, text_col, id_col), bits)
 
 
-def simhash32(docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Legacy 32-bit form (unit-test surface)."""
-    return simhash_sig(docs, n, 32, text_col, id_col)
-
-
 def simhash_pairs(
     docs: DataFrame,
     max_hamming: int = 6,

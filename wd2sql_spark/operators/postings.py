@@ -3,14 +3,11 @@
 The retrieval class BM25 cannot express: EXACT phrase matching needs
 token positions, not term frequencies. The classic serving layout is the
 positional inverted index — term → [(doc, positions…)] — intersected on
-adjacent positions. Here:
+adjacent positions. Here the position relation is derived per query and
+intersected with joins:
 
 - :func:`doc_positions` — the narrow (doc_id, p, term) position relation
   (one posexplode over the scan).
-- :func:`build_postings` — the index relation (term, doc_id, positions
-  ARRAY, bucket): ONE (term, doc_id) exchange with map-side combine;
-  ``bucket = md5(term) % n`` is the partition key the materialized store
-  (sinks/postings_store.py) prunes on at serve time.
 - :func:`phrase_occurrences` — adjacency intersection: three legs of the
   position relation joined on (doc_id, p+i). Callers pre-filter the legs
   to the phrase terms, so the joined relations are term-selectivity-sized,
@@ -23,8 +20,6 @@ battery's BM25/ANN retrieval family with the positional member.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -34,27 +29,6 @@ def doc_positions(docs: DataFrame) -> DataFrame:
     return docs.select(
         "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("p0", "term")
     ).select("doc_id", (F.col("p0") + 1).alias("p"), "term")
-
-
-def build_postings(docs: DataFrame, buckets: int = 64) -> DataFrame:
-    """(term, doc_id, positions, bucket): the positional inverted index as
-    a relation. One (term, doc_id) exchange; positions arrive sorted so
-    adjacency checks at serve time are order-independent of the build."""
-    from wd2sql_spark.queries.llm_sampling import md5_bucket
-
-    return (
-        doc_positions(docs)
-        .groupBy("term", "doc_id")
-        .agg(F.array_sort(F.collect_list("p")).alias("positions"))
-        .withColumn("bucket", md5_bucket(F.col("term"), buckets))
-    )
-
-
-def term_bucket(term: str, buckets: int = 64) -> int:
-    """Python twin of llm_sampling.md5_bucket for driver-side partition
-    pruning: int(first 8 md5 hex digits) % buckets — identical to the
-    Spark/DuckDB expression (pinned by tests/test_postings_store.py)."""
-    return int(hashlib.md5(term.encode()).hexdigest()[:8], 16) % buckets
 
 
 def phrase_occurrences(

@@ -863,7 +863,7 @@ def pq_serving_index(
     tests/test_plan_audit.py::test_pq_serving_never_reads_corpus_vectors).
     Build scans the corpus once per (session, cache_key); at 100 TB this
     relation is the written parquet table queries scan instead of the
-    vectors (the ivf_store/postings_store convention). Without a
+    vectors. Without a
     ``cache_key`` (no identity for this corpus) every call builds fresh:
     a shared sentinel key would hand a SECOND corpus in the same session
     the FIRST corpus's index."""

@@ -221,11 +221,10 @@ def retrieval_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 1-row TakeOrdered; the phrase itself broadcasts onto the position
     relation, whose three legs are TERM-FILTERED before the adjacency
     joins — the joins hash on (doc_id, position±i) and their inputs are
-    term-selectivity-sized, never corpus-sized. At 100 TB the legs read
-    from the materialized postings store (sinks/postings_store.py,
-    partitioned by md5(term) bucket) so the scan itself prunes to the
-    phrase's ≤3 partitions; this in-memory form and the store form return
-    bit-identical rows (tests/test_postings_store.py)."""
+    term-selectivity-sized, never corpus-sized. At 100 TB the legs would
+    read a postings table partitioned by md5(term) bucket, so the scan
+    itself prunes to the phrase's ≤3 partitions; no such store is built
+    here."""
     from wd2sql_spark.operators.postings import doc_positions, phrase_occurrences
 
     d = table(spark, sf_dir, "documents")

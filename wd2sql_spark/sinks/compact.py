@@ -1,6 +1,6 @@
-"""Compaction maintenance for the appendable parquet stores.
+"""Compaction maintenance for the appendable LSH band store.
 
-Admission appends (lsh_store, postings_store) are the right write path —
+Admission appends (sinks/lsh_store.py) are the right write path —
 the corpus is never re-hashed — but every append adds files per touched
 partition, and appended files carry their OWN sort ranges, so over many
 drops a partition accumulates small files with overlapping min/max
@@ -24,10 +24,10 @@ beside the live dataset, and swap.
   exists. The ``.old`` generation is therefore kept until the NEW live
   dataset has been verified readable (a real ``spark.read`` + count),
   only then deleted;
-- content equality with the pre-compaction store is the maintenance
-  contract (pinned by tests/test_lsh_store.py /
-  tests/test_postings_store.py), bit-for-bit, because compaction only
-  re-arranges rows.
+- a layout that only re-arranges rows preserves the content bit-for-bit
+  (pinned by tests/test_compact_recovery.py); the LSH store's layout
+  also drops the duplicate rows a replayed append leaves, which on a
+  store without replays changes nothing (tests/test_lsh_store.py).
 """
 
 from __future__ import annotations

@@ -15,20 +15,18 @@ Layout:
 
 Admission maintenance is an APPEND: a drop that passes dedup is banded
 (one narrow pass over the delta only) and appended to the same layout —
-``append_to_lsh_store`` — after which the store equals a full rebuild
+``append_band_index`` — after which the store equals a full rebuild
 over corpus+delta bit-for-bit (pinned by tests/test_lsh_store.py). The
-corpus is never re-hashed.
+corpus is never re-hashed. A probe is ``incremental_index_probe`` over
+``read_lsh_store`` and the delta's band index, as streaming/admission.py
+runs it; ``compact_admission_store`` is the periodic rewrite.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from wd2sql_spark.operators.dedup import (
-    incremental_index_probe,
-    minhash_band_index,
-)
+from wd2sql_spark.operators.dedup import minhash_band_index
 
 
 def _layout(idx: DataFrame) -> DataFrame:
@@ -43,23 +41,21 @@ def _layout(idx: DataFrame) -> DataFrame:
     )
 
 
+def append_band_index(idx: DataFrame, path: str) -> None:
+    """Append an already-banded index (``minhash_band_index`` rows) to
+    the store at ``path``, creating it on first call. The one writer of
+    the band layout: an admission drop appends its survivors' rows here,
+    so store+append ≡ full rebuild over the union."""
+    _layout(idx).write.mode("append").partitionBy("band").parquet(f"{path}/bands")
+
+
 def write_lsh_store(
     docs: DataFrame, path: str, k: int = 16, band_size: int = 4, n: int = 3
 ) -> None:
     """Build the band index from ``docs`` (one tokenize→shingle→minhash
-    pass) and write it as the partitioned store."""
-    idx = minhash_band_index(docs, k=k, band_size=band_size, n=n)
-    _layout(idx).write.partitionBy("band").parquet(f"{path}/bands")
-
-
-def append_to_lsh_store(
-    delta_docs: DataFrame, path: str, k: int = 16, band_size: int = 4, n: int = 3
-) -> None:
-    """Admit a drop: band the DELTA ONLY and append its rows to the
-    store. Same arithmetic as the full build, so store+append ≡ full
-    rebuild over the union."""
-    idx = minhash_band_index(delta_docs, k=k, band_size=band_size, n=n)
-    _layout(idx).write.mode("append").partitionBy("band").parquet(f"{path}/bands")
+    pass) and write it as the store at a new ``path``: the rebuild
+    baseline an admitted store is compared against."""
+    append_band_index(minhash_band_index(docs, k=k, band_size=band_size, n=n), path)
 
 
 def read_lsh_store(spark: SparkSession, path: str) -> DataFrame:
@@ -80,29 +76,13 @@ def read_lsh_store(spark: SparkSession, path: str) -> DataFrame:
     return raw.select("doc_id", "band", "band_key", *mh_cols)
 
 
-def probe_lsh_store(
-    spark: SparkSession,
-    path: str,
-    delta_docs: DataFrame,
-    k: int = 16,
-    band_size: int = 4,
-    n: int = 3,
-    min_est_jaccard: float = 0.0,
-) -> DataFrame:
-    """Near-dup matches of a drop against the persisted store — only the
-    delta is hashed; both signatures arrive on the joined row so the
-    estimate is row-local (same probe as the in-memory path, so results
-    are bit-identical to incremental_minhash_matches on the same data)."""
-    delta_idx = minhash_band_index(delta_docs, k=k, band_size=band_size, n=n)
-    return incremental_index_probe(
-        read_lsh_store(spark, path), delta_idx, k=k, min_est_jaccard=min_est_jaccard
-    )
-
-
 def compact_admission_store(spark: SparkSession, path: str) -> None:
     """Maintenance for a store grown by the streaming ADMISSION loop
-    (streaming/admission.py): same canonical rewrite as
-    :func:`compact_lsh_store`, plus a full-row ``dropDuplicates``.
+    (streaming/admission.py): rewrite the band dataset through the
+    canonical layout (range-spread + within-file band_key sort) with a
+    full-row ``dropDuplicates``, and swap atomically. File counts shrink
+    back to one write generation and per-file band_key ranges become
+    tight again, so probe-time row-group skipping recovers.
 
     The admission loop's at-least-once window (crash after the append
     commits but before the streaming checkpoint does) can leave the SAME
@@ -112,23 +92,12 @@ def compact_admission_store(spark: SparkSession, path: str) -> None:
     rebuild baseline and carries dead weight. This compaction restores
     store ≡ rebuild-over-admitted exactly
     (tests/test_streaming_admission.py pins crash-replay → compact →
-    baseline). Unlike ``compact_lsh_store`` this intentionally does NOT
-    preserve content bit-for-bit — removing replay duplicates is the
-    point."""
+    baseline). Every band row carries its ``doc_id``, so on a store
+    without replayed appends the ``dropDuplicates`` removes nothing and
+    the content is unchanged (tests/test_lsh_store.py)."""
     from wd2sql_spark.sinks.compact import compact_dataset
 
     compact_dataset(
         spark, f"{path}/bands", lambda df: _layout(df.dropDuplicates()), ["band"]
     )
 
-
-def compact_lsh_store(spark: SparkSession, path: str) -> None:
-    """Periodic maintenance after many admission appends: rewrite the
-    band dataset through the canonical layout (range-spread + within-file
-    band_key sort) and swap atomically — file counts shrink back to one
-    write generation and per-file band_key ranges become tight again, so
-    probe-time row-group skipping recovers. Content is bit-identical
-    (pinned by tests/test_lsh_store.py)."""
-    from wd2sql_spark.sinks.compact import compact_dataset
-
-    compact_dataset(spark, f"{path}/bands", _layout, ["band"])

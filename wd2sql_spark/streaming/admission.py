@@ -15,8 +15,8 @@ per micro-batch of documents,
    keeping the lowest doc_id of each component — deterministic and
    distributed, no sequential scan over the batch;
 3. append the survivors' band rows to the store
-   (``append_to_lsh_store`` semantics: store+append ≡ full rebuild over
-   the admitted set — the property tests/test_lsh_store.py pins).
+   (``append_band_index``: store+append ≡ full rebuild over the admitted
+   set — the property tests/test_lsh_store.py pins).
 
 Ordering/determinism contract: the admitted set is a pure function of
 the SEQUENCE of batches (micro-batch order is the stream's order; within
@@ -64,9 +64,7 @@ def admit_batch(
         minhash_band_index,
     )
     from wd2sql_spark.sinks.compact import recover_dataset
-    from wd2sql_spark.sinks.lsh_store import read_lsh_store
-
-    from wd2sql_spark.sinks.lsh_store import _layout  # canonical band layout
+    from wd2sql_spark.sinks.lsh_store import append_band_index, read_lsh_store
 
     # Heal an interrupted compaction swap BEFORE deciding "first drop":
     # a crash between compact's two renames leaves only bands.old, and
@@ -109,9 +107,7 @@ def admit_batch(
             int(r[0]) for r in admitted_idx.select("doc_id").distinct().collect()
         )
         if admitted:
-            _layout(admitted_idx).write.mode("append").partitionBy("band").parquet(
-                f"{store_path}/bands"
-            )
+            append_band_index(admitted_idx, store_path)
         admitted_idx.unpersist()
         return admitted
     finally:

@@ -27,9 +27,9 @@ directory. Scale shape: the micro-batch side is a partial aggregate
 (map-side combine shrinks it to |keys touched| rows before any exchange);
 the merge is one full-outer join keyed identically on both sides; the
 state rewrite is O(|keys|), not O(events). At 100 TB of accumulated keys
-the state generation would be written bucketed by key so the per-batch
-join is co-located (sinks/bucketed.py's shuffle-once-then-join-free
-property).
+the state generation would be written bucketed by key (Spark's
+``bucketBy``) so the per-batch join is co-located: one shuffle at write
+time, none at join time.
 """
 
 from __future__ import annotations
