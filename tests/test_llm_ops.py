@@ -48,7 +48,9 @@ def test_ivf_topk_recall_vs_brute_force(spark, emb):
     }
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in S.ivf_topk(emb, queries, k=5, n_centroids=16, nprobe=4).collect()
+        for r in S.ivf_topk(
+            emb, query_pred=F.col("vec_id") < 10, k=5, n_centroids=16, nprobe=4
+        ).collect()
     }
     recall = len(brute & approx) / len(brute)
     # nprobe/n_centroids = 1/4 of the corpus searched → random probing
@@ -64,7 +66,7 @@ def test_pq_codes_are_exact_on_codebook_vectors(spark, emb):
     argmin with trained codebooks (r5): the chosen j may be lower than
     the row's own index only if two trained centroids coincide, so the
     assertion is on reconstruction equality, not index identity."""
-    cb = S.pq_codebook(emb, n_sub=8, ks=16, dim=64)
+    _, cb = S.train_codebooks(emb, None, n_sub=8, ks=16, dim=64)
     rows = [
         (j, [x for m in range(8) for x in cb[m][j][1]]) for j in range(16)
     ]
@@ -103,7 +105,7 @@ def test_pq_topk_recall_and_self_reconstruction(spark, emb):
 
 
 def test_ivf_assignment_is_total_and_valid(spark, emb):
-    cents = S.collect_centroids(emb, 16)
+    cents, _ = S.train_codebooks(emb, None, n_centroids=16)
     assigned = emb.select(S.ivf_assign(F.col("embedding"), cents).alias("cid"))
     n_bad = assigned.filter(~F.col("cid").between(0, 15)).count()
     assert n_bad == 0
@@ -444,3 +446,35 @@ def test_rowlocal_band_index_equals_aggregate_form(spark, docs):
     a = sorted(map(tuple, D.minhash_band_index(docs).collect()))
     b = sorted(map(tuple, D.minhash_band_index_rowlocal(docs).collect()))
     assert a == b and a
+
+
+# Jobs the six ANN queries below launch while their plans are built, in
+# one fresh session at sf0.001: the first read of the embeddings file, one
+# codebook training that every index shares, and one checkpoint per
+# index. Training each index's codebooks separately cost 239 jobs at
+# sf0.01 (73 per PQ index).
+ANN_COLD_BUILD_JOBS = 14
+
+
+def test_ann_family_trains_once_per_cold_session(spark):
+    from wd2sql_spark.queries.registry import load_all_modules
+
+    registry = load_all_modules()
+    fresh = spark.newSession()
+    sc = fresh.sparkContext
+    group = "ann-cold-build"
+    sc.setJobGroup(group, "building the ANN query plans")
+    try:
+        for name in (
+            "sim_ivf_topk",
+            "sim_ivf_recall_audit",
+            "sim_pq_topk",
+            "sim_pq_recall_audit",
+            "sim_pq_serving_topk",
+            "sim_ivfpq_topk",
+        ):
+            registry[name].fn(fresh, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n <= ANN_COLD_BUILD_JOBS, n

@@ -1,13 +1,15 @@
-"""Property test for the shared integer-Lloyd kernel (operators/kmeans.py).
+"""Property tests for the shared integer-Lloyd kernel (operators/kmeans.py).
 
-The ANN codebooks and the k-means battery query both ride this kernel,
-and every downstream oracle assumes its determinism contract: integer
+The ANN codebooks (operators/similarity.train_codebooks, one chain keyed
+by book) and the k-means battery queries all ride this kernel, and
+every downstream oracle assumes its determinism contract: integer
 squared-distance argmin with lowest-cid tie-breaks, half-up integer-mean
 updates over a non-negative domain, and emptied clusters carrying their
 previous centroid. A pure-Python replay of that contract on
 hypothesis-generated corpora must match the Spark result exactly —
 independent of DuckDB, so a bug that broke BOTH engine twins the same
-way would still be caught here.
+way would still be caught here. The keyed form must equal one un-keyed
+run per key.
 """
 
 from __future__ import annotations
@@ -83,3 +85,55 @@ def test_lloyd_matches_python_reference(_spark, data, k, iters):
     }
     want = _py_lloyd(vecs, seeds, iters)
     assert got == want
+
+
+@st.composite
+def _books(draw):
+    """1-3 books, each with its own width, vectors and seeds. Seeds are
+    drawn independently of the vectors, up to 4 of them over as few as
+    one vector, so clusters are emptied and must keep their seed."""
+    books = []
+    for _ in range(draw(st.integers(min_value=1, max_value=3))):
+        width = draw(st.integers(min_value=1, max_value=5))
+        vec = st.lists(
+            st.integers(min_value=0, max_value=2_000_000), min_size=width, max_size=width
+        )
+        vecs = draw(st.lists(vec, min_size=1, max_size=6))
+        seeds = draw(st.lists(vec, min_size=1, max_size=4))
+        books.append(({i: v for i, v in enumerate(vecs)}, {i: v for i, v in enumerate(seeds)}))
+    return books
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(books=_books(), iters=st.integers(min_value=1, max_value=2))
+def test_keyed_lloyd_equals_per_book_runs(_spark, books, iters):
+    spark = _spark
+
+    def centroids(df):
+        return {int(r["cid"]): [int(x) for x in r["c"]] for r in df.collect()}
+
+    vdf = spark.createDataFrame(
+        [(b, i, v) for b, (vecs, _) in enumerate(books) for i, v in vecs.items()],
+        "book int, vec_id long, iv array<bigint>",
+    )
+    sdf = spark.createDataFrame(
+        [(b, i, c) for b, (_, seeds) in enumerate(books) for i, c in seeds.items()],
+        "book int, cid long, c array<bigint>",
+    )
+    keyed: dict[int, dict[int, list[int]]] = {}
+    for r in lloyd_centroids(vdf, sdf, iters, key="book").collect():
+        keyed.setdefault(r["book"], {})[int(r["cid"])] = [int(x) for x in r["c"]]
+
+    for b, (vecs, seeds) in enumerate(books):
+        alone = centroids(
+            lloyd_centroids(
+                vdf.filter(vdf.book == b).drop("book"),
+                sdf.filter(sdf.book == b).drop("book"),
+                iters,
+            )
+        )
+        assert keyed[b] == alone == _py_lloyd(vecs, seeds, iters), b

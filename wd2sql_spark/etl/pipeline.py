@@ -406,9 +406,17 @@ def wd2spark(
     store_p = os.path.join(out_path, "_staged")
     rows.write.mode(mode).partitionBy("table").parquet(store_p)
 
-    # Explicit schema: robust to an all-empty store and skips footer
-    # inference; `table` resolves as the partition column.
-    store = spark.read.schema(rows.schema).parquet(store_p)
+    # Read the store through its `table=*` partition directories, with
+    # basePath so `table` still resolves as the partition column: Spark
+    # treats the `_staged` root itself as a hidden path and logs "All
+    # paths were ignored" when handed it. Explicit schema: skips footer
+    # inference; an all-empty store has no partition to read.
+    parts = [str(st.getPath()) for st in fs.globStatus(hpath(store_p, "table=*"))]
+    store = (
+        spark.read.schema(rows.schema).option("basePath", store_p).parquet(*parts)
+        if parts
+        else spark.createDataFrame([], rows.schema)
+    )
 
     # The 9 rewrites are independent partition-pruned projections —
     # submit them CONCURRENTLY (Spark's scheduler accepts jobs from

@@ -24,6 +24,13 @@ from wd2sql_spark.operators.dedup import HEX_DIGITS
 from wd2sql_spark.session_cache import memo
 
 
+def _shape_key(cache_key: tuple | None, *shape) -> tuple | None:
+    """Memo key of a value derived from the corpus ``cache_key`` names
+    with these shape arguments; ``None`` (no identity: build fresh) stays
+    ``None``."""
+    return None if cache_key is None else (cache_key, *shape)
+
+
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ as a deterministic left-fold in array order (bit-identical
     to a sequential SQL loop — verified against DuckDB)."""
@@ -188,58 +195,88 @@ def lsh_topk(
 CODEBOOK_ITERS = 2
 
 
-def collect_centroids(
+def train_codebooks(
     corpus: DataFrame,
-    n_centroids: int,
+    cache_key: tuple | None,
+    n_centroids: int = 16,
+    n_sub: int = 8,
+    ks: int = 16,
+    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    iters: int = CODEBOOK_ITERS,
-) -> list[tuple[int, list[float]]]:
-    """K-MEANS-TRAINED IVF codebook (VERDICT r4 task #2), fetched to the
-    driver. The codebook is tiny (k·dim floats) — inlining it as plan
-    literals is the IVF analog of broadcasting, but cheaper: assignment
-    becomes a narrow map with NO join and NO shuffle.
+) -> tuple[list[tuple[int, list[float]]], list[list[tuple[int, list[float]]]]]:
+    """K-MEANS-TRAINED codebooks of every ANN index, fetched to the
+    driver: ``(ivf, pq)``. ``ivf`` is the IVF codebook, ``n_centroids``
+    (cid, centroid) pairs over the full vector with cid = the seed
+    vec_id. ``pq`` is ``n_sub`` lists of (j, subvector), one per
+    product-quantization subspace with j = 0..ks−1 in seed order. Each
+    subspace adapts to ITS OWN marginal distribution, the actual PQ
+    training recipe (Jégou et al. 2011 §II.C trains one k-means per
+    subquantizer; a full-dim codebook sliced per subspace measured WORSE
+    recall than untrained at sf0.1 — 0.20 → 0.07).
 
-    Training is ``iters`` integer-exact Lloyd rounds (the shared kernel in
-    operators/kmeans.py: quantize to round(x·10⁶)+OFFSET, broadcast
-    assignment with lowest-cid tie-breaks, half-up integer-mean updates,
-    emptied clusters keep their previous centroid), seeded from the
-    ``n_centroids`` lowest-id vectors. Every step is exact integer
-    arithmetic, so a DuckDB oracle re-derives the SAME codebook
-    bit-for-bit (queries/llm_similarity.TRAINED_CENT_CTES) — which is what
-    keeps the downstream IVF/PQ oracles hash-exact while the recall
-    audits now certify a data-adapted codebook instead of a lowest-id toy.
-    The final dequantize (c − OFFSET)/10⁶ is one correctly-rounded double
-    division in Python, DuckDB, and Spark alike.
+    All 1 + n_sub codebooks are one Lloyd chain keyed by book (book 0 is
+    the full vector, book m+1 is subspace m's slice): each round is one
+    broadcast-assign and one (book, cid, dim) aggregate for every book,
+    and one ``collect`` fetches them all. Training is ``CODEBOOK_ITERS``
+    integer-exact rounds of the shared kernel (operators/kmeans.py:
+    quantize to round(x·10⁶)+OFFSET, lowest-cid tie-breaks, half-up
+    integer-mean updates, emptied clusters keep their previous centroid),
+    seeded from each book's ``n_centroids`` resp. ``ks`` lowest-id
+    vectors — by rank, NOT ``id < n``, since ids need not be dense from
+    0. Every step is exact integer arithmetic, so the DuckDB twins
+    re-derive the same codebooks bit-for-bit
+    (queries/llm_similarity.TRAINED_CENT_CTES / TRAINED_PQ_CTES), which
+    keeps the IVF/PQ oracles hash-exact. The final dequantize
+    (c − OFFSET)/10⁶ is one correctly-rounded double division in Python,
+    DuckDB, and Spark alike. At 100 TB you train on a sample — the
+    mechanics are identical.
 
-    The seeds are selected with orderBy + limit, NOT ``id < n``: ids need
-    not be dense from 0 (an offset/sparse corpus would silently yield an
-    empty codebook and every vector would assign to cid -1). Seed cids
-    (the seed vec_ids) stay the cluster keys across rounds. Cost: one
-    broadcast-assign (zero shuffle) + one (cid, dim) aggregate per round,
-    independent of corpus size; at 100 TB you train on a sample — the
-    mechanics are identical."""
-    from wd2sql_spark.operators.kmeans import (
-        OFFSET,
-        SCALE,
-        iv_quantize,
-        lloyd_centroids,
-    )
+    The codebooks are memoized per (session, ``cache_key`` + shape), so
+    every index over one corpus trains once; ``cache_key=None`` trains
+    fresh."""
 
-    vecs = corpus.select(
-        F.col(id_col).alias("vec_id"), iv_quantize(F.col(vec_col)).alias("iv")
+    def build():
+        from wd2sql_spark.operators.kmeans import (
+            OFFSET,
+            SCALE,
+            iv_quantize,
+            lloyd_centroids,
+        )
+
+        sub = dim // n_sub
+        full = corpus.select(
+            F.col(id_col).alias("vec_id"), iv_quantize(F.col(vec_col)).alias("iv")
+        )
+        books = F.posexplode(
+            F.array("iv", *[F.slice("iv", m * sub + 1, sub) for m in range(n_sub)])
+        ).alias("book", "iv")
+        vecs = full.select("vec_id", books)
+        seeds = (
+            full.orderBy("vec_id")
+            .limit(max(n_centroids, ks))
+            .select("vec_id", books)
+            .withColumn("rn", F.row_number().over(Window.partitionBy("book").orderBy("vec_id")))
+            .filter(F.col("rn") <= F.when(F.col("book") == 0, n_centroids).otherwise(ks))
+            .select("book", F.col("vec_id").alias("cid"), F.col("iv").alias("c"))
+        )
+        rows = lloyd_centroids(vecs, seeds, CODEBOOK_ITERS, key="book").collect()
+        if not rows:
+            raise ValueError("train_codebooks: corpus is empty, no codebook")
+        trained: list[list[tuple[int, list[float]]]] = [[] for _ in range(n_sub + 1)]
+        for r in sorted(rows, key=lambda r: (r["book"], r["cid"])):
+            trained[r["book"]].append(
+                (int(r["cid"]), [(int(x) - OFFSET) / SCALE for x in r["c"]])
+            )
+        pq = [[(j, v) for j, (_, v) in enumerate(book)] for book in trained[1:]]
+        return trained[0], pq
+
+    return memo(
+        corpus.sparkSession,
+        "similarity.codebooks",
+        _shape_key(cache_key, n_centroids, n_sub, ks, dim, id_col, vec_col),
+        build,
     )
-    seeds = (
-        vecs.orderBy("vec_id")
-        .limit(n_centroids)
-        .select(F.col("vec_id").alias("cid"), F.col("iv").alias("c"))
-    )
-    rows = lloyd_centroids(vecs, seeds, iters).orderBy("cid").collect()
-    if not rows:
-        raise ValueError("collect_centroids: corpus is empty, no codebook")
-    return [
-        (int(r["cid"]), [(int(x) - OFFSET) / SCALE for x in r["c"]]) for r in rows
-    ]
 
 
 def _centroid_struct_array(centroids: list[tuple[int, list[float]]]) -> Column:
@@ -272,37 +309,8 @@ def ivf_assign(vec: Column, centroids: list[tuple[int, list[float]]]) -> Column:
     return -F.array_max(scored)["negcid"]
 
 
-def _scored_base(
-    corpus: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """(id, cv, cn, scores, cid): each vector with its norm, its
-    per-centroid cosine array, and the argmax list id. The ONE definition
-    shared by the cached index and the inline predicate path, so the
-    "bit-identical either way" claim is structural, not maintained by
-    hand."""
-    scored_arr = F.transform(
-        _centroid_struct_array(centroids),
-        lambda cc: F.struct(
-            cosine(F.col("cv"), cc["cv"], na=F.col("cn")).alias("score"),
-            (-cc["cid"]).alias("negcid"),
-        ),
-    )
-    return (
-        corpus.select(
-            F.col(id_col),
-            F.col(vec_col).alias("cv"),
-            l2_norm(F.col(vec_col)).alias("cn"),
-        )
-        .withColumn("scores", scored_arr)
-        .withColumn("cid", -F.array_max(F.col("scores"))["negcid"])
-    )
-
-
 # Per-session IVF index memo (session_cache.memo). The value holds the
-# codebook plus the assigned+scored corpus as a localCheckpoint: the
+# assigned+scored corpus as a localCheckpoint: the
 # checkpoint truncates the plan to a LogicalRDD, so later invocations
 # skip re-analyzing the ~n_centroids·dim inlined codebook literals
 # (0.5-1 s of driver time per plan) AND skip re-scoring the corpus. This is the moral of IVF — the
@@ -318,38 +326,55 @@ def _scored_base(
 
 def ivf_index(
     corpus: DataFrame,
-    cache_key: tuple,
+    cache_key: tuple | None,
     n_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> tuple[list[tuple[int, list[float]]], DataFrame]:
-    """Codebook + assigned/scored corpus relation for :func:`ivf_topk`'s
-    predicate form, built once per (session, cache_key) and reused.
-    Bit-identical to building it inline — the cache only changes WHEN the
-    same deterministic plan runs."""
+) -> DataFrame:
+    """(id, cv, cn, scores, cid) for :func:`ivf_topk`: each vector with
+    its norm, its per-centroid cosine array, and the argmax list id,
+    built once per (session, cache_key) and reused; built fresh without
+    a ``cache_key``. The cache only changes WHEN the same deterministic
+    plan runs."""
 
-    def build() -> tuple[list[tuple[int, list[float]]], DataFrame]:
-        centroids = collect_centroids(corpus, n_centroids, id_col, vec_col)
-        base = _scored_base(corpus, centroids, id_col, vec_col).localCheckpoint(eager=True)
-        return centroids, base
+    def build() -> DataFrame:
+        centroids, _ = train_codebooks(
+            corpus, cache_key, n_centroids, id_col=id_col, vec_col=vec_col
+        )
+        scored_arr = F.transform(
+            _centroid_struct_array(centroids),
+            lambda cc: F.struct(
+                cosine(F.col("cv"), cc["cv"], na=F.col("cn")).alias("score"),
+                (-cc["cid"]).alias("negcid"),
+            ),
+        )
+        return (
+            corpus.select(
+                F.col(id_col),
+                F.col(vec_col).alias("cv"),
+                l2_norm(F.col(vec_col)).alias("cn"),
+            )
+            .withColumn("scores", scored_arr)
+            .withColumn("cid", -F.array_max(F.col("scores"))["negcid"])
+            .localCheckpoint(eager=True)
+        )
 
     return memo(
         corpus.sparkSession,
         "similarity.ivf_index",
-        (cache_key, n_centroids, id_col, vec_col),
+        _shape_key(cache_key, n_centroids, id_col, vec_col),
         build,
     )
 
 
 def ivf_topk(
     corpus: DataFrame,
-    queries: DataFrame | None = None,
+    query_pred: Column,
     k: int = 5,
     n_centroids: int = 16,
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_pred: Column | None = None,
     cache_key: tuple | None = None,
 ) -> DataFrame:
     """Approximate top-k via an inverted-file index (IVF): corpus vectors
@@ -360,78 +385,32 @@ def ivf_topk(
     scan. Output shape matches :func:`brute_force_topk`; self-matches
     excluded.
 
-    Pass EITHER ``queries`` (an arbitrary query DataFrame) or
-    ``query_pred`` (a predicate selecting query rows out of the corpus).
-    The predicate form computes the per-centroid score array ONCE on the
-    corpus scan and derives both the inverted lists (argmax) and the
-    query probes (explode + rank) from it — one codebook literal in the
-    plan instead of two, and the per-vector norm is computed once instead
-    of once per centroid. Scores are the same IEEE ops either way, so
-    results are bit-identical between the two forms.
+    ``query_pred`` selects the query rows out of the corpus; it may
+    reference only ``id_col`` (the index relation keeps the id under its
+    original name; the vector is renamed). The per-centroid score array
+    is computed ONCE on the corpus scan (:func:`ivf_index`) and both the
+    inverted lists (argmax) and the query probes (explode + rank) derive
+    from it — one codebook literal in the plan, and the per-vector norm
+    computed once instead of once per centroid.
     """
-    if (queries is None) == (query_pred is None):
-        raise ValueError("ivf_topk: pass exactly one of queries / query_pred")
-    if query_pred is not None:
-        # ``query_pred`` may reference only ``id_col`` (the index relation
-        # keeps the id under its original name; the vector is renamed).
-        if cache_key is not None:
-            _, base = ivf_index(corpus, cache_key, n_centroids, id_col, vec_col)
-        else:
-            centroids = collect_centroids(corpus, n_centroids, id_col, vec_col)
-            base = _scored_base(corpus, centroids, id_col, vec_col)
-        c = base.select(
-            F.col(id_col).alias("neighbor_id"), "cv", "cn", "cid"
+    base = ivf_index(corpus, cache_key, n_centroids, id_col, vec_col)
+    c = base.select(F.col(id_col).alias("neighbor_id"), "cv", "cn", "cid")
+    # Top-nprobe of the 16 scores is row-local: a DESCENDING struct
+    # sort orders by score desc then negcid desc (= cid ASC — the
+    # exact ROW_NUMBER tie-break), so slice + explode replaces the
+    # rank window and the probe side needs no shuffle at all.
+    probes = (
+        base.filter(query_pred)
+        .select(
+            F.col(id_col).alias("query_id"),
+            F.col("cv").alias("qv"),
+            F.col("cn").alias("qn"),
+            F.explode(
+                F.slice(F.sort_array(F.col("scores"), asc=False), 1, nprobe)
+            ).alias("s"),
         )
-        # Top-nprobe of the 16 scores is row-local: a DESCENDING struct
-        # sort orders by score desc then negcid desc (= cid ASC — the
-        # exact ROW_NUMBER tie-break), so slice + explode replaces the
-        # rank window and the probe side needs no shuffle at all.
-        probes = (
-            base.filter(query_pred)
-            .select(
-                F.col(id_col).alias("query_id"),
-                F.col("cv").alias("qv"),
-                F.col("cn").alias("qn"),
-                F.explode(
-                    F.slice(F.sort_array(F.col("scores"), asc=False), 1, nprobe)
-                ).alias("s"),
-            )
-            .select("query_id", "qv", "qn", (-F.col("s.negcid")).alias("cid"))
-        )
-    else:
-        centroids = collect_centroids(corpus, n_centroids, id_col, vec_col)
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cv"),
-            l2_norm(F.col(vec_col)).alias("cn"),
-            ivf_assign(F.col(vec_col), centroids).alias("cid"),
-        )
-        # Probe lists: explode the codebook per query (n_queries ×
-        # n_centroids rows — trivially small), rank by the same cosine,
-        # keep nprobe.
-        q_scored = (
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("qv"),
-                l2_norm(F.col(vec_col)).alias("qn"),
-            )
-            .select(
-                "query_id", "qv", "qn", F.explode(_centroid_struct_array(centroids)).alias("c")
-            )
-            .select(
-                "query_id",
-                "qv",
-                "qn",
-                F.col("c.cid").alias("cid"),
-                cosine(F.col("qv"), F.col("c.cv"), na=F.col("qn")).alias("cscore"),
-            )
-        )
-        pw = Window.partitionBy("query_id").orderBy(F.col("cscore").desc(), F.col("cid"))
-        probes = (
-            q_scored.withColumn("rn", F.row_number().over(pw))
-            .filter(F.col("rn") <= nprobe)
-            .select("query_id", "qv", "qn", "cid")
-        )
+        .select("query_id", "qv", "qn", (-F.col("s.negcid")).alias("cid"))
+    )
     scored = (
         F.broadcast(probes)
         .join(c, "cid")
@@ -531,7 +510,7 @@ def quantized_topk(
     c = memo(
         corpus.sparkSession,
         "similarity.quantized_topk.corpus",
-        (cache_key, id_col, vec_col) if cache_key is not None else None,
+        _shape_key(cache_key, id_col, vec_col),
         side(corpus, "neighbor_id", "cv", "cq", "cqn", "cn").persist,
     )
     qdot = int8_dot(F.col("qq"), F.col("cq"))
@@ -551,64 +530,6 @@ def quantized_topk(
     return ranked_topk(
         scored, "q_cosine", k, ["query_id", "neighbor_id", "q_cosine", "exact_cosine", "rank"]
     )
-
-
-def pq_codebook(
-    corpus: DataFrame,
-    n_sub: int = 8,
-    ks: int = 16,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    iters: int = CODEBOOK_ITERS,
-) -> list[list[tuple[int, list[float]]]]:
-    """PER-SUBSPACE-TRAINED product-quantization codebook (VERDICT r4
-    task #2): subspace ``m``'s centroids are ``iters`` integer-exact Lloyd
-    rounds over the corpus's m-th subvectors — each subspace adapts to
-    ITS OWN marginal distribution, which is the actual PQ training recipe
-    (Jégou et al. 2011 §II.C trains one k-means per subquantizer; a
-    full-dim codebook sliced per subspace measured WORSE recall than
-    untrained at sf0.1 — 0.20 → 0.07 — because the slices inherit the
-    full-dim cluster structure instead of the subspace's).
-
-    Same deterministic kernel as :func:`collect_centroids`
-    (operators/kmeans.py), run once per subspace on the sliced quantized
-    vectors, seeds = the ks lowest-id subvectors, j = 0..ks−1 in seed-cid
-    order. The DuckDB twin re-derives all n_sub chains with one
-    m-partitioned CTE chain (queries/llm_similarity.TRAINED_PQ_CTES).
-    Returns ``n_sub`` lists of (j, subvector). Cost: n_sub independent
-    small trainings (each one broadcast-assign + one (cid,dim) aggregate
-    per round) — at 100 TB each runs on a sample, embarrassingly
-    parallel."""
-    from wd2sql_spark.operators.kmeans import (
-        OFFSET,
-        SCALE,
-        iv_quantize,
-        lloyd_centroids,
-    )
-
-    sub = dim // n_sub
-    full = corpus.select(
-        F.col(id_col).alias("vec_id"), iv_quantize(F.col(vec_col)).alias("ivfull")
-    )
-    books = []
-    for m in range(n_sub):
-        vecs = full.select("vec_id", F.slice("ivfull", m * sub + 1, sub).alias("iv"))
-        seeds = (
-            vecs.orderBy("vec_id")
-            .limit(ks)
-            .select(F.col("vec_id").alias("cid"), F.col("iv").alias("c"))
-        )
-        rows = lloyd_centroids(vecs, seeds, iters).orderBy("cid").collect()
-        if not rows:
-            raise ValueError("pq_codebook: corpus is empty, no codebook")
-        books.append(
-            [
-                (j, [(int(x) - OFFSET) / SCALE for x in r["c"]])
-                for j, r in enumerate(rows)
-            ]
-        )
-    return books
 
 
 def _pq_struct_array(subbook: list[tuple[int, list[float]]]) -> Column:
@@ -696,7 +617,7 @@ def _pq_encoded(
 
 def pq_index(
     corpus: DataFrame,
-    cache_key: tuple,
+    cache_key: tuple | None,
     n_sub: int = 8,
     ks: int = 16,
     dim: int = 64,
@@ -710,19 +631,21 @@ def pq_index(
     relation is a written table of (id, codes) that later queries scan
     INSTEAD of the float vectors. Higher-order-function encode runs
     outside whole-stage codegen (interpreted per-row), so re-encoding per
-    query would also dominate wall time at toy scale. Bit-identical to
-    building inline — the cache only changes WHEN the deterministic plan
-    runs."""
+    query would also dominate wall time at toy scale. Built fresh
+    without a ``cache_key``; the cache only changes WHEN the
+    deterministic plan runs."""
 
     def build():
-        codebook = pq_codebook(corpus, n_sub, ks, dim, id_col, vec_col)
+        _, codebook = train_codebooks(
+            corpus, cache_key, n_sub=n_sub, ks=ks, dim=dim, id_col=id_col, vec_col=vec_col
+        )
         enc = _pq_encoded(corpus, codebook, dim, id_col, vec_col).localCheckpoint(eager=True)
         return codebook, enc
 
     return memo(
         corpus.sparkSession,
         "similarity.pq_index",
-        (cache_key, n_sub, ks, dim, id_col, vec_col),
+        _shape_key(cache_key, n_sub, ks, dim, id_col, vec_col),
         build,
     )
 
@@ -810,11 +733,7 @@ def pq_topk(
     per-partition top-k into one shuffle. The exact cosine of each
     retrieved pair rides along for recall/error audits. Output:
     (query_id, neighbor_id, pq_cosine, exact_cosine, rank)."""
-    if cache_key is not None:
-        codebook, c = pq_index(corpus, cache_key, n_sub, ks, dim, id_col, vec_col)
-    else:
-        codebook = pq_codebook(corpus, n_sub, ks, dim, id_col, vec_col)
-        c = _pq_encoded(corpus, codebook, dim, id_col, vec_col)
+    codebook, c = pq_index(corpus, cache_key, n_sub, ks, dim, id_col, vec_col)
 
     q = queries.select(
         F.col(id_col).alias("query_id"),
@@ -869,7 +788,9 @@ def pq_serving_index(
     the FIRST corpus's index."""
 
     def build():
-        codebook = pq_codebook(corpus, n_sub, ks, dim, id_col, vec_col)
+        _, codebook = train_codebooks(
+            corpus, cache_key, n_sub=n_sub, ks=ks, dim=dim, id_col=id_col, vec_col=vec_col
+        )
         enc = (
             _pq_encoded(corpus, codebook, dim, id_col, vec_col)
             .select("neighbor_id", "acn", *[f"code{m}" for m in range(n_sub)])
@@ -880,7 +801,7 @@ def pq_serving_index(
     return memo(
         corpus.sparkSession,
         "similarity.pq_serving_index",
-        (cache_key, n_sub, ks, dim, id_col, vec_col) if cache_key is not None else None,
+        _shape_key(cache_key, n_sub, ks, dim, id_col, vec_col),
         build,
     )
 
@@ -939,12 +860,13 @@ def ivfpq_serving_index(
     prunes to nprobe lists at the scan and scores survivors by table
     lookup. No float vector in the stored rows; at 100 TB this is a
     parquet table partitioned by cid holding ~17 B/vector. Returns
-    (coarse_centroids, pq_codebook, store); built fresh without a
+    (coarse_centroids, pq codebook, store); built fresh without a
     ``cache_key``."""
 
     def build():
-        centroids = collect_centroids(corpus, n_centroids, id_col, vec_col)
-        codebook = pq_codebook(corpus, n_sub, ks, dim, id_col, vec_col)
+        centroids, codebook = train_codebooks(
+            corpus, cache_key, n_centroids, n_sub, ks, dim, id_col, vec_col
+        )
         enc = (
             _pq_encoded(corpus, codebook, dim, id_col, vec_col)
             .select(
@@ -960,9 +882,7 @@ def ivfpq_serving_index(
     return memo(
         corpus.sparkSession,
         "similarity.ivfpq_serving_index",
-        (cache_key, n_centroids, n_sub, ks, dim, id_col, vec_col)
-        if cache_key is not None
-        else None,
+        _shape_key(cache_key, n_centroids, n_sub, ks, dim, id_col, vec_col),
         build,
     )
 
@@ -1052,7 +972,7 @@ def int8_serving_index(
     return memo(
         corpus.sparkSession,
         "similarity.int8_serving_index",
-        (cache_key, id_col, vec_col) if cache_key is not None else None,
+        _shape_key(cache_key, id_col, vec_col),
         build,
     )
 
@@ -1126,7 +1046,7 @@ def cosine_near_dup_pairs(
     base = memo(
         emb.sparkSession,
         "similarity.near_dup_pairs.base",
-        (cache_key, block_col, id_col, vec_col) if cache_key is not None else None,
+        _shape_key(cache_key, block_col, id_col, vec_col),
         emb.select(*cols).persist,
     )
     a = base.alias("a")

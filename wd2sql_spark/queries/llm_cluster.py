@@ -26,9 +26,9 @@ from pyspark.sql import functions as F
 
 from wd2sql_spark.catalog import sf_key, table
 # The quantize/assign/update kernel is shared with ANN codebook training
-# (operators/similarity.collect_centroids / pq_codebook) — one
-# definition, one oracle grammar; see operators/kmeans.py for the
-# determinism argument that used to live here.
+# (operators/similarity.train_codebooks) — one definition, one oracle
+# grammar; see operators/kmeans.py for the determinism argument that
+# used to live here.
 from wd2sql_spark.operators.kmeans import (
     OFFSET,
     SCALE,

@@ -217,7 +217,8 @@ def _cos_expr(a: str, b: str) -> str:
 
 
 # --- trained codebook twin -------------------------------------------------
-# DuckDB re-derivation of operators/similarity.collect_centroids: the SAME
+# DuckDB re-derivation of operators/similarity.train_codebooks' IVF book
+# (book 0, the full vector): the SAME
 # integer-exact Lloyd rounds (operators/kmeans.py) — quantize to
 # round(x·10⁶)+OFFSET, assign by integer squared distance with lowest-cid
 # tie-breaks, update with the half-up integer mean (2Σv+n)//(2n) over the
@@ -272,9 +273,10 @@ kcent{i} AS (
 
 TRAINED_CENT_CTES = _trained_cent_ctes()
 
-# PQ twin: operators/similarity.pq_codebook trains EACH subspace's
-# codebook independently (one Lloyd chain per m over the m-th
-# subvectors); here all n_sub chains run as ONE m-partitioned chain, and
+# PQ twin: operators/similarity.train_codebooks trains EACH subspace's
+# codebook independently (books 1..n_sub of its one book-keyed Lloyd
+# chain, over the m-th subvectors); here all n_sub chains run as ONE
+# m-partitioned chain, and
 # the final `tpqcent` CONCATENATES subspace centroid j across m back
 # into a 64-dim row so the downstream oracles keep their
 # `cv[m*8+k]` indexing unchanged (subspaces are scored independently, so
@@ -365,7 +367,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     over an inlined codebook; queries search only their probed lists. The
     scale path writes the corpus partitioned by list id once, then every
     query scan prunes 4× here (n_centroids/nprobe) and more with a larger
-    codebook. The codebook is K-MEANS-TRAINED (collect_centroids —
+    codebook. The codebook is K-MEANS-TRAINED (train_codebooks —
     integer-exact Lloyd, r5; recall@5 0.87 → 0.93 at sf0.01 vs the old
     lowest-id seeds). Queries are a predicate over the corpus, so the
     score array is computed once per vector and feeds both the lists and
@@ -463,9 +465,10 @@ def sim_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Product quantization: 8 subspaces × 16 centroids over dim 64. The
-# codebook is the 16 lowest-vec_id vectors sliced per subspace (j = 0..15
-# in vec_id order — ROW_NUMBER, matching operators/similarity.pq_codebook);
+# Product quantization: 8 subspaces × 16 centroids over dim 64. Each
+# subspace's codebook is trained from the 16 lowest-vec_id subvectors
+# (j = 0..15 in seed vec_id order — ROW_NUMBER, matching
+# operators/similarity.train_codebooks);
 # codes are per-subspace squared-L2 argmins (ties → lowest j); scoring is
 # ADC: Σ_m ⟨q_m, c_m,code⟩ over the m-ordered list fold (list_sum of a
 # list(… ORDER BY m) ≡ Spark's F.aggregate over the m-ordered array), and
@@ -529,10 +532,10 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per vector (32× smaller than the float rows — the difference between
     an in-memory billion-vector index and none), each query builds its
     8×16 subspace LUT once, and a pair costs 8 lookups instead of 64
-    multiplies. The codebook is PER-SUBSPACE K-MEANS-TRAINED (pq_codebook
-    — one integer-exact Lloyd chain per subquantizer, the Jégou §II.C
-    recipe; recall@5 0.27 → 0.53 at sf0.01 vs the old lowest-id
-    subvectors), every fold is a fixed-order left-fold over inlined
+    multiplies. The codebook is PER-SUBSPACE K-MEANS-TRAINED
+    (train_codebooks — one integer-exact Lloyd chain per subquantizer,
+    all keyed into one plan, the Jégou §II.C recipe; recall@5 0.27 →
+    0.53 at sf0.01 vs the old lowest-id subvectors), every fold is a fixed-order left-fold over inlined
     literals, so the DuckDB twin reproduces training, codes, ADC scores
     and reconstruction norms bit-for-bit (TRAINED_PQ_CTES). Exact cosine
     rides along per retrieved pair as the built-in quantization-error
@@ -585,6 +588,36 @@ pq_approx AS (
   WHERE rank <= 5)
 """
 
+
+def _recall_audit(emb: DataFrame, queries: DataFrame, approx: DataFrame) -> DataFrame:
+    """Per-query recall of an approximate top-5 (``approx``'s query_id,
+    neighbor_id) against exact brute-force top-5 over ``queries``: the
+    shared tail of every ``sim_*_recall_audit``."""
+    brute = S.brute_force_topk(emb, queries, k=5).select("query_id", "neighbor_id")
+    hits = approx.select(
+        F.col("query_id").alias("a_qid"), F.col("neighbor_id").alias("a_nid")
+    )
+    return (
+        brute.join(
+            # Both arms are |probes|*k rows (<= 15 here; a sampled audit
+            # set at any scale) - without the hint the planner's
+            # post-window estimate exchanged and sorted both tiny arms
+            # through a SortMergeJoin.
+            F.broadcast(hits),
+            (F.col("query_id") == F.col("a_qid"))
+            & (F.col("neighbor_id") == F.col("a_nid")),
+            "left",
+        )
+        .groupBy("query_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_brute"),
+            F.count("a_nid").cast("bigint").alias("n_hit"),
+            F.round(F.count("a_nid").cast("double") / F.count(F.lit(1)), 6).alias("recall"),
+        )
+        .orderBy("query_id")
+    )
+
+
 PQ_RECALL_ORACLE = f"""
 WITH brute AS (
   SELECT query_id, neighbor_id FROM (
@@ -617,29 +650,7 @@ def sim_pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the product bar, measured, not guessed."""
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3)
-    brute = S.brute_force_topk(emb, queries, k=5).select("query_id", "neighbor_id")
-    approx = S.pq_topk(emb, queries, k=5, cache_key=sf_key(sf_dir)).select(
-        F.col("query_id").alias("a_qid"), F.col("neighbor_id").alias("a_nid")
-    )
-    return (
-        brute.join(
-            # Both arms are |probes|*k rows (<= 15 here; a sampled audit
-            # set at any scale) - without the hint the planner's
-            # post-window estimate exchanged and sorted both tiny arms
-            # through a SortMergeJoin.
-            F.broadcast(approx),
-            (F.col("query_id") == F.col("a_qid"))
-            & (F.col("neighbor_id") == F.col("a_nid")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_brute"),
-            F.count("a_nid").cast("bigint").alias("n_hit"),
-            F.round(F.count("a_nid").cast("double") / F.count(F.lit(1)), 6).alias("recall"),
-        )
-        .orderBy("query_id")
-    )
+    return _recall_audit(emb, queries, S.pq_topk(emb, queries, k=5, cache_key=sf_key(sf_dir)))
 
 
 PQ_SERVING_ORACLE = f"""
@@ -963,29 +974,7 @@ def sim_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate path."""
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3)
-    brute = S.brute_force_topk(emb, queries, k=5).select("query_id", "neighbor_id")
-    approx = S.lsh_topk(emb, queries, k=5, r=4, dim=64).select(
-        F.col("query_id").alias("a_qid"), F.col("neighbor_id").alias("a_nid")
-    )
-    return (
-        brute.join(
-            # Both arms are |probes|*k rows (<= 15 here; a sampled audit
-            # set at any scale) - without the hint the planner's
-            # post-window estimate exchanged and sorted both tiny arms
-            # through a SortMergeJoin.
-            F.broadcast(approx),
-            (F.col("query_id") == F.col("a_qid"))
-            & (F.col("neighbor_id") == F.col("a_nid")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_brute"),
-            F.count("a_nid").cast("bigint").alias("n_hit"),
-            F.round(F.count("a_nid").cast("double") / F.count(F.lit(1)), 6).alias("recall"),
-        )
-        .orderBy("query_id")
-    )
+    return _recall_audit(emb, queries, S.lsh_topk(emb, queries, k=5, r=4, dim=64))
 
 
 IVF_RECALL_ORACLE = f"""
@@ -1041,7 +1030,6 @@ def sim_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     raise nprobe until recall clears the product bar, no guessing."""
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3)
-    brute = S.brute_force_topk(emb, queries, k=5).select("query_id", "neighbor_id")
     approx = S.ivf_topk(
         emb,
         query_pred=F.col("vec_id") < 3,
@@ -1049,26 +1037,8 @@ def sim_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_centroids=16,
         nprobe=4,
         cache_key=sf_key(sf_dir),
-    ).select(F.col("query_id").alias("a_qid"), F.col("neighbor_id").alias("a_nid"))
-    return (
-        brute.join(
-            # Both arms are |probes|*k rows (<= 15 here; a sampled audit
-            # set at any scale) - without the hint the planner's
-            # post-window estimate exchanged and sorted both tiny arms
-            # through a SortMergeJoin.
-            F.broadcast(approx),
-            (F.col("query_id") == F.col("a_qid"))
-            & (F.col("neighbor_id") == F.col("a_nid")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_brute"),
-            F.count("a_nid").cast("bigint").alias("n_hit"),
-            F.round(F.count("a_nid").cast("double") / F.count(F.lit(1)), 6).alias("recall"),
-        )
-        .orderBy("query_id")
     )
+    return _recall_audit(emb, queries, approx)
 
 
 JL_OUT_DIM = 32  # projected dims; distortion std ≈ sqrt(2/32) ≈ 0.25
