@@ -48,9 +48,7 @@ def test_ivf_topk_recall_vs_brute_force(spark, emb):
     }
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in S.ivf_topk(
-            emb, query_pred=F.col("vec_id") < 10, k=5, n_centroids=16, nprobe=4
-        ).collect()
+        for r in S.ivf_topk(emb, query_pred=F.col("vec_id") < 10, k=5, nprobe=4).collect()
     }
     recall = len(brute & approx) / len(brute)
     # nprobe/n_centroids = 1/4 of the corpus searched → random probing
@@ -66,12 +64,12 @@ def test_pq_codes_are_exact_on_codebook_vectors(spark, emb):
     argmin with trained codebooks (r5): the chosen j may be lower than
     the row's own index only if two trained centroids coincide, so the
     assertion is on reconstruction equality, not index identity."""
-    _, cb = S.train_codebooks(emb, None, n_sub=8, ks=16, dim=64)
+    _, cb = S.train_codebooks(emb, None)
     rows = [
         (j, [x for m in range(8) for x in cb[m][j][1]]) for j in range(16)
     ]
     df = spark.createDataFrame(rows, "j int, embedding array<double>")
-    codes = S.pq_codes(F.col("embedding"), cb, dim=64)
+    codes = S.pq_codes(F.col("embedding"), cb)
     got = df.select("j", *[codes[m].alias(f"c{m}") for m in range(8)]).collect()
     for r in got:
         for m in range(8):
@@ -105,11 +103,15 @@ def test_pq_topk_recall_and_self_reconstruction(spark, emb):
 
 
 def test_ivf_assignment_is_total_and_valid(spark, emb):
-    cents, _ = S.train_codebooks(emb, None, n_centroids=16)
-    assigned = emb.select(S.ivf_assign(F.col("embedding"), cents).alias("cid"))
-    n_bad = assigned.filter(~F.col("cid").between(0, 15)).count()
-    assert n_bad == 0
-    assert assigned.count() == emb.count()
+    """Every vector gets a list id that is a codebook cid (the seed
+    vec_ids 0..15 at this SF), and the IVF index and the PQ codes store
+    bin every vector into the same list: one list-id definition."""
+    cents, _ = S.train_codebooks(emb, None)
+    ivf = sorted(map(tuple, S.ivf_index(emb, None).select("vec_id", "cid").collect()))
+    assert len(ivf) == emb.count()
+    assert {cid for _, cid in ivf} <= {cid for cid, _ in cents} <= set(range(16))
+    _, _, store = S.pq_codes_store(emb, None)
+    assert sorted(map(tuple, store.select("neighbor_id", "cid").collect())) == ivf
 
 
 def test_minhash_estimates_track_exact_jaccard(spark, docs):
@@ -363,13 +365,15 @@ def test_incremental_matches_exact_copy_and_agrees_with_full_lsh(spark, docs):
         .select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
     )
     idx = D.minhash_band_index(corpus)
-    got = D.incremental_minhash_matches(idx, copied).collect()
+    got = D.incremental_index_probe(idx, D.minhash_band_index(copied)).collect()
     assert any(r["est_jaccard"] == 1.0 for r in got)
 
     delta = docs.filter(F.col("doc_id") % 10 == 0)
     inc = {
         (r["delta_id"], r["corpus_id"])
-        for r in D.incremental_minhash_matches(idx, delta, min_est_jaccard=0.25).collect()
+        for r in D.incremental_index_probe(
+            idx, D.minhash_band_index(delta), min_est_jaccard=0.25
+        ).collect()
     }
     full = {
         (r["d1"], r["d2"])
@@ -451,14 +455,20 @@ def test_rowlocal_band_index_equals_aggregate_form(spark, docs):
 # Jobs the six ANN queries below launch while their plans are built, in
 # one fresh session at sf0.001: the first read of the embeddings file, one
 # codebook training that every index shares, and one checkpoint per
-# index. Training each index's codebooks separately cost 239 jobs at
-# sf0.01 (73 per PQ index).
-ANN_COLD_BUILD_JOBS = 14
+# stored index (IVF index, PQ audit index, codes store). Training each
+# index's codebooks separately cost 239 jobs at sf0.01 (73 per PQ index);
+# encoding the corpus once more for a second PQ store costs one more.
+ANN_COLD_BUILD_JOBS = 13
 
 
-def test_ann_family_trains_once_per_cold_session(spark):
+def test_ann_family_trains_once_per_cold_session(spark, monkeypatch):
+    """Within the job budget, and the corpus is PQ-encoded once: the codes
+    store is a projection of the audit index, not a second encoding."""
     from wd2sql_spark.queries.registry import load_all_modules
 
+    encodes = []
+    encode = S._pq_encoded
+    monkeypatch.setattr(S, "_pq_encoded", lambda *a: encodes.append(a) or encode(*a))
     registry = load_all_modules()
     fresh = spark.newSession()
     sc = fresh.sparkContext
@@ -478,3 +488,4 @@ def test_ann_family_trains_once_per_cold_session(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     n = len(sc.statusTracker().getJobIdsForGroup(group))
     assert n <= ANN_COLD_BUILD_JOBS, n
+    assert len(encodes) == 1, len(encodes)

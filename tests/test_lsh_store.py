@@ -47,8 +47,10 @@ def test_probe_matches_in_memory_incremental(spark, split, store):
     )
     want = sorted(
         (r.delta_id, r.corpus_id, r.est_jaccard)
-        for r in D.incremental_minhash_matches(
-            D.minhash_band_index(corpus), delta, min_est_jaccard=0.25
+        for r in D.incremental_index_probe(
+            D.minhash_band_index(corpus),
+            D.minhash_band_index(delta),
+            min_est_jaccard=0.25,
         ).collect()
     )
     assert got == want and len(got) > 0

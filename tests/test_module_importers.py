@@ -1,12 +1,20 @@
-"""Every ``wd2sql_spark`` module has a production importer.
+"""Every ``wd2sql_spark`` module and top-level definition has a
+production user.
 
-A module that only tests or tools import is production code that only
-tests call; this AST scan fails on it. The production roots are the
-package itself, ``bench.py``, ``__spark_entry__.py`` and ``perfbench/``;
+A module that only tests or tools import, or a function, class or
+constant that only they reference, is production code that only tests
+call; these AST scans fail on it. The production roots are the package
+itself, ``bench.py``, ``__spark_entry__.py`` and ``perfbench/``;
 ``tests/`` and ``tools/`` do not count, and a module importing itself
 does not either. Counted as used without an importer: the registry's
 ``_MODULES`` (imported by name), ``__main__`` and ``curate`` (run with
 ``python -m``), and the parent package of every used module.
+
+A top-level definition counts as referenced when any production root
+loads its name, reads it as an attribute or imports it (by name, not by
+module: a shared name is a false pass, never a false failure).
+``@query``-registered functions (reached through the registry), dunder
+names and the user surface in ``ALLOWED`` need no reference.
 """
 
 from __future__ import annotations
@@ -65,6 +73,26 @@ def _imported(path: str) -> set[str]:
     return names
 
 
+# Definitions with no production reference on purpose: name -> reason.
+ALLOWED = {
+    "wd2sqlite": "README API: the SQLite sink users call",
+    "register_sql_function": "user surface: registers the encode_wid SQL function",
+    "admission_sink": "user surface: the foreachBatch admission sink for a stream",
+    "attach_streaming_progress": "user surface: progress lines for a user's stream",
+    "clear_all_session_caches": "user surface: release every memoized relation",
+    "write_lsh_store": "the full-rebuild baseline the admission store is checked against",
+}
+
+
+def _production_roots() -> list[str]:
+    return [
+        *_py_files(PKG),
+        *_py_files("perfbench"),
+        os.path.join(ROOT, "bench.py"),
+        os.path.join(ROOT, "__spark_entry__.py"),
+    ]
+
+
 def _registry_modules() -> set[str]:
     tree = _parse(os.path.join(ROOT, PKG, "queries", "registry.py"))
     for node in tree.body:
@@ -77,14 +105,8 @@ def _registry_modules() -> set[str]:
 
 def test_every_package_module_has_a_production_importer():
     modules = {_module_name(p) for p in _py_files(PKG)}
-    roots = [
-        *_py_files(PKG),
-        *_py_files("perfbench"),
-        os.path.join(ROOT, "bench.py"),
-        os.path.join(ROOT, "__spark_entry__.py"),
-    ]
     used = {f"{PKG}.__main__", f"{PKG}.curate", *_registry_modules()}
-    for path in roots:
+    for path in _production_roots():
         used |= _imported(path) - {_module_name(path)}
     for name in list(used):
         while "." in name:
@@ -92,3 +114,50 @@ def test_every_package_module_has_a_production_importer():
             used.add(name)
     orphans = sorted(modules - used)
     assert not orphans, f"modules with no production importer: {orphans}"
+
+
+def _referenced(path: str) -> set[str]:
+    """Names the file loads, reads as attributes or imports by name."""
+    names: set[str] = set()
+    for node in ast.walk(_parse(path)):
+        if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
+            names.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            names.add(node.attr)
+        elif isinstance(node, ast.ImportFrom):
+            names.update(a.name for a in node.names)
+    return names
+
+
+def _registered(node: ast.stmt) -> bool:
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+        for d in getattr(node, "decorator_list", [])
+    )
+
+
+def _definitions(path: str) -> list[str]:
+    """Top-level function, class and constant names of a module."""
+    names = []
+    for node in _parse(path).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            if not _registered(node):
+                names.append(node.name)
+        elif isinstance(node, ast.Assign):
+            names += [t.id for t in node.targets if isinstance(t, ast.Name)]
+        elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+            names.append(node.target.id)
+    return [n for n in names if not (n.startswith("__") and n.endswith("__"))]
+
+
+def test_every_package_definition_has_a_production_reference():
+    used = set(ALLOWED)
+    for path in _production_roots():
+        used |= _referenced(path)
+    orphans = sorted(
+        f"{_module_name(p)}.{name}"
+        for p in _py_files(PKG)
+        for name in _definitions(p)
+        if name not in used
+    )
+    assert not orphans, f"definitions with no production reference: {orphans}"

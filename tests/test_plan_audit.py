@@ -176,7 +176,7 @@ def test_bruteforce_topk_per_partition_topk(reports):
     shuffle — not the full |corpus| x |queries| pair relation. A Spark
     upgrade that stops planning WindowGroupLimit would silently
     reintroduce the full pair shuffle; this pin catches it
-    (operators/similarity.py:52 makes the claim)."""
+    (operators/similarity.ranked_topk makes the claim)."""
     r = reports["sim_bruteforce_topk"]
     assert not r.pandas_eval and not r.python_eval
     assert r.broadcasts >= 1
@@ -198,13 +198,13 @@ def test_lsh_topk_bucket_join_budget(reports):
 
 
 def test_pq_serving_never_reads_corpus_vectors(reports):
-    """The serving PQ path's corpus side is the codes-and-norm store (a
+    """The serving PQ path's corpus side is the codes store (a
     materialized leaf, no embedding column in its rows): the ONLY parquet
     scan allowed to read `embedding` is the query side, identified by its
     pushed vec_id<3 filter. An unfiltered embedding scan appearing here
     means the corpus vectors leaked back into the serving plan — the exact
     regression this query exists to forbid (32x memory story,
-    operators/similarity.pq_serving_index)."""
+    operators/similarity.pq_codes_store)."""
     r = reports["sim_pq_serving_topk"]
     assert not r.pandas_eval and not r.python_eval
     assert "ExistingRDD" in r.text  # the codes-only store leaf

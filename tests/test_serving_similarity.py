@@ -42,7 +42,7 @@ def test_tiny_corpus_smaller_than_codebook(spark):
 
 def test_serving_scores_match_audit_twin(spark):
     # pq_serving's pq_cosine must be bit-identical to pq_topk's for the
-    # same pairs — the contract the shared pq_query_luts/pq_adc_dot
+    # same pairs — the contract the shared pq_query_luts/pq_adc_cosine
     # helpers enforce structurally.
     emb = _corpus(spark, 40)
     q = emb.filter(F.col("vec_id") < 2)
@@ -77,7 +77,7 @@ def test_ivfpq_is_pq_restricted_to_probed_lists(spark):
     emb = _corpus(spark, 40)
     q = emb.filter(F.col("vec_id") < 2)
     full = S.pq_serving_topk(emb, q, k=5).collect()
-    ivf_all = S.ivfpq_topk(emb, q, k=5, n_centroids=16, nprobe=16).collect()
+    ivf_all = S.ivfpq_topk(emb, q, k=5, nprobe=S.N_CENTROIDS).collect()
     key = lambda r: (r["query_id"], r["rank"], r["neighbor_id"], r["pq_cosine"])  # noqa: E731
     assert sorted(map(key, ivf_all)) == sorted(map(key, full))
 
@@ -93,3 +93,20 @@ def test_distinct_adhoc_corpora_never_share_an_index(spark):
     rb = {r["neighbor_id"] for r in S.int8_serving_topk(b, qa, k=30).collect()}
     assert ra == set(range(1, 20))  # all of corpus A, nothing else
     assert rb == set(range(1, 30))  # all of corpus B — not A's stale index
+
+
+def test_codes_store_holds_no_float_vectors(spark):
+    # The one store PQ serving and IVFADC read is float-free: id, list id,
+    # reconstruction norm and small-int codes, never a vector of floats.
+    from pyspark.sql.types import ArrayType, DoubleType, FloatType
+
+    emb = _corpus(spark, 20)
+    _, _, store = S.pq_codes_store(emb, None)
+    assert store.columns == ["neighbor_id", "cid", "acn"] + [f"code{m}" for m in range(S.N_SUB)]
+    floats = [
+        f.name
+        for f in store.schema.fields
+        if isinstance(f.dataType, ArrayType)
+        and isinstance(f.dataType.elementType, (DoubleType, FloatType))
+    ]
+    assert not floats, floats

@@ -325,13 +325,41 @@ def minhash_signatures_wide(docs: DataFrame, k: int = 16, n: int = 3) -> DataFra
     partial MIN collapses each map partition before it. Each value is the
     min over shingles of md5(seed ':' shingle)'s 15-hex-digit prefix."""
     sh = doc_shingles(docs, n)
-    aggs = [
-        F.min(
-            F.substring(F.md5(F.concat(F.lit(f"{s}:"), F.col("shingle"))), 1, 15)
-        ).alias(f"mh{s}")
-        for s in range(k)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
+    return sh.groupBy("doc_id").agg(
+        *[F.min(seeded_hash(F.col("shingle"), s)).alias(f"mh{s}") for s in range(k)]
+    )
+
+
+def _banded(sig: DataFrame, k: int, band_size: int, *keep: Column) -> DataFrame:
+    """(doc_id, band, band_key, *keep): one row per (doc, band) of a wide
+    signature (doc_id, mh0..mh{k-1}), the band key being the band's
+    ``band_size`` consecutive min-hashes joined by ``|`` (fixed-width hex,
+    so the concatenation is injective). The ONE band-key definition of
+    every MinHash-LSH path."""
+    band_structs = F.array(
+        *[
+            F.struct(
+                F.lit(bb).alias("band"),
+                F.concat_ws(
+                    "|", *[F.col(f"mh{s}") for s in range(bb * band_size, (bb + 1) * band_size)]
+                ).alias("band_key"),
+            )
+            for bb in range(k // band_size)
+        ]
+    )
+    return sig.select("doc_id", F.explode(band_structs).alias("bk"), *keep).select(
+        "doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"), *keep
+    )
+
+
+def _est_jaccard(a: str, b: str, k: int) -> Column:
+    """Estimated Jaccard of the signatures aliased ``a`` and ``b``: the
+    fraction of their k min-hashes that are equal."""
+    eq = sum(
+        (F.when(F.col(f"{a}.mh{s}") == F.col(f"{b}.mh{s}"), 1).otherwise(0) for s in range(k)),
+        F.lit(0),
+    )
+    return (eq / F.lit(float(k))).alias("est_jaccard")
 
 
 def minhash_lsh_pairs(
@@ -364,22 +392,7 @@ def minhash_lsh_pairs(
         (cache_key, k, n) if cache_key is not None else None,
         minhash_signatures_wide(docs, k, n).persist,
     )
-    n_bands = k // band_size
-    # mh columns are fixed-width hex, so plain concatenation is injective.
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bb).alias("band"),
-                F.concat_ws(
-                    "|", *[F.col(f"mh{s}") for s in range(bb * band_size, (bb + 1) * band_size)]
-                ).alias("band_key"),
-            )
-            for bb in range(n_bands)
-        ]
-    )
-    bk = sig.select("doc_id", F.explode(band_structs).alias("bk")).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
-    )
+    bk = _banded(sig, k, band_size)
     a = bk.alias("a")
     b = bk.alias("b")
     cand = (
@@ -392,16 +405,10 @@ def minhash_lsh_pairs(
         .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
         .distinct()
     )
-    sa = sig.alias("sa")
-    sb = sig.alias("sb")
-    eq = sum(
-        (F.when(F.col(f"sa.mh{s}") == F.col(f"sb.mh{s}"), 1).otherwise(0) for s in range(k)),
-        F.lit(0),
-    )
     est = (
-        cand.join(sa, F.col("d1") == F.col("sa.doc_id"))
-        .join(sb, F.col("d2") == F.col("sb.doc_id"))
-        .select("d1", "d2", (eq / F.lit(float(k))).alias("est_jaccard"))
+        cand.join(sig.alias("sa"), F.col("d1") == F.col("sa.doc_id"))
+        .join(sig.alias("sb"), F.col("d2") == F.col("sb.doc_id"))
+        .select("d1", "d2", _est_jaccard("sa", "sb", k))
     )
     return est.filter(F.col("est_jaccard") >= min_est_jaccard)
 
@@ -421,22 +428,7 @@ def minhash_band_index(docs: DataFrame, k: int = 16, band_size: int = 4, n: int 
     Same md5 arithmetic as :func:`minhash_lsh_pairs` — the two agree on
     candidates by construction."""
     sig = minhash_signatures_wide(docs, k, n)
-    n_bands = k // band_size
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bb).alias("band"),
-                F.concat_ws(
-                    "|", *[F.col(f"mh{s}") for s in range(bb * band_size, (bb + 1) * band_size)]
-                ).alias("band_key"),
-            )
-            for bb in range(n_bands)
-        ]
-    )
-    mh_cols = [F.col(f"mh{s}") for s in range(k)]
-    return sig.select("doc_id", F.explode(band_structs).alias("bk"), *mh_cols).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"), *mh_cols
-    )
+    return _banded(sig, k, band_size, *[F.col(f"mh{s}") for s in range(k)])
 
 
 def minhash_band_index_rowlocal(docs: DataFrame, k: int = 16, band_size: int = 4, n: int = 3) -> DataFrame:
@@ -483,52 +475,7 @@ def minhash_band_index_rowlocal(docs: DataFrame, k: int = 16, band_size: int = 4
         .filter(F.size("_shingles") > 0)
         .select(F.col("doc_id"), *sig_cols)
     )
-    n_bands = k // band_size
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bb).alias("band"),
-                F.concat_ws(
-                    "|", *[F.col(f"mh{s}") for s in range(bb * band_size, (bb + 1) * band_size)]
-                ).alias("band_key"),
-            )
-            for bb in range(n_bands)
-        ]
-    )
-    mh_cols = [F.col(f"mh{s}") for s in range(k)]
-    return sig.select("doc_id", F.explode(band_structs).alias("bk"), *mh_cols).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"), *mh_cols
-    )
-
-
-def incremental_minhash_matches(
-    corpus_index: DataFrame,
-    delta_docs: DataFrame,
-    k: int = 16,
-    band_size: int = 4,
-    n: int = 3,
-    min_est_jaccard: float = 0.0,
-) -> DataFrame:
-    """Near-duplicate matches of a NEW document drop against an EXISTING
-    corpus index — the production dedup shape at 100 TB, where the corpus
-    LSH is never recomputed per drop; only the delta is hashed.
-
-    ``corpus_index`` is :func:`minhash_band_index` output (in production:
-    read back from its bucketed parquet). The delta side is banded with
-    the same arithmetic and BROADCAST — a typical daily drop's band rows
-    (n_bands × (k·15 B + key) per doc) fit in a broadcast up to millions
-    of docs, so the corpus index is probed in place with ZERO corpus-side
-    shuffle; when a drop outgrows the broadcast threshold, the fallback
-    shuffle join on (band, band_key) still co-locates for free against
-    the index's band_key bucketing. Both signatures arrive on the joined
-    row, so the Jaccard estimate is row-local — no follow-up join.
-
-    Output: (delta_id, corpus_id, est_jaccard), distinct pairs with
-    est ≥ ``min_est_jaccard`` — the docs to reject from (or link to) the
-    drop before it is admitted to the corpus."""
-    return incremental_index_probe(
-        corpus_index, minhash_band_index(delta_docs, k, band_size, n), k, min_est_jaccard
-    )
+    return _banded(sig, k, band_size, *[F.col(f"mh{s}") for s in range(k)])
 
 
 def incremental_index_probe(
@@ -537,27 +484,33 @@ def incremental_index_probe(
     k: int = 16,
     min_est_jaccard: float = 0.0,
 ) -> DataFrame:
-    """The probe half of :func:`incremental_minhash_matches`, for callers
-    that already hold BOTH banded indexes (e.g. a fixture that bands one
-    corpus once and splits it, or a pipeline re-checking two persisted
-    drops against each other). Join on (band, band_key) with the delta
-    side broadcast; both signatures arrive on the joined row, so the
-    Jaccard estimate is row-local."""
-    c = corpus_index.alias("c")
-    d = delta_index.alias("d")
-    eq = sum(
-        (F.when(F.col(f"c.mh{s}") == F.col(f"d.mh{s}"), 1).otherwise(0) for s in range(k)),
-        F.lit(0),
-    )
+    """Near-duplicate matches of a NEW document drop against an EXISTING
+    corpus index — the production dedup shape at 100 TB, where the corpus
+    LSH is never recomputed per drop; only the delta is hashed
+    (``minhash_band_index(delta_docs)``, or the row-local form for a
+    stream).
+
+    ``corpus_index`` is :func:`minhash_band_index` output (in production:
+    read back from the band store, sinks/lsh_store.py). The join is on
+    (band, band_key) with the delta side BROADCAST — a typical daily
+    drop's band rows fit in a broadcast up to millions of docs, so the
+    corpus index is probed in place with ZERO corpus-side shuffle. Both
+    signatures arrive on the joined row, so the Jaccard estimate is
+    row-local — no follow-up join.
+
+    Output: (delta_id, corpus_id, est_jaccard), distinct pairs with
+    est ≥ ``min_est_jaccard`` — the docs to reject from (or link to) the
+    drop before it is admitted to the corpus."""
     return (
-        c.join(
-            F.broadcast(d),
+        corpus_index.alias("c")
+        .join(
+            F.broadcast(delta_index.alias("d")),
             (F.col("c.band") == F.col("d.band")) & (F.col("c.band_key") == F.col("d.band_key")),
         )
         .select(
             F.col("d.doc_id").alias("delta_id"),
             F.col("c.doc_id").alias("corpus_id"),
-            (eq / F.lit(float(k))).alias("est_jaccard"),
+            _est_jaccard("c", "d", k),
         )
         .distinct()
         .filter(F.col("est_jaccard") >= min_est_jaccard)

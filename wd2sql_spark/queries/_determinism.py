@@ -33,21 +33,6 @@ def exact_sum(expr: Column, scale: int = 6) -> Column:
     return F.sum(F.round(expr * F.lit(pow10), 0).cast("long")) / F.lit(float(pow10))
 
 
-def exact_avg(expr: Column, scale: int = 6) -> Column:
-    """Order-insensitive exact mean (integer-units sum / count).
-
-    WARNING: ``round(exact_avg(...), k)`` is NOT cross-engine safe — the
-    quotient can land exactly on a k-decimal half boundary (it has
-    denominator n·10^scale), and on boundaries Spark's round (HALF_UP on
-    the double's shortest decimal representation) and DuckDB's round (on
-    the binary value) disagree. Use :func:`exact_avg_at` for a rounded
-    mean."""
-    pow10 = 10**scale
-    return (
-        F.sum(F.round(expr * F.lit(pow10), 0).cast("long")) / F.lit(float(pow10))
-    ) / F.count(F.lit(1))
-
-
 def _int_div(a: Column, b: Column) -> Column:
     """Exact LONG integral division via Spark's ``div`` operator (JVM long
     arithmetic, truncation toward zero — same as DuckDB's ``//`` on

@@ -387,7 +387,7 @@ def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     and splits the index by the md5 bucket — halving the signature work
     vs hashing the 90% and 10% sides in separate passes. Production keeps
     the same probe: corpus_index is read from parquet, only the delta is
-    hashed (incremental_minhash_matches)."""
+    hashed (incremental_index_probe of minhash_band_index(delta))."""
     docs = table(spark, sf_dir, "documents")
     from wd2sql_spark.queries.llm_sampling import md5_bucket
 

@@ -379,7 +379,6 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         query_pred=F.col("vec_id") < 3,
         k=5,
-        n_centroids=16,
         nprobe=4,
         cache_key=sf_key(sf_dir),
     ).orderBy("query_id", "rank")
@@ -419,7 +418,7 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_llm_ops.py."""
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3)
-    return S.lsh_topk(emb, queries, k=5, r=4, dim=64).orderBy("query_id", "rank")
+    return S.lsh_topk(emb, queries, k=5, r=4).orderBy("query_id", "rank")
 
 
 QUANTIZED_ORACLE = f"""
@@ -542,9 +541,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit."""
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3)
-    return S.pq_topk(
-        emb, queries, k=5, n_sub=8, ks=16, dim=64, cache_key=sf_key(sf_dir)
-    ).orderBy("query_id", "rank")
+    return S.pq_topk(emb, queries, k=5, cache_key=sf_key(sf_dir)).orderBy("query_id", "rank")
 
 
 _PQ_APPROX_CTES = f"""
@@ -702,8 +699,8 @@ def sim_pq_serving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ-ADC top-5 in the SERVING regime (VERDICT r3 task 8): identical
     scoring to sim_pq_topk — same codebook, same fixed-order folds, so
     pq_cosine is bit-identical — but the corpus side reads ONLY the
-    codes-and-norm store (operators/similarity.pq_serving_index: rows of
-    id + acn + 8 codes, ~16 B vs 256 B of floats). No exact_cosine
+    codes store (operators/similarity.pq_codes_store: rows of id +
+    list id + acn + 8 codes, ~17 B vs 256 B of floats). No exact_cosine
     column: the store holds no vectors to compute one from, which is the
     point — the audit twins (sim_pq_topk, sim_pq_recall_audit) own the
     error story, this query owns the memory story. The plan is pinned by
@@ -711,9 +708,9 @@ def sim_pq_serving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     column may appear."""
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3)
-    return S.pq_serving_topk(
-        emb, queries, k=5, n_sub=8, ks=16, dim=64, cache_key=sf_key(sf_dir)
-    ).orderBy("query_id", "rank")
+    return S.pq_serving_topk(emb, queries, k=5, cache_key=sf_key(sf_dir)).orderBy(
+        "query_id", "rank"
+    )
 
 
 IVFPQ_ORACLE = f"""
@@ -794,10 +791,9 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact brute force inherits both audits' knobs (nprobe, n_sub/ks)."""
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3)
-    return S.ivfpq_topk(
-        emb, queries, k=5, n_centroids=16, nprobe=4, n_sub=8, ks=16,
-        dim=64, cache_key=sf_key(sf_dir),
-    ).orderBy("query_id", "rank")
+    return S.ivfpq_topk(emb, queries, k=5, nprobe=4, cache_key=sf_key(sf_dir)).orderBy(
+        "query_id", "rank"
+    )
 
 
 INT8_SERVING_ORACLE = f"""
@@ -974,7 +970,7 @@ def sim_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate path."""
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3)
-    return _recall_audit(emb, queries, S.lsh_topk(emb, queries, k=5, r=4, dim=64))
+    return _recall_audit(emb, queries, S.lsh_topk(emb, queries, k=5, r=4))
 
 
 IVF_RECALL_ORACLE = f"""
@@ -1034,7 +1030,6 @@ def sim_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         query_pred=F.col("vec_id") < 3,
         k=5,
-        n_centroids=16,
         nprobe=4,
         cache_key=sf_key(sf_dir),
     )

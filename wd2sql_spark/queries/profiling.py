@@ -156,7 +156,7 @@ def join_bloom_prefilter_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The k·|dim| bit-position build is one tiny aggregation (64 rows);
     collecting those 64 longs to a literal follows the inlined-IVF-
-    codebook precedent (operators/similarity.py:174 — deliberate,
+    codebook precedent (operators/similarity.train_codebooks — deliberate,
     documented, constant-size).
     """
     c = table(spark, sf_dir, "customer").filter(F.col("c_acctbal") >= BLOOM_ACCTBAL_MIN)

@@ -1,7 +1,7 @@
 """Materialized MinHash-LSH index: the dedup index as a parquet store.
 
 The incremental dedup path (operators/dedup.py::minhash_band_index /
-incremental_minhash_matches) describes its corpus index as "the artifact
+incremental_index_probe) describes its corpus index as "the artifact
 an incremental pipeline WRITES ONCE per corpus and reuses for every
 subsequent drop". This sink IS that artifact: the band index written
 partitioned by ``band`` and range-sorted by ``band_key`` within files,
