@@ -100,35 +100,3 @@ def test_simhash_knob_engages_cross_engine(spark, tmp_path):
     res = compare("dedup_simhash", q.fn(spark, str(tmp_path)), q.oracle, str(tmp_path))
     assert res.ok, res.errors
     assert res.row_count == (20, 20)
-
-
-def test_simhash_pairs_partial_override_couples_bands(spark):
-    """ADVICE r6 #1: a pinned band_bits must derive n_bands from the
-    EFFECTIVE width (and vice versa) — the old auto-derived pairing could
-    shift bands past the 56-bit hash, where every band reads val=0 and
-    the whole corpus collapses into one collision bucket."""
-    import pandas as pd
-
-    from wd2sql_spark.operators.dedup import SIMHASH_BITS, simhash_pairs
-
-    docs = spark.createDataFrame(
-        pd.DataFrame(
-            # doc 2 is an EXACT duplicate (hamming 0) so the pair is
-            # pigeonhole-guaranteed to collide under ANY valid layout
-            {"doc_id": [1, 2, 3], "text": [BASE, BASE, "unrelated words"]}
-        )
-    )
-    # band_bits=20 alone → n_bands must become 2 (56//20), never the
-    # auto 4: 20*4=80 would read past the hash. Plan must build and the
-    # two near-identical docs must pair.
-    pairs = simhash_pairs(docs, max_hamming=10, band_bits=20).collect()
-    assert any((r.d1, r.d2) == (1, 2) for r in pairs)
-    # n_bands=5 alone → band_bits = 56//5 = 11; layout fits the hash.
-    pairs2 = simhash_pairs(docs, max_hamming=10, n_bands=5).collect()
-    assert any((r.d1, r.d2) == (1, 2) for r in pairs2)
-    # an explicitly bad joint layout is refused, not silently degraded
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="exceeds"):
-        simhash_pairs(docs, band_bits=20, n_bands=4)
-    assert SIMHASH_BITS == 56

@@ -115,11 +115,8 @@ def test_ivf_assignment_is_total_and_valid(spark, emb):
 
 
 def test_minhash_estimates_track_exact_jaccard(spark, docs):
-    exact = {(r.d1, r.d2): r.jaccard for r in D.jaccard_pairs(docs, n=3).collect()}
-    est = {
-        (r.d1, r.d2): r.est_jaccard
-        for r in D.minhash_lsh_pairs(docs, k=16, band_size=4, n=3).collect()
-    }
+    exact = {(r.d1, r.d2): r.jaccard for r in D.jaccard_pairs(docs).collect()}
+    est = {(r.d1, r.d2): r.est_jaccard for r in D.minhash_lsh_pairs(docs).collect()}
     # every truly-high-similarity pair must be surfaced by LSH...
     high = {p for p, j in exact.items() if j >= 0.8}
     assert high <= set(est), f"missed high-sim pairs: {high - set(est)}"
@@ -129,17 +126,19 @@ def test_minhash_estimates_track_exact_jaccard(spark, docs):
 
 
 def test_simhash_close_for_near_dups(spark, docs):
+    """The strongest Jaccard near-dup differs in at most a quarter of the
+    SimHash bits (14 of 56)."""
     top = (
-        D.jaccard_pairs(docs, n=3)
+        D.jaccard_pairs(docs)
         .orderBy(F.col("jaccard").desc())
         .limit(1)
         .collect()[0]
     )
     if top.jaccard < 0.8:
         pytest.skip("fixture has no strong near-dup at this SF")
-    sim = {r.doc_id: r.simhash for r in D.simhash_sig(docs, 3, 32).collect()}
+    sim = {r.doc_id: r.simhash for r in D.simhash_sig(docs).collect()}
     ham = bin(sim[top.d1] ^ sim[top.d2]).count("1")
-    assert ham <= 8, f"simhash hamming {ham} for jaccard {top.jaccard}"
+    assert ham <= D.SIMHASH_BITS // 4, f"simhash hamming {ham} for jaccard {top.jaccard}"
 
 
 def test_exact_dedup_idempotent(spark, docs):
@@ -173,17 +172,16 @@ def test_multimodal_roundtrip(spark, docs):
     assert mismatched.count() == 0
 
 
-def test_connected_components_long_chain_converges_fast(spark):
+def test_connected_components_long_chain_converges_fast(spark, monkeypatch):
     """Pointer jumping must make convergence O(log diameter): a 1024-node
     chain (diameter 1023) resolves to ONE component labeled 0 within 12
     rounds — one-hop-only propagation would need ~1023 and return wrong
     labels under the same cap. This is the adversarial-graph guarantee
     that makes the operator safe beyond shallow near-dup clusters."""
-    from wd2sql_spark.operators.dedup import connected_components
-
+    monkeypatch.setattr(D, "CC_MAX_ROUNDS", 12)
     n = 1024
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["src", "dst"])
-    comp = connected_components(edges, max_iter=12)
+    comp = D.connected_components(edges)
     rows = comp.collect()
     assert len(rows) == n
     assert {r["cluster_id"] for r in rows} == {0}
@@ -394,11 +392,11 @@ def test_prefix_filter_jaccard_is_lossless(spark, docs):
     global order is wrong)."""
     got_pairs = {
         (r["d1"], r["d2"])
-        for r in D.jaccard_pairs_prefix_filter(docs, n=3, t_num=1, t_den=2).collect()
+        for r in D.jaccard_pairs_prefix_filter(docs).collect()
     }
     # jaccard = common/union is a correctly-rounded ratio of small ints, so
     # the >= 0.5 cut matches the operator's integer 2*common >= union
-    full = D.jaccard_pairs(docs, n=3, max_doc_freq=None).collect()
+    full = D.jaccard_pairs(docs, max_doc_freq=None).collect()
     want_pairs = {(r["d1"], r["d2"]) for r in full if r["jaccard"] >= 0.5}
     assert got_pairs == want_pairs
     assert got_pairs, "fixture should contain at least one J>=0.5 pair"
@@ -409,7 +407,7 @@ def test_prefix_filter_prefix_is_smaller_than_doc(spark, docs):
     the full inverted index for multi-shingle docs (p = n - ceil(n/2) + 1
     <= (n+1)//2 + ... < n for n >= 2) — the scale property that bounds the
     join."""
-    sh = D.doc_shingles(docs, 3)
+    sh = D.doc_shingles(docs)
     per_doc = sh.groupBy("doc_id").count().filter(F.col("count") >= 4)
     n_docs = per_doc.count()
     total_shingles = per_doc.agg(F.sum("count")).collect()[0][0]
@@ -443,13 +441,39 @@ def test_charlm_score_flags_atypical_text(spark):
     assert out[4] < min(out[1], out[2], out[3])
 
 
-def test_rowlocal_band_index_equals_aggregate_form(spark, docs):
-    """minhash_band_index_rowlocal (streaming-stateless array_min folds)
-    must be BIT-IDENTICAL to the explode+groupBy form — the streaming
-    incremental near-dup's oracle validity rests on this equality."""
-    a = sorted(map(tuple, D.minhash_band_index(docs).collect()))
-    b = sorted(map(tuple, D.minhash_band_index_rowlocal(docs).collect()))
+def test_streaming_band_index_equals_batch(spark, docs, tmp_path):
+    """minhash_band_index over a stream (row-local array_min folds) must be
+    BIT-IDENTICAL to the same call over the batch frame (explode+groupBy)
+    — the streaming incremental near-dup's oracle validity rests on this
+    equality."""
+    from wd2sql_spark.streaming.core import run_to_batch
+
+    src = docs.select("doc_id", "text")
+    src.write.parquet(str(tmp_path / "docs"))
+    stream = spark.readStream.schema(src.schema).parquet(str(tmp_path / "docs"))
+    assert stream.isStreaming
+    got = run_to_batch(D.minhash_band_index(stream), output_mode="append", name="bandidx")
+    a = sorted(map(tuple, D.minhash_band_index(src).collect()))
+    b = sorted(map(tuple, got.collect()))
     assert a == b and a
+
+
+def test_band_index_refuses_another_shape_before_any_job(spark, docs, monkeypatch):
+    """The band store's shape is fixed: ``minhash_band_index(docs, k=8)``
+    raises ValueError before it builds a signature plan or Spark runs a
+    job."""
+    built = []
+    monkeypatch.setattr(D, "minhash_signatures_wide", lambda d: built.append(d))
+    sc = spark.sparkContext
+    group = "band-index-shape"
+    sc.setJobGroup(group, "shape check")
+    try:
+        with pytest.raises(ValueError, match="k=16"):
+            D.minhash_band_index(docs, k=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert built == []
 
 
 # Jobs the six ANN queries below launch while their plans are built, in

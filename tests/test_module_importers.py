@@ -15,6 +15,9 @@ loads its name, reads it as an attribute or imports it (by name, not by
 module: a shared name is a false pass, never a false failure).
 ``@query``-registered functions (reached through the registry), dunder
 names and the user surface in ``ALLOWED`` need no reference.
+
+The same scan keeps the MinHash shape in ``operators/dedup.py``: no other
+production file passes it or formats a signature column name.
 """
 
 from __future__ import annotations
@@ -161,3 +164,64 @@ def test_every_package_definition_has_a_production_reference():
         if name not in used
     )
     assert not orphans, f"definitions with no production reference: {orphans}"
+
+
+# The MinHash shape is one stored format (the band store's layout), owned
+# by operators/dedup.py's constants. Outside that module no production
+# call passes it and no code formats a signature column name.
+# perfbench's frozen ``minhash_band_index(drop, k=16, band_size=4, n=3)``
+# is accepted: it passes the constants' own values, which the function
+# checks. Oracle SQL text is plain strings and stays independent.
+MINHASH_ENTRIES = {
+    "minhash_band_index",
+    "minhash_signatures_wide",
+    "minhash_lsh_pairs",
+    "incremental_index_probe",
+    "admit_batch",
+    "admission_sink",
+    "write_lsh_store",
+}
+
+
+def _call_name(node: ast.Call) -> str | None:
+    return getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+
+
+def _formats_mh_column(node: ast.JoinedStr) -> bool:
+    return any(
+        isinstance(a, ast.Constant) and str(a.value).endswith("mh") and isinstance(b, ast.FormattedValue)
+        for a, b in zip(node.values, node.values[1:])
+    )
+
+
+def test_minhash_shape_is_owned_by_dedup():
+    from wd2sql_spark.operators.dedup import BAND_SIZE, K, SHINGLE_N
+
+    frozen = {"k": K, "band_size": BAND_SIZE, "n": SHINGLE_N}
+    owner = os.path.join(ROOT, PKG, "operators", "dedup.py")
+    perfbench = os.path.join(ROOT, "perfbench") + os.sep
+    offenders = []
+    for path in _production_roots():
+        if path == owner:
+            continue
+        where = os.path.relpath(path, ROOT)
+        for node in ast.walk(_parse(path)):
+            if isinstance(node, ast.JoinedStr) and _formats_mh_column(node):
+                offenders.append(f"{where}:{node.lineno} formats an mh column")
+            if not (isinstance(node, ast.Call) and _call_name(node) in MINHASH_ENTRIES):
+                continue
+            name = _call_name(node)
+            if name == "minhash_band_index" and len(node.args) > 1:
+                offenders.append(f"{where}:{node.lineno} passes the shape positionally")
+            for kw in node.keywords:
+                if kw.arg not in frozen:
+                    continue
+                accepted = (
+                    path.startswith(perfbench)
+                    and name == "minhash_band_index"
+                    and isinstance(kw.value, ast.Constant)
+                    and kw.value.value == frozen[kw.arg]
+                )
+                if not accepted:
+                    offenders.append(f"{where}:{node.lineno} {name}({kw.arg}=...)")
+    assert not offenders, offenders

@@ -1,7 +1,7 @@
 """Property-based cross-engine checks of the two hash primitives the
 round-3 oracles rest on (VERDICT r2 task 7):
 
-1. SimHash bit arithmetic — Spark's 32 conditional sums + sign
+1. SimHash bit arithmetic — Spark's 56 conditional sums + sign
    accumulator (operators/dedup.simhash_from_shingles) must produce the
    same BIGINT as the DuckDB twin built by queries/llm_dedup._simhash_sql
    for arbitrary shingle multisets. The dedup_simhash oracle assumes this.
@@ -23,7 +23,7 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
-from wd2sql_spark.operators.dedup import simhash_from_shingles
+from wd2sql_spark.operators.dedup import SIMHASH_BITS, simhash_from_shingles
 from wd2sql_spark.operators.similarity import hyperplanes, lsh_bucket
 from wd2sql_spark.queries.llm_similarity import _lsh_bucket_sql
 
@@ -32,16 +32,17 @@ SHINGLE = st.text(
 )
 
 
-def _simhash_duck_sql(bits: int) -> str:
+def _simhash_duck_sql() -> str:
     """The sums+acc tail of llm_dedup._simhash_sql, over a registered
     (doc_id, shingle) relation instead of the shingle CTE."""
     bit_sums = ", ".join(
         f"SUM(((strpos('0123456789abcdef', substr(md5(shingle), {1 + j // 4}, 1)) - 1) "
         f"// {2 ** (3 - j % 4)}) % 2 * 2 - 1) AS s{j}"
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     )
     acc = " + ".join(
-        f"(CASE WHEN s{j} > 0 THEN CAST({2**j} AS BIGINT) ELSE 0 END)" for j in range(bits)
+        f"(CASE WHEN s{j} > 0 THEN CAST({2**j} AS BIGINT) ELSE 0 END)"
+        for j in range(SIMHASH_BITS)
     )
     return (
         f"WITH sums AS (SELECT doc_id, {bit_sums} FROM sh GROUP BY doc_id) "
@@ -56,18 +57,15 @@ def _simhash_duck_sql(bits: int) -> str:
         st.lists(SHINGLE, min_size=1, max_size=20, unique=True),
         min_size=1,
         max_size=5,
-    ),
-    st.sampled_from([32, 56]),
+    )
 )
-def test_simhash_bits_match_oracle_form(spark, docs, bits):
+def test_simhash_bits_match_oracle_form(spark, docs):
     rows = [(i, s) for i, shingles in docs.items() for s in shingles]
     sdf = spark.createDataFrame(rows, ["doc_id", "shingle"])
-    spark_out = {
-        r["doc_id"]: r["simhash"] for r in simhash_from_shingles(sdf, bits).collect()
-    }
+    spark_out = {r["doc_id"]: r["simhash"] for r in simhash_from_shingles(sdf).collect()}
     con = duckdb.connect()
     con.register("sh", pd.DataFrame(rows, columns=["doc_id", "shingle"]))
-    duck_out = {r[0]: r[1] for r in con.execute(_simhash_duck_sql(bits)).fetchall()}
+    duck_out = {r[0]: r[1] for r in con.execute(_simhash_duck_sql()).fetchall()}
     con.close()
     assert spark_out == duck_out
 

@@ -33,11 +33,11 @@ def test_prefix_filter_lossless_on_random_corpora(spark, texts):
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
     got = {
         (r["d1"], r["d2"])
-        for r in D.jaccard_pairs_prefix_filter(docs, n=3, t_num=1, t_den=2).collect()
+        for r in D.jaccard_pairs_prefix_filter(docs).collect()
     }
     want = {
         (r["d1"], r["d2"])
-        for r in D.jaccard_pairs(docs, n=3, max_doc_freq=None).collect()
+        for r in D.jaccard_pairs(docs, max_doc_freq=None).collect()
         if r["jaccard"] >= 0.5
     }
     assert got == want

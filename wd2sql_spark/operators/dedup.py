@@ -6,23 +6,29 @@ JVM-side and codegen'd):
 
 - exact:        hash-groupBy on normalized text
 - n-gram Jaccard: shingle inverted index → pair intersection counts
-- MinHash+LSH:  shingle → k md5-derived min-hashes → banded bucket join
-- SimHash:      32-bit sign-aggregated fingerprint → hamming candidates
+- MinHash+LSH:  shingle → K md5-derived min-hashes → banded bucket join
+- SimHash:      56-bit sign-aggregated fingerprint → hamming candidates
 - embedding cosine: see operators/similarity.py
 
 Scale notes (the 100 TB story): every strategy is shuffle-bounded by its
 candidate-generation step, never by O(n²) pairs. The Jaccard inverted
-index shuffles one row per (doc, shingle); MinHash-LSH shuffles k rows per
-doc then joins only within band buckets; SimHash bands 8-bit chunks for
-exact-match candidate buckets. Hot shingles (stop-phrases) are the skew
-risk — AQE skew-join handles moderate skew, and a `max_doc_freq` filter
-drops degenerate shingles entirely (standard practice: a shingle in >X%
-of docs has no dedup signal).
+index shuffles one row per (doc, shingle); MinHash-LSH shuffles one
+signature row per doc then joins only within band buckets; SimHash bands
+its hash into exact-match candidate buckets of at least 14 bits, wider as
+the corpus grows (:func:`auto_band_bits`). Hot shingles (stop-phrases)
+are the skew risk — AQE skew-join handles moderate skew, and a
+`max_doc_freq` filter drops degenerate shingles entirely (standard
+practice: a shingle in >X% of docs has no dedup signal).
 
 MinHash signatures are lexicographic MINs of fixed-width md5-hex prefixes:
 md5 is bit-identical everywhere, and on fixed-length hex strings
 lexicographic order == numeric order, so the whole construction is
 reproducible in any engine (this is what makes the DuckDB oracle possible).
+
+This module owns the signature formats: the MinHash shape (``K`` seeds in
+bands of ``BAND_SIZE`` over word ``SHINGLE_N``-grams, the columns
+``MH_COLS``) is also the layout of the persisted band store
+(sinks/lsh_store.py), so it is a set of constants, not parameters.
 """
 
 from __future__ import annotations
@@ -30,9 +36,25 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from wd2sql_spark.operators.skew import spread_rows
 from wd2sql_spark.session_cache import memo
 
 HEX_DIGITS = "0123456789abcdef"
+
+SHINGLE_N = 3  # word n-gram width of every MinHash, SimHash and Jaccard path
+K = 16  # MinHash seeds per signature
+BAND_SIZE = 4  # seeds per LSH band: K // BAND_SIZE bands
+MH_COLS = tuple(f"mh{s}" for s in range(K))  # the signature columns
+JACCARD_T_NUM, JACCARD_T_DEN = 1, 2  # prefix-filter threshold t = 1/2
+SIMHASH_BITS = 56  # md5 supplies 128; 56 keeps the int64 headroom and
+#                    divides into 4 bands of 14 (bands > h ⇒ recall h ≤ 3)
+SIMHASH_BANDS = 4
+SIMHASH_BAND_BITS = SIMHASH_BITS // SIMHASH_BANDS
+SIMHASH_MAX_HAMMING = 8  # SimHash pairs within this many differing bits
+BAND_BITS_CAP = 28  # 2 bands × 28 bits exhausts the 56-bit hash; beyond
+#                     2^28 (~268 M) docs per corpus this family needs a
+#                     wider hash (documented ceiling, see auto_band_bits)
+CC_MAX_ROUNDS = 20  # connected_components' round cap
 
 
 def normalize_text(col: Column) -> Column:
@@ -53,7 +75,7 @@ def tokens(col: Column) -> Column:
     return F.split(F.regexp_replace(F.lower(col), r"^\s+|\s+$", ""), r"\s+")
 
 
-def shingles(tokens_col: Column, n: int = 3) -> Column:
+def shingles(tokens_col: Column, n: int) -> Column:
     """Distinct word n-gram shingles. Empty when the doc has < n tokens
     (matches SQL `range(1, len-n+2)` semantics)."""
     idx = F.sequence(F.lit(1), F.size(tokens_col) - F.lit(n - 1))
@@ -63,57 +85,49 @@ def shingles(tokens_col: Column, n: int = 3) -> Column:
     )
 
 
-def seeded_hash(col: Column, seed: int, width: int = 15) -> Column:
-    """Deterministic per-seed hash: first ``width`` hex chars of
+def seeded_hash(col: Column, seed: int) -> Column:
+    """Deterministic per-seed hash: the first 15 hex chars of
     md5(seed ':' value). 15 hex chars = 60 bits — collision-safe for
     min-hashing, and identical in any engine with md5."""
-    return F.substring(F.md5(F.concat(F.lit(f"{seed}:"), col)), 1, width)
+    return F.substring(F.md5(F.concat(F.lit(f"{seed}:"), col)), 1, 15)
 
 
-def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Exact dedup by normalized-text hash: one row per distinct content
     with the representative (min id) and the group size. The groupBy is a
     single hash shuffle on the 32-byte digest, never on the text itself —
     at 100 TB you shuffle ~32 B/doc, not documents."""
-    h = F.md5(normalize_text(F.col(text_col)))
+    h = F.md5(normalize_text(F.col("text")))
     return (
-        docs.select(F.col(id_col), h.alias("content_hash"))
+        docs.select(F.col("doc_id"), h.alias("content_hash"))
         .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").cast("bigint").alias("n_copies"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count("*").cast("bigint").alias("n_copies"))
     )
 
 
-def doc_shingles(docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, shingle) inverted-index relation.
+def doc_shingles(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
+    """(doc_id, shingle) inverted-index relation of a batch (doc_id,
+    text) relation.
 
     The tokenize+shingle explode is the CPU-dominant step of every
     shingle-based dedup, and a small parquet input arrives as a handful
     of scan partitions (one ~15 MB file → one task under the 128 MB split
-    size), serializing it on one core. When the scan is narrower than the
-    cluster, pre-spread the documents by id first — the shuffled payload
-    is one text row per doc, negligible next to the explode it
-    parallelizes. On a 100 TB corpus the scan already has thousands of
-    splits and the branch is a no-op."""
-    # `.rdd` is unsupported on streaming plans (and forces an extra
-    # driver-side physical planning pass even on batch); the pre-spread is
-    # a batch-only input fix-up, so streaming relations skip it.
-    if not docs.isStreaming:
-        parallelism = docs.sparkSession.sparkContext.defaultParallelism
-        if docs.rdd.getNumPartitions() < parallelism:
-            docs = docs.repartition(parallelism, F.col(id_col))
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(shingles(tokens(F.col(text_col)), n)).alias("shingle"),
+    size), serializing it on one core. ``skew.spread_rows`` pre-spreads
+    the documents by id when the scan is narrower than the cluster — the
+    shuffled payload is one text row per doc, negligible next to the
+    explode it parallelizes. On a 100 TB corpus the scan already has
+    thousands of splits and the spread is a no-op."""
+    return spread_rows(docs, "doc_id", "text").select(
+        "doc_id", F.explode(shingles(tokens(F.col("text")), n)).alias("shingle")
     )
 
 
 def jaccard_pairs(
     docs: DataFrame,
-    n: int = 3,
     max_doc_freq: int | None = None,
     cache_key: tuple | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard for every pair sharing ≥1 shingle.
+    """Exact ``SHINGLE_N``-gram Jaccard for every pair sharing ≥1 shingle.
 
     candidates = Σ_shingle C(df, 2); ``max_doc_freq`` caps df to keep the
     join linear when stop-phrases appear (dropped shingles lower recall
@@ -142,7 +156,7 @@ def jaccard_pairs(
     # life of the session. MEMORY_AND_DISK (the persist() default)
     # spills at scale, and the cached relation is (id, 8-byte hash) — a
     # small fraction of the corpus text.
-    sh = doc_shingles(docs, n).select("doc_id", F.xxhash64("shingle").alias("shingle"))
+    sh = doc_shingles(docs).select("doc_id", F.xxhash64("shingle").alias("shingle"))
     if max_doc_freq is not None:
         freq = sh.groupBy("shingle").agg(F.count("*").alias("df")).filter(F.col("df") <= max_doc_freq)
         sh = sh.join(freq.select("shingle"), "shingle", "left_semi")
@@ -150,7 +164,7 @@ def jaccard_pairs(
     sh = memo(
         docs.sparkSession,
         "dedup.jaccard_shingles",
-        (cache_key, n, max_doc_freq) if cache_key is not None else None,
+        (cache_key, max_doc_freq) if cache_key is not None else None,
         sh.persist,
     )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
@@ -177,17 +191,11 @@ def jaccard_pairs(
     )
 
 
-def jaccard_pairs_prefix_filter(
-    docs: DataFrame,
-    n: int = 3,
-    t_num: int = 1,
-    t_den: int = 2,
-    cache_key: tuple | None = None,
-) -> DataFrame:
+def jaccard_pairs_prefix_filter(docs: DataFrame, cache_key: tuple | None = None) -> DataFrame:
     """Exact thresholded Jaccard join via PREFIX FILTERING (the PPJoin
     family, Xiao et al., WWW 2008): every pair with
-    J ≥ t = t_num/t_den, found WITHOUT the df cap :func:`jaccard_pairs`
-    needs.
+    J ≥ t = t_num/t_den (``JACCARD_T_NUM``/``JACCARD_T_DEN`` = 1/2), found
+    WITHOUT the df cap :func:`jaccard_pairs` needs.
 
     Order all shingles by a global total order (ascending document
     frequency — rarest first); a doc with |x| shingles exposes only its
@@ -218,7 +226,7 @@ def jaccard_pairs_prefix_filter(
     def build() -> tuple[DataFrame, DataFrame]:
         # the memo value carries every persisted intermediate (sh
         # included), so its release unpersists them all
-        sh = doc_shingles(docs, n).select(
+        sh = doc_shingles(docs).select(
             "doc_id", F.xxhash64("shingle").alias("shingle")
         ).persist()
         freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
@@ -242,12 +250,8 @@ def jaccard_pairs_prefix_filter(
         )
         return pd_rel, sh
 
-    per_doc = memo(
-        docs.sparkSession,
-        "dedup.prefix_arr",
-        (cache_key, n) if cache_key is not None else None,
-        build,
-    )[0]
+    per_doc = memo(docs.sparkSession, "dedup.prefix_arr", cache_key, build)[0]
+    t_num, t_den = JACCARD_T_NUM, JACCARD_T_DEN
     n_sh = F.size("arr")
     # p = n - ceil(t*n) + 1, with ceil done in integer arithmetic
     ceil_tn = F.floor((n_sh * F.lit(t_num) + F.lit(t_den - 1)) / F.lit(t_den))
@@ -318,33 +322,72 @@ def jaccard_pairs_prefix_filter(
     )
 
 
-def minhash_signatures_wide(docs: DataFrame, k: int = 16, n: int = 3) -> DataFrame:
-    """(doc_id, mh0..mh{k-1}): all k min-hashes in ONE aggregation over the
-    (doc, shingle) relation — k conditional MIN columns instead of a k×
-    seed-explode, so the shuffle carries one row per doc (k·15 bytes) and
+def minhash_signatures_wide(docs: DataFrame) -> DataFrame:
+    """(doc_id, mh0..mh{K-1}): all K min-hashes in ONE aggregation over the
+    (doc, shingle) relation — K conditional MIN columns instead of a K×
+    seed-explode, so the shuffle carries one row per doc (K·15 bytes) and
     partial MIN collapses each map partition before it. Each value is the
     min over shingles of md5(seed ':' shingle)'s 15-hex-digit prefix."""
-    sh = doc_shingles(docs, n)
+    sh = doc_shingles(docs)
     return sh.groupBy("doc_id").agg(
-        *[F.min(seeded_hash(F.col("shingle"), s)).alias(f"mh{s}") for s in range(k)]
+        *[F.min(seeded_hash(F.col("shingle"), s)).alias(c) for s, c in enumerate(MH_COLS)]
     )
 
 
-def _banded(sig: DataFrame, k: int, band_size: int, *keep: Column) -> DataFrame:
+def _minhash_signatures_rowlocal(docs: DataFrame) -> DataFrame:
+    """:func:`minhash_signatures_wide` computed WITHOUT the
+    explode+groupBy: each doc's K min-hashes are array_min folds over its
+    own shingle array, so the signature is a stateless narrow map — the
+    only form valid on a stream, where a per-doc aggregation would need
+    state. Same values by construction (lexicographic array_min over the
+    distinct shingles ≡ groupBy MIN over their exploded rows; docs with no
+    shingle produce no row in either form — pinned by
+    tests/test_llm_ops.py). In batch the aggregate form is 3–5× faster
+    (ROADMAP), so :func:`minhash_band_index` uses this one only on a
+    stream.
+
+    The shingle ARRAY is materialized once per row in a child projection
+    and the K seed folds read the column: inlining the
+    tokenize→slice→array_distinct expression into every seed fold
+    evaluated it K+1 times per row (K mins + the size filter), measured
+    at 110 s for a 5 k-doc delta where this form takes 21 s (full
+    materialization; a bare count() hides the difference entirely by
+    pruning the mh columns — the SCALE.md count()-forcing trap).
+    CollapseProject leaves the alias alone because a non-trivial
+    expression referenced K times is not collapse-eligible, so the single
+    evaluation survives optimization."""
+
+    def mh_col(s: int) -> Column:
+        # NB: a `lambda x, s=s:` default-arg closure would change the
+        # lambda's ARITY — pyspark passes (element, index) to two-arg
+        # higher-order lambdas, silently binding s to the index (the
+        # text_bm25_topk gotcha); a factory keeps it one-argument.
+        return F.array_min(
+            F.transform(F.col("_shingles"), lambda el: seeded_hash(el, s))
+        ).alias(MH_COLS[s])
+
+    return (
+        docs.select(F.col("doc_id"), shingles(tokens(F.col("text")), SHINGLE_N).alias("_shingles"))
+        .filter(F.size("_shingles") > 0)
+        .select(F.col("doc_id"), *[mh_col(s) for s in range(K)])
+    )
+
+
+def _banded(sig: DataFrame, *keep: str) -> DataFrame:
     """(doc_id, band, band_key, *keep): one row per (doc, band) of a wide
-    signature (doc_id, mh0..mh{k-1}), the band key being the band's
-    ``band_size`` consecutive min-hashes joined by ``|`` (fixed-width hex,
-    so the concatenation is injective). The ONE band-key definition of
-    every MinHash-LSH path."""
+    signature (doc_id, mh0..mh{K-1}), the band key being the band's
+    ``BAND_SIZE`` consecutive min-hashes joined by ``|`` (fixed-width
+    hex, so the concatenation is injective). The ONE band-key definition
+    of every MinHash-LSH path."""
     band_structs = F.array(
         *[
             F.struct(
                 F.lit(bb).alias("band"),
                 F.concat_ws(
-                    "|", *[F.col(f"mh{s}") for s in range(bb * band_size, (bb + 1) * band_size)]
+                    "|", *[F.col(c) for c in MH_COLS[bb * BAND_SIZE : (bb + 1) * BAND_SIZE]]
                 ).alias("band_key"),
             )
-            for bb in range(k // band_size)
+            for bb in range(K // BAND_SIZE)
         ]
     )
     return sig.select("doc_id", F.explode(band_structs).alias("bk"), *keep).select(
@@ -352,47 +395,44 @@ def _banded(sig: DataFrame, k: int, band_size: int, *keep: Column) -> DataFrame:
     )
 
 
-def _est_jaccard(a: str, b: str, k: int) -> Column:
+def _est_jaccard(a: str, b: str) -> Column:
     """Estimated Jaccard of the signatures aliased ``a`` and ``b``: the
-    fraction of their k min-hashes that are equal."""
+    fraction of their K min-hashes that are equal."""
     eq = sum(
-        (F.when(F.col(f"{a}.mh{s}") == F.col(f"{b}.mh{s}"), 1).otherwise(0) for s in range(k)),
+        (F.when(F.col(f"{a}.{c}") == F.col(f"{b}.{c}"), 1).otherwise(0) for c in MH_COLS),
         F.lit(0),
     )
-    return (eq / F.lit(float(k))).alias("est_jaccard")
+    return (eq / F.lit(float(K))).alias("est_jaccard")
 
 
 def minhash_lsh_pairs(
     docs: DataFrame,
-    k: int = 16,
-    band_size: int = 4,
-    n: int = 3,
     min_est_jaccard: float = 0.0,
     cache_key: tuple | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-dup candidates with estimated Jaccard.
 
-    Bands of ``band_size`` consecutive seeds; docs sharing any full band
+    Bands of ``BAND_SIZE`` consecutive seeds; docs sharing any full band
     bucket become candidates (probability 1-(1-j^r)^b); the estimate is
     the fraction of equal signature components. Only band buckets are
     joined — never all pairs. Built on the WIDE signature form: band keys
     are column concatenations (no per-band aggregate) and the estimate is
-    a row-local sum of k column equalities after two doc-id joins (no
+    a row-local sum of K column equalities after two doc-id joins (no
     per-seed join), so the only corpus-sized work is the one signature
     aggregation and the band-bucket join itself.
     Output: (d1, d2, est_jaccard DOUBLE), d1 < d2.
     """
     # sig feeds the band-key build AND both sides of the estimate join;
     # persist avoids re-running the shingle+md5 pipeline three times. The
-    # signature relation is one ~k·16 B row per doc — small at any SF.
+    # signature relation is one ~K·16 B row per doc — small at any SF.
     # cache_key: the corpus identity (e.g. catalog.sf_key).
     sig = memo(
         docs.sparkSession,
         "dedup.minhash_sig",
-        (cache_key, k, n) if cache_key is not None else None,
-        minhash_signatures_wide(docs, k, n).persist,
+        cache_key,
+        minhash_signatures_wide(docs).persist,
     )
-    bk = _banded(sig, k, band_size)
+    bk = _banded(sig)
     a = bk.alias("a")
     b = bk.alias("b")
     cand = (
@@ -408,87 +448,55 @@ def minhash_lsh_pairs(
     est = (
         cand.join(sig.alias("sa"), F.col("d1") == F.col("sa.doc_id"))
         .join(sig.alias("sb"), F.col("d2") == F.col("sb.doc_id"))
-        .select("d1", "d2", _est_jaccard("sa", "sb", k))
+        .select("d1", "d2", _est_jaccard("sa", "sb"))
     )
     return est.filter(F.col("est_jaccard") >= min_est_jaccard)
 
 
-def minhash_band_index(docs: DataFrame, k: int = 16, band_size: int = 4, n: int = 3) -> DataFrame:
-    """The persistable LSH index relation: one row per (doc, band) with
-    the band's bucket key AND the full wide signature denormalized on.
+def minhash_band_index(
+    docs: DataFrame, k: int = K, band_size: int = BAND_SIZE, n: int = SHINGLE_N
+) -> DataFrame:
+    """The persistable LSH index relation of a (doc_id, text) relation:
+    one row per (doc, band) with the band's bucket key AND the full wide
+    signature denormalized on.
 
     This is the artifact an incremental pipeline WRITES ONCE per corpus
     and reuses for every subsequent drop (parquet, bucketed/sorted by
     ``band_key`` so delta probes prune to matching buckets and a shuffle
-    join co-locates for free). Carrying mh0..mh{k-1} on every band row
-    costs k·15 B × n_bands per doc but makes each bucket row
+    join co-locates for free). Carrying mh0..mh{K-1} on every band row
+    costs K·15 B × n_bands per doc but makes each bucket row
     self-contained: a probe join yields both signatures row-locally, so
     no second corpus-sized join is needed to estimate Jaccard.
 
-    Same md5 arithmetic as :func:`minhash_lsh_pairs` — the two agree on
-    candidates by construction."""
-    sig = minhash_signatures_wide(docs, k, n)
-    return _banded(sig, k, band_size, *[F.col(f"mh{s}") for s in range(k)])
+    The signature kernel follows the input: a stream gets the row-local
+    array_min folds (:func:`_minhash_signatures_rowlocal`), a batch the
+    aggregate (:func:`minhash_signatures_wide`). Same md5 arithmetic as
+    :func:`minhash_lsh_pairs` — the two agree on candidates by
+    construction.
 
-
-def minhash_band_index_rowlocal(docs: DataFrame, k: int = 16, band_size: int = 4, n: int = 3) -> DataFrame:
-    """:func:`minhash_band_index` computed WITHOUT the explode+groupBy —
-    each doc's k min-hashes are array_min folds over its own shingle
-    array, so the whole banding is a stateless narrow map.
-
-    Same values by construction (lexicographic array_min over the
-    distinct shingles ≡ groupBy MIN over their exploded rows; docs with
-    no shingle produce no row in either form — pinned by
-    tests/test_llm_ops.py). The batch form stays the default because its
-    map-side-combined aggregate splits one giant document across cores;
-    this form exists for STREAMING delta ingest, where a per-doc
-    aggregation would force complete-mode state but a narrow map keeps
-    the probe append-exact — and delta docs are typical-sized, not
-    pathological.
-
-    The shingle ARRAY is materialized once per row in a child projection
-    and the 16 seed folds read the column (r6): inlining the
-    tokenize→slice→array_distinct expression into every seed fold — the
-    first form of this function — evaluated it 17× per row (16 mins +
-    the size filter), measured at 110 s for a 5 k-doc delta where this
-    form takes 21 s (full materialization; a bare count() hides the
-    difference entirely by pruning the mh columns — the SCALE.md
-    count()-forcing trap). CollapseProject leaves the alias alone
-    because a non-trivial expression referenced 16× is not
-    collapse-eligible, so the single evaluation survives optimization;
-    value equality with the batch form stays pinned by
-    tests/test_llm_ops.py."""
-    shs = shingles(tokens(F.col("text")), n)
-
-    def mh_col(s: int) -> Column:
-        # NB: a `lambda x, s=s:` default-arg closure would change the
-        # lambda's ARITY — pyspark passes (element, index) to two-arg
-        # higher-order lambdas, silently binding s to the index (the
-        # text_bm25_topk gotcha); a factory keeps it one-argument.
-        return F.array_min(
-            F.transform(F.col("_shingles"), lambda el: seeded_hash(el, s))
-        ).alias(f"mh{s}")
-
-    sig_cols = [mh_col(s) for s in range(k)]
-    sig = (
-        docs.select(F.col("doc_id"), shs.alias("_shingles"))
-        .filter(F.size("_shingles") > 0)
-        .select(F.col("doc_id"), *sig_cols)
-    )
-    return _banded(sig, k, band_size, *[F.col(f"mh{s}") for s in range(k)])
+    ``k``, ``band_size`` and ``n`` are kept for callers that pass the
+    store's shape; any other value raises ``ValueError``."""
+    if (k, band_size, n) != (K, BAND_SIZE, SHINGLE_N):
+        raise ValueError(
+            f"the MinHash shape is fixed at k={K}, band_size={BAND_SIZE}, n={SHINGLE_N}; "
+            f"got k={k}, band_size={band_size}, n={n}"
+        )
+    if docs.isStreaming:
+        sig = _minhash_signatures_rowlocal(docs)
+    else:
+        sig = minhash_signatures_wide(docs)
+    return _banded(sig, *MH_COLS)
 
 
 def incremental_index_probe(
     corpus_index: DataFrame,
     delta_index: DataFrame,
-    k: int = 16,
     min_est_jaccard: float = 0.0,
 ) -> DataFrame:
     """Near-duplicate matches of a NEW document drop against an EXISTING
     corpus index — the production dedup shape at 100 TB, where the corpus
     LSH is never recomputed per drop; only the delta is hashed
-    (``minhash_band_index(delta_docs)``, or the row-local form for a
-    stream).
+    (``minhash_band_index(delta_docs)``, a batch or a stream).
 
     ``corpus_index`` is :func:`minhash_band_index` output (in production:
     read back from the band store, sinks/lsh_store.py). The join is on
@@ -498,9 +506,11 @@ def incremental_index_probe(
     signatures arrive on the joined row, so the Jaccard estimate is
     row-local — no follow-up join.
 
-    Output: (delta_id, corpus_id, est_jaccard), distinct pairs with
+    Output: (delta_id, corpus_id, est_jaccard), one row per pair with
     est ≥ ``min_est_jaccard`` — the docs to reject from (or link to) the
-    drop before it is admitted to the corpus."""
+    drop before it is admitted to the corpus. The pair determines the
+    estimate, so ``dropDuplicates`` on the pair is the distinct; unlike
+    ``distinct`` it is valid on a streaming delta in append mode."""
     return (
         corpus_index.alias("c")
         .join(
@@ -510,20 +520,11 @@ def incremental_index_probe(
         .select(
             F.col("d.doc_id").alias("delta_id"),
             F.col("c.doc_id").alias("corpus_id"),
-            _est_jaccard("c", "d", k),
+            _est_jaccard("c", "d"),
         )
-        .distinct()
         .filter(F.col("est_jaccard") >= min_est_jaccard)
+        .dropDuplicates(["delta_id", "corpus_id"])
     )
-
-
-SIMHASH_BITS = 56  # md5 supplies 128; 56 keeps the int64 headroom and
-#                    divides into 4 bands of 14 (bands > h ⇒ recall h ≤ 3)
-SIMHASH_BANDS = 4
-SIMHASH_BAND_BITS = SIMHASH_BITS // SIMHASH_BANDS
-BAND_BITS_CAP = 28  # 2 bands × 28 bits exhausts the 56-bit hash; beyond
-#                     2^28 (~268 M) docs per corpus this family needs a
-#                     wider hash (documented ceiling, see auto_band_bits)
 
 
 def auto_band_bits(
@@ -564,59 +565,45 @@ def simhash_banding(n_docs: int) -> tuple[int, int]:
     return bb, max(2, SIMHASH_BITS // bb)
 
 
-def simhash_from_shingles(sh: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
-    """``bits``-wide SimHash bit arithmetic over a (doc_id, shingle)
-    relation.
+def simhash_from_shingles(sh: DataFrame) -> DataFrame:
+    """``SIMHASH_BITS``-wide SimHash bit arithmetic over a (doc_id,
+    shingle) relation.
 
     Bit j comes from hex digit j//4 of the shingle's md5 (bit 3-(j%4) of
     the nibble); the doc's bit is the sign of Σ(±1) over shingles. One
-    aggregation with ``bits`` conditional sums — no UDF, fully
+    aggregation with ``SIMHASH_BITS`` conditional sums — no UDF, fully
     reproducible in SQL (twin: queries/llm_dedup._simhash_sql;
-    cross-engine equality is property-tested at 32 and 56 bits in
+    cross-engine equality is property-tested in
     tests/test_property_hash.py).
     Output: (doc_id, simhash BIGINT).
     """
     h = F.md5(F.col("shingle"))
     bit_sums = []
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         nibble = F.instr(F.lit(HEX_DIGITS), F.substring(h, 1 + j // 4, 1)) - 1
         bit = F.floor(nibble / (2 ** (3 - j % 4))) % 2
         bit_sums.append(F.sum(bit * 2 - 1).alias(f"s{j}"))
     sums = sh.groupBy("doc_id").agg(*bit_sums)
     acc = F.lit(0).cast("bigint")
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         acc = acc + F.when(F.col(f"s{j}") > 0, F.lit(2**j).cast("bigint")).otherwise(F.lit(0))
     return sums.select("doc_id", acc.alias("simhash"))
 
 
-def simhash_sig(
-    docs: DataFrame,
-    n: int = 3,
-    bits: int = SIMHASH_BITS,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """SimHash over distinct n-gram shingles: shingle explode +
-    :func:`simhash_from_shingles`. Output: (doc_id, simhash BIGINT)."""
-    return simhash_from_shingles(doc_shingles(docs, n, text_col, id_col), bits)
+def simhash_sig(docs: DataFrame) -> DataFrame:
+    """SimHash over distinct ``SHINGLE_N``-gram shingles: shingle explode
+    + :func:`simhash_from_shingles`. Output: (doc_id, simhash BIGINT)."""
+    return simhash_from_shingles(doc_shingles(docs))
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    max_hamming: int = 6,
-    n: int = 3,
-    cache_key: tuple | None = None,
-    band_bits: int | None = None,
-    n_bands: int | None = None,
-) -> DataFrame:
+def simhash_pairs(docs: DataFrame, cache_key: tuple | None = None) -> DataFrame:
     """SimHash near-dup pairs: candidates share at least one exact band
     of the 56-bit hash (bands > h pigeonhole ⇒ guaranteed recall for
     hamming ≤ bands−1, probabilistic above), then exact hamming over
-    candidates.
+    candidates, kept when at most ``SIMHASH_MAX_HAMMING``.
 
     BAND WIDTH IS THE SCALE KNOB — and since r6 it is AUTO-DERIVED from
-    the corpus count (:func:`simhash_banding`; pass ``band_bits``/
-    ``n_bands`` to pin it). Per-band collision pairs grow as
+    the corpus count (:func:`simhash_banding`). Per-band collision pairs grow as
     N²/2^band_bits. The 64× scale experiment measured the former 8-bit
     bands (256 buckets) at 52.8 s / e≈0.92 on 320k docs — the
     near-quadratic signature of an underbanded candidate join — where
@@ -634,30 +621,10 @@ def simhash_pairs(
     the cosine_near_dup_pairs lesson). One generation per site, memoized
     (with the knob count) under ``cache_key``, the corpus identity."""
     spark = docs.sparkSession
-    if band_bits is None and n_bands is None:
-        band_bits, n_bands = simhash_banding(
-            memo(spark, "dedup.simhash_pairs.count", cache_key, docs.count)
-        )
-    elif n_bands is None:
-        # Derive bands from the EFFECTIVE width, never from an auto width
-        # (ADVICE r6 #1: pairing a pinned band_bits with an auto n_bands
-        # can shift bands past the 56-bit hash — every band reads val=0
-        # and the whole corpus lands in one collision bucket).
-        n_bands = max(2, SIMHASH_BITS // band_bits)
-    elif band_bits is None:
-        band_bits = max(1, SIMHASH_BITS // n_bands)
-    if band_bits * n_bands > SIMHASH_BITS:
-        raise ValueError(
-            f"band layout {n_bands}x{band_bits} exceeds the {SIMHASH_BITS}-bit "
-            "hash — bands past the top would read val=0 for every doc and "
-            "collapse the corpus into one collision bucket"
-        )
-    sig = memo(
-        spark,
-        "dedup.simhash_pairs.sig",
-        (cache_key, n) if cache_key is not None else None,
-        simhash_sig(docs, n).persist,
+    band_bits, n_bands = simhash_banding(
+        memo(spark, "dedup.simhash_pairs.count", cache_key, docs.count)
     )
+    sig = memo(spark, "dedup.simhash_pairs.sig", cache_key, simhash_sig(docs).persist)
     mask = 2**band_bits - 1
     chunks = sig.select(
         "doc_id",
@@ -695,13 +662,12 @@ def simhash_pairs(
     )
     return cand.select(
         "d1", "d2", F.bit_count(F.col("h1").bitwiseXOR(F.col("h2"))).cast("bigint").alias("hamming")
-    ).filter(F.col("hamming") <= max_hamming)
+    ).filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
 
 
-def connected_components(
-    edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 20
-) -> DataFrame:
-    """Connected components by min-label propagation with pointer jumping.
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Connected components of a (src, dst) edge relation by min-label
+    propagation with pointer jumping, in at most ``CC_MAX_ROUNDS`` rounds.
 
     Returns (node, cluster_id) where cluster_id = the component's minimum
     node id. The label seed IS round 1: grouping the symmetrized edge
@@ -731,8 +697,8 @@ def connected_components(
     so plan size stays constant (the classic iterative-algorithm failure
     on Spark is an exponentially growing logical plan, not the data).
     """
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).union(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+    sym = edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).union(
+        edges.select(F.col("dst").alias("a"), F.col("src").alias("b"))
     )
     sym = sym.repartition(F.col("a")).localCheckpoint(eager=True)
     # The seed is round 1's adopt-min and stays a LAZY plan over the
@@ -747,7 +713,7 @@ def connected_components(
         .select(F.col("a").alias("node"), F.least(F.col("a"), F.col("min_nbr")).alias("lbl"))
     )
     lbl_type = labels.schema["lbl"].dataType.simpleString()
-    for _ in range(max_iter - 1):
+    for _ in range(CC_MAX_ROUNDS - 1):
         own = labels.select("node", "lbl", F.col("lbl").alias("old_lbl"))
         pushed = (
             sym.join(labels, sym["a"] == labels["node"])

@@ -73,7 +73,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in a long-lived session repeated runs reuse the edge set — the
     # steady-state regime the bench's warm pass measures.
     edges = (
-        D.jaccard_pairs(docs, n=3, max_doc_freq=MAX_SHINGLE_DF, cache_key=sf_key(sf_dir))
+        D.jaccard_pairs(docs, max_doc_freq=MAX_SHINGLE_DF, cache_key=sf_key(sf_dir))
         .filter(F.col("jaccard") >= JACCARD_EDGE_MIN)
         .select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
     )

@@ -103,7 +103,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scale (mirrored in the oracle)."""
     docs = table(spark, sf_dir, "documents")
     return (
-        D.jaccard_pairs(docs, n=3, max_doc_freq=MAX_SHINGLE_DF, cache_key=sf_key(sf_dir))
+        D.jaccard_pairs(docs, max_doc_freq=MAX_SHINGLE_DF, cache_key=sf_key(sf_dir))
         .select(
             F.col("d1").cast("bigint"),
             F.col("d2").cast("bigint"),
@@ -144,7 +144,7 @@ def dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     high-df shingles sort last and never generate candidates."""
     docs = table(spark, sf_dir, "documents")
     return (
-        D.jaccard_pairs_prefix_filter(docs, n=3, t_num=1, t_den=2, cache_key=sf_key(sf_dir))
+        D.jaccard_pairs_prefix_filter(docs, cache_key=sf_key(sf_dir))
         .select(
             F.col("d1").cast("bigint"),
             F.col("d2").cast("bigint"),
@@ -194,9 +194,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape; the md5-string min-hash makes it engine-reproducible."""
     docs = table(spark, sf_dir, "documents")
     return (
-        D.minhash_lsh_pairs(
-            docs, k=16, band_size=4, n=3, min_est_jaccard=0.25, cache_key=sf_key(sf_dir)
-        )
+        D.minhash_lsh_pairs(docs, min_est_jaccard=0.25, cache_key=sf_key(sf_dir))
         .select(
             F.col("d1").cast("bigint"),
             F.col("d2").cast("bigint"),
@@ -272,7 +270,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     same COUNT(*), so both engines band identically at any size."""
     docs = table(spark, sf_dir, "documents")
     return (
-        D.simhash_pairs(docs, max_hamming=8, n=3, cache_key=sf_key(sf_dir))
+        D.simhash_pairs(docs, cache_key=sf_key(sf_dir))
         .select(F.col("d1").cast("bigint"), F.col("d2").cast("bigint"), "hamming")
         .orderBy("hamming", "d1", "d2")
         .limit(20)
@@ -396,11 +394,11 @@ def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "llm_dedup.incremental_band_index",
         sf_key(sf_dir),
-        D.minhash_band_index(docs, k=16, band_size=4, n=3).persist,
+        D.minhash_band_index(docs).persist,
     )
     return (
         D.incremental_index_probe(
-            idx.filter(~is_delta), idx.filter(is_delta), k=16, min_est_jaccard=0.25
+            idx.filter(~is_delta), idx.filter(is_delta), min_est_jaccard=0.25
         )
         .select(
             F.col("delta_id").cast("bigint"),

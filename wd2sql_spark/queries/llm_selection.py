@@ -520,7 +520,7 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents")
     edges = (
-        D.jaccard_pairs(docs, n=3, max_doc_freq=MAX_SHINGLE_DF, cache_key=sf_key(sf_dir))
+        D.jaccard_pairs(docs, max_doc_freq=MAX_SHINGLE_DF, cache_key=sf_key(sf_dir))
         .filter(F.col("jaccard") >= JACCARD_EDGE_MIN)
         .select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
     )
@@ -675,7 +675,7 @@ def pairs_contrastive_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents")
     pairs = (
-        D.jaccard_pairs(docs, n=3, max_doc_freq=MAX_SHINGLE_DF, cache_key=sf_key(sf_dir))
+        D.jaccard_pairs(docs, max_doc_freq=MAX_SHINGLE_DF, cache_key=sf_key(sf_dir))
         .filter(F.col("jaccard") >= PAIR_J_MIN)
         .select(
             F.col("d1").alias("anchor_id"),

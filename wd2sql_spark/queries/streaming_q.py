@@ -316,17 +316,17 @@ from wd2sql_spark.queries.llm_dedup import INCREMENTAL_ORACLE as _INC_ORACLE
 @query("stream_incremental_neardup", oracle=_INC_ORACLE, category="streaming")
 def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dup admission as STREAMING ingest: new documents
-    stream in, each micro-batch is banded by the ROW-LOCAL minhash form
-    (operators/dedup.minhash_band_index_rowlocal — array_min folds, no
-    per-doc aggregation, so the probe stays append-exact with zero
-    stateful aggregation), and probes the STATIC corpus LSH index with a
-    stream-static band join; the only streaming state is the
-    dropDuplicates suppressing repeat band hits of the same pair. This is
-    how a production corpus actually admits a crawl drop: the corpus
-    index is a persisted artifact, the delta never touches it beyond the
-    bucket join, and matches stream out as documents land. Same 10%/90%
-    md5 split and the SAME full-hash oracle as the batch twin
-    (dedup_incremental_delta).
+    stream in, each micro-batch is banded by ``minhash_band_index`` (on a
+    stream it takes the row-local array_min form — no per-doc
+    aggregation, so the probe stays append-exact with zero stateful
+    aggregation), and ``incremental_index_probe`` probes the STATIC
+    corpus LSH index with a stream-static band join; the only streaming
+    state is the probe's dropDuplicates suppressing repeat band hits of
+    the same pair. This is how a production corpus actually admits a
+    crawl drop: the corpus index is a persisted artifact, the delta never
+    touches it beyond the bucket join, and matches stream out as
+    documents land. Same 10%/90% md5 split, probe and full-hash oracle as
+    the batch twin (dedup_incremental_delta).
 
     The corpus index is persisted and memoized (r9, guide §5): the static
     side of a stream-static join is re-executed EVERY micro-batch, so an
@@ -346,32 +346,15 @@ def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "streaming_q.neardup_corpus_index",
         sf_key(sf_dir),
-        D.minhash_band_index(docs.filter(~is_delta), k=16, band_size=4, n=3).persist,
+        D.minhash_band_index(docs.filter(~is_delta)).persist,
     )
 
     sdocs = spark.readStream.schema(_DOCS_SCHEMA).parquet(f"{sf_dir}/documents*.parquet")
-    delta_idx = D.minhash_band_index_rowlocal(
-        sdocs.filter(md5_bucket(F.col("doc_id"), 100) < 10), k=16, band_size=4, n=3
-    )
-
-    d = delta_idx.alias("d")
-    c = corpus_idx.alias("c")
-    eq = sum(
-        (F.when(F.col(f"c.mh{s}") == F.col(f"d.mh{s}"), 1).otherwise(0) for s in range(16)),
-        F.lit(0),
-    )
-    matches = (
-        d.join(
-            c,
-            (F.col("d.band") == F.col("c.band")) & (F.col("d.band_key") == F.col("c.band_key")),
-        )
-        .select(
-            F.col("d.doc_id").cast("bigint").alias("delta_id"),
-            F.col("c.doc_id").cast("bigint").alias("corpus_id"),
-            (eq / F.lit(16.0)).cast("double").alias("est_jaccard"),
-        )
-        .filter(F.col("est_jaccard") >= 0.25)
-        .dropDuplicates(["delta_id", "corpus_id"])
+    delta_idx = D.minhash_band_index(sdocs.filter(md5_bucket(F.col("doc_id"), 100) < 10))
+    matches = D.incremental_index_probe(corpus_idx, delta_idx, min_est_jaccard=0.25).select(
+        F.col("delta_id").cast("bigint"),
+        F.col("corpus_id").cast("bigint"),
+        F.col("est_jaccard").cast("double"),
     )
     return run_to_batch(matches, output_mode="append", name="incdedup").orderBy(
         F.col("est_jaccard").desc(), "delta_id", "corpus_id"

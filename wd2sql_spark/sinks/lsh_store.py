@@ -10,11 +10,11 @@ min/max row-group statistics skip non-matching ``band_key`` ranges —
 no session state, survives executor loss, serves cold from any cluster
 that can read the path.
 
-Layout:
-    <path>/bands/band=<b>/   (doc_id, band_key, mh0..mh{k-1})
+Layout (the MinHash shape is operators/dedup.py's ``K``/``BAND_SIZE``):
+    <path>/bands/band=<b>/   (doc_id, band_key, mh0..mh{K-1})
 
 Admission maintenance is an APPEND: a drop that passes dedup is banded
-(one narrow pass over the delta only) and appended to the same layout —
+(``minhash_band_index`` over the delta only) and appended to the same layout —
 ``append_band_index`` — after which the store equals a full rebuild
 over corpus+delta bit-for-bit (pinned by tests/test_lsh_store.py). The
 corpus is never re-hashed. A probe is ``incremental_index_probe`` over
@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from wd2sql_spark.operators.dedup import minhash_band_index
+from wd2sql_spark.operators.dedup import MH_COLS, minhash_band_index
 
 
 def _layout(idx: DataFrame) -> DataFrame:
@@ -49,18 +49,17 @@ def append_band_index(idx: DataFrame, path: str) -> None:
     _layout(idx).write.mode("append").partitionBy("band").parquet(f"{path}/bands")
 
 
-def write_lsh_store(
-    docs: DataFrame, path: str, k: int = 16, band_size: int = 4, n: int = 3
-) -> None:
+def write_lsh_store(docs: DataFrame, path: str) -> None:
     """Build the band index from ``docs`` (one tokenize→shingle→minhash
     pass) and write it as the store at a new ``path``: the rebuild
     baseline an admitted store is compared against."""
-    append_band_index(minhash_band_index(docs, k=k, band_size=band_size, n=n), path)
+    append_band_index(minhash_band_index(docs), path)
 
 
 def read_lsh_store(spark: SparkSession, path: str) -> DataFrame:
-    """The store as the band-index relation (column order restored: the
-    partition column comes back last from the scan).
+    """The store as the band-index relation, its columns selected by name
+    in ``minhash_band_index``'s order (the partition column comes back
+    last from the scan).
 
     Heals an interrupted compaction swap on open (ADVICE r4 #4): a crash
     between compact's two renames leaves no live ``bands`` dir but a
@@ -69,11 +68,7 @@ def read_lsh_store(spark: SparkSession, path: str) -> DataFrame:
     from wd2sql_spark.sinks.compact import recover_dataset
 
     recover_dataset(f"{path}/bands")
-    raw = spark.read.parquet(f"{path}/bands")
-    mh_cols = sorted(
-        (c for c in raw.columns if c.startswith("mh")), key=lambda c: int(c[2:])
-    )
-    return raw.select("doc_id", "band", "band_key", *mh_cols)
+    return spark.read.parquet(f"{path}/bands").select("doc_id", "band", "band_key", *MH_COLS)
 
 
 def compact_admission_store(spark: SparkSession, path: str) -> None:

@@ -8,7 +8,7 @@ loop as a ``foreachBatch`` sink over the persisted LSH band store
 (sinks/lsh_store.py):
 
 per micro-batch of documents,
-1. probe the current store with the batch's row-local band index —
+1. probe the current store with the batch's band index —
    docs matching an already-admitted doc (est Jaccard ≥ threshold) drop;
 2. resolve WITHIN-batch near-dup groups among the remaining docs with
    the banded pair join + connected components (min-label propagation),
@@ -44,14 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def admit_batch(
-    docs: DataFrame,
-    store_path: str,
-    k: int = 16,
-    band_size: int = 4,
-    n: int = 3,
-    min_est_jaccard: float = 0.5,
-) -> list[int]:
+def admit_batch(docs: DataFrame, store_path: str, min_est_jaccard: float = 0.5) -> list[int]:
     """Run the admission loop for ONE batch of (doc_id, text) rows
     against the store at ``store_path`` (created on first call). Returns
     the admitted doc_ids (sorted) — batch-sized, the operational log a
@@ -71,17 +64,13 @@ def admit_batch(
     # skipping the probe here would admit near-dups of everything already
     # in the store AND orphan the .old generation (ADVICE r5 #1).
     recover_dataset(f"{store_path}/bands")
-    delta_idx = minhash_band_index(
-        docs.select("doc_id", "text"), k=k, band_size=band_size, n=n
-    ).persist()
+    delta_idx = minhash_band_index(docs.select("doc_id", "text")).persist()
     try:
         survivors = delta_idx
         if os.path.isdir(f"{store_path}/bands"):
             store = read_lsh_store(docs.sparkSession, store_path)
             dup_ids = (
-                incremental_index_probe(
-                    store, delta_idx, k=k, min_est_jaccard=min_est_jaccard
-                )
+                incremental_index_probe(store, delta_idx, min_est_jaccard)
                 .select(F.col("delta_id").alias("doc_id"))
                 .distinct()
             )
@@ -89,9 +78,7 @@ def admit_batch(
         # within-batch resolution: banded pairs among survivors → connected
         # components → keep each component's minimum doc_id
         pairs = (
-            incremental_index_probe(
-                survivors, survivors, k=k, min_est_jaccard=min_est_jaccard
-            )
+            incremental_index_probe(survivors, survivors, min_est_jaccard)
             .filter(F.col("delta_id") != F.col("corpus_id"))
             .select(
                 F.col("delta_id").alias("src"), F.col("corpus_id").alias("dst")
@@ -116,9 +103,6 @@ def admit_batch(
 
 def admission_sink(
     store_path: str,
-    k: int = 16,
-    band_size: int = 4,
-    n: int = 3,
     min_est_jaccard: float = 0.5,
     compact_every: int | None = None,
     log=None,
@@ -140,14 +124,7 @@ def admission_sink(
     progress surface a real ingest would ship to its metrics bus."""
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
-        admitted = admit_batch(
-            batch_df,
-            store_path,
-            k=k,
-            band_size=band_size,
-            n=n,
-            min_est_jaccard=min_est_jaccard,
-        )
+        admitted = admit_batch(batch_df, store_path, min_est_jaccard)
         if compact_every is not None and (batch_id + 1) % compact_every == 0:
             import os
 
