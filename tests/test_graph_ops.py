@@ -96,3 +96,21 @@ def test_pagerank_matches_query_constants(spark):
                 recv[d] = recv.get(d, 0) + c
         ranks = {n: (15 * 1_000_000 + 85 * r) // 100 for n, r in recv.items()}
     assert got == ranks
+
+
+def test_cluster_components_warm_build_runs_no_job(spark, sf_dir):
+    """dedup_cluster_components reads the memoized component labels, so
+    a second build in the session runs no Spark job (the rounds ran 8 per
+    build while only the edges were memoized)."""
+    from wd2sql_spark.queries.registry import load_all_modules
+
+    build = load_all_modules()["dedup_cluster_components"].fn
+    build(spark, sf_dir)
+    sc = spark.sparkContext
+    group = "components-warm-build"
+    sc.setJobGroup(group, "second build of dedup_cluster_components")
+    try:
+        build(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

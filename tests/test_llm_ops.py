@@ -489,11 +489,17 @@ def test_ann_family_trains_once_per_cold_session(spark, monkeypatch):
     """Within the job budget, and the corpus is PQ-encoded once: the codes
     store is a projection of the audit index, not a second encoding."""
     from wd2sql_spark.queries.registry import load_all_modules
+    from wd2sql_spark.session_cache import clear_all_session_caches
 
     encodes = []
     encode = S._pq_encoded
     monkeypatch.setattr(S, "_pq_encoded", lambda *a: encodes.append(a) or encode(*a))
     registry = load_all_modules()
+    # The CacheManager is shared by every session of the context: a
+    # relation an earlier test persisted (k-means' quantized vectors) is
+    # substituted into the codebook trainer's plan and changes its jobs.
+    clear_all_session_caches()
+    spark.catalog.clearCache()
     fresh = spark.newSession()
     sc = fresh.sparkContext
     group = "ann-cold-build"

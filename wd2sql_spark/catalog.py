@@ -101,7 +101,14 @@ def _read_table(spark: SparkSession, path: str) -> DataFrame:
 
 
 def events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events stream fixture with ``ts`` normalized to a timestamp.
+    """The events fixture with ``ts`` normalized to a timestamp (see
+    :func:`events_ts`)."""
+    return events_ts(table(spark, sf_dir, "events"))
+
+
+def events_ts(raw: DataFrame) -> DataFrame:
+    """``raw``, a batch or streaming read of the events fixture, with
+    ``ts`` as a timestamp.
 
     Schema-adaptive: a nanos-era fixture surfaces ``ts`` as LongType under
     ``nanosAsLong`` and is truncated ns→µs (matching DuckDB's
@@ -110,7 +117,6 @@ def events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
-    raw = table(spark, sf_dir, "events")
     if isinstance(raw.schema["ts"].dataType, LongType):
         # integer `div`, NOT `/`: float division of ns-scale longs (~1.7e18)
         # exceeds double's 2^53 mantissa and lands ±1µs off.

@@ -91,33 +91,28 @@ def pagerank_ranks(
     checkpointed the same way, so a warm run touches ONLY the two leaf
     relations: per iteration, one |E|-sized join probe + one partial
     aggregate whose exchange moves ≤|V| rows per partition."""
-    n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d")).withColumnRenamed("src", "node")
-    # LEFT join: a sink dst (no out-edges, so no degree row) must still
-    # RECEIVE rank — its d_dst stays NULL, its next-round contribution is
-    # div(r, NULL) = NULL, and it never appears as src, so nothing sums a
-    # NULL. An inner join here would silently drop every edge into a sink
-    # (caught by the hypothesis recurrence twin on the single edge 0→1).
     spark = edges.sparkSession
-    edges_d = memo(
-        spark,
-        "graph_ops.pagerank_edges",
-        cache_key,
-        lambda: checkpoint(
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def build() -> tuple[DataFrame, DataFrame]:
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d")).withColumnRenamed("src", "node")
+        # LEFT join: a sink dst (no out-edges, so no degree row) must still
+        # RECEIVE rank — its d_dst stays NULL, its next-round contribution is
+        # div(r, NULL) = NULL, and it never appears as src, so nothing sums a
+        # NULL. An inner join here would silently drop every edge into a sink
+        # (caught by the hypothesis recurrence twin on the single edge 0→1).
+        edges_d = checkpoint(
             edges.join(deg.select(F.col("node").alias("dst"), F.col("d").alias("d_dst")), "dst", "left")
             .select("src", "dst", "d_dst")
             .repartition(n_part, "src")
             .sortWithinPartitions("src")
-        ),
-    )
-    # ranks carries each node's out-degree alongside its rank so the
-    # contribution r div d is row-local every round.
-    ranks = memo(
-        spark,
-        "graph_ops.pagerank_ranks0",
-        cache_key,
-        lambda: checkpoint(deg.select("node", "d", F.lit(r0).cast("long").alias("r"))),
-    )
+        )
+        # ranks carries each node's out-degree alongside its rank so the
+        # contribution r div d is row-local every round.
+        ranks0 = checkpoint(deg.select("node", "d", F.lit(r0).cast("long").alias("r")))
+        return edges_d, ranks0
+
+    edges_d, ranks = memo(spark, "graph_ops.pagerank_leaves", cache_key, build)
     base = (damp_den - damp_num) * r0
     for _ in range(iters):
         contrib = ranks.select(

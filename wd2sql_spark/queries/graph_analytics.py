@@ -181,9 +181,9 @@ def graph_pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-match. The symmetric construction leaves no dangling nodes (every
     node has out-edges), so no leaked-mass correction is needed.
 
-    Plan: the edge list and the degree relation build once (persisted) and
-    each iteration is one join of the |V|-sized rank relation + one hash
-    aggregate — see module docstring for the 100 TB notes."""
+    Plan: the edge list and the degree relation build once per session
+    (checkpointed by pagerank_ranks) and each iteration is one join of
+    the |V|-sized rank relation + one hash aggregate — see module docstring for the 100 TB notes."""
     orders = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
     pairs = (
@@ -197,11 +197,9 @@ def graph_pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.select(F.col("cust").alias("src"), F.col("supp").alias("dst")).unionAll(
         pairs.select(F.col("supp").alias("src"), F.col("cust").alias("dst"))
     )
-    # Edges feed the degree aggregate plus one join per iteration; the
-    # distinct-pairs expansion would otherwise recompute each time.
-    edges = memo(spark, "graph_analytics.pagerank_edges", sf_key(sf_dir), edges.persist)
-    # memo key of the checkpointed relations: the fixture identity + the
-    # constants
+    # The edge list is read only while pagerank_ranks builds its two
+    # checkpointed leaves (once per session); memo key of those leaves:
+    # the fixture identity + the constants
     ranks = pagerank_ranks(
         edges, iters=ITERS, r0=R0, damp_num=DAMP_NUM, damp_den=DAMP_DEN,
         cache_key=(sf_key(sf_dir), ITERS, R0, DAMP_NUM, DAMP_DEN),

@@ -255,17 +255,15 @@ def retrieval_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.split(F.col("phrase"), " ").getItem(2).alias("t2"),
         )
     )
-    # 1-row argmax consumed twice (the leg filter AND the final phrase
-    # attach); unpersisted, each consumer embedded its own corpus-wide
-    # trigram aggregate — a third documents scan per run (r9
-    # executed-plan probe).
-    top = memo(spark, "llm_retrieval.phrase_top", sf_key(sf_dir), top.persist)
     # ONE corpus pass extracts the phrase-term positions (tiny: three
     # terms' worth of rows), PERSISTED so the three adjacency legs and
     # the final phrase attach read the cached KB-sized relation instead
     # of re-running posexplode over the corpus per leg (measured 5.2 s →
     # ~1.5 s at sf0.1-×1; the argmax pass above is the only other corpus
     # scan, so the whole query is two passes like the tf-idf family).
+    # Every filtered row carries the argmax's columns, so the argmax is
+    # read only by this build and the phrase attach below reads it back
+    # from the cached rows: no corpus-wide trigram aggregate per run.
     filt = memo(
         spark,
         "llm_retrieval.phrase_filt",
@@ -284,7 +282,7 @@ def retrieval_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "p", "term")
     occ = phrase_occurrences(leg0, rest, F.col("t1"), F.col("t2"))
     return (
-        occ.join(F.broadcast(top.select("phrase")), how="cross")
+        occ.join(F.broadcast(filt.select("phrase").limit(1)), how="cross")
         .groupBy("doc_id", "phrase")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_occurrences"),

@@ -506,34 +506,18 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     group split forces to ZERO (the oracle recomputes everything,
     including the closure, so the 0 is proved cross-engine, not assumed).
 
-    Plan shape: the edge set + closure reuse dedup_cluster_components'
-    machinery (capped-df candidate join, pointer-jumping components); the
+    Plan shape: the edge set + closure are dedup_cluster_components'
+    (``graph.near_dup_components``, one memo slot for both queries); the
     per-doc work after that is one broadcast-sized left join of the tiny
     clustered-node relation onto the corpus scan + a narrow md5 — at
     100 TB the corpus is touched once beyond the dedup pass the pipeline
     already ran. The audit joins the (small) edge relation to the
     doc-level split relation twice — broadcast both ways."""
-    from wd2sql_spark.operators import dedup as D
-    from wd2sql_spark.queries.graph import JACCARD_EDGE_MIN
-    from wd2sql_spark.queries.llm_dedup import MAX_SHINGLE_DF
+    from wd2sql_spark.queries.graph import near_dup_components
     from wd2sql_spark.queries.llm_sampling import md5_bucket
 
     docs = table(spark, sf_dir, "documents")
-    edges = (
-        D.jaccard_pairs(docs, max_doc_freq=MAX_SHINGLE_DF, cache_key=sf_key(sf_dir))
-        .filter(F.col("jaccard") >= JACCARD_EDGE_MIN)
-        .select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
-    )
-    # The CC labels are memoized too: connected_components runs its
-    # pointer-jumping rounds EAGERLY at construction (localCheckpoint per
-    # round), so a post-hoc persist can't dedupe them — memoizing the
-    # built labels is the correct altitude. The labels are deterministic
-    # in the edge set, so warm calls start from the converged relation
-    # (1.50 → 1.27 s warm min-of-3 at sf0.1).
-    edges = memo(spark, "llm_selection.split_edges", sf_key(sf_dir), edges.persist)
-    comp = memo(
-        spark, "llm_selection.split_comp", sf_key(sf_dir), lambda: D.connected_components(edges)
-    )
+    edges, comp = near_dup_components(spark, sf_dir)
     grouped = docs.select("doc_id").join(
         F.broadcast(comp.withColumnRenamed("node", "doc_id")), "doc_id", "left"
     ).select(

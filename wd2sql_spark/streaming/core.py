@@ -18,40 +18,24 @@ from __future__ import annotations
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
-from wd2sql_spark.catalog import file_key
-from wd2sql_spark.session_cache import memo
+from wd2sql_spark.catalog import events_ts, table
+
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events fixture as a file-source stream with a proper event-time
     column.
 
-    The stream source needs a declared schema; it is taken from a batch
-    read of the same file so the stream adapts to the fixture generation
-    (nanos-era files surface ``ts`` as LONG under ``nanosAsLong`` and are
-    truncated ns→µs, matching DuckDB's cast; µs files stream through as
-    timestamps untouched)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # NTZ inference off ⇒ µs fixtures surface ts as plain TIMESTAMP at the
-    # scan (see catalog.table); nanos-era fixtures still read as LONG.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    # Schema memoized per session, keyed on the file — r10: the batch
-    # footer read costs ~0.13-0.15 s of driver time PER CALL (and the
-    # stream-stream join calls this twice per invocation); the same
-    # argument as catalog.table's scan memo.
-    path = f"{sf_dir}/events.parquet"
-    batch_schema = memo(
-        spark, "streaming.events_schema", file_key(path), lambda: spark.read.parquet(path).schema
-    )
+    The stream source needs a declared schema; it is the batch table's
+    (``catalog.table``, memoized per file, which also sets the timestamp
+    read confs), so the stream adapts to the fixture generation the same
+    way ``catalog.events`` does (:func:`catalog.events_ts`)."""
     # glob, not the bare file path: the file-stream source requires a
     # directory or glob (it watches the parent for new files).
-    raw = spark.readStream.schema(batch_schema).parquet(f"{sf_dir}/events*.parquet")
-    if isinstance(batch_schema["ts"].dataType, LongType):
-        # integer `div`, NOT `/`: float division of ns-scale longs loses µs.
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw
+    raw = spark.readStream.schema(table(spark, sf_dir, "events").schema).parquet(
+        f"{sf_dir}/events*.parquet"
+    )
+    return events_ts(raw)
 
 
 # Stateful operators create one state-store instance PER shuffle partition
