@@ -143,13 +143,14 @@ def test_sql_codec_function(spark):
 def test_malformed_payloads_drop_claim_keep_entity(spark, tmp_path):
     """Per-claim payload tolerance: a claim whose typed payload fails
     validation (bad coordinate JSON, non-numeric amount, unencodable
-    entity id, time without precision, unrecognized datavalue type,
-    monolingualtext without text) is DROPPED — it must neither abort the
-    job nor emit a NULL into a NOT NULL output column — while the
-    entity's meta row and its VALID claims survive. (The reference skips
-    the whole entity on a bad claim, value.rs value! -> main.rs:206-215;
-    dropping only the bad claim is strictly more tolerant, documented in
-    pipeline._route.) The SQLite export of the result must succeed,
+    entity id, time without precision or with one out of INT range,
+    unrecognized datavalue type, monolingualtext without text) is
+    DROPPED — it must neither abort the job nor emit a NULL into a NOT
+    NULL output column — while the entity's meta row and its VALID
+    claims survive. (The reference skips the whole entity on a bad
+    claim, value.rs value! -> main.rs:206-215; dropping only the bad
+    claim is strictly more tolerant, documented at
+    pipeline._REQUIRED.) The SQLite export of the result must succeed,
     proving no constraint-violating row got through."""
     import json
 
@@ -175,6 +176,7 @@ def test_malformed_payloads_drop_claim_keep_entity(spark, tmp_path):
                 claim("quantity", {"amount": "abc", "unit": "1"}),       # bad amount
                 claim("wikibase-entityid", {"id": "Q42abc"}),            # bad target id
                 claim("time", {"time": "+2001-01-01T00:00:00Z"}),        # no precision
+                claim("time", {"time": "+2001-01-01T00:00:00Z", "precision": 1e20}),  # out of INT range
                 claim("mystery-type", {"x": 1}),                         # unknown type
                 claim("monolingualtext", {"language": "en"}),            # no text
             ]

@@ -82,18 +82,34 @@ def test_etl_staged_plan_is_shuffle_free(spark, tmp_path):
     assert not rep.python_eval and not rep.pandas_eval
 
 
+# regexp_extract nodes in the executed staged plan: the id codec renders
+# 7, once for the entity id, once for the property id and once for the
+# claim's id (an entity id, or the id at the end of a globe or unit URL,
+# whose 2 extracts make the rest). Decoding the claim id both to route the
+# claim and to project its column, and encoding each URL id with the URL
+# extract pasted into every codec arm, made 85.
+STAGED_PLAN_REGEXP_EXTRACTS = 3 * 7 + 2
+
+
 def test_etl_staged_plan_parses_each_payload_once(spark):
-    """Claims are routed INSIDE the per-entity item array, so the executed
-    plan parses the dump line once and each claim payload once, and the
-    projection after the explode only reads struct fields. Catalyst would
-    otherwise push a post-explode filter below that projection and copy
-    the payload ``from_json`` (and ``encode_wid``) into an interpreted
-    Filter as well as the Project."""
-    from wd2sql_spark.etl.pipeline import parse_entities, read_dump, unified_rows
+    """Claims are decoded INSIDE the per-entity item array, so the executed
+    plan parses the dump line once and each claim payload once, renders
+    the id codec once per id, and the projection after the explode only
+    reads fields: the items carry the typed columns, no struct. Catalyst
+    would otherwise push a post-explode filter below that projection and
+    copy the payload ``from_json`` (and ``encode_wid_sql``) into an
+    interpreted Filter as well as the Project."""
+    from pyspark.sql.types import StructType
+
+    from wd2sql_spark.etl.pipeline import _ITEM, parse_entities, read_dump, unified_rows
 
     df = unified_rows(parse_entities(read_dump(spark, FIXTURE)))
+    # the relation is ``id`` and the item's fields, none of them a struct
+    assert df.columns == ["id", *_ITEM]
+    assert not [f.name for f in df.schema.fields if isinstance(f.dataType, StructType)]
     text = df._jdf.queryExecution().executedPlan().toString()
     assert text.count("from_json(") == 2, text  # the line, then the payload
+    assert text.count("regexp_extract(") == STAGED_PLAN_REGEXP_EXTRACTS, text
     lines = text.splitlines()
     generate = next(i for i, line in enumerate(lines) if "Generate " in line)
     assert not any("Filter " in line for line in lines[:generate]), text
@@ -103,8 +119,10 @@ def test_etl_staged_plan_parses_each_payload_once(spark):
 # Py4J commands one build of the staged plan sends: 5,960 with PySpark's
 # per-call call-site capture on and claims routed after the explode, 1,489
 # with capture off and claims routed inside the explode, 59 with the plan
-# built from SQL text (one call per projection, not per expression node).
-STAGED_BUILD_PY4J_BUDGET = 59
+# built from SQL text (one call per projection, not per expression node),
+# 41 with the projection after the explode one star over the item's
+# fields instead of 20 expressions.
+STAGED_BUILD_PY4J_BUDGET = 41
 
 
 def test_etl_staged_plan_build_py4j_budget(spark, monkeypatch):

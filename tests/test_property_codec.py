@@ -1,9 +1,9 @@
 """Property-based cross-engine check of the ID codec: arbitrary id-like
-strings must encode IDENTICALLY through the Spark column expression
-(functions/ids.encode_wid) and the SQL CASE twin (``encode_wid_sql``, the
-template rendered as the DuckDB oracle ``ENCODE_WID_SQL_CASE``, the
-registered Spark SQL function and the ETL's SQL plan), evaluated in both
-DuckDB and Spark.
+strings must encode IDENTICALLY through the SQL template
+(``encode_wid_sql``, rendered as the DuckDB oracle ``ENCODE_WID_SQL_CASE``,
+the registered Spark SQL function and the ETL's SQL plan), evaluated in
+both Spark and DuckDB, and through the independent pure-Python model of
+id.rs (``tests/id_model.py``).
 The reference parses the digit run with a full-string integer parse
 (id.rs:6-24), so trailing garbage, suffixes on non-lexeme kinds, and
 overflow must all yield NULL in BOTH engines — the class of disagreement
@@ -17,9 +17,8 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from pyspark.sql import functions as F
-
-from wd2sql_spark.functions.ids import ENCODE_WID_SQL_CASE, encode_wid, encode_wid_sql
+from tests.id_model import enc
+from wd2sql_spark.functions.ids import ENCODE_WID_SQL_CASE, encode_wid_sql
 
 # Mix of well-formed ids, near-misses (trailing garbage, wrong-kind
 # suffixes, doubled suffixes), and adversarial soup over the id alphabet.
@@ -38,10 +37,7 @@ ID = st.one_of(
 @given(st.lists(ID, min_size=1, max_size=60))
 def test_codec_matches_sql_twin(spark, ids):
     sdf = spark.createDataFrame([(i,) for i in ids], ["id"])
-    spark_out = [
-        (r["id"], r["encoded"])
-        for r in sdf.select("id", encode_wid(F.col("id")).alias("encoded")).collect()
-    ]
+    model_out = [(i, enc(i)) for i in ids]
     # The template over an input expression, as the ETL renders it over
     # struct fields and lambda variables.
     encoded = encode_wid_sql("named_struct('v', id).v")
@@ -55,4 +51,4 @@ def test_codec_matches_sql_twin(spark, ids):
     ]
     con.close()
 
-    assert sorted(spark_out, key=str) == sorted(duck_out, key=str) == sorted(spark_sql_out, key=str)
+    assert sorted(model_out, key=str) == sorted(duck_out, key=str) == sorted(spark_sql_out, key=str)

@@ -33,37 +33,12 @@ import re
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from tests.id_model import enc
 from wd2sql_spark.etl.pipeline import parse_entities, unified_rows
 
 # --------------------------------------------------------------------------
-# Pure-Python model of the id codec (functions/ids.py ⇄ id.rs:6-24)
+# Pure-Python model of payload fields (id.rs:6-24 via tests/id_model.py)
 # --------------------------------------------------------------------------
-
-
-def _enc(s):
-    if s is None:
-        return None
-    m = re.fullmatch(r"Q(\d{1,12})", s)
-    if m:
-        return int(m.group(1))
-    m = re.fullmatch(r"P(\d{1,12})", s)
-    if m:
-        return int(m.group(1)) + 1_000_000_000
-    m = re.fullmatch(r"L(\d{1,12})", s)
-    if m:
-        return int(m.group(1)) + 2_000_000_000
-    m = re.fullmatch(r"L(\d{1,12})-F(\d{1,7})", s)
-    if m:
-        return int(m.group(1)) + 2_000_000_000 + int(m.group(2)) * 100_000_000_000
-    m = re.fullmatch(r"L(\d{1,12})-S(\d{1,7})", s)
-    if m:
-        return (
-            int(m.group(1))
-            + 2_000_000_000
-            + int(m.group(2)) * 100_000_000_000
-            + 10_000_000_000
-        )
-    return None
 
 
 def _enc_url(u):
@@ -72,7 +47,7 @@ def _enc_url(u):
     m = re.search(r"([QPL]\d+(-[FS]\d+)?)$", u)
     if not m or not m.group(1):
         return None
-    return _enc(m.group(1))
+    return enc(m.group(1))
 
 
 def _try_double(s):
@@ -85,7 +60,7 @@ def _try_double(s):
 
 
 # --------------------------------------------------------------------------
-# Pure-Python model of dispatch (pipeline._claim_value_cols ⇄ value.rs)
+# Pure-Python model of dispatch (pipeline._VALUE_TYPES ⇄ value.rs)
 # --------------------------------------------------------------------------
 
 
@@ -114,7 +89,7 @@ def _dispatch(claim):
         en = (obj.get("texts") or {}).get("en")
         return ("string", (en,)) if en is not None else ("none", ())
     if dv_type == "wikibase-entityid":
-        e = _enc(obj.get("id"))
+        e = enc(obj.get("id"))
         return ("entity", (e,)) if e is not None else None
     if dv_type == "globecoordinate":
         lat, lon, prec = obj.get("latitude"), obj.get("longitude"), obj.get("precision")
@@ -136,8 +111,10 @@ def _dispatch(claim):
             ),
         )
     if dv_type == "time":
+        # A precision outside the INT range is undecodable: the claim is
+        # dropped, not the job aborted.
         t, prec = obj.get("time"), obj.get("precision")
-        if t is not None and prec is not None:
+        if t is not None and prec is not None and -(2**31) <= prec < 2**31:
             return ("time", (t, int(prec)))
         return None
     return None
@@ -160,7 +137,7 @@ def _expected(lines):
         except ValueError:
             rows.append(("quarantine", None, None, (line, "corrupt_json")))
             continue
-        eid = _enc(ent.get("id"))
+        eid = enc(ent.get("id"))
         if eid is None:
             rows.append(("quarantine", None, None, (line, "bad_id")))
             continue
@@ -168,7 +145,7 @@ def _expected(lines):
         desc = ((ent.get("descriptions") or {}).get("en") or {}).get("value")
         rows.append(("meta", eid, None, (label, desc)))
         for pid_str, statements in (ent.get("claims") or {}).items():
-            pid = _enc(pid_str)
+            pid = enc(pid_str)
             if pid is None:
                 continue
             for claim in statements or []:
@@ -266,7 +243,7 @@ _DATAVALUE = st.one_of(
     st.fixed_dictionaries(
         {"type": st.just("time"),
          "value": st.fixed_dictionaries(
-             {}, optional={"time": _TIME, "precision": st.sampled_from([9, 11])}
+             {}, optional={"time": _TIME, "precision": st.sampled_from([9, 11, 1e20, -1e20, 2**31])}
          )}
     ),
     st.fixed_dictionaries({"type": st.just("bogus-type"), "value": _TEXT}),
@@ -367,6 +344,7 @@ def _mixed_lines():
             _claim("time", {"time": "+2001-00-00T00:00:00Z", "precision": 9}),
             _claim("time", {"time": "-13798000000-00-00T00:00:00Z", "precision": 3}),
             _claim("time", {"time": "+2001-01-01T00:00:00Z"}),  # no precision: skipped
+            _claim("time", {"time": "+2001-01-01T00:00:00Z", "precision": 1e20}),  # out of INT range: skipped
             _claim("mystery", {"x": 1}),  # unknown type: skipped
         ],
         "Q42abc": [_claim("string", "bad property id")],

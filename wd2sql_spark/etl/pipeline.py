@@ -9,20 +9,20 @@ Here the same dataflow is a lazy DataFrame DAG: ``read.text`` → framing
 ``filter`` → ``from_json`` of the raw line (declared schema, PERMISSIVE,
 corrupt-record quarantine; the trailing comma is stripped only from
 quarantined lines) → id-encode + meta projection → per-entity claim
-routing (rank filter, one payload parse, 20→7 type dispatch) →
-``explode`` → payload projection — a pure narrow pipeline with ZERO
-shuffles, embarrassingly parallel over input splits. Where the reference
-saturates one core at bzip2 speed (README.md:13-19), this plan scales
-linearly with executors. The collection lambdas that build each entity's
+decoding (rank filter, one payload parse, one id decode, 20→7 type
+dispatch) → ``explode`` → field projection — a pure narrow pipeline
+with ZERO shuffles, embarrassingly parallel over input splits. Where the
+reference saturates one core at bzip2 speed (README.md:13-19), this plan
+scales linearly with executors. The collection lambdas that build each entity's
 rows run interpreted; the projections on either side of them run under
 whole-stage codegen.
 
 Every expression is SQL text composed in Python (the builders below
-return strings; the id codec is rendered from its SQL twin,
+return strings; the id codec is rendered from its SQL template,
 ``functions.ids.encode_wid_sql``) and handed to Spark in a few
 ``selectExpr``/``filter`` calls. Spark's parser then builds each
 projection's Catalyst tree in one Py4J call; ``Column`` objects would
-cost one call per expression node. A build of the staged plan sends 59
+cost one call per expression node. A build of the staged plan sends 41
 Py4J commands.
 
 One dataflow (:func:`unified_rows`) emits every output row, tagged with
@@ -56,12 +56,13 @@ definition). ``transform`` returns those projections lazily, and
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import ArrayType, DataType, LongType, MapType, StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StringType, StructField, StructType
 
 from wd2sql_spark.etl import schema as S
-from wd2sql_spark.functions.ids import encode_entity_url_sql, encode_wid_sql
+from wd2sql_spark.functions.ids import encode_wid_sql, entity_url_id_sql
 
 DEPRECATED = "deprecated"
 
@@ -140,103 +141,85 @@ _LABEL = "element_at(labels, 'en').value"
 _DESCRIPTION = "element_at(descriptions, 'en').value"
 
 
-def _parse_payload(c: str) -> str:
-    """ONE parse of the ``datavalue.value`` of claim ``c`` with the union
-    schema (``S.MERGED_VALUE``); every per-type expression of the
-    dispatch reads its own fields and ignores the rest (null for other
-    types). For plain-string payloads ``from_json`` yields a null struct,
-    which every consumer guards with the datavalue type."""
-    return f"from_json({c}.mainsnak.datavalue.value, '{_ddl(S.MERGED_VALUE)}')"
+class _ValueType(NamedTuple):
+    table: str  # the table its claims land in
+    cols: dict[str, str]  # typed column → SQL over the claim ``x``
+    id_text: str | None = None  # SQL of the id text it decodes into ``x.wid``
+    otherwise: str | None = None  # table of a claim missing a required column; None drops it
 
 
-def _route(c: str, v: str) -> str:
-    """The 20→7 type dispatch (value.rs:201-261): the target table of one
-    claim struct ``c`` (shape ``S.CLAIM``) whose payload parsed to ``v``
-    (:func:`_parse_payload`), or NULL when the claim is skipped. ``c``
-    and ``v`` are SQL expressions; so is the result.
+# time: normalize Wikidata's unknown month/day "00" to "01", drop the
+# leading '+', then try_to_timestamp — out-of-range historical years
+# yield NULL while time_raw preserves the value losslessly (SURVEY §7a).
+_TIME_NORM = "regexp_replace(regexp_replace(regexp_replace(x.v.time, '-00-', '-01-'), '-00T', '-01T'), '^[+]', '')"
 
-    Per-type payload validity: the reference's value! field extraction
-    (value.rs:201-261) errors on a missing/undecodable required field and
-    the record is skipped (main.rs:206-215). Here an invalid payload
-    dispatches to NULL → the claim row is dropped before any table (a
-    NULL in a required column would otherwise violate the SQLite sink's
-    NOT NULL DDL). Divergence, documented: the reference skips the WHOLE
-    entity on a bad claim; we drop only the bad claim and keep the
-    entity's remaining data — strictly more tolerant, same guarantee
-    that no malformed value reaches an output table.
+# The 20→7 type dispatch (value.rs:63-112, 201-261), one entry per
+# datavalue type. Column SQL reads the claim ``x``: ``x.value``, the raw
+# ``datavalue.value``; ``x.v``, that value parsed once with the union
+# schema ``S.MERGED_VALUE`` (each type reads its own fields; a plain
+# string parses to a NULL struct); and ``x.wid``, the type's id text
+# decoded once. A column a type does not fill is NULL. Unrecognized
+# datavalue types land nowhere (the reference errors on them too).
+_VALUE_TYPES = {
+    "string": _ValueType("string", {"string": "x.value"}),
+    "monolingualtext": _ValueType("string", {"string": "x.v.text"}),
+    # Without English: a presence row in ``none`` (value.rs:222-229),
+    # NOT a null string.
+    "multilingualtext": _ValueType("string", {"string": "x.v.texts['en']"}, otherwise="none"),
+    "wikibase-entityid": _ValueType("entity", {"entity_id": "x.wid"}, id_text="x.v.id"),
+    "globecoordinate": _ValueType(
+        "coordinates",
+        {"latitude": "x.v.latitude", "longitude": "x.v.longitude", "precision": "x.v.precision", "globe_id": "x.wid"},
+        id_text=entity_url_id_sql("x.v.globe"),
+    ),
+    # try_cast: a malformed amount drops the claim instead of aborting
+    # the job (ANSI mode throws on CAST) — per-record tolerance, 2-A#14.
+    "quantity": _ValueType(
+        "quantity",
+        {"amount": "try_cast(x.v.amount AS DOUBLE)", "lower_bound": "try_cast(x.v.lowerBound AS DOUBLE)",
+         "upper_bound": "try_cast(x.v.upperBound AS DOUBLE)", "unit_id": "x.wid"},
+        id_text=entity_url_id_sql("x.v.unit"),
+    ),
+    # ``precision`` parses as DOUBLE (shared with globecoordinate) and
+    # also lands in ``precision`` as parsed; the time table reads the INT
+    # ``time_precision``, which an integer round-trips exactly and a value
+    # out of INT range (NULL under try_cast) drops the claim.
+    "time": _ValueType(
+        "time",
+        {"time": f"try_to_timestamp({_TIME_NORM}, 'yyyy-MM-dd\\'T\\'HH:mm:ssX')", "precision": "x.v.precision",
+         "time_precision": "try_cast(x.v.precision AS INT)", "time_raw": "x.v.time"},
+    ),
+}
 
-    A string datavalue with NO value is a failed extraction → the claim
-    is skipped (value.rs's value! arm), NOT a NULL string row (which
-    would violate the string table's NOT NULL DDL in the SQLite sink);
-    found by the differential fuzz (tests/test_property_etl.py). A
-    multilingualtext without English is a presence row in ``none``
-    (value.rs:222-229), NOT a null string. Unrecognized datavalue types
-    error-skip in the reference too."""
-    t = f"{c}.mainsnak.datavalue.type"
-    return f"""CASE
-  WHEN {c}.mainsnak.snaktype = 'novalue' THEN 'none'
-  WHEN {c}.mainsnak.snaktype = 'somevalue' THEN 'unknown'
-  WHEN {t} = 'string' AND {c}.mainsnak.datavalue.value IS NOT NULL THEN 'string'
-  WHEN {t} = 'monolingualtext' AND {v}.text IS NOT NULL THEN 'string'
-  WHEN {t} = 'multilingualtext' AND {v}.texts['en'] IS NOT NULL THEN 'string'
-  WHEN {t} = 'multilingualtext' THEN 'none'
-  WHEN {t} = 'wikibase-entityid' AND {encode_wid_sql(f'{v}.id')} IS NOT NULL THEN 'entity'
-  WHEN {t} = 'globecoordinate' AND {v}.latitude IS NOT NULL AND {v}.longitude IS NOT NULL
-       AND {v}.precision IS NOT NULL AND {encode_entity_url_sql(f'{v}.globe')} IS NOT NULL THEN 'coordinates'
-  WHEN {t} = 'quantity' AND try_cast({v}.amount AS DOUBLE) IS NOT NULL THEN 'quantity'
-  WHEN {t} = 'time' AND {v}.time IS NOT NULL AND {v}.precision IS NOT NULL THEN 'time'
-END"""
+# The columns a claim row of each table requires: the reference's value!
+# extraction (value.rs:201-261) errors on a missing or undecodable field
+# and skips the record (main.rs:206-215), and the SQLite sink declares
+# these NOT NULL. A claim missing one goes to its type's ``otherwise``
+# table or is dropped before any table. Divergence, documented: the
+# reference skips the WHOLE entity on a bad claim; this drops only the
+# bad claim and keeps the entity's other rows — strictly more tolerant,
+# with the same guarantee that no malformed value reaches a table.
+_REQUIRED = {
+    "string": ("string",),
+    "entity": ("entity_id",),
+    "coordinates": ("latitude", "longitude", "precision", "globe_id"),
+    "quantity": ("amount",),
+    "time": ("time_raw", "time_precision"),
+}
 
-
-def _claim_value_cols(c: str, v: str) -> dict[str, str]:
-    """The per-type payload columns of one claim struct ``c`` whose payload
-    parsed to ``v`` (:func:`_parse_payload`), as a dict of named SQL
-    expressions (unused ones NULL). With :func:`_route` this is the
-    dispatch definition of :func:`unified_rows`. All expressions are
-    Catalyst built-ins and ``v`` is a field of an already-parsed struct,
-    so the projection that evaluates them runs under whole-stage
-    codegen."""
-    t = f"{c}.mainsnak.datavalue.type"
-    # time: normalize Wikidata's unknown month/day "00" to "01", drop the
-    # leading '+', then try_to_timestamp — out-of-range historical years
-    # yield NULL while time_raw preserves the value losslessly (SURVEY §7a).
-    t_norm = f"regexp_replace(regexp_replace(regexp_replace({v}.time, '-00-', '-01-'), '-00T', '-01T'), '^[+]', '')"
-    return {
-        "string": f"CASE {t} WHEN 'string' THEN {c}.mainsnak.datavalue.value "
-        f"WHEN 'monolingualtext' THEN {v}.text WHEN 'multilingualtext' THEN {v}.texts['en'] END",
-        "entity_id": f"CASE WHEN {t} = 'wikibase-entityid' THEN {encode_wid_sql(f'{v}.id')} END",
-        "latitude": f"{v}.latitude",
-        "longitude": f"{v}.longitude",
-        "precision": f"{v}.precision",
-        "globe_id": f"CASE WHEN {t} = 'globecoordinate' THEN {encode_entity_url_sql(f'{v}.globe')} END",
-        # try_cast: malformed amounts must quarantine-to-NULL, not abort
-        # (ANSI mode would throw on CAST) — per-record tolerance, 2-A#14.
-        "amount": f"try_cast({v}.amount AS DOUBLE)",
-        "lower_bound": f"try_cast({v}.lowerBound AS DOUBLE)",
-        "upper_bound": f"try_cast({v}.upperBound AS DOUBLE)",
-        "unit_id": f"CASE WHEN {t} = 'quantity' THEN {encode_entity_url_sql(f'{v}.unit')} END",
-        "time": f"CASE WHEN {t} = 'time' THEN try_to_timestamp({t_norm}, 'yyyy-MM-dd\\'T\\'HH:mm:ssX') END",
-        # precision parses as DOUBLE in the union schema (shared with
-        # globecoordinate); time's integer precision round-trips exactly.
-        "time_precision": f"CASE WHEN {t} = 'time' THEN CAST({v}.precision AS INT) END",
-        "time_raw": f"CASE WHEN {t} = 'time' THEN {v}.time END",
-    }
-
-
-# One output row before the explode: its target table, plus only the
-# fields that row kind needs (the rest NULL).
-_ITEM = StructType(
-    [
-        StructField("table", StringType()),
-        StructField("property_id", LongType()),
-        StructField("c", S.CLAIM),
-        StructField("v", S.MERGED_VALUE),
-        StructField("label", StringType()),
-        StructField("description", StringType()),
-        StructField("line", StringType()),
-        StructField("reason", StringType()),
-    ]
+# One output row before the explode, as name → SQL type in the relation's
+# column order after ``id``. Each row kind fills its own fields, the rest
+# are NULL; a claim's 13 typed columns are computed inside the item
+# array, so the projection after the explode only reads fields.
+_ITEM = dict(
+    f.split(" ")
+    for f in (
+        "property_id BIGINT, label STRING, description STRING, string STRING, entity_id BIGINT, latitude DOUBLE, "
+        "longitude DOUBLE, precision DOUBLE, globe_id BIGINT, amount DOUBLE, lower_bound DOUBLE, upper_bound DOUBLE, "
+        "unit_id BIGINT, time TIMESTAMP, time_precision INT, time_raw STRING, line STRING, reason STRING, table STRING"
+    ).split(", ")
 )
+_TYPED_COLS = [c for c in _ITEM if any(c in vt.cols for vt in _VALUE_TYPES.values())]
 
 # The one table → columns definition: each output table is the rows of
 # :func:`unified_rows` tagged with its name, projected to these columns
@@ -257,9 +240,49 @@ _FINAL_COLS = {
 def _item(**fields: str) -> str:
     """SQL text of one ``_ITEM`` struct: the given fields, every other
     field a typed NULL."""
-    return "named_struct(" + ", ".join(
-        f"'{f.name}', {fields.get(f.name, f'CAST(NULL AS {_ddl(f.dataType)})')}" for f in _ITEM.fields
-    ) + ")"
+    return "named_struct(" + ", ".join(f"'{k}', {fields.get(k, f'CAST(NULL AS {t})')}" for k, t in _ITEM.items()) + ")"
+
+
+def _let(arr: str, keep: tuple[str, ...], **new: str) -> str:
+    """SQL of the struct array ``arr`` with each element ``x`` rebuilt from
+    its fields ``keep`` and the fields ``new`` (SQL over ``x``): one
+    ``transform``, so each new field is evaluated once per element and
+    the next step reads it as a field."""
+    fields = [f"'{k}', x.`{k}`" for k in keep] + [f"'{k}', {e}" for k, e in new.items()]
+    return f"transform({arr}, x -> named_struct({', '.join(fields)}))"
+
+
+def _claim_items(props: str) -> str:
+    """SQL of the claim items of ``props``, an array of (encoded property
+    id ``pid``, statements ``cs``): deprecated statements are dropped
+    before type dispatch, exactly like main.rs:87, and each kept claim's
+    payload is parsed once, its id text extracted once and decoded once
+    into ``x.wid``, and its typed columns (``_VALUE_TYPES``) computed
+    once. Its table is read off those columns (``_REQUIRED``); claims
+    with no table are dropped. A novalue/somevalue snak is a row in
+    ``none``/``unknown`` whatever its datavalue."""
+    by_type = _VALUE_TYPES.items()
+    id_text = " ".join(f"WHEN '{t}' THEN {vt.id_text}" for t, vt in by_type if vt.id_text)
+    cols = {c: " ".join(f"WHEN '{t}' THEN {vt.cols[c]}" for t, vt in by_type if c in vt.cols) for c in _TYPED_COLS}
+    table = ["WHEN x.snak = 'novalue' THEN 'none'", "WHEN x.snak = 'somevalue' THEN 'unknown'"]
+    for t, vt in by_type:
+        ok = " AND ".join(f"x.`{c}` IS NOT NULL" for c in _REQUIRED[vt.table])
+        table.append(f"WHEN x.type = '{t}' AND {ok} THEN '{vt.table}'")
+        if vt.otherwise:
+            table.append(f"WHEN x.type = '{t}' THEN '{vt.otherwise}'")
+    claims = (
+        f"flatten(transform({props}, p -> transform("
+        f"filter(p.cs, cl -> coalesce(cl.rank, 'normal') != '{DEPRECATED}'), "
+        "cl -> named_struct('pid', p.pid, 'snak', cl.mainsnak.snaktype, 'type', cl.mainsnak.datavalue.type, "
+        "'value', cl.mainsnak.datavalue.value, "
+        f"'v', from_json(cl.mainsnak.datavalue.value, '{_ddl(S.MERGED_VALUE)}')))))"
+    )
+    claim = ("pid", "snak", "type", "value", "v")
+    claims = _let(claims, claim, id_text=f"CASE x.type {id_text} END")
+    claims = _let(claims, claim, wid=encode_wid_sql("x.id_text"))
+    claims = _let(claims, ("pid", "snak", "type"), **{c: f"CASE x.type {arms} END" for c, arms in cols.items()})
+    item = _item(table=f"CASE {' '.join(table)} END", property_id="x.pid", **{c: f"x.`{c}`" for c in _TYPED_COLS})
+    return f"filter(transform({claims}, x -> {item}), it -> it.`table` IS NOT NULL)"
 
 
 def unified_rows(entities: DataFrame) -> DataFrame:
@@ -273,16 +296,14 @@ def unified_rows(entities: DataFrame) -> DataFrame:
     per-entity item array built with native collection lambdas, into
     exactly its output rows. One scan, zero shuffles.
 
-    Every claim is routed INSIDE the item array, before the explode: the
+    Every claim is decoded INSIDE the item array, before the explode: the
     property id is encoded once per property, and properties that don't
-    encode are dropped (the reference's per-record tolerance); the deprecated-rank drop happens before type
-    dispatch, exactly like main.rs:87; each kept claim's payload is
-    parsed once; a second ``transform`` builds each claim's item with its
-    target table routed from the parsed struct; and an array ``filter``
-    drops claims whose payload failed validation. The projection after
-    the explode then only reads struct fields, so it carries no
-    ``from_json`` and no Filter sits above the Generate for Catalyst to
-    copy the parse into.
+    encode are dropped (the reference's per-record tolerance); then
+    :func:`_claim_items` parses and decodes each kept claim once. The
+    items carry the typed columns, not the claim or its parsed payload,
+    so the projection after the explode only reads fields: it carries no
+    ``from_json`` and no codec, and no Filter sits above the Generate for
+    Catalyst to copy them into.
 
     The plan is built from SQL text: the whole item array is one
     expression of one ``selectExpr``, and the projection after the
@@ -298,31 +319,15 @@ def unified_rows(entities: DataFrame) -> DataFrame:
     # label/description maps across all n+1 output rows of the explode.
     meta_item = _item(table="'meta'", label=_LABEL, description=_DESCRIPTION)
     quar_item = _item(table="'quarantine'", line=_QUARANTINE_LINE, reason=_QUARANTINE_REASON)
-    claim_item = _item(table=_route("x.c", "x.v"), property_id="x.pid", c="x.c", v="x.v")
     props = (
         f"filter(transform(map_entries(claims), kv -> named_struct('pid', {encode_wid_sql('kv.key')}, "
         "'cs', coalesce(kv.value, array()))), p -> p.pid IS NOT NULL)"
     )
-    parsed = (
-        f"flatten(transform({props}, p -> transform("
-        f"filter(p.cs, cl -> coalesce(cl.rank, 'normal') != '{DEPRECATED}'), "
-        f"cl -> named_struct('pid', p.pid, 'c', cl, 'v', {_parse_payload('cl')}))))"
-    )
-    routed = f"filter(transform({parsed}, x -> {claim_item}), it -> it.`table` IS NOT NULL)"
     items = (
         f"CASE WHEN {_BAD} THEN array({quar_item}) "
-        f"ELSE concat(array({meta_item}), coalesce({routed}, array())) END"
+        f"ELSE concat(array({meta_item}), coalesce({_claim_items(props)}, array())) END"
     )
-    return entities.selectExpr("id", f"explode({items}) AS it").selectExpr(
-        "id",
-        "it.property_id AS property_id",
-        "it.label AS label",
-        "it.description AS description",
-        *(f"{e} AS `{k}`" for k, e in _claim_value_cols("it.c", "it.v").items()),
-        "it.line AS line",
-        "it.reason AS reason",
-        "it.`table` AS `table`",
-    )
+    return entities.selectExpr("id", f"explode({items}) AS it").selectExpr("id", "it.*")
 
 
 def _project(rows: DataFrame, name: str) -> DataFrame:
